@@ -186,6 +186,8 @@ class SignatureStore:
         refreshes apply (guide §1.2)."""
         from hudi_spark_plus_spark.ckpt import release_all
 
+        if self.table.log.has_batch(batch_id):
+            return  # replay: skip the checkpoint job, the merge no-ops
         rows = self._sig_rows(df, id_col, text_col).localCheckpoint(
             eager=True
         )

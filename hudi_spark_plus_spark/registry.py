@@ -108,6 +108,58 @@ _PINNED = [
     "q-lake-dml",
     "q-lake-evolve",
     "q-lake-matview",
+    # One write-and-publish path for every data-writing commit
+    # (LakeTable._write_commit: observed row count checked against the
+    # globbed files before publishing), clustering under the commit
+    # retry loop, the Parquet-native key bloom removed (files shrink;
+    # manifests unchanged apart from paths, timestamps and bytes),
+    # SignatureStore.ingest replay short-circuit. Every query whose
+    # closure folds in table/ moved:
+    "q-cdc-1",
+    "q-cdc-2",
+    "q-cdc-3",
+    "q-cdc-4",
+    "q-cdc-partitioned",
+    "q-cdc-retention",
+    "q-cdc-transformer",
+    "q-lake-batch-source",
+    "q-lake-bootstrap",
+    "q-lake-cdc-feed",
+    "q-lake-cdc-source",
+    "q-lake-clone",
+    "q-lake-colstats",
+    "q-lake-compact",
+    "q-lake-concurrent",
+    "q-lake-derived",
+    "q-lake-format-write",
+    "q-lake-functional-index",
+    "q-lake-history",
+    "q-lake-incremental",
+    "q-lake-incremental-mor",
+    "q-lake-matview-avg",
+    "q-lake-matview-join",
+    "q-lake-matview-join-minmax",
+    "q-lake-matview-minmax",
+    "q-lake-matview-ndv",
+    "q-lake-matview-pctl",
+    "q-lake-matview-pruned",
+    "q-lake-meta-agg",
+    "q-lake-mor-ro",
+    "q-lake-ndv",
+    "q-lake-overwrite",
+    "q-lake-partial-update",
+    "q-lake-record-history",
+    "q-lake-record-history-batch",
+    "q-lake-retype",
+    "q-lake-rollback",
+    "q-lake-roundtrip",
+    "q-lake-savepoint",
+    "q-lake-secondary-index",
+    "q-lake-stream-sink",
+    "q-lake-time-travel",
+    "q-lake-timepart",
+    "q-lake-zorder",
+    "q-stream-lake-source",
 ]
 
 

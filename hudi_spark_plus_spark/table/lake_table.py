@@ -22,10 +22,15 @@ buckets that contain batch keys — cost is O(affected buckets), not
 O(table). md5 record keys are uniformly distributed, so buckets cannot
 skew. Within the merge there is exactly ONE shuffle (the join on _key);
 the bucket-partitioned write reuses it via ``repartition(_bucket)``.
-File-level min/max key stats in the manifest provide query-time file
-skipping — the role of the reference's Bloom key index
-(BloomFilter.java:31-104) — plus parquet-native bloom filters can be
-enabled on ``_key`` via ``parquet.bloom.filter.enabled#_key``.
+File-level min/max key stats and a per-file key Bloom filter in the
+manifest provide file skipping — the role of the reference's Bloom key
+index (BloomFilter.java:31-104).
+
+Every data-writing commit goes through ONE write-and-publish path
+(``LakeTable._write_commit``): write the laid-out frame, build the new
+files' manifest entries, check their row count against the write job's
+own, and publish optimistically against the version it was computed
+from.
 """
 
 from __future__ import annotations
@@ -34,7 +39,7 @@ import glob
 import os
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -80,6 +85,8 @@ from hudi_spark_plus_spark.table.keygen import (
 DELETE_OP = "delete"
 DELETED_COL = "_deleted"
 COMMIT_VER_COL = "_commit_ver"
+# columns a merge derives itself: never payload
+_MERGE_META = (OP_COL, BUCKET_COL, PARTITION_COL, DELETED_COL, COMMIT_VER_COL)
 
 # Widening lattices for in-band schema evolution (beyond-additive). Only
 # widenings Spark's vectorized parquet reader can apply at READ time are
@@ -121,26 +128,27 @@ def _widened_type(a: str, b: str) -> str | None:
     return None
 
 
+def _conform(df: DataFrame, fields: list[StructField]) -> DataFrame:
+    """Cast ``df``'s columns to ``fields``' types and add the ones it
+    lacks as typed nulls (one side of a schema-evolving merge)."""
+    have = dict(df.dtypes)
+    for f in fields:
+        if f.name not in have:
+            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+        elif have[f.name] != f.dataType.simpleString():
+            df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
+    return df
+
+
 class IncompatibleSchemaChange(ValueError):
     """Raised (and caught per-table by the CDC sync, Q1 isolation) when
     an in-band schema declares a non-widening type change."""
 
-# Parquet-native bloom filter on the record key (the write-side half of
-# the reference's Bloom key index, BloomFilter.java:31-104/H8): readers
-# with key-equality predicates skip row groups server-side.
-_BLOOM_OPTS = {
-    f"parquet.bloom.filter.enabled#{KEY_COL}": "true",
-    # ~125 KB bloom per file at this NDV — sized for PACKED files
-    # (compaction output), where row-group key pruning earns it; on
-    # the small files micro-batch ingest writes it is a measured
-    # ~130 KB/file floor that compaction folds away. parquet-mr
-    # 1.16's adaptive bloom (pick the smallest candidate covering the
-    # file's actual NDV) would fix the small-file overhead, but
-    # Spark's writer builds ParquetProperties from its own explicit
-    # key list and silently ignores parquet.bloom.filter.adaptive.*
-    # (verified empirically: byte-identical files with the flag set).
-    f"parquet.bloom.filter.expected.ndv#{KEY_COL}": "100000",
-}
+
+class WriteCountMismatch(RuntimeError):
+    """A write's part-files hold a different number of rows than the
+    write job produced — a stray file (e.g. a partial task attempt) or a
+    lost one sits in the commit's data subdir. Nothing was published."""
 
 
 # Commits writing more rows than this build their per-file blooms in a
@@ -481,6 +489,12 @@ class LakeTable:
                 f"column(s) {missing}"
             )
         return df.withColumn(PARTITION_COL, self._partition_expr())
+
+    def _laid_out(self, df: DataFrame) -> DataFrame:
+        """Attach the layout columns a write partitions its files by."""
+        return self._with_part(
+            df.withColumn(BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets))
+        )
 
     def _layout_cols(self) -> list[str]:
         """Directory layout under each commit's data subdir:
@@ -894,15 +908,7 @@ class LakeTable:
                     f"version {version} not in timeline (vacuumed?)"
                 )
             old = self.log.read(version)
-            self.log.commit(
-                "rollback",
-                old.files,
-                schema_json=old.schema_json,
-                buckets=old.buckets or self.buckets,
-                expected_version=prev.version + 1,
-                partition_fields=self.partition_fields or None,
-                global_index=self.global_index or None,
-            )
+            self._publish("rollback", old.files, prev, old.schema_json)
 
         self._with_commit_retries(attempt)
 
@@ -2161,13 +2167,8 @@ class LakeTable:
                 StructField(COMMIT_VER_COL, LongType(), True),
             ]
         )
-        self.log.commit(
-            "bootstrap",
-            entries,
-            schema_json=full.json(),
-            buckets=self.buckets,
-            global_index=self.global_index or None,
-            bootstrap_spec=spec,
+        self._publish(
+            "bootstrap", entries, None, full.json(), bootstrap_spec=spec
         )
 
     def _bootstrap_spec(self) -> dict | None:
@@ -2317,6 +2318,82 @@ class LakeTable:
             )
         return out
 
+    def _publish(
+        self,
+        operation: str,
+        files: list[FileEntry],
+        prev,
+        schema_json: str | None = None,
+        batch_id: str | None = None,
+        **extra,
+    ):
+        """The publish tail every LakeTable commit shares: optimistic
+        against ``prev`` (the commit the caller computed from — a stale
+        timeline raises ``CommitConflict``, which ``_with_commit_retries``
+        recomputes) with the table-level metadata filled in."""
+        return self.log.commit(
+            operation,
+            files,
+            batch_id=batch_id,
+            schema_json=schema_json,
+            buckets=self.buckets,
+            expected_version=(prev.version + 1) if prev else 1,
+            partition_fields=self.partition_fields or None,
+            global_index=self.global_index or None,
+            **extra,
+        )
+
+    def _write_commit(
+        self,
+        out: DataFrame,
+        operation: str,
+        prev,
+        carry,
+        schema_json: str,
+        batch_id: str | None = None,
+        kind: str = "base",
+        parts: int | None = None,
+    ) -> list[FileEntry]:
+        """The one write-and-publish path of every data-writing commit.
+        ``out`` is the LOGICAL frame with its layout columns; it is
+        hash-repartitioned on the layout into ``parts`` tasks, or written
+        as the caller shaped it when ``parts`` is None. ``carry``: the
+        previous live entries the commit keeps, or a function of the new
+        entries that picks them. The new files are found by globbing the
+        commit's fresh data subdir, so their summed footer row count must
+        equal the write job's own (an ``observe`` on the write — no extra
+        Spark job): a stray part-file (a partial task attempt) or a lost
+        one raises ``WriteCountMismatch`` and nothing is published.
+        Returns the new entries."""
+        layout = self._layout_cols()
+        df = self._apply_physical(out, schema_json)
+        if parts is not None:
+            df = df.repartition(parts, *[F.col(c) for c in layout])
+        # counted on top of the shuffle: below a range shuffle its
+        # sampling job counts the rows twice, and below a hash one an
+        # empty write reports no count at all
+        written = Observation()
+        absd, rel = self.log.new_data_subdir()
+        (
+            df.observe(written, F.count(F.lit(1)).alias("rows"))
+            .write.mode("append")
+            .partitionBy(*layout)
+            .parquet(absd)
+        )
+        new_files = _collect_file_entries(
+            self.path, rel, kind=kind, spark=self.spark
+        )
+        found, rows = sum(e.rows for e in new_files), written.get["rows"]
+        if found != rows:
+            raise WriteCountMismatch(
+                f"{operation} on table at {self.path}: the write produced "
+                f"{rows} rows but {rel} holds {found}; not published"
+            )
+        if callable(carry):
+            carry = carry(new_files)
+        self._publish(operation, carry + new_files, prev, schema_json, batch_id)
+        return new_files
+
     def insert(
         self,
         df: DataFrame,
@@ -2331,51 +2408,9 @@ class LakeTable:
         written as-is while the committed read schema kept the stored
         type, breaking every subsequent read of the new file."""
         self._with_commit_retries(
-            lambda: self._insert_once(df, batch_id, parallelism, operation)
-        )
-
-    def _insert_once(
-        self,
-        df: DataFrame,
-        batch_id: str | None,
-        parallelism: int,
-        operation: str,
-    ) -> None:
-        if batch_id is not None and self.log.has_batch(batch_id):
-            return
-        prev = self.log.latest()
-        next_ver = (prev.version + 1) if prev else 1
-        stored = self.schema()
-        if stored is not None:
-            df, _ = self._reconcile_batch_types(df, stored)
-        if DELETED_COL not in df.columns:
-            df = df.withColumn(DELETED_COL, F.lit(False))
-        if COMMIT_VER_COL not in df.columns:
-            df = df.withColumn(COMMIT_VER_COL, F.lit(next_ver).cast("long"))
-        out = df.withColumn(BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets))
-        out = self._with_part(out)
-        schema_json = self._commit_schema_json(out, next_ver)
-        absd, rel = self.log.new_data_subdir()
-        layout = [F.col(c) for c in self._layout_cols()]
-        (
-            self._apply_physical(out, schema_json)
-            .repartition(parallelism, *layout)
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*self._layout_cols())
-            .parquet(absd)
-        )
-        new_files = _collect_file_entries(self.path, rel, spark=self.spark)
-        carry = prev.files if prev else []
-        self.log.commit(
-            operation,
-            carry + new_files,
-            batch_id=batch_id,
-            schema_json=schema_json,
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
+            lambda: self._overwrite_once(
+                df, batch_id, parallelism, operation, replace=None
+            )
         )
 
     def bulk_insert(
@@ -2414,7 +2449,7 @@ class LakeTable:
         self._with_commit_retries(
             lambda: self._overwrite_once(
                 df, batch_id, parallelism, "insert_overwrite",
-                whole_table=False,
+                replace="partitions",
             )
         )
 
@@ -2430,7 +2465,7 @@ class LakeTable:
         self._with_commit_retries(
             lambda: self._overwrite_once(
                 df, batch_id, parallelism, "insert_overwrite_table",
-                whole_table=True,
+                replace="table",
             )
         )
 
@@ -2440,50 +2475,38 @@ class LakeTable:
         batch_id: str | None,
         parallelism: int,
         operation: str,
-        whole_table: bool,
+        replace: str | None,
     ) -> None:
+        """Append ``df`` as new files. ``replace``: None keeps every
+        previous file (insert), "partitions" drops the previous files of
+        the partitions the new files land in, "table" drops them all."""
         if batch_id is not None and self.log.has_batch(batch_id):
             return  # idempotent re-run (H5)
         prev = self.log.latest()
         next_ver = (prev.version + 1) if prev else 1
         stored = self.schema()
         if stored is not None:
-            df, _ = self._reconcile_batch_types(df, stored)
+            df = self._reconcile_batch_types(df, stored)
         if DELETED_COL not in df.columns:
             df = df.withColumn(DELETED_COL, F.lit(False))
         if COMMIT_VER_COL not in df.columns:
             df = df.withColumn(COMMIT_VER_COL, F.lit(next_ver).cast("long"))
-        out = self._with_part(
-            df.withColumn(
-                BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets)
-            )
-        )
-        schema_json = self._commit_schema_json(out, next_ver)
-        absd, rel = self.log.new_data_subdir()
-        (
-            self._apply_physical(out, schema_json)
-            .repartition(parallelism, *[F.col(c) for c in self._layout_cols()])
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*self._layout_cols())
-            .parquet(absd)
-        )
-        new_files = _collect_file_entries(self.path, rel, spark=self.spark)
-        if whole_table or prev is None:
-            carry: list[FileEntry] = []
+        out = self._laid_out(df)
+        live = prev.files if prev else []
+        if replace == "table":
+            carry = []
+        elif replace == "partitions":
+            self._require_attributable(live, operation)
+
+            def carry(new_files):
+                replaced = {f.partition for f in new_files}
+                return [f for f in live if f.partition not in replaced]
         else:
-            replaced = {f.partition for f in new_files}
-            self._require_attributable(prev.files, operation)
-            carry = [f for f in prev.files if f.partition not in replaced]
-        self.log.commit(
-            operation,
-            carry + new_files,
-            batch_id=batch_id,
-            schema_json=schema_json,
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
+            carry = live
+        self._write_commit(
+            out, operation, prev, carry,
+            self._commit_schema_json(out, next_ver), batch_id,
+            parts=parallelism,
         )
 
     def delete_partitions(
@@ -2513,15 +2536,7 @@ class LakeTable:
                 )
             self._require_attributable(prev.files, "delete_partition")
             carry = [f for f in prev.files if f.partition not in drop]
-            self.log.commit(
-                "delete_partition",
-                carry,
-                batch_id=batch_id,
-                buckets=self.buckets,
-                expected_version=prev.version + 1,
-                partition_fields=self.partition_fields,
-                global_index=self.global_index or None,
-            )
+            self._publish("delete_partition", carry, prev, batch_id=batch_id)
 
         self._with_commit_retries(attempt)
 
@@ -2862,10 +2877,7 @@ class LakeTable:
         if batch_id is not None and self.log.has_batch(batch_id):
             return  # idempotent re-run (H5)
 
-        batch = batch.withColumn(
-            BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets)
-        )
-        batch = self._with_part(batch)
+        batch = self._laid_out(batch)
         # Selective COW: only buckets containing batch keys are touched.
         # On partitioned tables the unit is (partition, bucket) — a batch
         # touching one day never rewrites another day's files. The unit
@@ -2966,8 +2978,8 @@ class LakeTable:
         # every live file unchanged. Publish that commit directly. The
         # schema still evolves exactly as an empty batch evolves it
         # today (additive columns + type widening come from the batch's
-        # DTYPES, not its rows — ``_empty_merge_schema_json`` runs the
-        # same widening rules and raises the same errors). Skipped when
+        # DTYPES, not its rows — ``_merge_payload_fields`` is the one
+        # union + widening both paths derive it from). Skipped when
         # live bootstrap files exist: an empty merge must still convert
         # bloom-less bootstrap files into bucketed state (they are hit
         # candidates for ANY key set).
@@ -2980,17 +2992,14 @@ class LakeTable:
             and self.schema() is not None
             and not any(f.kind == BOOTSTRAP_KIND for f in prev.files)
         ):
-            next_ver = prev.version + 1
-            self.log.commit(
-                "merge",
-                list(prev.files),
-                batch_id=batch_id,
-                schema_json=self._empty_merge_schema_json(batch, next_ver),
-                buckets=self.buckets,
-                expected_version=next_ver,
-                partition_fields=self.partition_fields or None,
-                global_index=self.global_index or None,
+            fields = self._merge_payload_fields(batch, self.schema()) + [
+                StructField(DELETED_COL, BooleanType(), True),
+                StructField(COMMIT_VER_COL, LongType(), True),
+            ]
+            schema_json = self._commit_schema_json_fields(
+                fields, self._stored_schema(), prev.version + 1
             )
+            self._publish("merge", list(prev.files), prev, schema_json, batch_id)
             return
         if mode == "mor" and prev is not None:
             if any(f.kind == BOOTSTRAP_KIND for f in prev.files):
@@ -3053,43 +3062,12 @@ class LakeTable:
             snap = None
 
         next_ver = (prev.version + 1) if prev else 1
-        payload_cols = [
-            c
-            for c in batch.columns
-            if c not in (
-                OP_COL, BUCKET_COL, PARTITION_COL, DELETED_COL, COMMIT_VER_COL,
-            )
-        ]
         if snap is not None:
-            # additive schema evolution: union of payload columns
-            for c in snap.columns:
-                if c not in payload_cols and c not in (
-                    BUCKET_COL, DELETED_COL, COMMIT_VER_COL,
-                ):
-                    payload_cols.append(c)
-            b = batch
-            s = snap
-            b_types, s_types = dict(batch.dtypes), dict(snap.dtypes)
-            for c in payload_cols:
-                if c not in b.columns:
-                    b = b.withColumn(c, F.lit(None).cast(s_types[c]))
-                elif c not in s.columns:
-                    s = s.withColumn(c, F.lit(None).cast(b_types[c]))
-                elif b_types[c] != s_types[c]:
-                    # type widening (in-band schema evolution): cast both
-                    # sides to the read-compatible supertype, or reject
-                    target = _widened_type(b_types[c], s_types[c])
-                    if target is None:
-                        raise IncompatibleSchemaChange(
-                            f"column {c!r} of table at {self.path}: "
-                            f"stored type {s_types[c]} and incoming type "
-                            f"{b_types[c]} have no widening; rewrite the "
-                            "table to change types incompatibly"
-                        )
-                    if b_types[c] != target:
-                        b = b.withColumn(c, F.col(c).cast(target))
-                    if s_types[c] != target:
-                        s = s.withColumn(c, F.col(c).cast(target))
+            # schema evolution: additive union of payload columns, both
+            # sides cast to the read-compatible supertype (or rejected)
+            fields = self._merge_payload_fields(batch, snap.schema)
+            payload_cols = [f.name for f in fields]
+            b, s = _conform(batch, fields), _conform(snap, fields)
             if COMMIT_VER_COL not in s.columns:  # pre-versioning files
                 s = s.withColumn(COMMIT_VER_COL, F.lit(0).cast("long"))
             # record identity on partitioned tables is (partition, key) —
@@ -3150,67 +3128,67 @@ class LakeTable:
             )
         else:
             merged = batch.select(
-                *payload_cols,
+                *[c for c in batch.columns if c not in _MERGE_META],
                 (F.col(OP_COL) == DELETE_OP).alias(DELETED_COL),
                 F.lit(next_ver).cast("long").alias(COMMIT_VER_COL),
                 bucket_expr(F.col(KEY_COL), self.buckets).alias(BUCKET_COL),
             )
 
         merged = self._with_part(merged)
-        schema_json = self._commit_schema_json(merged, next_ver)
-        absd, rel = self.log.new_data_subdir()
-        n = parallelism or max(
-            1, len(units) if units is not None else len(affected)
+        self._write_commit(
+            merged, "merge", prev, carry,
+            self._commit_schema_json(merged, next_ver), batch_id,
+            parts=parallelism or max(
+                1, len(units) if units is not None else len(affected)
+            ),
         )
-        layout = [F.col(c) for c in self._layout_cols()]
-        (
-            self._apply_physical(merged, schema_json)
-            .repartition(n, *layout)
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*self._layout_cols())
-            .parquet(absd)
-        )
-        new_files = _collect_file_entries(self.path, rel, spark=self.spark)
-        self.log.commit(
-            "merge",
-            carry + new_files,
-            batch_id=batch_id,
-            schema_json=schema_json,
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
+
+    def _widened_fields(self, incoming, stored) -> list[StructField]:
+        """In-band schema evolution, in one place: ``incoming``'s fields
+        followed by the ``stored`` ones it lacks (additive union), each
+        at the read-compatible supertype of its two types. Raises
+        ``IncompatibleSchemaChange`` on a change with no widening."""
+        s_types = {f.name: f.dataType for f in stored}
+        out: list[StructField] = []
+        for f in incoming:
+            t = s_types.pop(f.name, f.dataType)
+            a, b = f.dataType.simpleString(), t.simpleString()
+            if a != b:
+                target = _widened_type(a, b)
+                if target is None:
+                    raise IncompatibleSchemaChange(
+                        f"column {f.name!r} of table at {self.path}: "
+                        f"stored type {b} and incoming type {a} have no "
+                        "widening; rewrite the table to change types "
+                        "incompatibly"
+                    )
+                t = _SPARK_TYPE_BY_NAME[target]
+            out.append(StructField(f.name, t, True))
+        return out + [StructField(c, t, True) for c, t in s_types.items()]
+
+    def _merge_payload_fields(
+        self, batch: DataFrame, stored: StructType
+    ) -> list[StructField]:
+        """A merge's payload columns at their committed types: the COW
+        merge plan casts both sides to them, and the empty-batch fast
+        path commits them without building the plan."""
+        return self._widened_fields(
+            [f for f in batch.schema.fields if f.name not in _MERGE_META],
+            [f for f in stored.fields if f.name not in _MERGE_META],
         )
 
     def _reconcile_batch_types(
         self, b: DataFrame, stored: StructType
-    ) -> tuple[DataFrame, dict[str, str]]:
-        """In-band type evolution shared by every write path: cast batch
-        columns to the read-compatible supertype of (incoming, stored),
-        raise on changes with no widening. Returns the cast batch and a
-        {column: widened dtype} map for columns whose STORED type must
-        widen in the committed schema."""
-        s_types = {f.name: f.dataType.simpleString() for f in stored.fields}
-        widened: dict[str, str] = {}
-        for c, t in dict(b.dtypes).items():
-            if c in (OP_COL, BUCKET_COL, PARTITION_COL):
-                continue
-            st = s_types.get(c)
-            if st is not None and st != t:
-                target = _widened_type(t, st)
-                if target is None:
-                    raise IncompatibleSchemaChange(
-                        f"column {c!r} of table at {self.path}: stored "
-                        f"type {st} and incoming type {t} have no "
-                        "widening; rewrite the table to change types "
-                        "incompatibly"
-                    )
-                if t != target:
-                    b = b.withColumn(c, F.col(c).cast(target))
-                if st != target:
-                    widened[c] = target
-        return b, widened
+    ) -> DataFrame:
+        """Cast an append batch's columns to the widened types (the
+        insert and MOR write paths; raises on changes with no
+        widening)."""
+        mine = [
+            f for f in b.schema.fields
+            if f.name not in (OP_COL, BUCKET_COL, PARTITION_COL)
+        ]
+        widened = self._widened_fields(mine, stored.fields)
+        return _conform(b, widened[: len(mine)])
 
     def _commit_schema_json(self, df: DataFrame, next_ver: int) -> str:
         """Committed schema after a write: active stored fields with
@@ -3231,8 +3209,8 @@ class LakeTable:
     ) -> str:
         """Core of ``_commit_schema_json`` over the would-be-written
         frame's schema FIELDS — shared with the empty-batch fast path,
-        which derives the same fields driver-side without building the
-        merge plan."""
+        which derives the same fields (``_merge_payload_fields``)
+        without building the merge plan."""
         d_types = {f.name: f.dataType.simpleString() for f in out_fields}
         by_name = {f.name: f for f in out_fields}
         used_phys = {self._physical_of(f) for f in full.fields}
@@ -3264,55 +3242,6 @@ class LakeTable:
             used_phys.add(phys)
             fields.append(StructField(c, by_name[c].dataType, True, md))
         return StructType(fields).json()
-
-    def _empty_merge_schema_json(self, batch: DataFrame, next_ver: int) -> str:
-        """Commit schema for a COW merge whose batch produced ZERO rows —
-        the schema the full merge plan would have committed, derived
-        driver-side. An empty batch still evolves the schema exactly as
-        a non-empty one does (evolution reads the batch's DTYPES, never
-        its rows): additive columns append, widenable type changes widen
-        the stored type, and incompatible changes raise the same
-        ``IncompatibleSchemaChange``. Mirrors ``_merge_once``'s payload
-        union + widening loop over ``(batch, active schema)`` and feeds
-        the same ``_commit_schema_json_fields`` the merged frame's
-        schema would have fed."""
-        full = self._stored_schema()
-        stored = self.schema()
-        b_fields = {f.name: f for f in batch.schema.fields}
-        meta = (OP_COL, BUCKET_COL, PARTITION_COL, DELETED_COL, COMMIT_VER_COL)
-        payload = [c for c in batch.columns if c not in meta]
-        for f in stored.fields:
-            if f.name not in payload and f.name not in (
-                BUCKET_COL, DELETED_COL, COMMIT_VER_COL,
-            ):
-                payload.append(f.name)
-        s_types = {f.name: f for f in stored.fields}
-        out: list[StructField] = []
-        for c in payload:
-            bf, sf = b_fields.get(c), s_types.get(c)
-            if bf is None:
-                out.append(StructField(c, sf.dataType, True))
-            elif sf is None:
-                out.append(StructField(c, bf.dataType, True))
-            else:
-                bt, st = bf.dataType.simpleString(), sf.dataType.simpleString()
-                if bt == st:
-                    out.append(StructField(c, sf.dataType, True))
-                else:
-                    target = _widened_type(bt, st)
-                    if target is None:
-                        raise IncompatibleSchemaChange(
-                            f"column {c!r} of table at {self.path}: "
-                            f"stored type {st} and incoming type "
-                            f"{bt} have no widening; rewrite the "
-                            "table to change types incompatibly"
-                        )
-                    out.append(
-                        StructField(c, _SPARK_TYPE_BY_NAME[target], True)
-                    )
-        out.append(StructField(DELETED_COL, BooleanType(), True))
-        out.append(StructField(COMMIT_VER_COL, LongType(), True))
-        return self._commit_schema_json_fields(out, full, next_ver)
 
     def _apply_physical(self, df: DataFrame, schema_json: str) -> DataFrame:
         """Rename logical -> physical columns per the schema about to be
@@ -3391,15 +3320,7 @@ class LakeTable:
                         f"__dropped_v{next_ver}__{a}", f.dataType, True, md
                     )
                 )
-        self.log.commit(
-            "alter",
-            prev.files,
-            schema_json=StructType(fields).json(),
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
-        )
+        self._publish("alter", prev.files, prev, StructType(fields).json())
 
     def _merge_mor(
         self,
@@ -3429,7 +3350,7 @@ class LakeTable:
         for c in (DELETED_COL, COMMIT_VER_COL):
             if c in b.columns:
                 b = b.drop(c)
-        b, _ = self._reconcile_batch_types(b, stored)
+        b = self._reconcile_batch_types(b, stored)
         delta = (
             b.withColumn(DELETED_COL, F.col(OP_COL) == DELETE_OP)
             .withColumn(COMMIT_VER_COL, F.lit(next_ver).cast("long"))
@@ -3478,28 +3399,10 @@ class LakeTable:
                     F.lit(next_ver).cast("long").alias(COMMIT_VER_COL),
                 )
                 delta = out.unionByName(tombs, allowMissingColumns=True)
-        schema_json = self._commit_schema_json(delta, next_ver)
-        absd, rel = self.log.new_data_subdir()
-        n = parallelism or max(1, len(affected))
-        layout = [F.col(c) for c in self._layout_cols()]
-        (
-            self._apply_physical(delta, schema_json)
-            .repartition(n, *layout)
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*self._layout_cols())
-            .parquet(absd)
-        )
-        new_files = _collect_file_entries(self.path, rel, kind="delta", spark=self.spark)
-        self.log.commit(
-            "merge",
-            prev.files + new_files,
-            batch_id=batch_id,
-            schema_json=schema_json,
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
+        self._write_commit(
+            delta, "merge", prev, prev.files,
+            self._commit_schema_json(delta, next_ver), batch_id,
+            kind="delta", parts=parallelism or max(1, len(affected)),
         )
 
     # Above this many distinct batch keys the per-merge bloom probe is

@@ -19,12 +19,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from hudi_spark_plus_spark.table.keygen import BUCKET_COL, KEY_COL, bucket_expr
-from hudi_spark_plus_spark.table.lake_table import (
-    _BLOOM_OPTS,
-    LakeTable,
-    _collect_file_entries,
-)
+from hudi_spark_plus_spark.table.lake_table import LakeTable
 
 
 def compact(lake: LakeTable, target_files_per_bucket: int = 1) -> dict:
@@ -37,34 +32,10 @@ def compact(lake: LakeTable, target_files_per_bucket: int = 1) -> dict:
         prev = lake.log.latest()
         if prev is None:
             return {"files_before": 0, "files_after": 0}
-        snap = lake.snapshot(include_deleted=True)
-        out = lake._apply_physical(  # files store physical column names
-            lake._with_part(
-                snap.withColumn(
-                    BUCKET_COL, bucket_expr(F.col(KEY_COL), lake.buckets)
-                )
-            ),
-            prev.schema_json,
-        )
-        absd, rel = lake.log.new_data_subdir()
-        layout = lake._layout_cols()
-        (
-            out.repartition(
-                max(1, lake.buckets * target_files_per_bucket),
-                *[F.col(c) for c in layout],
-            )
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)  # keep the key bloom through rewrites
-            .partitionBy(*layout)
-            .parquet(absd)
-        )
-        files = _collect_file_entries(lake.path, rel, spark=lake.spark)
-        lake.log.commit(
-            "compact",
-            files,
-            schema_json=prev.schema_json,
-            expected_version=prev.version + 1,
-            partition_fields=lake.partition_fields or None,
+        files = lake._write_commit(
+            lake._laid_out(lake.snapshot(include_deleted=True)),
+            "compact", prev, [], prev.schema_json,
+            parts=max(1, lake.buckets * target_files_per_bucket),
         )
         return {"files_before": len(prev.files), "files_after": len(files)}
 
@@ -111,34 +82,10 @@ def compact_buckets(
         df = lake._read_files(hit)
         if any(f.kind == "delta" for f in hit):
             df = lake._resolve_latest(df)
-        out = lake._apply_physical(  # files store physical column names
-            lake._with_part(
-                df.withColumn(
-                    BUCKET_COL, bucket_expr(F.col(KEY_COL), lake.buckets)
-                )
-            ),
-            prev.schema_json,
-        )
-        absd, rel = lake.log.new_data_subdir()
-        layout = lake._layout_cols()
         n_units = len(units) if units is not None else len(buckets)
-        (
-            out.repartition(
-                max(1, n_units * target_files_per_bucket),
-                *[F.col(c) for c in layout],
-            )
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*layout)
-            .parquet(absd)
-        )
-        files = _collect_file_entries(lake.path, rel, spark=lake.spark)
-        lake.log.commit(
-            "compact",
-            carry + files,
-            schema_json=prev.schema_json,
-            expected_version=prev.version + 1,
-            partition_fields=lake.partition_fields or None,
+        files = lake._write_commit(
+            lake._laid_out(df), "compact", prev, carry, prev.schema_json,
+            parts=max(1, n_units * target_files_per_bucket),
         )
         return {
             "buckets_compacted": n_units,
@@ -321,32 +268,9 @@ def rewrite_column_type(
                 for f in stored.fields
             ]
         )
-        out = lake._apply_physical(
-            lake._with_part(
-                snap.withColumn(col, casted).withColumn(
-                    BUCKET_COL, bucket_expr(F.col(KEY_COL), lake.buckets)
-                )
-            ),
-            new_schema.json(),
-        )
-        absd, rel = lake.log.new_data_subdir()
-        layout = lake._layout_cols()
-        (
-            out.repartition(
-                max(1, lake.buckets), *[F.col(c) for c in layout]
-            )
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*layout)
-            .parquet(absd)
-        )
-        files = _collect_file_entries(lake.path, rel, spark=lake.spark)
-        lake.log.commit(
-            "retype",
-            files,
-            schema_json=new_schema.json(),
-            expected_version=prev.version + 1,
-            partition_fields=lake.partition_fields or None,
+        files = lake._write_commit(
+            lake._laid_out(snap.withColumn(col, casted)),
+            "retype", prev, [], new_schema.json(), parts=max(1, lake.buckets),
         )
         return {
             "files_before": len(prev.files),
@@ -573,6 +497,12 @@ def fsck(lake: LakeTable, grace_seconds: float = 600.0) -> dict:
       ``in_flight``. ``vacuum`` reclaims aged orphans; fsck only
       counts them.
 
+    * **size_mismatch** — a LATEST-version file whose on-disk size
+      differs from the ``bytes`` its manifest entry recorded at commit
+      time: truncated or replaced behind the table's back. ``ok`` is
+      False when there is one; entries without ``bytes`` (pre-size
+      manifests) are skipped.
+
     Segment manifests get the same referenced-set check (missing
     segment = bricked timeline read). Bootstrap/clone entries that
     point OUTSIDE the table root are existence-checked like any other
@@ -595,17 +525,24 @@ def fsck(lake: LakeTable, grace_seconds: float = 600.0) -> dict:
         for rel in (c.segments or {}).values():
             seg_versions.setdefault(rel, []).append(v)
     referenced = set(ref_versions)
+    latest_bytes = {f.path: f.bytes for f in lake.log.live_files()}
     missing_latest: list[str] = []
     missing_history: list[str] = []
     missing_segments: list[str] = []
+    size_mismatch: list[str] = []
     for path, vs in ref_versions.items():
-        if os.path.exists(lake.log.abs_path(path)):
+        try:
+            size = os.path.getsize(lake.log.abs_path(path))
+        except OSError:
+            if latest_v in vs:
+                missing_latest.append(f"{path}@v{latest_v}")
+            missing_history.extend(
+                f"{path}@v{v}" for v in vs if v != latest_v
+            )
             continue
-        if latest_v in vs:
-            missing_latest.append(f"{path}@v{latest_v}")
-        missing_history.extend(
-            f"{path}@v{v}" for v in vs if v != latest_v
-        )
+        want = latest_bytes.get(path)
+        if want is not None and size != want:
+            size_mismatch.append(f"{path}: {size} bytes, manifest {want}")
     for rel, vs in seg_versions.items():
         if not os.path.exists(os.path.join(lake.path, rel)):
             missing_segments.extend(f"{rel}@v{v}" for v in vs)
@@ -635,8 +572,10 @@ def fsck(lake: LakeTable, grace_seconds: float = 600.0) -> dict:
     # dedupe history misses (same path can miss across many versions)
     missing_history = sorted(set(missing_history))
     return {
-        "ok": not missing_latest and not missing_segments,
+        "ok": not missing_latest and not missing_segments
+        and not size_mismatch,
         "missing_latest": sorted(missing_latest),
+        "size_mismatch": sorted(size_mismatch),
         "missing_history": missing_history,
         "missing_segments": sorted(set(missing_segments)),
         "orphan_files": sorted(orphans),

@@ -278,82 +278,57 @@ def zorder_cluster_table(
     its own files; GLOBAL-index tables with live deltas refuse partition
     scoping (key-only identity resolves across partitions — a scoped
     rewrite could resurrect a row relocated away)."""
-    from hudi_spark_plus_spark.table.keygen import BUCKET_COL, KEY_COL, bucket_expr
-    from hudi_spark_plus_spark.table.lake_table import (
-        _BLOOM_OPTS,
-        _collect_file_entries,
-    )
+    if partitions is not None and not lake.partition_fields:
+        raise ValueError("partitions= requires a partitioned table")
 
-    prev = lake.log.latest()
-    if prev is None:
-        return
-    if partitions is None:
-        hit, carry = list(prev.files), []
-        snap = lake.snapshot(include_deleted=True)
-        n_units = lake.buckets
-    else:
-        if not lake.partition_fields:
-            raise ValueError(
-                "partitions= requires a partitioned table"
-            )
-        if lake.global_index and any(
-            f.kind == "delta" for f in prev.files
-        ):
-            raise ValueError(
-                "partition-scoped clustering is unsafe on a GLOBAL-index "
-                "table with live deltas (key-only identity resolves "
-                "across partitions); compact() first"
-            )
-        pset = set(partitions)
-        hit = [f for f in prev.files if f.partition in pset]
-        carry = [f for f in prev.files if f.partition not in pset]
-        if not hit:
+    def attempt() -> None:
+        prev = lake.log.latest()
+        if prev is None:
             return
-        snap = lake._read_files(hit)
-        if any(f.kind == "delta" for f in hit):
-            snap = lake._resolve_latest(snap)
-        n_units = max(1, len({(f.partition, f.bucket) for f in hit}))
-    z = (
-        with_zvalue(snap, col_a, col_b)
-        if not more_cols
-        else with_zvalue_n(snap, [col_a, col_b, *more_cols])
-    )
-    schema_json = prev.schema_json
-    absd, rel = lake.log.new_data_subdir()
-    layout = lake._layout_cols()
-    (
-        lake._apply_physical(  # files store physical column names
-            lake._with_part(
-                z.withColumn(
-                    BUCKET_COL, bucket_expr(F.col(KEY_COL), lake.buckets)
+        if partitions is None:
+            carry = []
+            snap = lake.snapshot(include_deleted=True)
+            n_units = lake.buckets
+        else:
+            if lake.global_index and any(
+                f.kind == "delta" for f in prev.files
+            ):
+                raise ValueError(
+                    "partition-scoped clustering is unsafe on a GLOBAL-index "
+                    "table with live deltas (key-only identity resolves "
+                    "across partitions); compact() first"
                 )
-            ),
-            schema_json,
+            pset = set(partitions)
+            hit = [f for f in prev.files if f.partition in pset]
+            carry = [f for f in prev.files if f.partition not in pset]
+            if not hit:
+                return
+            snap = lake._read_files(hit)
+            if any(f.kind == "delta" for f in hit):
+                snap = lake._resolve_latest(snap)
+            n_units = max(1, len({(f.partition, f.bucket) for f in hit}))
+        z = lake._laid_out(
+            with_zvalue(snap, col_a, col_b)
+            if not more_cols
+            else with_zvalue_n(snap, [col_a, col_b, *more_cols])
         )
-        # range-partition on (layout, z): each output file owns ONE
-        # (partition, bucket) unit's contiguous Z slice, so manifest
-        # col_stats are tight on every cluster column and value-range
-        # scans (scan_range) skip whole files — the col_stats payoff
-        # z-order exists for
-        .repartitionByRange(
-            n_units * files_per_bucket,
-            *[F.col(c) for c in layout],
-            F.col("_z"),
+        layout = lake._layout_cols()
+        lake._write_commit(
+            # range-partition on (layout, z): each output file owns ONE
+            # (partition, bucket) unit's contiguous Z slice, so manifest
+            # col_stats are tight on every cluster column and value-range
+            # scans (scan_range) skip whole files — the col_stats payoff
+            # z-order exists for
+            z.repartitionByRange(
+                n_units * files_per_bucket,
+                *[F.col(c) for c in layout],
+                F.col("_z"),
+            )
+            .sortWithinPartitions(*layout, "_z")
+            .drop("_z"),
+            "cluster", prev, carry, prev.schema_json,
         )
-        .sortWithinPartitions(*layout, "_z")
-        .drop("_z")
-        .write.mode("append")
-        .options(**_BLOOM_OPTS)  # keep the key bloom filter through rewrites
-        .partitionBy(*layout)
-        .parquet(absd)
-    )
-    files = _collect_file_entries(lake.path, rel, spark=lake.spark)
-    lake.log.commit(
-        "cluster",
-        carry + files,
-        schema_json=schema_json,
-        partition_fields=lake.partition_fields or None,
-    )
-    # clustering rewrites the scoped files: re-index the new ones
-    # in-line (same invariant as LakeTable._with_commit_retries commits)
-    lake._maintain_indexes()
+
+    # a lost publish race recomputes against the winner's timeline, and
+    # the new files are re-indexed in-line like every other commit
+    lake._with_commit_retries(attempt)

@@ -16,8 +16,6 @@ import pytest
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 from hudi_spark_plus_spark.table.maintenance import fsck, vacuum
 
-pytestmark = pytest.mark.slow  # full-tier suite (see pytest.ini)
-
 
 def mk(spark, rows):
     return spark.createDataFrame(
@@ -49,6 +47,19 @@ class TestFsck:
         r = fsck(table)
         assert r["ok"] is False
         assert len(r["missing_latest"]) >= 1
+
+    def test_truncated_latest_file_flags_not_ok(self, spark, table):
+        """A live file cut short behind the table's back still exists, so
+        only its recorded size can expose it."""
+        path = _a_live_file(table)
+        size = os.path.getsize(path)
+        with open(path, "r+b") as fh:
+            fh.truncate(size // 2)
+        r = fsck(table)
+        assert r["ok"] is False
+        assert not r["missing_latest"]
+        assert len(r["size_mismatch"]) == 1
+        assert str(size // 2) in r["size_mismatch"][0]
 
     def test_history_only_miss_keeps_ok(self, spark, table):
         """A file only OLD versions reference (rewritten by b2) going
