@@ -606,16 +606,35 @@ class LakeTable:
                 scan.append(f)
         return meta, scan
 
-    def _scan_resolved(self, files: list, version: int | None) -> DataFrame:
-        """snapshot() semantics over an explicit subset at a version:
-        read under the version's schema, MOR-resolve iff deltas are in
-        the subset, hide tombstones with snapshot()'s exact filter."""
+    def _read_resolved(
+        self,
+        files: list,
+        version: int | None = None,
+        include_deleted: bool = False,
+    ) -> DataFrame:
+        """snapshot() semantics over an explicit subset of the live set
+        at ``version`` — the one resolved read behind every snapshot-
+        shaped path: read under the version's schema, MOR-resolve iff
+        deltas are in the subset, hide tombstones unless
+        ``include_deleted``. A pruned subset must hold every file its
+        rows resolve against (``_pruned`` guarantees that)."""
         df = self._read_files(files, schema=self._schema_at(version))
         if any(f.kind == "delta" for f in files):
             df = self._resolve_latest(df)
-        if DELETED_COL in df.columns:
+        if not include_deleted and DELETED_COL in df.columns:
             df = df.where(~F.col(DELETED_COL))
         return df
+
+    def _field_at(
+        self, col: str, version: int | None = None
+    ) -> StructField | None:
+        """The LOGICAL field ``col`` in the schema of ``version`` (None
+        = latest), or None. Manifest col_stats are recorded under the
+        field's physical name, fixed at column birth."""
+        sch = self._schema_at(version)
+        if sch is None:
+            return None
+        return next((f for f in sch.fields if f.name == col), None)
 
     def stats_count(
         self,
@@ -638,7 +657,7 @@ class LakeTable:
         meta, scan = self._meta_agg_split(files)
         n = sum(f.live_rows for f in meta)
         if scan:
-            n += self._scan_resolved(scan, version).count()
+            n += self._read_resolved(scan, version).count()
         return {
             "count": n,
             "files_metadata": len(meta),
@@ -668,8 +687,7 @@ class LakeTable:
         diverge from ``snapshot().agg(max())``. Integral/decimal types
         have no NaN, so the fast path stays exact there. Everything
         untrusted is scanned; the two halves combine exactly."""
-        schema = self._schema_at(version) or self.schema()
-        field = next((f for f in schema.fields if f.name == col), None)
+        field = self._field_at(col, version)
         if field is None:
             raise KeyError(f"no such column: {col}")
         phys = self._physical_of(field)
@@ -698,7 +716,7 @@ class LakeTable:
             lo = st[0] if lo is None else min(lo, st[0])
             hi = st[1] if hi is None else max(hi, st[1])
         if scan:
-            row = self._scan_resolved(scan, version).agg(
+            row = self._read_resolved(scan, version).agg(
                 F.min(col).alias("lo"), F.max(col).alias("hi")
             ).first()
             if row["lo"] is not None:
@@ -811,13 +829,11 @@ class LakeTable:
         files = self.log.live_files(version)
         if read_optimized:
             files = [f for f in files if f.kind != "delta"]
-        files = self._prune_partitions(files, partitions, partition_range)
-        df = self._read_files(files, schema=self._schema_at(version))
-        if not read_optimized and any(f.kind == "delta" for f in files):
-            df = self._resolve_latest(df)
-        if not include_deleted and DELETED_COL in df.columns:
-            df = df.where(~F.col(DELETED_COL))
-        return df
+        return self._read_resolved(
+            self._prune_partitions(files, partitions, partition_range),
+            version,
+            include_deleted,
+        )
 
     def history(self) -> DataFrame:
         """Timeline metadata table (the Hudi commits-metadata / Delta
@@ -1146,17 +1162,7 @@ class LakeTable:
                 and f.path not in end_paths
                 and f.path not in have
             ]
-            bdf = self._read_files(bfiles, schema=self._schema_at(begin))
-            if COMMIT_VER_COL not in bdf.columns:
-                bdf = bdf.withColumn(
-                    COMMIT_VER_COL, F.lit(0).cast("long")
-                )
-            if any(f.kind == "delta" for f in bfiles):
-                bdf = self._resolve_latest(bdf)
-            base = bdf.where(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            )
-            bsel = base.select(
+            bsel = self._read_resolved(bfiles, begin).select(
                 F.col(KEY_COL).alias("_b_key"),
                 *(
                     [self._partition_expr().alias("_b_part")]
@@ -1227,10 +1233,7 @@ class LakeTable:
                 for f in live
                 if f.bucket in buckets or f.kind == BOOTSTRAP_KIND
             ]
-            df = self._read_files(files)
-            if any(f.kind == "delta" for f in files):
-                df = self._resolve_latest(df)
-            return df.join(
+            return self._read_resolved(files, include_deleted=True).join(
                 key_set.select(KEY_COL).distinct(), KEY_COL, "left_semi"
             )
         keys = [r[0] for r in rows]
@@ -1263,68 +1266,47 @@ class LakeTable:
                 )
             )
         ]
-        df = self._read_files(files)
-        if any(f.kind == "delta" for f in files):
-            df = self._resolve_latest(df)
-        return df
+        return self._read_resolved(files, include_deleted=True)
 
     def files_in_range(self, col: str, lo, hi) -> tuple[list, list]:
-        """(kept, all_live): live files whose manifest col_stats range
-        for ``col`` intersects [lo, hi] — a file with no recorded stats
-        for the column is conservatively kept. Pure manifest metadata,
-        no data I/O. ``col`` is the LOGICAL name; stats are recorded
-        under the physical (stored) name, mapped here."""
-        sch = self.schema()
-        phys = col
-        if sch is not None:
-            for fld in sch.fields:
-                if fld.name == col:
-                    phys = self._physical_of(fld)
-                    break
-        files = self.log.live_files()
-        # structural partition elimination first: when ``col`` IS the
-        # (single) partition field, each file's exact partition value
-        # prunes it with no stats at all — works even for files whose
-        # col_stats were unrecordable. String compare, so only applied
-        # to string bounds (ISO dates / strings — the recommended
-        # partition types).
-        part_pruned = files
-        if (
+        """(kept, live): live files whose manifest col_stats range for
+        ``col`` intersects [lo, hi] — a file with no recorded stats for
+        the column is conservatively kept — MOR-widened by ``_pruned``.
+        Pure manifest metadata, no data I/O. ``col`` is the LOGICAL
+        name; stats are recorded under the physical (stored) name."""
+        fld = self._field_at(col)
+        phys = self._physical_of(fld) if fld else col
+        # when ``col`` IS the (single) partition field, each file's exact
+        # partition value prunes it with no stats at all — works even
+        # for files whose col_stats were unrecordable. String compare,
+        # so only applied to string bounds (ISO dates / strings — the
+        # recommended partition types).
+        by_part = (
             self.partition_fields == [col]
             and isinstance(lo, str)
             and isinstance(hi, str)
-        ):
-            part_pruned = [
-                f
-                for f in files
-                if f.partition is None or (lo <= f.partition <= hi)
-            ]
-        kept = []
-        for f in part_pruned:
+        )
+
+        def might_hit(f: FileEntry) -> bool:
+            if by_part and f.partition is not None and not (
+                lo <= f.partition <= hi
+            ):
+                return False
             st = (f.col_stats or {}).get(phys)
-            if st is None or not (hi < st[0] or lo > st[1]):
-                kept.append(f)
-        return kept, files
+            return st is None or not (hi < st[0] or lo > st[1])
+
+        return self._pruned(might_hit)
 
     def scan_range(self, col: str, lo, hi) -> DataFrame:
         """Value-range scan with manifest col_stats file pruning (the
         Hudi metadata-table col_stats read path): rows of the current
         snapshot with ``col`` in [lo, hi], reading ONLY files whose
         recorded range intersects — after z-order clustering on the
-        column this skips most of the table for selective ranges.
-
-        MOR caveat: pruning base files under unresolved deltas could
-        surface superseded rows, so when deltas are live this falls
-        back to the full resolved snapshot + filter (compaction restores
-        the pruned path)."""
-        files = self.log.live_files()
-        if any(f.kind == "delta" for f in files):
-            return self.snapshot().where(F.col(col).between(lo, hi))
+        column this skips most of the table for selective ranges. Under
+        MOR the kept set is bucket-widened, so a kept base row is
+        resolved against the delta that supersedes it."""
         kept, _ = self.files_in_range(col, lo, hi)
-        df = self._read_files(kept)
-        if DELETED_COL in df.columns:
-            df = df.where(~F.col(DELETED_COL))
-        return df.where(F.col(col).between(lo, hi))
+        return self._read_resolved(kept).where(F.col(col).between(lo, hi))
 
     # -- secondary index (Hudi 1.0 secondary-index analogue) ---------------
     #
@@ -1351,25 +1333,24 @@ class LakeTable:
     )
 
     def _index_col_field(self, col: str) -> StructField:
-        sch = self.schema()
-        if sch is None:
+        if self.schema() is None:
             raise ValueError(f"lake table at {self.path} has no commits")
-        for fld in sch.fields:
-            if fld.name == col:
-                if col in self.RESERVED_COLS or col == DELETED_COL:
-                    raise ValueError(
-                        f"column {col!r} is an engine meta column; the "
-                        "record-key Bloom already indexes keys"
-                    )
-                t = fld.dataType.simpleString()
-                if t not in self._INDEXABLE_TYPES:
-                    raise ValueError(
-                        f"secondary index supports {self._INDEXABLE_TYPES} "
-                        f"columns; {col!r} is {t!r} (float equality is not "
-                        "a sane index probe; use scan_range for ranges)"
-                    )
-                return fld
-        raise ValueError(f"column {col!r} not in table schema")
+        fld = self._field_at(col)
+        if fld is None:
+            raise ValueError(f"column {col!r} not in table schema")
+        if col in self.RESERVED_COLS or col == DELETED_COL:
+            raise ValueError(
+                f"column {col!r} is an engine meta column; the "
+                "record-key Bloom already indexes keys"
+            )
+        t = fld.dataType.simpleString()
+        if t not in self._INDEXABLE_TYPES:
+            raise ValueError(
+                f"secondary index supports {self._INDEXABLE_TYPES} "
+                f"columns; {col!r} is {t!r} (float equality is not "
+                "a sane index probe; use scan_range for ranges)"
+            )
+        return fld
 
     def _index_dir(self, col: str) -> str:
         if not col.replace("_", "").isalnum():
@@ -1452,15 +1433,17 @@ class LakeTable:
             out.setdefault(f.path, self._EMPTY_BLOOM)
         return out
 
-    def _publish_index(self, col: str, entries: dict, version: int) -> str:
+    def _publish_sidecar(self, dirname: str, payload: dict) -> str:
+        """Publish ``payload`` as the next ``index-<n>.json`` manifest
+        of the ``_index/<dirname>`` sidecar (secondary index, functional
+        index, NDV sketch): finalizer-atomic, a lost slot race moves on
+        to the next slot, older manifests retire. Returns the path."""
         import json as _json
 
-        d = self._index_dir(col)
+        d = self._index_dir(dirname)
         os.makedirs(d, exist_ok=True)
-        content = _json.dumps(
-            {"col": col, "version": version, "entries": entries}
-        )
-        n = self._latest_index_n(col) + 1
+        content = _json.dumps(payload)
+        n = self._latest_index_n(dirname) + 1
         for _ in range(self.COMMIT_RETRIES + 1):
             target = os.path.join(d, f"index-{n:06d}.json")
             try:
@@ -1470,9 +1453,33 @@ class LakeTable:
             except CommitConflict:
                 n += 1  # concurrent indexer landed; next slot
         raise CommitConflict(
-            f"could not publish secondary index for {col!r} after "
+            f"could not publish index manifest {dirname!r} after "
             f"{self.COMMIT_RETRIES + 1} attempts"
         )
+
+    def _refresh_sidecar(
+        self, dirname: str, idx: dict, meta: dict, build
+    ) -> tuple[int, int, int]:
+        """Async-indexer catch-up shared by the secondary and functional
+        indexes: ``build`` entries for ONLY the live files with none,
+        carry still-live entries forward, drop dead ones, and publish
+        ``{**meta, version, entries}``. Cost is proportional to data
+        written since the last (re)build, not to the table; a no-change
+        refresh (idempotent replay, commit that touched no indexed
+        state) publishes nothing. Returns (version, files_indexed,
+        files_built)."""
+        latest = self.log.latest()
+        live = self.log.live_files()
+        old = idx["entries"]
+        entries = {f.path: old[f.path] for f in live if f.path in old}
+        new_files = [f for f in live if f.path not in old]
+        if not new_files and entries == old:
+            return idx["version"], len(entries), 0
+        entries.update(build(new_files))
+        self._publish_sidecar(
+            dirname, {**meta, "version": latest.version, "entries": entries}
+        )
+        return latest.version, len(entries), len(new_files)
 
     @staticmethod
     def _retire_index_manifests(d: str, newest: int) -> None:
@@ -1559,7 +1566,9 @@ class LakeTable:
             raise ValueError(f"lake table at {self.path} has no commits")
         files = self.log.live_files()
         entries = self._build_index_entries(files, col)
-        self._publish_index(col, entries, latest.version)
+        self._publish_sidecar(
+            col, {"col": col, "version": latest.version, "entries": entries}
+        )
         return {
             "col": col,
             "version": latest.version,
@@ -1567,35 +1576,20 @@ class LakeTable:
         }
 
     def refresh_secondary_index(self, col: str) -> dict:
-        """Async-indexer catch-up: bloom ONLY the live files with no
-        entry, carry still-live entries forward, drop dead ones. Cost is
-        proportional to data written since the last (re)build, not to
-        the table. No-change refreshes (idempotent replays, commits
-        that touched no indexed state) publish nothing."""
+        """Async-indexer catch-up (``_refresh_sidecar``): bloom ONLY the
+        live files with no entry; creates the index if it has none."""
         idx = self.secondary_index(col)
         if idx is None:
             return self.create_secondary_index(col)
-        latest = self.log.latest()
-        live = self.log.live_files()
-        old = idx["entries"]
-        carried = {
-            f.path: old[f.path] for f in live if f.path in old
-        }
-        new_files = [f for f in live if f.path not in old]
-        if not new_files and carried == old:
-            return {
-                "col": col,
-                "version": idx["version"],
-                "files_indexed": len(carried),
-                "files_built": 0,
-            }
-        carried.update(self._build_index_entries(new_files, col))
-        self._publish_index(col, carried, latest.version)
+        version, n, built = self._refresh_sidecar(
+            col, idx, {"col": col},
+            lambda files: self._build_index_entries(files, col),
+        )
         return {
             "col": col,
-            "version": latest.version,
-            "files_indexed": len(carried),
-            "files_built": len(new_files),
+            "version": version,
+            "files_indexed": n,
+            "files_built": built,
         }
 
     def functional_indexes(self) -> list[str]:
@@ -1652,9 +1646,6 @@ class LakeTable:
         if not probes:
             return [], self.log.live_files(version)
         entries = idx["entries"]
-        live = self._prune_partitions(
-            self.log.live_files(version), partitions
-        )
 
         def might_hit(f: FileEntry) -> bool:
             b = entries.get(f.path)
@@ -1665,6 +1656,25 @@ class LakeTable:
             bloom = KeyBloom.from_b64(b)
             return any(bloom.might_contain(p) for p in probes)
 
+        return self._pruned(might_hit, version, partitions)
+
+    def _pruned(
+        self,
+        might_hit,
+        version: int | None = None,
+        partitions=None,
+        partition_range=None,
+    ) -> tuple[list, list]:
+        """(kept, live): the one file-pruning path behind the secondary
+        index, functional index, col_stats range and value-set reads.
+        ``live`` is the live set at ``version`` after structural
+        partition elimination; ``kept`` is the files ``might_hit`` keeps
+        (the caller's own predicate), MOR-widened by
+        ``_widen_hits_for_mor`` so ``_read_resolved(kept, version)``
+        resolves every kept row correctly."""
+        live = self._prune_partitions(
+            self.log.live_files(version), partitions, partition_range
+        )
         hits = [f for f in live if might_hit(f)]
         return self._widen_hits_for_mor(hits, live), live
 
@@ -1704,23 +1714,7 @@ class LakeTable:
         is re-applied by Spark, so Bloom false positives and stale
         entries cost reads, never wrong rows."""
         kept, _ = self.files_for_values(col, values, partitions)
-        return self._snapshot_of_files(kept).where(
-            F.col(col).isin(list(values))
-        )
-
-    def _snapshot_of_files(self, files: list) -> DataFrame:
-        """Snapshot semantics over an explicit (already-pruned) live
-        subset: read, MOR-resolve if deltas present, hide tombstones.
-        Only valid for file sets produced by the pruning helpers, which
-        keep every file needed to resolve the kept rows' keys."""
-        if not files:
-            return self.spark.createDataFrame([], self.schema())
-        df = self._read_files(files)
-        if any(f.kind == "delta" for f in files):
-            df = self._resolve_latest(df)
-        if DELETED_COL in df.columns:
-            df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        return df
+        return self._read_resolved(kept).where(F.col(col).isin(list(values)))
 
     # probing more values than this per file is slower than scanning;
     # past it, value-set file pruning declines (row-level prune remains)
@@ -1770,24 +1764,18 @@ class LakeTable:
                 else str(v)
                 for v in vals
             }
-            live = self.log.live_files(version)
-            hits = [
-                f for f in live if f.partition is None or f.partition in keep
-            ]
-            return self._widen_hits_for_mor(hits, live), live
+            return self._pruned(
+                lambda f: f.partition is None or f.partition in keep, version
+            )
         # 3. manifest col_stats — [min,max] per file. Parquet stats
         # ignore nulls, so a null probe can never be pruned by them.
         if has_null or len(non_null) > self.PRUNE_PROBE_CAP:
             return None
-        sch = self.schema()
-        phys = col
-        if sch is not None:
-            for fld in sch.fields:
-                if fld.name == col:
-                    phys = self._physical_of(fld)
-                    break
-        live = self.log.live_files(version)
-        if not any((f.col_stats or {}).get(phys) for f in live):
+        fld = self._field_at(col, version)
+        phys = self._physical_of(fld) if fld else col
+        if not any(
+            (f.col_stats or {}).get(phys) for f in self.log.live_files(version)
+        ):
             return None
 
         def might(f: FileEntry) -> bool:
@@ -1798,8 +1786,8 @@ class LakeTable:
                 return any(st[0] <= v <= st[1] for v in non_null)
             except TypeError:
                 return True  # incomparable probe type: keep
-        hits = [f for f in live if might(f)]
-        return self._widen_hits_for_mor(hits, live), live
+
+        return self._pruned(might, version)
 
     # broadcast-semi guard for partial-recompute consumers: past this
     # many affected groups the plan falls back to a shuffle semi-join
@@ -1880,7 +1868,7 @@ class LakeTable:
                 out.update(
                     prune_col=c, files_kept=len(kept), files_live=len(live)
                 )
-                snap = self._snapshot_of_files(kept)
+                snap = self._read_resolved(kept, version)
                 break
         if snap is None:
             snap = self.snapshot(version=version)
@@ -1986,7 +1974,16 @@ class LakeTable:
         latest = self.log.latest()
         files = self.log.live_files()
         entries = self._fn_build_entries(files, expr_sql)
-        self._publish_fn_index(name, expr_sql, entries, latest.version)
+        self._publish_sidecar(
+            self._FN_PREFIX + name,
+            {
+                "kind": "functional",
+                "name": name,
+                "expr": expr_sql,
+                "version": latest.version,
+                "entries": entries,
+            },
+        )
         return {
             "name": name,
             "expr": expr_sql,
@@ -2004,59 +2001,19 @@ class LakeTable:
                 "(the expression lives in the index, so refresh "
                 "cannot invent one)"
             )
-        latest = self.log.latest()
-        live = self.log.live_files()
-        old = idx["entries"]
-        carried = {f.path: old[f.path] for f in live if f.path in old}
-        new_files = [f for f in live if f.path not in old]
-        if not new_files and carried == old:
-            return {
-                "name": name,
-                "expr": idx["expr"],
-                "version": idx["version"],
-                "files_indexed": len(carried),
-                "files_built": 0,
-            }
-        carried.update(self._fn_build_entries(new_files, idx["expr"]))
-        self._publish_fn_index(name, idx["expr"], carried, latest.version)
+        expr = idx["expr"]
+        version, n, built = self._refresh_sidecar(
+            self._FN_PREFIX + name, idx,
+            {"kind": "functional", "name": name, "expr": expr},
+            lambda files: self._fn_build_entries(files, expr),
+        )
         return {
             "name": name,
-            "expr": idx["expr"],
-            "version": latest.version,
-            "files_indexed": len(carried),
-            "files_built": len(new_files),
+            "expr": expr,
+            "version": version,
+            "files_indexed": n,
+            "files_built": built,
         }
-
-    def _publish_fn_index(
-        self, name: str, expr_sql: str, entries: dict, version: int
-    ) -> None:
-        import json as _json
-
-        dirname = self._FN_PREFIX + name
-        d = self._index_dir(dirname)
-        os.makedirs(d, exist_ok=True)
-        content = _json.dumps(
-            {
-                "kind": "functional",
-                "name": name,
-                "expr": expr_sql,
-                "version": version,
-                "entries": entries,
-            }
-        )
-        n = self._latest_index_n(dirname) + 1
-        for _ in range(self.COMMIT_RETRIES + 1):
-            target = os.path.join(d, f"index-{n:06d}.json")
-            try:
-                self.log.finalizer.publish(content, target)
-                self._retire_index_manifests(d, n)
-                return
-            except CommitConflict:
-                n += 1
-        raise CommitConflict(
-            f"could not publish functional index {name!r} after "
-            f"{self.COMMIT_RETRIES + 1} attempts"
-        )
 
     def functional_index(self, name: str) -> dict | None:
         """Latest manifest for functional index ``name`` (None if never
@@ -2081,7 +2038,6 @@ class LakeTable:
                 "create_functional_index first"
             )
         entries = idx["entries"]
-        live = self._prune_partitions(self.log.live_files(), partitions)
 
         def might_hit(f: FileEntry) -> bool:
             if f.path not in entries:
@@ -2094,8 +2050,7 @@ class LakeTable:
             except TypeError:
                 return True  # probe/stat type mismatch: stay correct
 
-        hits = [f for f in live if might_hit(f)]
-        return self._widen_hits_for_mor(hits, live), live
+        return self._pruned(might_hit, partitions=partitions)
 
     def scan_expr_range(self, name: str, lo, hi, partitions=None):
         """Derived-value range scan through the functional index (the
@@ -2105,14 +2060,9 @@ class LakeTable:
         pruning is I/O-only — stale entries cost reads, never rows."""
         idx = self.functional_index(name)
         kept, _ = self.files_for_expr_range(name, lo, hi, partitions)
-        if not kept:
-            return self.spark.createDataFrame([], self.schema())
-        df = self._read_files(kept)
-        if any(f.kind == "delta" for f in kept):
-            df = self._resolve_latest(df)
-        if DELETED_COL in df.columns:
-            df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        return df.where(F.expr(idx["expr"]).between(lo, hi))
+        return self._read_resolved(kept).where(
+            F.expr(idx["expr"]).between(lo, hi)
+        )
 
     def bootstrap(
         self,

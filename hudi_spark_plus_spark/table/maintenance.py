@@ -79,9 +79,7 @@ def compact_buckets(
         else:
             hit = [f for f in prev.files if f.bucket in buckets]
             carry = [f for f in prev.files if f.bucket not in buckets]
-        df = lake._read_files(hit)
-        if any(f.kind == "delta" for f in hit):
-            df = lake._resolve_latest(df)
+        df = lake._read_resolved(hit, include_deleted=True)
         n_units = len(units) if units is not None else len(buckets)
         files = lake._write_commit(
             lake._laid_out(df), "compact", prev, carry, prev.schema_json,

@@ -1137,7 +1137,7 @@ class JoinView:
         )
         if pruned is not None:
             kept, live = pruned
-            return self.fact._snapshot_of_files(kept), {
+            return self.fact._read_resolved(kept, version), {
                 "strategy": "file-pruned",
                 "files_kept": len(kept),
                 "files_live": len(live),

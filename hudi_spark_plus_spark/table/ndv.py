@@ -51,7 +51,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from hudi_spark_plus_spark.localdf import local_frame
-from hudi_spark_plus_spark.table.commit_log import CommitConflict
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 
 NDV_PREFIX = "ndv_"
@@ -174,31 +173,18 @@ def _write_part(
 def _publish(
     lake: LakeTable, col: str, parts: list[str], version: int
 ) -> str:
-    d = lake._index_dir(NDV_PREFIX + col)
-    os.makedirs(d, exist_ok=True)
-    content = json.dumps(
+    target = lake._publish_sidecar(
+        NDV_PREFIX + col,
         {
             "col": col,
             "kind": "ndv",
             "version": version,
             "lg_k": DEFAULT_LG_K,
             "parts": parts,
-        }
+        },
     )
-    n = lake._latest_index_n(NDV_PREFIX + col) + 1
-    for _ in range(lake.COMMIT_RETRIES + 1):
-        target = os.path.join(d, f"index-{n:06d}.json")
-        try:
-            lake.log.finalizer.publish(content, target)
-            lake._retire_index_manifests(d, n)
-            _reclaim_parts(lake, col)
-            return target
-        except CommitConflict:
-            n += 1
-    raise CommitConflict(
-        f"could not publish NDV sketch for {col!r} after "
-        f"{lake.COMMIT_RETRIES + 1} attempts"
-    )
+    _reclaim_parts(lake, col)
+    return target
 
 
 def _reclaim_parts(lake: LakeTable, col: str) -> None:
@@ -338,7 +324,7 @@ def _approx_ndv_once(lake: LakeTable, col: str) -> dict:
             .select("s")
         )
     if scan:
-        df = lake._scan_resolved(scan, None)
+        df = lake._read_resolved(scan)
         parts_union.append(
             df.agg(
                 F.hll_sketch_agg(

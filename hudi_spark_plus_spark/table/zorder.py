@@ -303,9 +303,7 @@ def zorder_cluster_table(
             carry = [f for f in prev.files if f.partition not in pset]
             if not hit:
                 return
-            snap = lake._read_files(hit)
-            if any(f.kind == "delta" for f in hit):
-                snap = lake._resolve_latest(snap)
+            snap = lake._read_resolved(hit, include_deleted=True)
             n_units = max(1, len({(f.partition, f.bucket) for f in hit}))
         z = lake._laid_out(
             with_zvalue(snap, col_a, col_b)

@@ -567,7 +567,7 @@ def test_col_stats_branch_prunes_without_index_or_partition(
     kept, live = pruned
     assert 0 < len(kept) < len(live), (len(kept), len(live))
     # correctness through the pruned snapshot: the row is there
-    rows = t._snapshot_of_files(kept).where(F.col("v") == 10_000).collect()
+    rows = t._read_resolved(kept).where(F.col("v") == 10_000).collect()
     assert [(r["_key"], r["v"]) for r in rows] == [("zz1", 10_000)]
 
 

@@ -24,8 +24,6 @@ except ImportError:  # pragma: no cover
 from hudi_spark_plus_spark.table.commit_log import FileEntry
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 
-pytestmark = pytest.mark.slow  # full-tier suite (see pytest.ini)
-
 
 def mkbatch(spark, rows):
     """rows: (key, ts, op, num, name)"""
@@ -280,6 +278,7 @@ if HAS_HYPOTHESIS:
         st.sampled_from(["cow", "mor"]), min_size=12, max_size=12
     )
 
+    @pytest.mark.slow  # full-tier only (see pytest.ini)
     @given(events=_schedule, cut=_cuts, batch_modes=_modes)
     @settings(
         max_examples=10,

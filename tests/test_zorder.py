@@ -3,7 +3,6 @@
 import glob
 
 import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
 
 from hudi_spark_plus_spark.table.lake_table import LakeTable
@@ -14,8 +13,6 @@ from hudi_spark_plus_spark.table.zorder import (
     zorder_cluster_table,
     zorder_write,
 )
-
-pytestmark = pytest.mark.slow  # full-tier suite (see pytest.ini)
 
 
 def test_interleave_roundtrip(spark):
