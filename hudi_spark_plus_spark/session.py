@@ -58,26 +58,6 @@ def configure_session(spark: SparkSession) -> SparkSession:
                 spark.conf.set(k, v)
         except Exception:  # conf removed/renamed on some Spark builds
             pass
-    try:
-        # FileOutputCommitter v2: task commits move files straight to
-        # the destination; job commit only writes _SUCCESS, instead of a
-        # driver-serial merge of every task's staging directory. The
-        # committer's job-level atomicity is redundant here BY DESIGN:
-        # every engine write lands in a fresh per-commit data subdir
-        # that is invisible to readers until the manifest publishes
-        # (commit_log), and a failed write's partial files are exactly
-        # the unreferenced orphans the vacuum grace window already
-        # reclaims. Measured ~45 ms per micro-batch commit locally; at
-        # 10k-file commits (compaction, clustering) v1's serial rename
-        # pass is the difference between a seconds- and minutes-long
-        # job commit, and on object stores it is the documented
-        # worst case. Runtime-settable on a live context (the write
-        # path re-reads hadoopConf per job).
-        spark.sparkContext._jsc.hadoopConfiguration().set(
-            "mapreduce.fileoutputcommitter.algorithm.version", "2"
-        )
-    except Exception:
-        pass
     return spark
 
 

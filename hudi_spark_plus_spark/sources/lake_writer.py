@@ -420,18 +420,15 @@ class LakeTableBatchWriter(DataSourceArrowWriter):
 
     def _write_core(self, iterator, version_guess: int, subdir_rel: str):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        from hudi_spark_plus_spark.table.bloom import KeyBloom
         from hudi_spark_plus_spark.table.commit_log import FileEntry
         from hudi_spark_plus_spark.table.keygen import KEY_COL, OP_COL
         from hudi_spark_plus_spark.table.lake_table import (
             COMMIT_VER_COL,
             DELETED_COL,
-            _footer_stats,
+            emit_unit_files,
         )
         from hudi_spark_plus_spark.table.pyhash import bucket_of
-        from urllib.parse import quote as _quote
 
         batches = list(iterator)
         if not batches:
@@ -516,58 +513,31 @@ class LakeTableBatchWriter(DataSourceArrowWriter):
             groups.setdefault(
                 (parts[i] if parts is not None else None, b), []
             ).append(i)
-        key_phys = self.physical.get(KEY_COL, KEY_COL)
-        entries = []
         kind = "delta" if self.operation == "upsert" else "base"
 
-        def emit(sub, part, b):
-            # one final-layout file + its manifest entry (rows, key
-            # range, Bloom, footer col-stats) from data in hand
-            d = os.path.join(self.table_path, subdir_rel)
-            if part is not None:
-                d = os.path.join(d, f"_part={_quote(part, safe='')}")
-            d = os.path.join(d, f"_bucket={b}")
-            os.makedirs(d, exist_ok=True)
-            absf = os.path.join(d, f"part-{uuid.uuid4().hex}.parquet")
-            pq.write_table(sub, absf)
-            ks = sub[key_phys].to_pylist()
-            bloom = KeyBloom.sized(len(ks))
-            for k in ks:
-                bloom.add(k)
-            _rows, _mn, _mx, col_stats, _hk, live_rows = _footer_stats(absf)
-            entries.append(
-                FileEntry(
-                    path=os.path.relpath(absf, self.table_path),
-                    bucket=b,
-                    rows=sub.num_rows,
-                    min_key=min(ks),
-                    max_key=max(ks),
-                    bloom=bloom.to_b64(),
-                    # merge-on-read upserts append DELTA files: readers
-                    # resolve latest-per-key per file group, exactly as
-                    # after LakeTable.merge(mode="mor")
-                    kind=kind,
-                    col_stats=col_stats or None,
-                    partition=part,
-                    live_rows=live_rows,
-                    bytes=os.path.getsize(absf),
-                )
-            )
+        def by_unit(kv):
+            return str(kv[0][0]), kv[0][1]
 
-        for (part, b), idxs in sorted(
-            groups.items(), key=lambda kv: (str(kv[0][0]), kv[0][1])
-        ):
-            emit(t.take(idxs), part, b)
-        for (part, b), sub in sorted(
-            tombs.items(), key=lambda kv: (str(kv[0][0]), kv[0][1])
-        ):
-            emit(
+        pieces = [
+            (part, b, t.take(idxs))
+            for (part, b), idxs in sorted(groups.items(), key=by_unit)
+        ] + [
+            (
+                part,
+                b,
                 sub.rename_columns(
                     [self.physical.get(c, c) for c in sub.column_names]
                 ),
-                part,
-                b,
             )
+            for (part, b), sub in sorted(tombs.items(), key=by_unit)
+        ]
+        # merge-on-read upserts append DELTA files: readers resolve
+        # latest-per-key per file group, exactly as after
+        # LakeTable.merge(mode="mor")
+        entries = [
+            FileEntry(kind=kind, **e)
+            for e in emit_unit_files(pieces, self.table_path, subdir_rel)
+        ]
         return LakeWriterMessage(entries, t.num_rows, version_guess)
 
     def _global_relocation(
@@ -715,6 +685,7 @@ class LakeTableBatchWriter(DataSourceArrowWriter):
                 i, phys, pa.array([version] * t.num_rows, pa.int64())
             )
             pq.write_table(t, absf)
+            e.bytes = os.path.getsize(absf)
 
     def _discard_entries(self, msgs) -> None:
         for m in msgs:

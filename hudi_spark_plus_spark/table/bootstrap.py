@@ -232,7 +232,7 @@ def collect_bootstrap_entries(spark, files: list[str], spec: dict) -> list:
     columns of the source files (column-pruned parquet scan), groups by
     source file, and builds each file's synthesized-key min/max + Bloom
     executor-side — memory bounded by one file's keys, exactly the
-    write path's bound (lake_table._distributed_blooms). Footer row
+    write path's bound (lake_table.emit_unit_files). Footer row
     counts and payload col_stats come from a footer-only pass (no data
     I/O)."""
     import pandas as pd  # noqa: F401 (applyInPandas contract)

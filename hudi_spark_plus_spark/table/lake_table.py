@@ -27,19 +27,24 @@ manifest provide file skipping — the role of the reference's Bloom key
 index (BloomFilter.java:31-104).
 
 Every data-writing commit goes through ONE write-and-publish path
-(``LakeTable._write_commit``): write the laid-out frame, build the new
-files' manifest entries, check their row count against the write job's
-own, and publish optimistically against the version it was computed
+(``LakeTable._write_commit``): its write tasks run the one file emitter
+(``emit_unit_files``), which writes each (partition, bucket) unit as a
+Parquet file with pyarrow and returns the file's manifest entry — key
+Bloom from the keys in hand, stats from the file's own footer. The
+driver checks the commit's data subdir holds exactly the reported
+files and publishes optimistically against the version it was computed
 from.
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
+import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -146,24 +151,18 @@ class IncompatibleSchemaChange(ValueError):
 
 
 class WriteCountMismatch(RuntimeError):
-    """A write's part-files hold a different number of rows than the
-    write job produced — a stray file (e.g. a partial task attempt) or a
-    lost one sits in the commit's data subdir. Nothing was published."""
-
-
-# Commits writing more rows than this build their per-file blooms in a
-# distributed Spark job instead of the driver loop: above it the key
-# read stops being "bounded by a micro-batch" (compact()/zorder rewrite
-# the WHOLE table) and a driver-serial scan would bottleneck the commit.
-BLOOM_DISTRIBUTED_MIN_ROWS = 2_000_000
+    """A commit's data subdir holds different files than its write
+    tasks reported — a stray file (e.g. a partial task attempt) or a
+    lost one — or a written file's footer disagrees with the rows
+    written into it. Nothing was published."""
 
 
 def _footer_stats(
     f: str,
 ) -> tuple[int, str | None, str | None, dict, bool, int]:
     """(rows, min_key, max_key, col_stats, has_key, live_rows) from ONE
-    parquet file — footer-only in the common case, runnable on the
-    driver (small commits) or inside an executor task (large rewrites).
+    parquet file — footer-only in the common case; the write task runs
+    it on each file it has just closed.
     ``live_rows`` counts rows with ``_deleted == false`` (exactly the
     rows snapshot() surfaces): boolean row-group statistics decide the
     all-live / all-tombstone cases for free; only a mixed file pays one
@@ -240,140 +239,174 @@ def _footer_stats(
     return md.num_rows, min_key, max_key, col_stats, has_key, live_rows
 
 
-# Commits with more files than this gather footer stats in one Spark
-# job instead of a driver-serial loop: a micro-batch writes a handful
-# of files (driver loop is the cheap path, no job overhead), but a
-# whole-table compaction/clustering at thousands of (partition, bucket)
-# units would stall the driver for minutes at ~ms per footer.
-FOOTER_DISTRIBUTED_MIN_FILES = 256
+class _UnitFile:
+    """One open Parquet file of one (partition, bucket) unit: streams
+    the unit's batches in and keeps only its key column for the Bloom.
+    Dictionary encoding is on for the columns whose distinct count in
+    the first batch is at most half its rows — parquet-mr's fallback
+    when a dictionary does not pay, which keeps files as small as the
+    Spark writer's."""
 
+    def __init__(self, table_path: str, subdir_rel: str, part, bucket, batch):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from urllib.parse import quote
 
-def _collect_file_entries(
-    table_path: str, subdir_rel: str, kind: str = "base", spark=None
-) -> list[FileEntry]:
-    """Scan a freshly-written ``_bucket=N`` tree; build manifest entries
-    with per-file row counts, min/max record key, and a per-file key
-    Bloom filter (the reference's key-index primitive,
-    BloomFilter.java:31-104). Row counts and min/max come from footer
-    metadata only — driver-serial for micro-batch-sized commits,
-    one distributed ``mapPartitions`` job past
-    ``FOOTER_DISTRIBUTED_MIN_FILES`` (per-partition imperative footer
-    I/O is the one place an RDD is the right tool). The bloom needs the
-    key column's DATA: small commits (micro-batches) stream it
-    row-batch-wise on the driver — bounded memory, I/O proportional to
-    the commit's own write; large commits (compaction, clustering —
-    whole-table rewrites) build the blooms in one distributed job
-    grouped by file when a session is provided."""
-    from urllib.parse import unquote as _unquote
-
-    entries: list[FileEntry] = []
-    key_files: list[str] = []  # abs paths needing a bloom
-    base = os.path.join(table_path, subdir_rel)
-    found = sorted(
-        glob.glob(os.path.join(base, "_bucket=*", "*.parquet"))
-        + glob.glob(os.path.join(base, "_part=*", "_bucket=*", "*.parquet"))
-    )
-    if spark is not None and len(found) > FOOTER_DISTRIBUTED_MIN_FILES:
-        sc = spark.sparkContext
-        n_tasks = max(1, min(len(found) // 32, sc.defaultParallelism * 4))
-
-        def scan(paths):
-            for p in paths:
-                yield p, _footer_stats(p)
-
-        stats = dict(
-            sc.parallelize(found, n_tasks).mapPartitions(scan).collect()
+        d = os.path.join(table_path, subdir_rel)
+        if part is not None:
+            d = os.path.join(d, f"_part={quote(part, safe='')}")
+        d = os.path.join(d, f"_bucket={bucket}")
+        os.makedirs(d, exist_ok=True)
+        self.path = os.path.join(d, f"part-{uuid.uuid4().hex}.parquet")
+        self.table_path, self.part, self.bucket = table_path, part, bucket
+        self.schema = batch.schema
+        dict_cols = [
+            f.name
+            for f, col in zip(batch.schema, batch.columns)
+            if not pa.types.is_nested(f.type)
+            and 2 * pc.count_distinct(col).as_py() <= batch.num_rows
+        ]
+        self.writer = pq.ParquetWriter(
+            self.path, batch.schema, use_dictionary=dict_cols,
+            store_schema=False,
         )
-    elif len(found) > 1:
-        # driver path, but not driver-SERIAL: pyarrow footer reads
-        # release the GIL, so a small thread pool overlaps the per-file
-        # I/O (~7 ms each); same function per file, same dict
-        from concurrent.futures import ThreadPoolExecutor
+        self.rows = 0
+        self.keys = []
 
-        with ThreadPoolExecutor(max_workers=min(8, len(found))) as pool:
-            stats = dict(zip(found, pool.map(_footer_stats, found)))
-    else:
-        stats = {f: _footer_stats(f) for f in found}
-    for f in found:
-        rel = os.path.relpath(f, table_path)
-        bucket = int(f.split("_bucket=")[1].split(os.sep)[0])
-        partition = None
-        if "_part=" in f:
-            # the writer directory-escapes special chars in partition
-            # values (e.g. "/" in multi-field paths); manifests store
-            # the UNESCAPED logical value
-            partition = _unquote(f.split("_part=")[1].split(os.sep)[0])
-        rows, min_key, max_key, col_stats, has_key, live_rows = stats[f]
+    def add(self, batch) -> None:
+        self.writer.write(batch)
+        self.rows += batch.num_rows
+        if KEY_COL in batch.schema.names:
+            self.keys.append(batch.column(KEY_COL))
+
+    def close(self) -> dict:
+        """Close the file; return its manifest-entry fields (all but
+        ``kind``), stats read back from its own footer."""
+        self.writer.close()
+        rows, min_key, max_key, col_stats, has_key, live_rows = (
+            _footer_stats(self.path)
+        )
+        if rows != self.rows:
+            raise WriteCountMismatch(
+                f"{self.path}: {self.rows} rows written, footer holds {rows}"
+            )
+        bloom = None
         if has_key:
-            key_files.append(f)
-        entries.append(
-            FileEntry(path=rel, bucket=bucket, rows=rows,
-                      min_key=min_key, max_key=max_key, bloom=None,
-                      kind=kind, col_stats=col_stats or None,
-                      partition=partition, live_rows=live_rows,
-                      bytes=os.path.getsize(f))
-        )
-    total_rows = sum(e.rows for e in entries)
-    if key_files and spark is not None and total_rows > BLOOM_DISTRIBUTED_MIN_ROWS:
-        blooms = _distributed_blooms(spark, base)
-    else:
-        def _file_bloom(f: str) -> str:
-            pf = pq.ParquetFile(f)
-            bf = KeyBloom.sized(pf.metadata.num_rows)
-            for rb in pf.iter_batches(columns=[KEY_COL]):
-                bf.bulk_add(rb.column(0).to_pylist())
-            return bf.to_b64()
-
-        if len(key_files) > 1:
-            # same thread-pool overlap as the footer reads above: the
-            # key-column decode is pyarrow (GIL-released) and the bloom
-            # math is numpy; per-file results are independent
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(8, len(key_files))
-            ) as pool:
-                blooms = dict(
-                    zip(key_files, pool.map(_file_bloom, key_files))
-                )
-        else:
-            blooms = {f: _file_bloom(f) for f in key_files}
-    by_rel = {os.path.relpath(f, table_path): b for f, b in blooms.items()}
-    for e in entries:
-        e.bloom = by_rel.get(e.path)
-    return entries
-
-
-def _distributed_blooms(spark, base: str) -> dict[str, str]:
-    """One Spark job: shuffle only the key column grouped by source file,
-    build each file's bloom executor-side (memory bounded by one file's
-    keys — the same bound the write job already had)."""
-    import pandas as pd  # noqa: F401 (applyInPandas contract)
-    from urllib.parse import unquote, urlparse
-
-    def build(pdf):
-        import pandas as _pd
-
-        ks = [k for k in pdf[KEY_COL] if k is not None]
-        return _pd.DataFrame(
-            {"_f": [pdf["_f"].iloc[0]],
-             "bloom": [KeyBloom.from_keys(ks).to_b64()]}
+            bf = KeyBloom.sized(rows)
+            bf.bulk_add([k for c in self.keys for k in c.to_pylist()])
+            bloom = bf.to_b64()
+        return dict(
+            path=os.path.relpath(self.path, self.table_path),
+            bucket=self.bucket, rows=rows, min_key=min_key,
+            max_key=max_key, bloom=bloom, col_stats=col_stats or None,
+            partition=self.part, live_rows=live_rows,
+            bytes=os.path.getsize(self.path),
         )
 
-    rows = (
-        spark.read.parquet(base)
-        .select(F.input_file_name().alias("_f"), F.col(KEY_COL))
-        .groupBy("_f")
-        .applyInPandas(build, "_f string, bloom string")
-        .collect()
-    )
-    out: dict[str, str] = {}
-    for r in rows:
-        p = r["_f"]
-        if p.startswith("file:"):
-            p = unquote(urlparse(p).path)
-        out[p] = r["bloom"]
-    return out
+
+def emit_unit_files(pieces, table_path: str, subdir_rel: str):
+    """The one file emitter of every engine write: Hudi's write handle,
+    which builds a file's key Bloom and write stats while it writes the
+    file. ``pieces`` is an iterable of ``(partition, bucket, data)``
+    with ``data`` an Arrow record batch or table; consecutive pieces of
+    one unit with one schema stream into one Parquet file under
+    ``subdir_rel`` (``[_part=<quoted value>/]_bucket=<b>/``), so memory
+    holds one batch and one open writer. Yields each file's
+    manifest-entry fields as it closes. A failed attempt removes the
+    files it wrote."""
+    cur: _UnitFile | None = None
+    written: list[str] = []
+    try:
+        for part, bucket, batch in pieces:
+            if cur is not None and (
+                (cur.part, cur.bucket) != (part, bucket)
+                or cur.schema != batch.schema
+            ):
+                yield cur.close()
+                cur = None
+            if cur is None:
+                cur = _UnitFile(table_path, subdir_rel, part, bucket, batch)
+                written.append(cur.path)
+            cur.add(batch)
+        if cur is not None:
+            yield cur.close()
+    except BaseException:
+        for f in written:
+            try:
+                os.unlink(f)
+            except FileNotFoundError:
+                pass
+        raise
+
+
+_ENTRY_COLS = (
+    ("path", "string"), ("bucket", "int"), ("rows", "bigint"),
+    ("min_key", "string"), ("max_key", "string"), ("bloom", "string"),
+    ("col_stats", "string"), ("partition", "string"),
+    ("live_rows", "bigint"), ("bytes", "bigint"),
+)
+
+
+def _write_task(table_path: str, subdir_rel: str, layout: list[str]):
+    """The ``mapInArrow`` body of ``LakeTable._write_commit``: cut the
+    task's layout-sorted batches into unit runs (layout columns
+    dropped, as a partitioned write stores them in the path) and emit
+    one file per run, returning the entries as rows."""
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        types = {"string": pa.string(), "int": pa.int32(),
+                 "bigint": pa.int64()}
+        out = pa.schema([(n, types[t]) for n, t in _ENTRY_COLS])
+
+        def pieces():
+            for batch in batches:
+                n = batch.num_rows
+                if not n:
+                    continue
+                keys = [
+                    batch.column(c).to_numpy(zero_copy_only=False)
+                    for c in layout
+                ]
+                cut = np.zeros(n - 1, dtype=bool)
+                for k in keys:
+                    cut |= k[1:] != k[:-1]
+                bounds = [0, *(np.flatnonzero(cut) + 1).tolist(), n]
+                data = batch.drop_columns(layout)
+                for lo, hi in zip(bounds, bounds[1:]):
+                    part = keys[0][lo] if len(layout) > 1 else None
+                    yield part, int(keys[-1][lo]), data.slice(lo, hi - lo)
+
+        for e in emit_unit_files(pieces(), table_path, subdir_rel):
+            e["col_stats"] = e["col_stats"] and json.dumps(e["col_stats"])
+            yield pa.RecordBatch.from_pylist([e], schema=out)
+
+    return run
+
+
+def _check_written(
+    table_path: str, subdir_rel: str, entries: list[FileEntry], operation: str
+) -> None:
+    """Reconcile a commit's data subdir with the files its write tasks
+    reported: anything else there (a stray part-file, a partial task
+    attempt) or anything missing raises ``WriteCountMismatch``."""
+    found = {
+        os.path.relpath(f, table_path)
+        for f in glob.glob(
+            os.path.join(table_path, subdir_rel, "**", "*.parquet"),
+            recursive=True,
+        )
+    }
+    reported = {e.path for e in entries}
+    if found != reported:
+        raise WriteCountMismatch(
+            f"{operation} on table at {table_path}: the write reported "
+            f"{len(reported)} files but {subdir_rel} holds {len(found)} "
+            f"({len(found - reported)} unreported, "
+            f"{len(reported - found)} missing); not published"
+        )
 
 
 DEFAULT_BUCKETS = 16
@@ -2303,42 +2336,39 @@ class LakeTable:
         batch_id: str | None = None,
         kind: str = "base",
         parts: int | None = None,
+        shaped: bool = False,
     ) -> list[FileEntry]:
         """The one write-and-publish path of every data-writing commit.
-        ``out`` is the LOGICAL frame with its layout columns; it is
-        hash-repartitioned on the layout into ``parts`` tasks, or written
-        as the caller shaped it when ``parts`` is None. ``carry``: the
-        previous live entries the commit keeps, or a function of the new
-        entries that picks them. The new files are found by globbing the
-        commit's fresh data subdir, so their summed footer row count must
-        equal the write job's own (an ``observe`` on the write — no extra
-        Spark job): a stray part-file (a partial task attempt) or a lost
-        one raises ``WriteCountMismatch`` and nothing is published.
-        Returns the new entries."""
+        ``out`` is the LOGICAL frame with its layout columns. It is
+        hash-repartitioned on the layout (into ``parts`` tasks when
+        given, else as many as adaptive execution sizes) and sorted by
+        it within each task; ``shaped=True`` takes the caller's frame as
+        is, which must already hold each task's rows sorted by the
+        layout. Each task writes one file per (partition, bucket) run
+        with ``emit_unit_files`` and returns the files' manifest
+        entries. ``carry``: the previous live entries the commit keeps,
+        or a function of the new entries that picks them. The commit's
+        data subdir must hold exactly the reported files
+        (``_check_written``), or nothing is published. Returns the new
+        entries."""
         layout = self._layout_cols()
         df = self._apply_physical(out, schema_json)
-        if parts is not None:
-            df = df.repartition(parts, *[F.col(c) for c in layout])
-        # counted on top of the shuffle: below a range shuffle its
-        # sampling job counts the rows twice, and below a hash one an
-        # empty write reports no count at all
-        written = Observation()
-        absd, rel = self.log.new_data_subdir()
-        (
-            df.observe(written, F.count(F.lit(1)).alias("rows"))
-            .write.mode("append")
-            .partitionBy(*layout)
-            .parquet(absd)
-        )
-        new_files = _collect_file_entries(
-            self.path, rel, kind=kind, spark=self.spark
-        )
-        found, rows = sum(e.rows for e in new_files), written.get["rows"]
-        if found != rows:
-            raise WriteCountMismatch(
-                f"{operation} on table at {self.path}: the write produced "
-                f"{rows} rows but {rel} holds {found}; not published"
-            )
+        if not shaped:
+            cols = [F.col(c) for c in layout]
+            df = (
+                df.repartition(parts, *cols) if parts else df.repartition(*cols)
+            ).sortWithinPartitions(*cols)
+        _, rel = self.log.new_data_subdir()
+        rows = df.mapInArrow(
+            _write_task(self.path, rel, layout),
+            ", ".join(f"{n} {t}" for n, t in _ENTRY_COLS),
+        ).collect()
+        new_files = []
+        for r in sorted(rows, key=lambda r: r["path"]):
+            e = r.asDict()
+            e["col_stats"] = e["col_stats"] and json.loads(e["col_stats"])
+            new_files.append(FileEntry(kind=kind, **e))
+        _check_written(self.path, rel, new_files, operation)
         if callable(carry):
             carry = carry(new_files)
         self._publish(operation, carry + new_files, prev, schema_json, batch_id)
@@ -2845,13 +2875,8 @@ class LakeTable:
         elif prev is None:
             # empty table: there are no live files to split into
             # hit/carry, so the batch's distinct-unit set has no
-            # consumer except the write parallelism — skip that Spark
-            # job entirely (every table build pays it otherwise) and
-            # size the write at one task per bucket — the steady-state
-            # write shape (callers loading bulk data into a fresh table
-            # pass parallelism=/insert instead). File layout is
-            # unchanged: files are split by the layout columns' VALUES,
-            # not by task count.
+            # consumer — skip that Spark job entirely (every table
+            # build pays it otherwise).
             affected = set(range(self.buckets))
         else:
             # Fused collect (guide §1.2: one pass over the batch plan,
@@ -3088,9 +3113,7 @@ class LakeTable:
         self._write_commit(
             merged, "merge", prev, carry,
             self._commit_schema_json(merged, next_ver), batch_id,
-            parts=parallelism or max(
-                1, len(units) if units is not None else len(affected)
-            ),
+            parts=parallelism,
         )
 
     def _widened_fields(self, incoming, stored) -> list[StructField]:
@@ -3352,7 +3375,7 @@ class LakeTable:
         self._write_commit(
             delta, "merge", prev, prev.files,
             self._commit_schema_json(delta, next_ver), batch_id,
-            kind="delta", parts=parallelism or max(1, len(affected)),
+            kind="delta", parts=parallelism,
         )
 
     # Above this many distinct batch keys the per-merge bloom probe is

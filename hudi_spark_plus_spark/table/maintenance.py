@@ -22,11 +22,12 @@ from pyspark.sql import functions as F
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 
 
-def compact(lake: LakeTable, target_files_per_bucket: int = 1) -> dict:
+def compact(lake: LakeTable) -> dict:
     """Rewrite all live data (tombstones included — they must survive
-    until vacuumed with their semantics intact) into ~one file per
-    bucket. Returns {files_before, files_after}. Retries against a fresh
-    timeline if a concurrent writer wins the commit race."""
+    until vacuumed with their semantics intact) into one file per
+    (partition, bucket) unit. Returns {files_before, files_after}.
+    Retries against a fresh timeline if a concurrent writer wins the
+    commit race."""
 
     def attempt() -> dict:
         prev = lake.log.latest()
@@ -35,7 +36,6 @@ def compact(lake: LakeTable, target_files_per_bucket: int = 1) -> dict:
         files = lake._write_commit(
             lake._laid_out(lake.snapshot(include_deleted=True)),
             "compact", prev, [], prev.schema_json,
-            parts=max(1, lake.buckets * target_files_per_bucket),
         )
         return {"files_before": len(prev.files), "files_after": len(files)}
 
@@ -45,7 +45,6 @@ def compact(lake: LakeTable, target_files_per_bucket: int = 1) -> dict:
 def compact_buckets(
     lake: LakeTable,
     buckets: set[int],
-    target_files_per_bucket: int = 1,
     units: set[tuple[str | None, int]] | None = None,
 ) -> dict:
     """Bucket-scoped compaction: rewrite ONLY the given buckets' live
@@ -83,7 +82,6 @@ def compact_buckets(
         n_units = len(units) if units is not None else len(buckets)
         files = lake._write_commit(
             lake._laid_out(df), "compact", prev, carry, prev.schema_json,
-            parts=max(1, n_units * target_files_per_bucket),
         )
         return {
             "buckets_compacted": n_units,
@@ -97,7 +95,6 @@ def compact_buckets(
 def maybe_compact(
     lake: LakeTable,
     max_deltas_per_bucket: int = 10,
-    target_files_per_bucket: int = 1,
     max_base_files_per_bucket: int | None = None,
     small_file_bytes: int | None = None,
 ) -> dict:
@@ -156,12 +153,8 @@ def maybe_compact(
     if not due:
         return {"buckets_compacted": 0, "files_before": 0, "files_after": 0}
     if lake.partition_fields:
-        return compact_buckets(
-            lake, {b for _, b in due}, target_files_per_bucket, units=due
-        )
-    return compact_buckets(
-        lake, {b for _, b in due}, target_files_per_bucket
-    )
+        return compact_buckets(lake, {b for _, b in due}, units=due)
+    return compact_buckets(lake, {b for _, b in due})
 
 
 # types rewrite_column_type can target: primitives whose parquet
@@ -268,7 +261,7 @@ def rewrite_column_type(
         )
         files = lake._write_commit(
             lake._laid_out(snap.withColumn(col, casted)),
-            "retype", prev, [], new_schema.json(), parts=max(1, lake.buckets),
+            "retype", prev, [], new_schema.json(),
         )
         return {
             "files_before": len(prev.files),

@@ -2,9 +2,8 @@
 scalar path.
 
 The per-key ``add`` loop (md5 + num_hashes modular probes per key, pure
-Python) runs on every COW commit's rewritten files (driver path for
-micro-batch commits, executor path via ``_distributed_blooms`` /
-``from_keys`` for whole-table rewrites). ``bulk_add`` vectorizes the
+Python) runs on every file a commit writes (inside the write task,
+``lake_table.emit_unit_files``). ``bulk_add`` vectorizes the
 probe-position math and bit-sets in numpy; these tests pin that the
 resulting filter is BYTE-identical to serial adds — the serde and every
 stored manifest stay compatible by construction.

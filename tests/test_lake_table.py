@@ -552,25 +552,30 @@ def test_engine_cache_validates_conflicting_buckets(spark, tmp_path):
         eng.lake_table(p, buckets=8)
 
 
-def test_distributed_bloom_build_matches_driver_path(spark, tmp_path, monkeypatch):
-    """Above the row threshold the per-file blooms come from a Spark job
-    instead of the driver loop; every written key must still probe
-    positive in its file's bloom."""
-    import hudi_spark_plus_spark.table.lake_table as lt
+def test_distributed_bloom_build_matches_driver_path(spark, tmp_path):
+    """The per-file blooms are built inside the write tasks; each must be
+    bit-identical to the bloom the driver builds from the keys read back
+    out of the file, and every written key must probe positive in its
+    file's bloom."""
+    import pyarrow.parquet as pq
 
-    monkeypatch.setattr(lt, "BLOOM_DISTRIBUTED_MIN_ROWS", 0)
+    from hudi_spark_plus_spark.table.bloom import KeyBloom
+    from hudi_spark_plus_spark.table.keygen import bucket_expr
+
     t = LakeTable(spark, str(tmp_path / "t"), buckets=2)
     keys = [(f"k{i}", 1, "upsert", "v") for i in range(50)]
     t.merge(mkbatch(spark, keys), "b0")
-    from hudi_spark_plus_spark.table.bloom import KeyBloom
 
     files = t.log.live_files()
     assert all(f.bloom for f in files)
+    for f in files:
+        file_keys = pq.read_table(
+            t.log.abs_path(f.path), columns=["_key"]
+        ).column(0).to_pylist()
+        assert f.bloom == KeyBloom.from_keys(file_keys).to_b64()
     blooms = {f.bucket: KeyBloom.from_b64(f.bloom) for f in files}
     rows = t.snapshot().select("_key").collect()
     assert len(rows) == 50
-    from hudi_spark_plus_spark.table.keygen import bucket_expr
-
     bucketed = t.snapshot().select(
         "_key", bucket_expr(F.col("_key"), 2).alias("b")
     ).collect()

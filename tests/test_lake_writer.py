@@ -6,13 +6,13 @@ metadata-only."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 from hudi_spark_plus_spark.sources import lake_reader
 from hudi_spark_plus_spark.table.lake_table import LakeTable
-
-pytestmark = pytest.mark.slow  # full-tier suite (see pytest.ini)
 
 
 def _df(spark, rows):
@@ -255,6 +255,12 @@ class TestFormatWriteRoundtrip:
             .load()
         )
         assert [r["_key"] for r in inc.collect()] == ["k9"]
+        # the re-stamped file's manifest size is its new size
+        log = LakeTable(spark, path).log
+        assert all(
+            f.bytes == os.path.getsize(log.abs_path(f.path))
+            for f in log.live_files()
+        )
 
     def test_mor_upsert_through_format(self, spark, tmp_path):
         """engine.write.operation=upsert: delta-append upserts +
@@ -597,6 +603,7 @@ class TestFormatWriteRoundtrip:
 
 
 class TestStreamingFormatWrite:
+    @pytest.mark.slow  # ~25 s: full tier only (see pytest.ini)
     def test_micro_batches_commit_exactly_once(self, spark, tmp_path):
         """writeStream.format('lake-table'): each micro-batch is one
         insert commit keyed by '<stream-id>-<batchId>' — restart from

@@ -843,12 +843,11 @@ class TestConfigWiring:
 
 
 class TestDistributedFooterScan:
-    def test_distributed_and_driver_footer_paths_agree(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """Past FOOTER_DISTRIBUTED_MIN_FILES the manifest footer scan
-        runs as one Spark job; its entries must be identical to the
-        driver-serial path's (the micro-batch default)."""
+    def test_distributed_and_driver_footer_paths_agree(self, spark, tmp_path):
+        """The write tasks read each new file's footer stats as they close
+        it; the manifest entries they return must be identical to a
+        driver-side footer scan of the same files, and to the entries of
+        a second table built from the same batch."""
         from hudi_spark_plus_spark.table import lake_table as lt
 
         def build(path):
@@ -857,20 +856,32 @@ class TestDistributedFooterScan:
                 partition_fields=["d"],
             )
             t.merge(mkbatch(spark, B1), "b1")
-            return sorted(
-                (f.partition, f.bucket, f.rows, f.min_key, f.max_key,
-                 f.kind,
-                 tuple(sorted(
-                     (k, tuple(v)) for k, v in (f.col_stats or {}).items()
-                 )))
-                for f in t.log.live_files()
-            )
+            return t
 
-        driver = build("drv")
-        monkeypatch.setattr(lt, "FOOTER_DISTRIBUTED_MIN_FILES", 0)
-        dist = build("dst")
+        def stats(f, rows, min_key, max_key, col_stats):
+            return (f.partition, f.bucket, rows, min_key, max_key, f.kind,
+                    tuple(sorted(
+                        (k, tuple(v)) for k, v in (col_stats or {}).items()
+                    )))
+
+        t = build("dst")
+        dist = sorted(
+            stats(f, f.rows, f.min_key, f.max_key, f.col_stats)
+            for f in t.log.live_files()
+        )
+        driver = []
+        for f in t.log.live_files():
+            rows, mn, mx, col_stats, _, _ = lt._footer_stats(
+                t.log.abs_path(f.path)
+            )
+            driver.append(stats(f, rows, mn, mx, col_stats))
+        assert sorted(driver) == dist
         # uuid file/dir names differ; all stats content must match
-        assert driver == dist
+        other = build("dst2")
+        assert sorted(
+            stats(f, f.rows, f.min_key, f.max_key, f.col_stats)
+            for f in other.log.live_files()
+        ) == dist
         assert all(e[2] > 0 for e in dist)  # real row counts
         assert all(e[3] is not None for e in dist)  # real key stats
 
