@@ -181,7 +181,8 @@ class SignatureStore:
         The signature frame is materialized ONCE before the merge
         (bounded by batch x bands rows BY DESIGN): the un-checkpointed
         minhash + banding pipeline would otherwise re-execute for the
-        merge's affected-unit collect AND the merge write — the same
+        merge's batch collect AND, when the batch is too large to merge
+        on the driver, the merge's write tasks — the same
         one-materialization-per-bounded-delta doctrine the matview
         refreshes apply (guide §1.2)."""
         from hudi_spark_plus_spark.ckpt import release_all

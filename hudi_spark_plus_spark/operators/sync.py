@@ -154,22 +154,12 @@ def sync_batch(
         else:
             keyed = records.withColumn(KEY_COL, F.lit(None).cast("string"))
 
-        # ONE driver collect (N10 + every table's affected merge buckets +
-        # latest schema per table): grouped (db, table, schema, bucket)
-        # with max event ts — bucket null for rows of unconfigured tables.
-        # Dedup never eliminates a key entirely, so pre-dedup bucket sets
-        # equal post-dedup ones.
-        bucket_case = F.lit(None).cast("int")
-        for (db, table), tc in candidates.items():
-            cond = (F.col(cdc.DB_COL) == db) & (F.col(cdc.TABLE_COL) == table)
-            bucket_case = F.when(
-                cond,
-                F.pmod(F.xxhash64(F.col(KEY_COL)), F.lit(tc.buckets)).cast("int"),
-            ).otherwise(bucket_case)
+        # ONE driver collect (N10 + latest schema per table): grouped
+        # (db, table, schema) with max event ts. Each merge finds the
+        # units it touches in its own batch collect.
         meta_rows = (
             keyed.groupBy(
-                F.col(cdc.DB_COL), F.col(cdc.TABLE_COL), F.col(cdc.SCHEMA_COL),
-                bucket_case.alias("b"),
+                F.col(cdc.DB_COL), F.col(cdc.TABLE_COL), F.col(cdc.SCHEMA_COL)
             )
             .agg(F.max(TS_COL).alias("mx"))
             .collect()
@@ -180,14 +170,11 @@ def sync_batch(
         # latest declared in-band schema wins per table (mid-batch schema
         # change); deterministic tie-break on the schema string
         best_schema: dict[tuple[str, str], tuple] = {}
-        buckets_by_table: dict[tuple[str, str], set[int]] = {}
         for r in meta_rows:
             key = (r[0], r[1])
-            rank = (r[4] if r[4] is not None else -1, r[2] or "")
+            rank = (r[3] if r[3] is not None else -1, r[2] or "")
             if key not in best_schema or rank > best_schema[key]:
                 best_schema[key] = rank
-            if r[3] is not None:
-                buckets_by_table.setdefault(key, set()).add(r[3])
         schema_by_table = {k: v[1] for k, v in best_schema.items()}
 
         status: dict[str, str] = {}
@@ -242,7 +229,7 @@ def sync_batch(
                 try:
                     _sync_one_table(
                         spark, survivors, tc, schema_by_table[(db, table)],
-                        batch_id, buckets_by_table.get((db, table), set()),
+                        batch_id
                     )
                     return name, "ok"
                 except Exception as ex:  # Q1 fix: isolate per table
@@ -277,7 +264,6 @@ def _sync_one_table(
     tc: TableConfig,
     schema_json: str,
     batch_id: int | str,
-    affected_buckets: set[int] | None = None,
 ) -> None:
     """N16-N21 for one (db, table): route, decode, transform, merge."""
     part = survivors.where(
@@ -305,24 +291,7 @@ def _sync_one_table(
         global_index=tc.global_index or None,
         finalizer_spec=tc.commit_finalizer,
     )
-    lake.merge(
-        batch,
-        batch_id=f"{batch_id}",
-        parallelism=None,
-        # Partitioned tables skip the precomputed bucket set: the sync's
-        # single metadata job sees only undecoded JSON rows (partition
-        # fields live inside them), so bucket-granular pruning would
-        # rewrite EVERY partition of an affected bucket (1000x write
-        # amplification at 1000 partitions). Passing None lets the merge
-        # derive exact (partition, bucket) units from the decoded batch
-        # — one extra bounded distinct per table per batch. GLOBAL-index
-        # tables are bucket-granular by design (key-only identity), so
-        # they keep the precomputed set and skip the extra job.
-        affected_buckets=affected_buckets
-        if (not tc.partition_fields or tc.global_index)
-        else None,
-        mode=tc.write_mode,
-    )
+    lake.merge(batch, batch_id=f"{batch_id}", mode=tc.write_mode)
     if tc.write_mode == "mor" and tc.compact_max_deltas > 0:
         # inline compaction: bounds read amplification to at most
         # compact_max_deltas delta files per bucket, cost scoped to the

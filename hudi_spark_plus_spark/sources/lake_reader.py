@@ -98,6 +98,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from hudi_spark_plus_spark.table.merge_kernel import (
+    active_fields,
+    project_logical,
+    resolve_latest_arrow,
+)
+
 PATH_OPT = "path"
 TYPE_OPT = "engine.read.type"
 VERSION_OPT = "engine.read.version"
@@ -122,43 +128,8 @@ INCLUDE_DELETED_OPT = "engine.read.include.deleted"
 PUSHDOWN_OPT = "engine.read.pushdown"
 
 _KEY = "_key"
-_TS = "_ts"
 _DELETED = "_deleted"
 _COMMIT_VER = "_commit_ver"
-
-# Spark simple type -> pyarrow alias, for null back-fill of columns a
-# file predates and for widening casts (int file column under a long
-# schema after additive widening).
-_ARROW_TYPES = {
-    "string": "string",
-    "long": "int64",
-    "bigint": "int64",
-    "integer": "int32",
-    "int": "int32",
-    "short": "int16",
-    "double": "float64",
-    "float": "float32",
-    "boolean": "bool",
-    "date": "date32",
-    "binary": "binary",
-}
-
-
-def active_fields(schema_json: str) -> list[tuple[str, str, str]]:
-    """[(logical name, physical name, spark simple type)] for active
-    (non-dropped) fields — the same column-mapping rules as
-    ``LakeTable.schema`` / ``_physical_of``, parsed without a session
-    (workers and the driver-side planner both use this)."""
-    full = StructType.fromJson(json.loads(schema_json))
-    out = []
-    for f in full.fields:
-        meta = f.metadata or {}
-        if meta.get("dropped"):
-            continue
-        out.append(
-            (f.name, meta.get("physical", f.name), f.dataType.simpleString())
-        )
-    return out
 
 
 def logical_struct(schema_json: str) -> StructType:
@@ -210,76 +181,6 @@ def cdc_struct(schema_json: str) -> StructType:
                 if f.name != _KEY
             ],
         ]
-    )
-
-
-def project_logical(t, fields: list[tuple[str, str, str]], path: str):
-    """Physical pyarrow table -> logical columns in schema order:
-    renames applied, pre-evolution columns back-filled with typed
-    nulls, widened columns cast up to the declared type."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    cols, names = [], []
-    for logical, physical, simple in fields:
-        at = _ARROW_TYPES.get(simple)
-        if physical in t.column_names:
-            col = t[physical]
-            if at is not None:
-                target = pa.type_for_alias(at)
-                if col.type != target:
-                    col = pc.cast(col, target)
-            cols.append(col)
-        else:
-            if at is None:
-                raise ValueError(
-                    f"lake-table scan cannot back-fill column "
-                    f"{logical!r} of type {simple!r} for pre-evolution "
-                    f"file {path}"
-                )
-            cols.append(pa.nulls(t.num_rows, pa.type_for_alias(at)))
-        names.append(logical)
-    return pa.table(cols, names=names)
-
-
-def resolve_latest_arrow(t):
-    """Worker-side merge-on-read resolution over ONE file group: keep
-    each key's winning row by (_ts desc, _commit_ver desc, live beats
-    tombstone) — ``LakeTable._resolve_latest`` in pyarrow. The caller
-    guarantees the group is a resolution unit (all copies of every key
-    it contains are present), so this is exact, and group sizes are
-    file-group-bounded — never table-bounded."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if t.num_rows <= 1:
-        return t
-    ver = (
-        pc.fill_null(t[_COMMIT_VER], 0)
-        if _COMMIT_VER in t.column_names
-        else pa.array([0] * t.num_rows, pa.int64())
-    )
-    dead = (
-        pc.fill_null(t[_DELETED], False)
-        if _DELETED in t.column_names
-        else pa.array([False] * t.num_rows, pa.bool_())
-    )
-    work = t.append_column("__ver", ver).append_column("__dead", dead)
-    order = pc.sort_indices(
-        work,
-        sort_keys=[
-            (_KEY, "ascending"),
-            (_TS, "descending"),
-            ("__ver", "descending"),
-            ("__dead", "ascending"),
-        ],
-    )
-    work = work.take(order).append_column(
-        "__row", pa.array(range(t.num_rows), pa.int64())
-    )
-    first = work.group_by(_KEY).aggregate([("__row", "min")])
-    return work.take(first["__row_min"]).drop_columns(
-        ["__ver", "__dead", "__row"]
     )
 
 
@@ -908,7 +809,7 @@ class LakeBatchReader(DataSourceReader):
             from hudi_spark_plus_spark.table.bootstrap import synthesize_arrow
 
             raw = synthesize_arrow(raw, self.bootstrap_spec)
-        return project_logical(raw, self.fields, rel)
+        return project_logical(raw, self.fields)
 
     def _read_unit(self, paths: list[str], resolve: bool, boot=frozenset()):
         import pyarrow as pa

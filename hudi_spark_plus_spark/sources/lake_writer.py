@@ -269,7 +269,7 @@ class LakeTableBatchWriter(DataSourceArrowWriter):
             )
         self.operation = op
         self.batch_id = options.get(BATCH_ID_OPT)
-        from hudi_spark_plus_spark.sources.lake_reader import active_fields
+        from hudi_spark_plus_spark.table.merge_kernel import active_fields
 
         names = {f.name for f in schema.fields}
         if KEY_COL not in names or TS_COL not in names:
@@ -494,11 +494,8 @@ class LakeTableBatchWriter(DataSourceArrowWriter):
             and self.partition_fields
             and self.active_fields
         ):
-            from hudi_spark_plus_spark.table.keygen import TS_COL
-
             keep, tombs = self._global_relocation(
-                keys, t[TS_COL].to_pylist(), bucket_ids, parts,
-                version_guess,
+                t, bucket_ids, parts, version_guess
             )
             if not all(keep):
                 t = t.filter(pa.array(keep, pa.bool_()))
@@ -540,130 +537,53 @@ class LakeTableBatchWriter(DataSourceArrowWriter):
         ]
         return LakeWriterMessage(entries, t.num_rows, version_guess)
 
-    def _global_relocation(
-        self, keys, ts_list, bucket_ids, parts, version_guess
-    ):
-        """The engine's global-index (key-only identity) MOR merge rule,
-        per executor slice: read the slice's buckets' live state at the
-        PLANNED version (bloom/min-max pruned by the slice's own keys),
-        resolve latest-per-key, then (a) DROP batch rows that lose
-        last-write-wins to the stored copy — an appended loser would win
-        a partition-pruned read of its own partition — and (b) emit a
-        relocation tombstone into the OLD partition for every winner
-        whose stored copy lives elsewhere (what keeps partition-pruned
-        reads correct without cross-partition resolution;
-        lake_table.py's `if self.global_index and self.partition_fields`
-        branch, same rule: batch wins iff _ts >= stored). Slices own
-        disjoint keys (one-row-per-key batch contract), so per-slice
-        decisions compose. Returns (keep mask, {(old partition, bucket)
-        -> tombstone table})."""
+    def _global_relocation(self, t, bucket_ids, parts, version_guess):
+        """The engine's global-index (key-only identity) merge-on-read
+        rule (``merge_kernel.relocate``, which ``LakeTable.merge`` runs
+        too), per executor slice: read the slice's buckets' live files at
+        the PLANNED version that may hold one of its keys (Bloom-pruned),
+        drop the batch rows that lose last-write-wins, and tombstone
+        each moved winner's old-partition copy. Slices own disjoint keys
+        (one-row-per-key batch contract), so per-slice decisions
+        compose. Returns (keep mask, {(old partition, bucket) ->
+        tombstone table})."""
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        from hudi_spark_plus_spark.sources.lake_reader import (
-            project_logical,
-            resolve_latest_arrow,
-        )
-        from hudi_spark_plus_spark.table.bloom import (
-            KeyBloom,
-            hash_key,
-            pairs_array,
-        )
         from hudi_spark_plus_spark.table.commit_log import CommitLog
-        from hudi_spark_plus_spark.table.keygen import KEY_COL, TS_COL
-        from hudi_spark_plus_spark.table.lake_table import (
-            COMMIT_VER_COL,
-            DELETED_COL,
+        from hudi_spark_plus_spark.table.keygen import KEY_COL, PARTITION_COL
+        from hudi_spark_plus_spark.table.merge_kernel import (
+            bloom_hits,
+            read_unit_files,
+            relocate,
         )
+        from hudi_spark_plus_spark.table.pyhash import bucket_of
 
-        keyset = set(keys)
+        keys = t[KEY_COL].to_pylist()
         sbuckets = set(bucket_ids)
-        log = CommitLog(self.table_path)
         cand = [
             f
-            for f in log.live_files(self.plan_version)
+            for f in CommitLog(self.table_path).live_files(self.plan_version)
             if f.bucket in sbuckets
         ]
-
-        pair_cache: dict[str, tuple[int, int]] = {}
-
-        def may_hit(f):
-            if f.kind == "delta":
-                return True  # delta rows need resolution context
-            ks = keyset
-            if f.min_key is not None and f.max_key is not None:
-                ks = {k for k in ks if f.min_key <= k <= f.max_key}
-                if not ks:
-                    return False
-            if f.bloom:
-                # hash each key once across every probed file
-                pairs = pairs_array(
-                    [pair_cache.setdefault(k, hash_key(k)) for k in ks]
-                )
-                return KeyBloom.from_b64(f.bloom).might_contain_any(pairs)
-            return True
-
-        read = [f for f in cand if may_hit(f)]
-        if not read:
-            return [True] * len(keys), {}
-        tables = [
-            project_logical(
-                pq.read_table(os.path.join(self.table_path, f.path)),
-                self.active_fields,
-                f.path,
-            )
-            for f in read
-        ]
-        old = tables[0] if len(tables) == 1 else pa.concat_tables(tables)
-        old = resolve_latest_arrow(old)
-        if DELETED_COL in old.column_names:
-            old = old.filter(
-                pc.invert(pc.fill_null(old[DELETED_COL], False))
-            )
-        # resolution needed the whole group; everything after only
-        # needs the slice's own keys — filter FIRST so the Python
-        # render/pylist loops below are bounded by the batch, not by
-        # bucket size
-        old = old.filter(
-            pc.is_in(old[KEY_COL], pa.array(sorted(keyset), pa.string()))
+        stored = read_unit_files(
+            self.table_path, bloom_hits(cand, keys), self.active_fields, True
         )
-        okeys = old[KEY_COL].to_pylist()
-        oidx = {k: i for i, k in enumerate(okeys) if k in keyset}
-        old_ts = old[TS_COL].to_pylist()
-        old_parts = PartitionRenderer(self.partition_fields).render(old)
-        keep: list[bool] = []
-        tomb_rows: dict = {}
-        for i, k in enumerate(keys):
-            j = oidx.get(k)
-            if j is None:
-                keep.append(True)
-                continue
-            if ts_list[i] < old_ts[j]:  # stored copy is newer: loser
-                keep.append(False)
-                continue
-            keep.append(True)
-            if parts[i] != old_parts[j]:
-                tomb_rows.setdefault(
-                    (old_parts[j], bucket_ids[i]), []
-                ).append(j)
-        payload = [
-            n
-            for n, _p, _t in self.active_fields
-            if n not in (DELETED_COL, COMMIT_VER_COL)
-        ]
-        tombs = {}
-        for grp, idxs in tomb_rows.items():
-            sub = old.take(idxs).select(payload)
-            sub = sub.append_column(
-                DELETED_COL, pa.array([True] * len(idxs), pa.bool_())
-            )
-            sub = sub.append_column(
-                COMMIT_VER_COL,
-                pa.array([version_guess] * len(idxs), pa.int64()),
-            )
-            tombs[grp] = sub
-        return keep, tombs
+        if stored is None:
+            return [True] * len(keys), {}
+        keep, tombs = relocate(
+            stored,
+            t.append_column(PARTITION_COL, pa.array(parts, pa.string())),
+            version_guess,
+        )
+        groups: dict = {}
+        for i, (k, p) in enumerate(
+            zip(tombs[KEY_COL].to_pylist(), tombs[PARTITION_COL].to_pylist())
+        ):
+            groups.setdefault((p, bucket_of(k, self.buckets)), []).append(i)
+        tombs = tombs.drop_columns([PARTITION_COL])
+        return keep.to_pylist(), {
+            grp: tombs.take(idxs) for grp, idxs in groups.items()
+        }
 
     # -- driver side (metadata only) ----------------------------------------
 
@@ -817,7 +737,7 @@ if DataSourceStreamArrowWriter is not None:
             self.stream_id = options.get(STREAM_ID_OPT, "stream")
 
         def write(self, iterator):
-            from hudi_spark_plus_spark.sources.lake_reader import (
+            from hudi_spark_plus_spark.table.merge_kernel import (
                 active_fields,
             )
             from hudi_spark_plus_spark.table.commit_log import CommitLog

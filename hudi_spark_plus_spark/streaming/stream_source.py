@@ -49,7 +49,7 @@ import os
 
 from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
 
-from hudi_spark_plus_spark.sources.lake_reader import (
+from hudi_spark_plus_spark.table.merge_kernel import (
     active_fields,
     project_logical,
     resolve_latest_arrow,
@@ -349,7 +349,7 @@ class LakeStreamReader(DataSourceStreamReader):
                 )
 
                 raw = synthesize_arrow(raw, self.bootstrap_spec)
-            return project_logical(raw, self.fields, rel)
+            return project_logical(raw, self.fields)
 
         parts = [load(rel) for rel in partition.paths]
         t = parts[0] if len(parts) == 1 else pa.concat_tables(parts)

@@ -3,37 +3,43 @@
 Reimplements the table-format semantics the reference delegates to Hudi
 (SURVEY §2.3 H1-H8) over plain Parquet and the JSON commit log:
 
-* ``merge``   — copy-on-write upsert+delete in ONE pass: full-outer join
-  of the affected snapshot slice with the batch on ``_key``; the batch row
-  wins iff ``batch._ts >= snapshot._ts`` (precombine, quirk Q5: an older
-  event never overwrites a newer row; ties go to the incoming batch,
-  matching the reference's arrival-order last-wins). A winning delete is
-  kept as a TOMBSTONE row (``_deleted = true``) rather than dropped, so a
-  late-arriving upsert with an older ``_ts`` cannot resurrect a deleted
-  key in a later batch (H1/H2; the "late event never overwrites" quirk
-  test in SURVEY §5.2.4). ``snapshot()`` filters tombstones out.
+* ``merge``   — copy-on-write upsert+delete: each (partition, bucket)
+  unit the batch touches is resolved against that unit's live files in
+  ONE pass by the per-unit merge kernel (``table/merge_kernel.py``);
+  the batch row wins iff its ``_ts`` is not older than the stored one
+  (precombine, quirk Q5: an older event never overwrites a newer row;
+  ties go to the incoming batch, matching the reference's arrival-order
+  last-wins; a null ``_ts`` is older than any other). A winning delete
+  is kept as a TOMBSTONE row (``_deleted = true``) rather than dropped,
+  so a late-arriving upsert with an older ``_ts`` cannot resurrect a
+  deleted key in a later batch (H1/H2; the "late event never
+  overwrites" quirk test in SURVEY §5.2.4). ``snapshot()`` filters
+  tombstones out. ``merge(mode="mor")`` appends the batch as delta
+  files that reads resolve by the same rule.
 * ``insert`` / ``bulk_insert`` — plain file append (H3).
 * ``snapshot`` — read live files from the latest manifest (H6).
 * ``incremental`` — rows of files added in a commit range (H7).
 
 Scale design (100 TB posture): rows are hash-bucketed by record key
-(``pmod(xxhash64(_key), buckets)``). A merge only reads+rewrites the
-buckets that contain batch keys — cost is O(affected buckets), not
-O(table). md5 record keys are uniformly distributed, so buckets cannot
-skew. Within the merge there is exactly ONE shuffle (the join on _key);
-the bucket-partitioned write reuses it via ``repartition(_bucket)``.
-File-level min/max key stats and a per-file key Bloom filter in the
-manifest provide file skipping — the role of the reference's Bloom key
-index (BloomFilter.java:31-104).
+(``pmod(xxhash64(_key), buckets)``), so every copy of a record lives in
+one unit — its (partition, bucket), or its bucket across partitions on
+a global-index table. A merge only reads+rewrites the units that
+contain batch keys — cost is O(affected units), not O(table) — and
+never shuffles a stored row: the kernel runs on the driver over one
+collect of a small batch, or in write tasks over the batch alone,
+hash-partitioned on the unit. md5 record keys are uniformly
+distributed, so buckets cannot skew. File-level min/max key stats and a
+per-file key Bloom filter in the manifest provide file skipping — the
+role of the reference's Bloom key index (BloomFilter.java:31-104).
 
-Every data-writing commit goes through ONE write-and-publish path
-(``LakeTable._write_commit``): its write tasks run the one file emitter
-(``emit_unit_files``), which writes each (partition, bucket) unit as a
-Parquet file with pyarrow and returns the file's manifest entry — key
-Bloom from the keys in hand, stats from the file's own footer. The
-driver checks the commit's data subdir holds exactly the reported
-files and publishes optimistically against the version it was computed
-from.
+Every data-writing commit ends in ONE write-and-publish tail
+(``LakeTable._publish_written``) and writes its files with the one file
+emitter (``emit_unit_files``), which writes each (partition, bucket)
+unit as a Parquet file with pyarrow and returns the file's manifest
+entry — key Bloom from the keys in hand, stats from the file's own
+footer. The driver checks the commit's data subdir holds exactly the
+reported files and publishes optimistically against the version it was
+computed from.
 """
 
 from __future__ import annotations
@@ -86,10 +92,17 @@ from hudi_spark_plus_spark.table.keygen import (
     partition_source_cols,
     validate_partition_specs,
 )
+from hudi_spark_plus_spark.table.merge_kernel import (
+    COMMIT_VER_COL,
+    DELETED_COL,
+    UnitFile,
+    active_fields,
+    compact_unit,
+    merge_unit,
+    project_logical,
+)
 
 DELETE_OP = "delete"
-DELETED_COL = "_deleted"
-COMMIT_VER_COL = "_commit_ver"
 # columns a merge derives itself: never payload
 _MERGE_META = (OP_COL, BUCKET_COL, PARTITION_COL, DELETED_COL, COMMIT_VER_COL)
 
@@ -347,6 +360,50 @@ _ENTRY_COLS = (
 )
 
 
+def _entry_schema(extra=()):
+    import pyarrow as pa
+
+    types = {"string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
+             "boolean": pa.bool_()}
+    return pa.schema([(n, types[t]) for n, t in (*_ENTRY_COLS, *extra)])
+
+
+def _entry_row(e: dict) -> dict:
+    return {**e, "col_stats": e["col_stats"] and json.dumps(e["col_stats"])}
+
+
+def _row_entries(rows, kind: str) -> list[FileEntry]:
+    """Manifest entries from the entry rows a write job collected."""
+    out = []
+    for r in rows:
+        e = {n: r[n] for n, _ in _ENTRY_COLS}
+        e["col_stats"] = e["col_stats"] and json.loads(e["col_stats"])
+        out.append(FileEntry(kind=kind, **e))
+    return out
+
+
+def _unit_runs(batch, cols: list[str]):
+    """``(key, rows)`` for each run of equal ``cols`` values in an Arrow
+    batch or table sorted by them; ``key`` is the tuple of the run's
+    values as Python scalars."""
+    import numpy as np
+
+    n = batch.num_rows
+    if not n:
+        return
+    keys = [batch.column(c).to_numpy(zero_copy_only=False) for c in cols]
+    cut = np.zeros(n - 1, dtype=bool)
+    for k in keys:
+        cut |= k[1:] != k[:-1]
+    bounds = [0, *(np.flatnonzero(cut) + 1).tolist(), n]
+    for lo, hi in zip(bounds, bounds[1:]):
+        key = tuple(
+            k[lo].item() if isinstance(k[lo], np.generic) else k[lo]
+            for k in keys
+        )
+        yield key, batch.slice(lo, hi - lo)
+
+
 def _write_task(table_path: str, subdir_rel: str, layout: list[str]):
     """The ``mapInArrow`` body of ``LakeTable._write_commit``: cut the
     task's layout-sorted batches into unit runs (layout columns
@@ -354,34 +411,96 @@ def _write_task(table_path: str, subdir_rel: str, layout: list[str]):
     one file per run, returning the entries as rows."""
 
     def run(batches):
-        import numpy as np
         import pyarrow as pa
 
-        types = {"string": pa.string(), "int": pa.int32(),
-                 "bigint": pa.int64()}
-        out = pa.schema([(n, types[t]) for n, t in _ENTRY_COLS])
+        out = _entry_schema()
 
         def pieces():
             for batch in batches:
-                n = batch.num_rows
-                if not n:
-                    continue
-                keys = [
-                    batch.column(c).to_numpy(zero_copy_only=False)
-                    for c in layout
-                ]
-                cut = np.zeros(n - 1, dtype=bool)
-                for k in keys:
-                    cut |= k[1:] != k[:-1]
-                bounds = [0, *(np.flatnonzero(cut) + 1).tolist(), n]
-                data = batch.drop_columns(layout)
-                for lo, hi in zip(bounds, bounds[1:]):
-                    part = keys[0][lo] if len(layout) > 1 else None
-                    yield part, int(keys[-1][lo]), data.slice(lo, hi - lo)
+                for key, rows in _unit_runs(batch, layout):
+                    part = key[0] if len(layout) > 1 else None
+                    yield part, key[-1], rows.drop_columns(layout)
 
         for e in emit_unit_files(pieces(), table_path, subdir_rel):
-            e["col_stats"] = e["col_stats"] and json.dumps(e["col_stats"])
-            yield pa.RecordBatch.from_pylist([e], schema=out)
+            yield pa.RecordBatch.from_pylist([_entry_row(e)], schema=out)
+
+    return run
+
+
+def _merge_pieces(runs, table_path, files_by_unit, fields, next_ver, mor,
+                  global_index, consumed: list):
+    """Run the merge kernel over ``runs`` — ``(unit, batch rows)`` pairs
+    with ``unit[-1]`` the bucket — and yield its output as emitter
+    pieces under physical column names, one per (partition, bucket) in
+    partition order. ``fields``: the commit's ``[(logical, physical,
+    DataType)]``. The paths each unit consumed are appended to
+    ``consumed``."""
+    import pyarrow as pa
+
+    logical = [(n, n, t) for n, _, t in fields]
+    physical = [p for _, p, _ in fields]
+    for unit, rows in runs:
+        batch = project_logical(rows, logical)
+        if PARTITION_COL in rows.column_names:
+            batch = batch.append_column(
+                PARTITION_COL, rows[PARTITION_COL].cast(pa.string())
+            )
+        out, used = merge_unit(
+            table_path, files_by_unit.get(unit, ()), batch, fields,
+            next_ver, mor, global_index,
+        )
+        consumed += used
+        yield from _unit_pieces(out, unit[-1], physical)
+
+
+def _unit_pieces(out, bucket: int, physical: list[str]):
+    """Emitter pieces of one unit's logical output rows: one per
+    partition in partition order (``PARTITION_COL`` dropped), columns
+    renamed to ``physical``."""
+    if PARTITION_COL not in out.column_names:
+        yield None, bucket, out.rename_columns(physical)
+        return
+    for (part,), piece in _unit_runs(out.sort_by(PARTITION_COL),
+                                     [PARTITION_COL]):
+        yield (part, bucket,
+               piece.drop_columns([PARTITION_COL]).rename_columns(physical))
+
+
+def _merge_task(table_path, subdir_rel, unit_cols, files_by_unit, fields,
+                next_ver, mor, global_index):
+    """The ``mapInArrow`` body of a merge's task placement: gather each
+    unit's batch rows across the task's unit-sorted Arrow batches, run
+    the kernel per unit, emit its files, and return their entries plus
+    one ``consumed`` row per stored file the kernel replaced."""
+
+    def run(batches):
+        import pyarrow as pa
+
+        out = _entry_schema((("consumed", "boolean"),))
+        consumed: list = []
+
+        def runs():
+            key, buf = None, []
+            for batch in batches:
+                for k, rows in _unit_runs(batch, unit_cols):
+                    if buf and k != key:
+                        yield key, pa.Table.from_batches(buf)
+                        buf = []
+                    key = k
+                    buf.append(rows)
+            if buf:
+                yield key, pa.Table.from_batches(buf)
+
+        pieces = _merge_pieces(runs(), table_path, files_by_unit, fields,
+                               next_ver, mor, global_index, consumed)
+        for e in emit_unit_files(pieces, table_path, subdir_rel):
+            yield pa.RecordBatch.from_pylist(
+                [{**_entry_row(e), "consumed": False}], schema=out
+            )
+        if consumed:
+            yield pa.RecordBatch.from_pylist(
+                [{"path": p, "consumed": True} for p in consumed], schema=out
+            )
 
     return run
 
@@ -1236,8 +1355,8 @@ class LakeTable:
         record keys (the query-side of the Bloom-index capability, K1/H8:
         the reference skips files where ``!mightContain(key)``,
         BloomFilter.java:82-87). The collect of the distinct key set is
-        CAPPED at ``SCAN_KEYS_MAX`` (same stance as the merge probe's
-        ``MERGE_PROBE_MAX_KEYS``): past the cap this is no longer a
+        CAPPED at ``SCAN_KEYS_MAX`` (same stance as the merge's
+        ``MERGE_COLLECT_MAX_ROWS``): past the cap this is no longer a
         point lookup, so the method degrades to a distributed semi-join
         against the bucket-pruned snapshot — only the distinct BUCKET
         ids (bounded by ``self.buckets``) ever reach the driver.
@@ -2338,19 +2457,17 @@ class LakeTable:
         parts: int | None = None,
         shaped: bool = False,
     ) -> list[FileEntry]:
-        """The one write-and-publish path of every data-writing commit.
-        ``out`` is the LOGICAL frame with its layout columns. It is
-        hash-repartitioned on the layout (into ``parts`` tasks when
-        given, else as many as adaptive execution sizes) and sorted by
-        it within each task; ``shaped=True`` takes the caller's frame as
-        is, which must already hold each task's rows sorted by the
-        layout. Each task writes one file per (partition, bucket) run
-        with ``emit_unit_files`` and returns the files' manifest
-        entries. ``carry``: the previous live entries the commit keeps,
-        or a function of the new entries that picks them. The commit's
-        data subdir must hold exactly the reported files
-        (``_check_written``), or nothing is published. Returns the new
-        entries."""
+        """The write path of every data-writing commit but the merge
+        (whose kernel writes its own files). ``out`` is the LOGICAL
+        frame with its layout columns. It is hash-repartitioned on the
+        layout (into ``parts`` tasks when given, else as many as
+        adaptive execution sizes) and sorted by it within each task;
+        ``shaped=True`` takes the caller's frame as is, which must
+        already hold each task's rows sorted by the layout. Each task
+        writes one file per (partition, bucket) run with
+        ``emit_unit_files`` and returns the files' manifest entries,
+        which ``_publish_written`` checks and publishes with ``carry``.
+        Returns the new entries."""
         layout = self._layout_cols()
         df = self._apply_physical(out, schema_json)
         if not shaped:
@@ -2363,11 +2480,20 @@ class LakeTable:
             _write_task(self.path, rel, layout),
             ", ".join(f"{n} {t}" for n, t in _ENTRY_COLS),
         ).collect()
-        new_files = []
-        for r in sorted(rows, key=lambda r: r["path"]):
-            e = r.asDict()
-            e["col_stats"] = e["col_stats"] and json.loads(e["col_stats"])
-            new_files.append(FileEntry(kind=kind, **e))
+        return self._publish_written(
+            rel, _row_entries(rows, kind), operation, prev, carry,
+            schema_json, batch_id,
+        )
+
+    def _publish_written(
+        self, rel, new_files, operation, prev, carry, schema_json, batch_id
+    ) -> list[FileEntry]:
+        """The tail of every data-writing commit: the data subdir ``rel``
+        must hold exactly ``new_files`` (``_check_written``), or nothing
+        is published; then publish ``carry`` (a list, or a function of
+        the new entries that picks it) plus the new entries, in path
+        order. Returns the new entries."""
+        new_files = sorted(new_files, key=lambda f: f.path)
         _check_written(self.path, rel, new_files, operation)
         if callable(carry):
             carry = carry(new_files)
@@ -2813,23 +2939,21 @@ class LakeTable:
         batch: DataFrame,
         batch_id: str | None = None,
         parallelism: int | None = None,
-        affected_buckets: set[int] | None = None,
         mode: str = "cow",
     ) -> None:
         """One-pass LWW upsert+delete merge (H1/H2/Q5).
 
         ``batch``: payload columns + ``_key`` + ``_ts`` + ``_op``; at most
         one row per key (run LWW dedup first, operators.cdc.lww_dedup).
-        ``affected_buckets``: precomputed bucket set (lets a multi-table
-        sync collect every table's buckets in ONE Spark job instead of
-        one job per table).
+        ``parallelism``: the number of write tasks; given, the merge
+        always runs in tasks (see ``_merge_once`` for the placement).
 
-        ``mode``: ``"cow"`` (copy-on-write — rewrite affected buckets,
+        ``mode``: ``"cow"`` (copy-on-write — rewrite affected units,
         snapshot reads stay merge-free) or ``"mor"`` (merge-on-read —
-        append ONLY the batch rows as a delta file per affected bucket;
+        append ONLY the batch rows as a delta file per affected unit;
         snapshot/incremental/scan resolve latest-per-key at read time,
         and ``compact()`` folds deltas back into base files). MOR writes
-        are O(batch) instead of O(affected-bucket data): the right trade
+        are O(batch) instead of O(affected-unit data): the right trade
         for high-churn CDC where ingest dominates reads. Both modes obey
         the same LWW rule, so they can be mixed on one table.
 
@@ -2841,274 +2965,285 @@ class LakeTable:
         if mode not in ("cow", "mor"):
             raise ValueError(f"merge mode must be cow|mor, got {mode!r}")
         self._with_commit_retries(
-            lambda: self._merge_once(
-                batch, batch_id, parallelism, affected_buckets, mode
-            )
+            lambda: self._merge_once(batch, batch_id, parallelism, mode)
         )
+
+    # The one driver-collect row cap of a merge: a batch of at most this
+    # many rows is collected (one JVM job) and merged on the driver when
+    # its units are small too; the bootstrap merge's key probe uses the
+    # same cap.
+    MERGE_COLLECT_MAX_ROWS = 200_000
 
     def _merge_once(
         self,
         batch: DataFrame,
         batch_id: str | None,
         parallelism: int | None,
-        affected_buckets: set[int] | None,
         mode: str,
     ) -> None:
+        """One merge attempt through the per-unit kernel
+        (``merge_kernel.merge_unit``). The batch is conformed to the
+        commit's payload fields and stamped (``_deleted``,
+        ``_commit_ver``) in Spark; then each (partition, bucket) unit it
+        touches — the bucket across all partitions on a global-index
+        table — is resolved against that unit's live files alone, and
+        the commit publishes ``live - consumed + new``.
+
+        Placement: the batch is collected with ONE ``toArrow`` of at most
+        ``MERGE_COLLECT_MAX_ROWS + 1`` rows. The kernel runs on the
+        driver over those rows when the batch fits the cap, the live
+        bytes the kernel may read (its units' files; none for a plain
+        MOR append) are at most ``advisoryPartitionSizeInBytes`` — the
+        size adaptive execution would coalesce the write into one task
+        anyway — and the caller gave no ``parallelism``. Otherwise it
+        runs in ``mapInArrow`` tasks over the batch hash-repartitioned
+        on the unit. Either way no stored row is shuffled."""
         if batch_id is not None and self.log.has_batch(batch_id):
             return  # idempotent re-run (H5)
-
-        batch = self._laid_out(batch)
-        # Selective COW: only buckets containing batch keys are touched.
-        # On partitioned tables the unit is (partition, bucket) — a batch
-        # touching one day never rewrites another day's files. The unit
-        # set comes from ONE bounded collect of the batch's distinct
-        # units (bounded by batch size, typically a handful); a caller-
-        # supplied bucket set (the multi-table sync's single metadata
-        # job) degrades to bucket-granular pruning — correct, just less
-        # selective.
-        units: set | None = None
-        probe_rows: list | None = None
         prev = self.log.latest()
-        non_global_part = bool(self.partition_fields) and not self.global_index
-        if affected_buckets is not None:
-            affected = affected_buckets
-        elif prev is None:
-            # empty table: there are no live files to split into
-            # hit/carry, so the batch's distinct-unit set has no
-            # consumer — skip that Spark job entirely (every table
-            # build pays it otherwise).
-            affected = set(range(self.buckets))
-        else:
-            # Fused collect (guide §1.2: one pass over the batch plan,
-            # not one per consumer): when the Bloom probe below is
-            # going to collect the batch's distinct (key, bucket) pairs
-            # ANYWAY (COW merge into a table where some probe-eligible
-            # bucket holds several live files), collect keys + layout
-            # in ONE job and derive the affected units from the same
-            # rows — otherwise the units collect and the probe collect
-            # each re-execute the caller's whole batch plan. Same cap
-            # as the probe; past it both degrade exactly as before
-            # (bucket-granular units, probe skipped).
-            if mode == "cow" and self._probe_would_gate(prev.files):
-                sel = [KEY_COL, BUCKET_COL] + (
-                    [PARTITION_COL] if non_global_part else []
-                )
-                rows = (
-                    batch.select(*sel)
-                    .distinct()
-                    .limit(self.MERGE_PROBE_MAX_KEYS + 1)
-                    .collect()
-                )
-                if len(rows) <= self.MERGE_PROBE_MAX_KEYS:
-                    probe_rows = [(r[0], r[1]) for r in rows]
-                    if non_global_part:
-                        u = {(r[2], r[1]) for r in rows}
-                        if len(u) > self.MERGE_UNITS_MAX:
-                            affected = {b for _, b in u}
-                        else:
-                            units = u
-                            affected = {b for _, b in u}
-                    else:
-                        affected = {r[1] for r in rows}
-        if affected_buckets is None and prev is not None and probe_rows is None:
-            if non_global_part:
-                # capped like every other driver collect: a batch
-                # touching more than MERGE_UNITS_MAX (partition, bucket)
-                # units is no longer a selective merge, so unit pruning
-                # degrades to bucket granularity (correct, less
-                # selective) instead of collecting an unbounded unit
-                # list
-                rows = (
-                    batch.select(PARTITION_COL, BUCKET_COL)
-                    .distinct()
-                    .limit(self.MERGE_UNITS_MAX + 1)
-                    .collect()
-                )
-                if len(rows) > self.MERGE_UNITS_MAX:
-                    affected = {
-                        r[0]
-                        for r in batch.select(BUCKET_COL).distinct().collect()
-                    }
-                else:
-                    units = {(r[0], r[1]) for r in rows}
-                    affected = {b for _, b in units}
-            else:
-                # collect_set instead of distinct().collect(): one
-                # partial-agg job whose driver transfer is the bucket-id
-                # SET (bounded by self.buckets — never row-shaped), ~25%
-                # faster per commit than the distinct's exchange +
-                # row collect at micro-batch sizes, identical set
-                affected = set(
-                    batch.agg(
-                        F.collect_set(BUCKET_COL).alias("b")
-                    ).first()[0]
-                )
-        # Empty-batch fast path (guide §1.2 — don't compute things you
-        # throw away): the units/probe collect above already EXECUTED the
-        # batch plan and saw zero rows, so the merge join would read
-        # nothing and the write would produce no files — today that costs
-        # a second full execution of the batch plan (the write's batch
-        # side), a join analysis, an empty write job, and the output-
-        # committer round trip, all to publish a commit that carries
-        # every live file unchanged. Publish that commit directly. The
-        # schema still evolves exactly as an empty batch evolves it
-        # today (additive columns + type widening come from the batch's
-        # DTYPES, not its rows — ``_merge_payload_fields`` is the one
-        # union + widening both paths derive it from). Skipped when
-        # live bootstrap files exist: an empty merge must still convert
-        # bloom-less bootstrap files into bucketed state (they are hit
-        # candidates for ANY key set).
-        if (
-            mode == "cow"
-            and prev is not None
-            and affected_buckets is None
-            and not affected
-            and not units
-            and self.schema() is not None
-            and not any(f.kind == BOOTSTRAP_KIND for f in prev.files)
-        ):
-            fields = self._merge_payload_fields(batch, self.schema()) + [
-                StructField(DELETED_COL, BooleanType(), True),
-                StructField(COMMIT_VER_COL, LongType(), True),
-            ]
-            schema_json = self._commit_schema_json_fields(
-                fields, self._stored_schema(), prev.version + 1
-            )
-            self._publish("merge", list(prev.files), prev, schema_json, batch_id)
-            return
-        if mode == "mor" and prev is not None:
-            if any(f.kind == BOOTSTRAP_KIND for f in prev.files):
-                # a delta lands in its key's hash bucket, but a stale
-                # bootstrap copy sits in a bucket=-1 file — per-unit
-                # read-time resolution could never pair them. COW merges
-                # consume the stale copy; compact() converts everything.
-                raise ValueError(
-                    f"table at {self.path} still has live bootstrap "
-                    "files; merge-on-read requires hash-bucketed state — "
-                    "use mode='cow' or compact() first"
-                )
-            self._merge_mor(batch, batch_id, parallelism, affected, prev)
-            return
         live = prev.files if prev else []
-        if units is not None:
-            # unknown-partition files (shouldn't exist on a partitioned
-            # table) fall back to bucket-granular matching
-            def _is_hit(f: FileEntry) -> bool:
-                return (f.partition, f.bucket) in units or (
-                    f.partition is None and f.bucket in affected
-                )
+        if any(f.kind == BOOTSTRAP_KIND for f in live):
+            self._merge_bootstrap(batch, batch_id, parallelism, mode, prev)
+            return
+        stored = self.schema()
+        next_ver = (prev.version + 1) if prev else 1
+        batch = self._laid_out(batch)
+        fields = (
+            self._merge_payload_fields(batch, stored)
+            if stored is not None
+            else [f for f in batch.schema.fields if f.name not in _MERGE_META]
+        )
+        b = _conform(batch, fields).select(
+            *[f.name for f in fields],
+            (F.col(OP_COL) == DELETE_OP).alias(DELETED_COL),
+            F.lit(next_ver).cast("long").alias(COMMIT_VER_COL),
+            *self._layout_cols(),
+        )
+        schema_json = self._commit_schema_json(b, next_ver)
+        # a first write has no stored state to resolve against, so it
+        # always writes base files
+        mor = mode == "mor" and prev is not None
+        relocating = mor and self.global_index and bool(self.partition_fields)
+        unit_cols = (
+            self._layout_cols()
+            if self.partition_fields and not self.global_index
+            else [BUCKET_COL]
+        )
+        files_by_unit: dict[tuple, list] = {}
+        for f in live:
+            u = (f.partition, f.bucket) if len(unit_cols) > 1 else (f.bucket,)
+            files_by_unit.setdefault(u, []).append(f)
+
+        rows = b.limit(self.MERGE_COLLECT_MAX_ROWS + 1).toArrow()
+        units = None
+        if rows.num_rows <= self.MERGE_COLLECT_MAX_ROWS:
+            units = set(zip(*(rows[c].to_pylist() for c in unit_cols)))
+        reads = 0
+        if units is not None and (relocating or not mor):
+            reads = sum(
+                f.bytes or 0 for u in units for f in files_by_unit.get(u, ())
+            )
+        on_driver = (
+            units is not None
+            and parallelism is None
+            and reads <= self._advisory_bytes()
+        )
+        rel = os.path.join(self.log.DATA_DIR, uuid.uuid4().hex)
+        fields_c = active_fields(schema_json)
+        kind = "delta" if mor else "base"
+        consumed: list[str] = []
+        if on_driver:
+            runs = _unit_runs(
+                rows.sort_by([(c, "ascending") for c in unit_cols]), unit_cols
+            )
+            pieces = _merge_pieces(
+                runs, self.path, files_by_unit, fields_c, next_ver, mor,
+                self.global_index, consumed,
+            )
+            new_files = [
+                FileEntry(kind=kind, **e)
+                for e in emit_unit_files(pieces, self.path, rel)
+            ]
         else:
-            def _is_hit(f: FileEntry) -> bool:
-                # bootstrap files hold unrouted rows — candidates for
-                # ANY key; the Bloom probe below prunes them per file
-                return f.bucket in affected or f.kind == BOOTSTRAP_KIND
+            ship = {
+                u: [UnitFile(f.path, f.kind, f.bloom, f.partition) for f in fs]
+                for u, fs in files_by_unit.items()
+                if units is None or u in units
+            }
+            cols = [F.col(c) for c in unit_cols]
+            df = (
+                b.repartition(parallelism, *cols)
+                if parallelism
+                else b.repartition(*cols)
+            ).sortWithinPartitions(*cols)
+            out = df.mapInArrow(
+                _merge_task(self.path, rel, unit_cols, ship, fields_c,
+                            next_ver, mor, self.global_index),
+                ", ".join(f"{n} {t}" for n, t in _ENTRY_COLS)
+                + ", consumed boolean",
+            ).collect()
+            consumed = [r["path"] for r in out if r["consumed"]]
+            new_files = _row_entries(
+                [r for r in out if not r["consumed"]], kind
+            )
+        gone = set(consumed)
+        self._publish_written(
+            rel, new_files, "merge", prev,
+            [f for f in live if f.path not in gone], schema_json, batch_id,
+        )
+
+    def _advisory_bytes(self) -> int:
+        """``spark.sql.adaptive.advisoryPartitionSizeInBytes`` in bytes."""
+        size = self.spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        )
+        jvm = self.spark.sparkContext._jvm
+        return jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(size)
+
+    def _compact_on_driver(self, prev, hit, carry) -> list[FileEntry] | None:
+        """Rewrite the units of ``hit`` on the driver with the merge
+        kernel's read and resolve (``merge_kernel.compact_unit``, one
+        base file per (partition, bucket)) and publish them with
+        ``carry``, when their live bytes are at most
+        ``advisoryPartitionSizeInBytes`` — the merge's placement rule.
+        None, with nothing written, when they are larger or hold
+        bootstrap files; the caller then rewrites them in Spark. A unit
+        is a bucket across the hit's partitions on a global-index table,
+        as in the merge."""
+        if any(f.kind == BOOTSTRAP_KIND for f in hit) or (
+            sum(f.bytes or 0 for f in hit) > self._advisory_bytes()
+        ):
+            return None
+        fields = active_fields(prev.schema_json)
+        physical = [p for _, p, _ in fields]
+        partitioned = bool(self.partition_fields)
+        units: dict[tuple, list] = {}
+        for f in hit:
+            u = (
+                (f.partition, f.bucket)
+                if partitioned and not self.global_index
+                else (f.bucket,)
+            )
+            units.setdefault(u, []).append(f)
+
+        def pieces():
+            for u in sorted(units, key=str):
+                out = compact_unit(self.path, units[u], fields, partitioned)
+                yield from _unit_pieces(out, u[-1], physical)
+
+        rel = os.path.join(self.log.DATA_DIR, uuid.uuid4().hex)
+        new_files = [
+            FileEntry(kind="base", **e)
+            for e in emit_unit_files(pieces(), self.path, rel)
+        ]
+        return self._publish_written(
+            rel, new_files, "compact", prev, carry, prev.schema_json, None
+        )
+
+    def _merge_bootstrap(
+        self,
+        batch: DataFrame,
+        batch_id: str | None,
+        parallelism: int | None,
+        mode: str,
+        prev,
+    ) -> None:
+        """The merge of a table that still holds live metadata-only
+        bootstrap files (bucket -1): their rows are not hash-bucketed, so
+        no unit holds every copy of a key and the per-unit kernel cannot
+        run. A full-outer join of the hit slice with the batch on
+        ``_key`` instead: the hit set is the batch's buckets (one
+        ``collect_set``) plus every bootstrap file, Bloom-pruned, and the
+        batch row wins by the one LWW rule. The bootstrap rows it reads
+        are rewritten into their hash buckets (progressive conversion)."""
+        if mode == "mor":
+            # a delta lands in its key's hash bucket, but a stale
+            # bootstrap copy sits in a bucket=-1 file — per-unit
+            # read-time resolution could never pair them. COW merges
+            # consume the stale copy; compact() converts everything.
+            raise ValueError(
+                f"table at {self.path} still has live bootstrap "
+                "files; merge-on-read requires hash-bucketed state — "
+                "use mode='cow' or compact() first"
+            )
+        batch = self._laid_out(batch)
+        affected = set(
+            batch.agg(F.collect_set(BUCKET_COL).alias("b")).first()[0]
+        )
+        live = prev.files
+
+        def _is_hit(f: FileEntry) -> bool:
+            # bootstrap files hold unrouted rows — candidates for ANY
+            # key; the Bloom probe below prunes them per file
+            return f.bucket in affected or f.kind == BOOTSTRAP_KIND
+
         hit = [f for f in live if _is_hit(f)]
         carry = [f for f in live if not _is_hit(f)]
-        # Bloom probe (K1/H8 read-amplification fix): within an affected
-        # bucket, a file whose key bloom matches NO batch key cannot hold
-        # a row this merge changes — carry it live untouched instead of
-        # reading + rewriting it. Key sets across a bucket's live files
-        # stay disjoint (batch keys land in the new file only) — but ONLY
-        # in pure-COW buckets: a delta file supersedes rows of its
-        # bucket's base files, so consuming the delta while bloom-carrying
-        # the base would leave a stale duplicate with no read-time
-        # resolution left. Buckets holding any delta are consumed whole.
+        # a delta supersedes rows of its bucket's base files, so buckets
+        # holding one are consumed whole; elsewhere a file whose bloom
+        # matches no batch key is carried untouched
         delta_buckets = {f.bucket for f in hit if f.kind == "delta"}
         forced = [f for f in hit if f.bucket in delta_buckets]
         kept, skipped = self._bloom_prune_hit_files(
-            batch,
-            [f for f in hit if f.bucket not in delta_buckets],
-            probe_rows=probe_rows,
+            batch, [f for f in hit if f.bucket not in delta_buckets]
         )
         hit = forced + kept
         carry += skipped
 
-        if self.schema() is not None:
-            snap = self._read_files(hit)  # logical view (column mapping)
-            if any(f.kind == "delta" for f in hit) or self.global_index:
-                # COW over MOR deltas: collapse to latest-per-key before
-                # the merge join (deltas hold several versions per key).
-                # Global-index tables resolve even pure-base state: a
-                # relocated key may have copies in several partitions
-                # (stale + tombstone), and joining them unresolved would
-                # duplicate the batch row across partitions.
-                snap = self._resolve_latest(snap)
-        else:
-            snap = None
-
-        next_ver = (prev.version + 1) if prev else 1
-        if snap is not None:
-            # schema evolution: additive union of payload columns, both
-            # sides cast to the read-compatible supertype (or rejected)
-            fields = self._merge_payload_fields(batch, snap.schema)
-            payload_cols = [f.name for f in fields]
-            b, s = _conform(batch, fields), _conform(snap, fields)
-            if COMMIT_VER_COL not in s.columns:  # pre-versioning files
-                s = s.withColumn(COMMIT_VER_COL, F.lit(0).cast("long"))
-            # record identity on partitioned tables is (partition, key) —
-            # Hudi's non-global-index semantics: the same key in two
-            # partitions is two records (never merged across partitions)
-            s = self._with_part(s)
-            b = b.alias("b")
-            s = s.alias("s")
-            join_cond = F.col(f"s.{KEY_COL}") == F.col(f"b.{KEY_COL}")
-            if self.partition_fields and not self.global_index:
-                # non-global: (partition, key) identity — the same key in
-                # two partitions is two records. Global-index tables join
-                # by key alone, so a batch row whose partition value
-                # changed consumes the old partition's copy (the rewrite
-                # drops it) and the winner lands in its new partition.
-                join_cond = join_cond & (
-                    F.col(f"s.{PARTITION_COL}") == F.col(f"b.{PARTITION_COL}")
-                )
-            j = s.join(b, join_cond, "full_outer")
-            # The merged projection is built as ONE selectExpr of SQL
-            # strings instead of per-column F.when(...).otherwise(...)
-            # Column objects: the expression trees are identical (CASE
-            # WHEN == CaseWhen, same casts, same coalesce), but the
-            # Column-object construction cost ~4 py4j round trips per
-            # payload column per commit (~80 ms measured at 7 columns vs
-            # ~16 ms for the parsed strings — guide §1.2 applied to
-            # driver RPCs, the with_minhash fix's shape). The bucket
-            # column folds into the same projection as the inlined
-            # expression CollapseProject would have produced from the
-            # former post-select withColumn — the optimized plan is
-            # unchanged.
-            wins = (
-                f"(b.{_bq(KEY_COL)} IS NOT NULL AND (s.{_bq(KEY_COL)} "
-                f"IS NULL OR b.{_bq(TS_COL)} >= s.{_bq(TS_COL)}))"
+        snap = self._read_files(hit)  # logical view (column mapping)
+        if any(f.kind == "delta" for f in hit) or self.global_index:
+            # collapse to latest-per-key before the join: deltas hold
+            # several versions per key, and a relocated key of a
+            # global-index table may have copies in several partitions
+            snap = self._resolve_latest(snap)
+        next_ver = prev.version + 1
+        # schema evolution: additive union of payload columns, both
+        # sides cast to the read-compatible supertype (or rejected)
+        fields = self._merge_payload_fields(batch, snap.schema)
+        payload_cols = [f.name for f in fields]
+        b, s = _conform(batch, fields), _conform(snap, fields)
+        if COMMIT_VER_COL not in s.columns:  # pre-versioning files
+            s = s.withColumn(COMMIT_VER_COL, F.lit(0).cast("long"))
+        s = self._with_part(s)
+        b = b.alias("b")
+        s = s.alias("s")
+        join_cond = F.col(f"s.{KEY_COL}") == F.col(f"b.{KEY_COL}")
+        if self.partition_fields and not self.global_index:
+            # non-global: (partition, key) identity — the same key in
+            # two partitions is two records
+            join_cond = join_cond & (
+                F.col(f"s.{PARTITION_COL}") == F.col(f"b.{PARTITION_COL}")
             )
-            merged_key = (
-                f"CASE WHEN {wins} THEN b.{_bq(KEY_COL)} "
-                f"ELSE s.{_bq(KEY_COL)} END"
-            )
-            merged = j.selectExpr(
-                *[
-                    f"CASE WHEN {wins} THEN b.{_bq(c)} "
-                    f"ELSE s.{_bq(c)} END AS {_bq(c)}"
-                    for c in payload_cols
-                ],
-                # tombstone: winning delete, or carried-over prior tombstone
-                f"CASE WHEN {wins} THEN (b.{_bq(OP_COL)} = '{DELETE_OP}') "
-                f"ELSE coalesce(s.{_bq(DELETED_COL)}, false) "
-                f"END AS {_bq(DELETED_COL)}",
-                # record-level commit version (the _hoodie_commit_time
-                # analogue): batch winners stamp the new version; rows
-                # merely carried through a bucket rewrite KEEP theirs, so
-                # incremental() can return exactly the changed records
-                f"CASE WHEN {wins} THEN CAST({next_ver} AS BIGINT) "
-                f"ELSE s.{_bq(COMMIT_VER_COL)} END AS {_bq(COMMIT_VER_COL)}",
-                f"CAST(pmod(xxhash64({merged_key}), {self.buckets}) AS INT) "
-                f"AS {_bq(BUCKET_COL)}",
-            )
-        else:
-            merged = batch.select(
-                *[c for c in batch.columns if c not in _MERGE_META],
-                (F.col(OP_COL) == DELETE_OP).alias(DELETED_COL),
-                F.lit(next_ver).cast("long").alias(COMMIT_VER_COL),
-                bucket_expr(F.col(KEY_COL), self.buckets).alias(BUCKET_COL),
-            )
-
+        j = s.join(b, join_cond, "full_outer")
+        # the one LWW rule (``resolve_latest_arrow``'s order): the batch
+        # row carries the newest commit version, so it wins unless the
+        # stored _ts is newer or the batch _ts is null and the stored not
+        wins = (
+            f"(b.{_bq(KEY_COL)} IS NOT NULL AND (s.{_bq(KEY_COL)} IS NULL "
+            f"OR s.{_bq(TS_COL)} IS NULL OR b.{_bq(TS_COL)} >= s.{_bq(TS_COL)}))"
+        )
+        merged_key = (
+            f"CASE WHEN {wins} THEN b.{_bq(KEY_COL)} "
+            f"ELSE s.{_bq(KEY_COL)} END"
+        )
+        merged = j.selectExpr(
+            *[
+                f"CASE WHEN {wins} THEN b.{_bq(c)} "
+                f"ELSE s.{_bq(c)} END AS {_bq(c)}"
+                for c in payload_cols
+            ],
+            # tombstone: winning delete, or carried-over prior tombstone
+            f"CASE WHEN {wins} THEN (b.{_bq(OP_COL)} = '{DELETE_OP}') "
+            f"ELSE coalesce(s.{_bq(DELETED_COL)}, false) "
+            f"END AS {_bq(DELETED_COL)}",
+            # batch winners stamp the new version; rows carried through
+            # the rewrite keep theirs (incremental() returns exactly the
+            # changed records)
+            f"CASE WHEN {wins} THEN CAST({next_ver} AS BIGINT) "
+            f"ELSE s.{_bq(COMMIT_VER_COL)} END AS {_bq(COMMIT_VER_COL)}",
+            f"CAST(pmod(xxhash64({merged_key}), {self.buckets}) AS INT) "
+            f"AS {_bq(BUCKET_COL)}",
+        )
         merged = self._with_part(merged)
         self._write_commit(
             merged, "merge", prev, carry,
@@ -3295,162 +3430,31 @@ class LakeTable:
                 )
         self._publish("alter", prev.files, prev, StructType(fields).json())
 
-    def _merge_mor(
-        self,
-        batch: DataFrame,
-        batch_id: str | None,
-        parallelism: int | None,
-        affected: set[int],
-        prev,
-    ) -> None:
-        """Merge-on-read write path: append the (pre-deduped) batch as
-        delta files, touch NO existing data. Schema evolution follows the
-        same rules as COW (additive union + read-compatible widening).
-
-        On a GLOBAL-INDEX table the append is preceded by one bounded
-        read of the affected buckets' live copies (bloom-pruned — the
-        Hudi global-index-lookup cost): a batch row that LOSES cross-
-        batch LWW is dropped before the write (an appended loser would
-        win a partition-pruned read of its own partition, since the
-        stored winner lives elsewhere and could not shadow it), and a
-        winner whose partition value changed also appends a RELOCATION
-        TOMBSTONE into the old partition — carrying the old copy's own
-        payload and _ts — so partition-pruned reads of the old partition
-        stay correct without consulting any other partition."""
-        next_ver = prev.version + 1
-        stored = self.schema()
-        b = batch
-        for c in (DELETED_COL, COMMIT_VER_COL):
-            if c in b.columns:
-                b = b.drop(c)
-        b = self._reconcile_batch_types(b, stored)
-        delta = (
-            b.withColumn(DELETED_COL, F.col(OP_COL) == DELETE_OP)
-            .withColumn(COMMIT_VER_COL, F.lit(next_ver).cast("long"))
-            .drop(OP_COL)
-        )
-        if self.global_index and self.partition_fields:
-            hit = [f for f in prev.files if f.bucket in affected]
-            kept, _skipped = self._bloom_prune_hit_files(
-                batch, [f for f in hit if f.kind != "delta"]
-            )
-            read = kept + [f for f in hit if f.kind == "delta"]
-            if read:
-                old = self._with_part(self._read_files(read))
-                if COMMIT_VER_COL not in old.columns:
-                    old = old.withColumn(
-                        COMMIT_VER_COL, F.lit(0).cast("long")
-                    )
-                # single latest live copy per key (key-only identity)
-                old = self._resolve_latest(old).where(
-                    ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-                )
-                old = old.withColumn(
-                    BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets)
-                )
-                o = old.select(
-                    [F.col(c).alias(f"_o_{c}") for c in old.columns]
-                )
-                j = delta.join(
-                    o, delta[KEY_COL] == F.col(f"_o_{KEY_COL}"), "left"
-                )
-                winners = j.where(
-                    F.col(f"_o_{KEY_COL}").isNull()
-                    | (F.col(TS_COL) >= F.col(f"_o_{TS_COL}"))
-                )
-                out = winners.select(*delta.columns)
-                tombs = winners.where(
-                    F.col(f"_o_{KEY_COL}").isNotNull()
-                    & (F.col(f"_o_{PARTITION_COL}") != F.col(PARTITION_COL))
-                ).select(
-                    *[
-                        F.col(f"_o_{c}").alias(c)
-                        for c in old.columns
-                        if c not in (DELETED_COL, COMMIT_VER_COL)
-                    ],
-                    F.lit(True).alias(DELETED_COL),
-                    F.lit(next_ver).cast("long").alias(COMMIT_VER_COL),
-                )
-                delta = out.unionByName(tombs, allowMissingColumns=True)
-        self._write_commit(
-            delta, "merge", prev, prev.files,
-            self._commit_schema_json(delta, next_ver), batch_id,
-            kind="delta", parts=parallelism,
-        )
-
-    # Above this many distinct batch keys the per-merge bloom probe is
-    # skipped: collecting the key hashes driver-side stops being cheap,
-    # and a batch that large touches most files of its buckets anyway.
-    MERGE_PROBE_MAX_KEYS = 200_000
     # scan_for_keys driver-collect cap; past it the lookup degrades to a
     # distributed semi-join (see scan_for_keys)
     SCAN_KEYS_MAX = 200_000
-    # distinct (partition, bucket) units a merge will collect for unit-
-    # granular COW pruning; past it pruning degrades to bucket level
-    MERGE_UNITS_MAX = 100_000
-
-    def _probe_would_gate(self, files: list) -> bool:
-        """Driver-metadata-only preview of ``_bloom_prune_hit_files``'s
-        gate over a candidate live set: True when a COW merge into this
-        state could probe (some bloom-carrying, non-delta-bucket bucket
-        holds more than one live file, or a bloom-carrying bootstrap
-        file exists). A True here lets ``_merge_once`` fuse the probe's
-        key collect with the affected-unit collect into one Spark job;
-        a conservative False only costs falling back to the two
-        separate collects (the pre-r13 behavior)."""
-        if not any(f.bloom for f in files):
-            return False
-        delta_buckets = {f.bucket for f in files if f.kind == "delta"}
-        cand = [f for f in files if f.bucket not in delta_buckets]
-        if any(f.kind == BOOTSTRAP_KIND for f in cand):
-            return True
-        per_bucket: dict[int, int] = {}
-        for f in cand:
-            per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-            if per_bucket[f.bucket] > 1:
-                return True
-        return False
 
     def _bloom_prune_hit_files(
-        self,
-        batch: DataFrame,
-        hit: list[FileEntry],
-        probe_rows: list | None = None,
+        self, batch: DataFrame, hit: list[FileEntry]
     ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """(files to merge-read, files to carry untouched). The probe
-        collects the batch's distinct (key, bucket) pairs — bounded by
-        micro-batch size, NOT table size — hashes them once, and tests
-        each affected file's manifest bloom. False positives only cost
-        an extra file read; false negatives cannot occur.
-        ``probe_rows``: the (key, bucket) pairs when the caller already
-        collected them (the merge's fused unit+probe collect) — skips
-        this method's own Spark job.
-
-        Gate: only probe when some affected bucket holds MORE than one
-        live file. In the steady one-file-per-bucket COW state the merge
-        must rewrite that file regardless (update-heavy batches almost
-        always hit it), so the probe's extra Spark job would be pure
-        per-batch overhead; with multiple files per bucket (insert
-        accumulation, bloom-carried files) it is the read-amplification
-        fix."""
+        """(files to merge-read, files to carry untouched) for the
+        bootstrap merge. The probe collects the batch's distinct (key,
+        bucket) pairs — bounded by micro-batch size, NOT table size, and
+        capped at ``MERGE_COLLECT_MAX_ROWS`` (past it nothing is pruned)
+        — hashes them once, and tests each hit file's manifest bloom: a
+        bucket file against its bucket's keys, a bootstrap file against
+        every key. False positives only cost an extra file read; false
+        negatives cannot occur."""
         if not any(f.bloom for f in hit):
             return hit, []
-        has_boot = any(f.kind == BOOTSTRAP_KIND for f in hit)
-        per_bucket: dict[int, int] = {}
-        for f in hit:
-            per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-        if not has_boot and all(n <= 1 for n in per_bucket.values()):
+        rows = (
+            batch.select(KEY_COL, BUCKET_COL)
+            .distinct()
+            .limit(self.MERGE_COLLECT_MAX_ROWS + 1)
+            .collect()
+        )
+        if len(rows) > self.MERGE_COLLECT_MAX_ROWS:
             return hit, []
-        rows = probe_rows
-        if rows is None:
-            rows = (
-                batch.select(KEY_COL, BUCKET_COL)
-                .distinct()
-                .limit(self.MERGE_PROBE_MAX_KEYS + 1)
-                .collect()
-            )
-            if len(rows) > self.MERGE_PROBE_MAX_KEYS:
-                return hit, []
         by_bucket: dict[int, list] = {}
         for k, b in rows:
             by_bucket.setdefault(b, []).append(hash_key(k))

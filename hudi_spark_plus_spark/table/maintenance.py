@@ -78,11 +78,13 @@ def compact_buckets(
         else:
             hit = [f for f in prev.files if f.bucket in buckets]
             carry = [f for f in prev.files if f.bucket not in buckets]
-        df = lake._read_resolved(hit, include_deleted=True)
         n_units = len(units) if units is not None else len(buckets)
-        files = lake._write_commit(
-            lake._laid_out(df), "compact", prev, carry, prev.schema_json,
-        )
+        files = lake._compact_on_driver(prev, hit, carry)
+        if files is None:
+            df = lake._read_resolved(hit, include_deleted=True)
+            files = lake._write_commit(
+                lake._laid_out(df), "compact", prev, carry, prev.schema_json,
+            )
         return {
             "buckets_compacted": n_units,
             "files_before": len(hit),

@@ -1090,7 +1090,7 @@ class JoinView:
         )
         ckpts.append(images)
         # capped like every other driver collect (SCAN_KEYS_MAX /
-        # MERGE_UNITS_MAX doctrine): past the probe cap this is no
+        # MERGE_COLLECT_MAX_ROWS doctrine): past the probe cap this is no
         # longer a selective dim touch — file pruning and the
         # broadcast hint both come off, LOUDLY, and the join degrades
         # to a shuffle against the full fv0 snapshot (the correct plan

@@ -2618,26 +2618,25 @@ class TestRetypeRewrite:
 
 
 class TestFusedUnitProbeCollect:
-    """r13 optimization: when the Bloom probe could fire, the merge
-    collects the batch's distinct keys + layout in ONE Spark job and
-    derives the affected units from the same rows, instead of the
-    units collect and the probe collect each re-executing the whole
-    batch plan. These tests pin (a) the fusion firing exactly when the
-    probe gate could, (b) unchanged merge semantics either way."""
+    """The merge collects the batch ONCE (keys and layout in one
+    ``toArrow``) and prunes by Bloom inside each unit: a multi-file,
+    delta-free unit carries every file its batch keys cannot be in,
+    untouched, while the steady one-file unit is rewritten without a
+    probe. These tests pin that behaviour and unchanged merge results."""
 
-    def _spy(self, monkeypatch):
-        seen = {}
-        orig = LakeTable._bloom_prune_hit_files
+    @staticmethod
+    def _file_of(t, key):
+        """The live file holding ``key`` (read back from the files)."""
+        import pyarrow.parquet as pq
 
-        def spy(table, batch, hit, probe_rows=None):
-            seen["probe_rows"] = probe_rows
-            return orig(table, batch, hit, probe_rows=probe_rows)
-
-        monkeypatch.setattr(LakeTable, "_bloom_prune_hit_files", spy)
-        return seen
+        for f in t.log.live_files():
+            keys = pq.read_table(t.log.abs_path(f.path), columns=["_key"])
+            if key in keys.column(0).to_pylist():
+                return f.path
+        raise AssertionError(f"no live file holds {key}")
 
     def test_fused_rows_feed_probe_on_multi_file_bucket(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path
     ):
         t = LakeTable(spark, str(tmp_path / "tf"), buckets=1)
         t.insert(
@@ -2650,19 +2649,18 @@ class TestFusedUnitProbeCollect:
             .drop("_op"),
             "b1",
         )
-        assert t._probe_would_gate(t.log.live_files())
-        seen = self._spy(monkeypatch)
+        assert len(t.log.live_files()) == 2
+        missed = self._file_of(t, "b0")
         t.merge(mkbatch(spark, [("a0", 5, "upsert", "z")]), "b2")
-        assert seen["probe_rows"] is not None, (
-            "multi-file bloom'd bucket: the probe must be fed by the "
-            "fused collect, not its own second batch execution"
+        assert missed in {f.path for f in t.log.live_files()}, (
+            "multi-file bucket: the file the batch keys miss in its "
+            "bloom must stay live under its unchanged path"
         )
-        assert ("a0", 0) in {tuple(r) for r in seen["probe_rows"]}
         got = snap_dict(t)
         assert got["a0"] == (5, "z") and len(got) == 8
 
     def test_no_fusion_in_steady_single_file_state(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path
     ):
         t = LakeTable(spark, str(tmp_path / "ts"), buckets=2)
         t.insert(
@@ -2670,18 +2668,20 @@ class TestFusedUnitProbeCollect:
             .drop("_op"),
             "b0",
         )
-        assert not t._probe_would_gate(t.log.live_files())
-        seen = self._spy(monkeypatch)
+        before = {f.bucket: f.path for f in t.log.live_files()}
+        assert len(before) == 2
+        hit = self._file_of(t, "k0")
         t.merge(mkbatch(spark, [("k0", 5, "upsert", "z")]), "b1")
-        assert seen["probe_rows"] is None, (
-            "steady one-file-per-bucket state: no key collect at all "
-            "(the probe could never fire, so fusing would only add a "
-            "wider driver transfer)"
+        after = {f.bucket: f.path for f in t.log.live_files()}
+        assert hit not in after.values(), (
+            "steady one-file-per-bucket state: the hit bucket's one "
+            "file is rewritten"
         )
+        assert len(set(after.values()) & set(before.values())) == 1
         assert snap_dict(t)["k0"] == (5, "z")
 
     def test_fused_units_still_prune_partitions(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path
     ):
         t = LakeTable(
             spark, str(tmp_path / "tp"), buckets=1, partition_fields=["val"]
@@ -2703,28 +2703,24 @@ class TestFusedUnitProbeCollect:
             f.path for f in t.log.live_files() if f.partition == "p2"
         }
         assert other
-        seen = self._spy(monkeypatch)
+        missed = self._file_of(t, "b0")
         t.merge(mkbatch(spark, [("a0", 5, "upsert", "p1")]), "b2")
-        assert seen["probe_rows"] is not None
         after = {f.path for f in t.log.live_files()}
+        assert missed in after
         assert other <= after, (
             "the untouched partition's files must carry by reference — "
-            "the fused rows must preserve (partition, bucket) unit "
-            "pruning"
+            "the merge must preserve (partition, bucket) unit pruning"
         )
         got = snap_dict(t)
         assert got["a0"] == (5, "p1") and len(got) == 7
 
 
 class TestEmptyMergeFastPath:
-    """r14 optimization: a COW merge whose batch produced ZERO rows
-    publishes its commit directly — the units/probe collect already
-    executed the batch plan and saw nothing, so the join, the second
-    batch-plan execution inside the write, the empty write job, and the
-    committer round trip are all skipped. The commit itself must be
-    indistinguishable from the slow path's: version bump, batch_id
-    recorded, every live file carried by reference, and the SAME schema
-    evolution an empty batch applies today (dtypes, not rows)."""
+    """A COW merge whose batch has ZERO rows touches no unit: its one
+    batch collect sees nothing, so no file is read or written, and it
+    publishes every live file by reference — a version bump with the
+    batch_id recorded and the SAME schema evolution a non-empty batch
+    applies (dtypes, not rows)."""
 
     def _spy_read(self, monkeypatch):
         called = {"n": 0}
