@@ -522,12 +522,17 @@ class IvfIndex:
             if carried:
                 # metadata-only commit: full current live set re-cited,
                 # so segments are reused byte-for-byte; only the carried
-                # id declaration is new
-                new.table.log.commit(
-                    _MIGRATE_OP,
-                    new.table.log.live_files(),
-                    carried_batch_ids=carried,
-                )
+                # id declaration is new. Published against the version
+                # the live set was read at: a concurrent commit is
+                # re-read, never dropped
+                t = new.table
+
+                def attempt():
+                    prev = t.log.latest()
+                    t._publish(_MIGRATE_OP, prev.files, prev,
+                               carried_batch_ids=carried)
+
+                t._with_commit_retries(attempt)
         return new
 
     def search(

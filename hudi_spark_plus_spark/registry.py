@@ -173,6 +173,11 @@ _PINNED = [
     # null _ts now loses to any other _ts in COW merges as it already
     # did in MOR reads. 58 hashes moved, every one already pinned above;
     # no other query's hash moved.
+    # Every compaction of a live set without bootstrap files runs the
+    # per-unit kernel (LakeTable._rewrite_units); the join view's
+    # watermark and the ANN-index migrate commit publish optimistically;
+    # fsck compares footer row counts. The same 58 hashes moved, every
+    # one already pinned above.
 ]
 
 

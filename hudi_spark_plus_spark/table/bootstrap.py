@@ -51,6 +51,14 @@ from pyspark.sql import functions as F
 
 BOOTSTRAP_KIND = "bootstrap"
 
+
+def holds_bootstrap(files) -> bool:
+    """Whether ``files`` include a live bootstrap file — the one input
+    the per-unit merge kernel cannot rewrite: its rows are not
+    hash-bucketed, so no (partition, bucket) unit holds every copy of a
+    key. Merges and ``compact()`` of such a live set run in Spark."""
+    return any(f.kind == BOOTSTRAP_KIND for f in files)
+
 # Types whose string rendering is identical in Spark SQL, pyarrow, and
 # ANSI SQL (DuckDB): the synthesized key must hash/compare the same
 # everywhere. Floats/timestamps/decimals render differently per engine.

@@ -71,6 +71,7 @@ from hudi_spark_plus_spark.table.bloom import KeyBloom, hash_key, pairs_array
 from hudi_spark_plus_spark.table.bootstrap import (
     BOOTSTRAP_KIND,
     collect_bootstrap_entries,
+    holds_bootstrap,
     key_expr as _boot_key_expr,
     resolve_source_files,
     ts_expr as _boot_ts_expr,
@@ -97,7 +98,6 @@ from hudi_spark_plus_spark.table.merge_kernel import (
     DELETED_COL,
     UnitFile,
     active_fields,
-    compact_unit,
     merge_unit,
     project_logical,
 )
@@ -430,7 +430,8 @@ def _write_task(table_path: str, subdir_rel: str, layout: list[str]):
 def _merge_pieces(runs, table_path, files_by_unit, fields, next_ver, mor,
                   global_index, consumed: list):
     """Run the merge kernel over ``runs`` — ``(unit, batch rows)`` pairs
-    with ``unit[-1]`` the bucket — and yield its output as emitter
+    with ``unit[-1]`` the bucket; rows holding the unit columns alone
+    (no batch rows) compact the unit — and yield its output as emitter
     pieces under physical column names, one per (partition, bucket) in
     partition order. ``fields``: the commit's ``[(logical, physical,
     DataType)]``. The paths each unit consumed are appended to
@@ -440,38 +441,33 @@ def _merge_pieces(runs, table_path, files_by_unit, fields, next_ver, mor,
     logical = [(n, n, t) for n, _, t in fields]
     physical = [p for _, p, _ in fields]
     for unit, rows in runs:
-        batch = project_logical(rows, logical)
-        if PARTITION_COL in rows.column_names:
-            batch = batch.append_column(
-                PARTITION_COL, rows[PARTITION_COL].cast(pa.string())
-            )
+        batch = None
+        if KEY_COL in rows.column_names:
+            batch = project_logical(rows, logical)
+            if PARTITION_COL in rows.column_names:
+                batch = batch.append_column(
+                    PARTITION_COL, rows[PARTITION_COL].cast(pa.string())
+                )
         out, used = merge_unit(
             table_path, files_by_unit.get(unit, ()), batch, fields,
             next_ver, mor, global_index,
         )
         consumed += used
-        yield from _unit_pieces(out, unit[-1], physical)
-
-
-def _unit_pieces(out, bucket: int, physical: list[str]):
-    """Emitter pieces of one unit's logical output rows: one per
-    partition in partition order (``PARTITION_COL`` dropped), columns
-    renamed to ``physical``."""
-    if PARTITION_COL not in out.column_names:
-        yield None, bucket, out.rename_columns(physical)
-        return
-    for (part,), piece in _unit_runs(out.sort_by(PARTITION_COL),
-                                     [PARTITION_COL]):
-        yield (part, bucket,
-               piece.drop_columns([PARTITION_COL]).rename_columns(physical))
+        if PARTITION_COL not in out.column_names:
+            yield None, unit[-1], out.rename_columns(physical)
+            continue
+        for (part,), piece in _unit_runs(out.sort_by(PARTITION_COL),
+                                         [PARTITION_COL]):
+            piece = piece.drop_columns([PARTITION_COL])
+            yield part, unit[-1], piece.rename_columns(physical)
 
 
 def _merge_task(table_path, subdir_rel, unit_cols, files_by_unit, fields,
                 next_ver, mor, global_index):
-    """The ``mapInArrow`` body of a merge's task placement: gather each
-    unit's batch rows across the task's unit-sorted Arrow batches, run
-    the kernel per unit, emit its files, and return their entries plus
-    one ``consumed`` row per stored file the kernel replaced."""
+    """The ``mapInArrow`` body of a unit rewrite's task placement: gather
+    each unit's batch rows across the task's unit-sorted Arrow batches,
+    run the kernel per unit, emit its files, and return their entries
+    plus one ``consumed`` row per stored file the kernel replaced."""
 
     def run(batches):
         import pyarrow as pa
@@ -2946,7 +2942,7 @@ class LakeTable:
         ``batch``: payload columns + ``_key`` + ``_ts`` + ``_op``; at most
         one row per key (run LWW dedup first, operators.cdc.lww_dedup).
         ``parallelism``: the number of write tasks; given, the merge
-        always runs in tasks (see ``_merge_once`` for the placement).
+        always runs in tasks (see ``_rewrite_units`` for the placement).
 
         ``mode``: ``"cow"`` (copy-on-write — rewrite affected units,
         snapshot reads stay merge-free) or ``"mor"`` (merge-on-read —
@@ -2981,28 +2977,15 @@ class LakeTable:
         parallelism: int | None,
         mode: str,
     ) -> None:
-        """One merge attempt through the per-unit kernel
-        (``merge_kernel.merge_unit``). The batch is conformed to the
-        commit's payload fields and stamped (``_deleted``,
-        ``_commit_ver``) in Spark; then each (partition, bucket) unit it
-        touches — the bucket across all partitions on a global-index
-        table — is resolved against that unit's live files alone, and
-        the commit publishes ``live - consumed + new``.
-
-        Placement: the batch is collected with ONE ``toArrow`` of at most
-        ``MERGE_COLLECT_MAX_ROWS + 1`` rows. The kernel runs on the
-        driver over those rows when the batch fits the cap, the live
-        bytes the kernel may read (its units' files; none for a plain
-        MOR append) are at most ``advisoryPartitionSizeInBytes`` — the
-        size adaptive execution would coalesce the write into one task
-        anyway — and the caller gave no ``parallelism``. Otherwise it
-        runs in ``mapInArrow`` tasks over the batch hash-repartitioned
-        on the unit. Either way no stored row is shuffled."""
+        """One merge attempt: the batch is conformed to the commit's
+        payload fields and stamped (``_deleted``, ``_commit_ver``) in
+        Spark, then ``_rewrite_units`` resolves each unit it touches
+        against that unit's live files alone."""
         if batch_id is not None and self.log.has_batch(batch_id):
             return  # idempotent re-run (H5)
         prev = self.log.latest()
         live = prev.files if prev else []
-        if any(f.kind == BOOTSTRAP_KIND for f in live):
+        if holds_bootstrap(live):
             self._merge_bootstrap(batch, batch_id, parallelism, mode, prev)
             return
         stored = self.schema()
@@ -3019,10 +3002,42 @@ class LakeTable:
             F.lit(next_ver).cast("long").alias(COMMIT_VER_COL),
             *self._layout_cols(),
         )
-        schema_json = self._commit_schema_json(b, next_ver)
         # a first write has no stored state to resolve against, so it
         # always writes base files
-        mor = mode == "mor" and prev is not None
+        self._rewrite_units(
+            prev, live, self._commit_schema_json(b, next_ver), "merge",
+            batch=b, batch_id=batch_id, parallelism=parallelism,
+            mor=mode == "mor" and prev is not None,
+        )
+
+    def _rewrite_units(self, prev, files, schema_json, operation, batch=None,
+                       batch_id=None, parallelism=None, mor=False):
+        """The one unit rewrite of merge and compaction, through the
+        per-unit kernel (``merge_kernel.merge_unit``). ``files`` (live
+        in ``prev``) are grouped into units: (partition, bucket), or the
+        bucket across their partitions on a global-index table. With a
+        ``batch`` (conformed, stamped, laid out) each unit it touches is
+        merged, as delta rows if ``mor``; without one every unit of
+        ``files`` is compacted. Publishes ``live - consumed + new`` and
+        returns the new entries.
+
+        Placement: a batch is collected with ONE ``toArrow`` of at most
+        ``MERGE_COLLECT_MAX_ROWS + 1`` rows. The kernel runs on the
+        driver when the batch fits the cap (a compaction has none), the
+        live bytes it may read (its units' files; none for a plain MOR
+        append) are at most ``advisoryPartitionSizeInBytes`` — what
+        adaptive execution would coalesce into one task anyway — and the
+        caller gave no ``parallelism``. Otherwise it runs in ONE
+        ``mapInArrow`` job: over the batch hash-repartitioned on the
+        unit, or over a frame of the compaction's units in
+        ``ceil(bytes / advisory)`` slices (at most one per unit), not
+        shuffled, so nothing coalesces it into one task. Either way no
+        stored row is shuffled."""
+        import pyarrow as pa
+
+        live = prev.files if prev else []
+        next_ver = (prev.version + 1) if prev else 1
+        compact = batch is None
         relocating = mor and self.global_index and bool(self.partition_fields)
         unit_cols = (
             self._layout_cols()
@@ -3030,23 +3045,27 @@ class LakeTable:
             else [BUCKET_COL]
         )
         files_by_unit: dict[tuple, list] = {}
-        for f in live:
+        for f in files:
             u = (f.partition, f.bucket) if len(unit_cols) > 1 else (f.bucket,)
             files_by_unit.setdefault(u, []).append(f)
 
-        rows = b.limit(self.MERGE_COLLECT_MAX_ROWS + 1).toArrow()
-        units = None
-        if rows.num_rows <= self.MERGE_COLLECT_MAX_ROWS:
-            units = set(zip(*(rows[c].to_pylist() for c in unit_cols)))
+        if compact:  # one row per unit, no batch rows
+            units = set(files_by_unit)
+            rows = pa.table({c: [u[i] for u in sorted(units)]
+                             for i, c in enumerate(unit_cols)})
+        else:
+            rows = batch.limit(self.MERGE_COLLECT_MAX_ROWS + 1).toArrow()
+            units = None
+            if rows.num_rows <= self.MERGE_COLLECT_MAX_ROWS:
+                units = set(zip(*(rows[c].to_pylist() for c in unit_cols)))
         reads = 0
         if units is not None and (relocating or not mor):
             reads = sum(
                 f.bytes or 0 for u in units for f in files_by_unit.get(u, ())
             )
+        advisory = self._advisory_bytes()
         on_driver = (
-            units is not None
-            and parallelism is None
-            and reads <= self._advisory_bytes()
+            units is not None and parallelism is None and reads <= advisory
         )
         rel = os.path.join(self.log.DATA_DIR, uuid.uuid4().hex)
         fields_c = active_fields(schema_json)
@@ -3070,12 +3089,22 @@ class LakeTable:
                 for u, fs in files_by_unit.items()
                 if units is None or u in units
             }
-            cols = [F.col(c) for c in unit_cols]
-            df = (
-                b.repartition(parallelism, *cols)
-                if parallelism
-                else b.repartition(*cols)
-            ).sortWithinPartitions(*cols)
+            if compact:
+                slices = min(len(units), -(-reads // max(advisory, 1)))
+                df = self.spark.createDataFrame(
+                    self.spark.sparkContext.parallelize(
+                        sorted(units), max(1, slices)
+                    ),
+                    ", ".join(f"{c} {'int' if c == BUCKET_COL else 'string'}"
+                              for c in unit_cols),
+                )
+            else:
+                cols = [F.col(c) for c in unit_cols]
+                df = (
+                    batch.repartition(parallelism, *cols)
+                    if parallelism
+                    else batch.repartition(*cols)
+                ).sortWithinPartitions(*cols)
             out = df.mapInArrow(
                 _merge_task(self.path, rel, unit_cols, ship, fields_c,
                             next_ver, mor, self.global_index),
@@ -3087,8 +3116,8 @@ class LakeTable:
                 [r for r in out if not r["consumed"]], kind
             )
         gone = set(consumed)
-        self._publish_written(
-            rel, new_files, "merge", prev,
+        return self._publish_written(
+            rel, new_files, operation, prev,
             [f for f in live if f.path not in gone], schema_json, batch_id,
         )
 
@@ -3099,46 +3128,6 @@ class LakeTable:
         )
         jvm = self.spark.sparkContext._jvm
         return jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(size)
-
-    def _compact_on_driver(self, prev, hit, carry) -> list[FileEntry] | None:
-        """Rewrite the units of ``hit`` on the driver with the merge
-        kernel's read and resolve (``merge_kernel.compact_unit``, one
-        base file per (partition, bucket)) and publish them with
-        ``carry``, when their live bytes are at most
-        ``advisoryPartitionSizeInBytes`` — the merge's placement rule.
-        None, with nothing written, when they are larger or hold
-        bootstrap files; the caller then rewrites them in Spark. A unit
-        is a bucket across the hit's partitions on a global-index table,
-        as in the merge."""
-        if any(f.kind == BOOTSTRAP_KIND for f in hit) or (
-            sum(f.bytes or 0 for f in hit) > self._advisory_bytes()
-        ):
-            return None
-        fields = active_fields(prev.schema_json)
-        physical = [p for _, p, _ in fields]
-        partitioned = bool(self.partition_fields)
-        units: dict[tuple, list] = {}
-        for f in hit:
-            u = (
-                (f.partition, f.bucket)
-                if partitioned and not self.global_index
-                else (f.bucket,)
-            )
-            units.setdefault(u, []).append(f)
-
-        def pieces():
-            for u in sorted(units, key=str):
-                out = compact_unit(self.path, units[u], fields, partitioned)
-                yield from _unit_pieces(out, u[-1], physical)
-
-        rel = os.path.join(self.log.DATA_DIR, uuid.uuid4().hex)
-        new_files = [
-            FileEntry(kind="base", **e)
-            for e in emit_unit_files(pieces(), self.path, rel)
-        ]
-        return self._publish_written(
-            rel, new_files, "compact", prev, carry, prev.schema_json, None
-        )
 
     def _merge_bootstrap(
         self,

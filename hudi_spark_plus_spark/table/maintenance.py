@@ -2,11 +2,13 @@
 
 Micro-batch CDC inevitably produces many small files per bucket (one
 merge rewrite per batch per touched bucket). Compaction rewrites each
-bucket's live rows into one right-sized file and commits a new version —
-same logical data. Vacuum physically deletes data files no longer
-referenced by any retained commit (old versions beyond ``keep_last`` are
-dropped from the timeline first), reclaiming space after compaction and
-COW rewrites.
+unit's live rows into one right-sized file and commits a new version —
+same logical data. It is a merge with no batch rows: the per-unit merge
+kernel under the merge's placement (the driver, or one ``mapInArrow``
+job); only a live set holding bootstrap files is rewritten in Spark.
+Vacuum physically deletes data files no longer referenced by any
+retained commit (old versions beyond ``keep_last`` are dropped from the
+timeline first), reclaiming space after compaction and COW rewrites.
 
 These are the table-format housekeeping commands Hudi runs as services
 (compaction/cleaning) for the reference; here they are explicit commands
@@ -17,26 +19,36 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from hudi_spark_plus_spark.table.bootstrap import holds_bootstrap
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 
 
 def compact(lake: LakeTable) -> dict:
     """Rewrite all live data (tombstones included — they must survive
     until vacuumed with their semantics intact) into one file per
-    (partition, bucket) unit. Returns {files_before, files_after}.
-    Retries against a fresh timeline if a concurrent writer wins the
-    commit race."""
+    (partition, bucket) unit, through the per-unit merge kernel
+    (``LakeTable._rewrite_units``). A live set holding bootstrap files
+    is rewritten in Spark instead: their rows are not hash-bucketed
+    yet, and this rewrite converts them. Returns {files_before,
+    files_after}. Retries against a fresh timeline if a concurrent
+    writer wins the commit race."""
 
     def attempt() -> dict:
         prev = lake.log.latest()
         if prev is None:
             return {"files_before": 0, "files_after": 0}
-        files = lake._write_commit(
-            lake._laid_out(lake.snapshot(include_deleted=True)),
-            "compact", prev, [], prev.schema_json,
-        )
+        if holds_bootstrap(prev.files):
+            files = lake._write_commit(
+                lake._laid_out(lake.snapshot(include_deleted=True)),
+                "compact", prev, [], prev.schema_json,
+            )
+        else:
+            files = lake._rewrite_units(
+                prev, prev.files, prev.schema_json, "compact"
+            )
         return {"files_before": len(prev.files), "files_after": len(files)}
 
     return lake._with_commit_retries(attempt)
@@ -52,15 +64,18 @@ def compact_buckets(
     rest of the table untouched through the new commit. This is the
     inline-compaction unit of work — cost proportional to the compacted
     buckets, not the table (the Hudi file-group analogue of the
-    reference's inline compaction service, pom.xml:43-58). Commit-race
-    safe: a lost publish retries against the fresh timeline.
+    reference's inline compaction service, pom.xml:43-58): a merge with
+    no batch rows, under the merge's placement
+    (``LakeTable._rewrite_units``). Commit-race safe: a lost publish
+    retries against the fresh timeline.
 
-    On partitioned tables pass ``units`` — a set of (partition, bucket)
-    pairs — to scope the rewrite to exactly those units: compacting
-    bucket 3 of one hot day must not rewrite bucket 3 of every other
-    day (at 1000 partitions that is 1000x the write amplification).
-    ``buckets`` is then ignored for file selection and only used for
-    the return count."""
+    Pass ``units`` — a set of (partition, bucket) pairs, partition None
+    on an unpartitioned table — to scope the rewrite to exactly those
+    units: compacting bucket 3 of one hot day must not rewrite bucket 3
+    of every other day (at 1000 partitions that is 1000x the write
+    amplification). ``buckets`` is then ignored for file selection and
+    only used for the return count. Bootstrap files (bucket -1) cannot
+    be compacted by unit; ``compact()`` converts them."""
 
     def attempt() -> dict:
         prev = lake.log.latest()
@@ -72,21 +87,16 @@ def compact_buckets(
             hit = [
                 f for f in prev.files if (f.partition, f.bucket) in units
             ]
-            carry = [
-                f for f in prev.files if (f.partition, f.bucket) not in units
-            ]
         else:
             hit = [f for f in prev.files if f.bucket in buckets]
-            carry = [f for f in prev.files if f.bucket not in buckets]
-        n_units = len(units) if units is not None else len(buckets)
-        files = lake._compact_on_driver(prev, hit, carry)
-        if files is None:
-            df = lake._read_resolved(hit, include_deleted=True)
-            files = lake._write_commit(
-                lake._laid_out(df), "compact", prev, carry, prev.schema_json,
+        if holds_bootstrap(hit):
+            raise ValueError(
+                f"table at {lake.path}: bootstrap files cannot be "
+                "compacted by bucket; use compact()"
             )
+        files = lake._rewrite_units(prev, hit, prev.schema_json, "compact")
         return {
-            "buckets_compacted": n_units,
+            "buckets_compacted": len(units if units is not None else buckets),
             "files_before": len(hit),
             "files_after": len(files),
         }
@@ -154,9 +164,7 @@ def maybe_compact(
         due |= {u for u, n in small_n.items() if n >= 2}
     if not due:
         return {"buckets_compacted": 0, "files_before": 0, "files_after": 0}
-    if lake.partition_fields:
-        return compact_buckets(lake, {b for _, b in due}, units=due)
-    return compact_buckets(lake, {b for _, b in due})
+    return compact_buckets(lake, {b for _, b in due}, units=due)
 
 
 # types rewrite_column_type can target: primitives whose parquet
@@ -355,77 +363,20 @@ def vacuum(
         except OSError:
             return False
 
-    if dry_run:
-        files_n = bytes_n = 0
-        data_root = lake.log.data_dir()
-        if os.path.isdir(data_root):
-            for dirpath, _dirnames, filenames in os.walk(data_root):
-                for fn in filenames:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    absf = os.path.join(dirpath, fn)
-                    rel = os.path.relpath(absf, lake.path)
-                    if reclaimable(rel, absf):
-                        files_n += 1
-                        try:
-                            bytes_n += os.path.getsize(absf)
-                        except OSError:
-                            pass
-        keep_segments = set()
-        for v in retained:
-            keep_segments.update((lake.log.read(v).segments or {}).values())
-        dropped_segments = set()
-        for v in dropped:
-            dropped_segments.update(
-                (lake.log.read(v).segments or {}).values()
-            )
-        dropped_segments -= keep_segments
-        segs_n = 0
-        if os.path.isdir(lake.log.segments_path):
-            for fn in os.listdir(lake.log.segments_path):
-                rel = os.path.join(lake.log.SEGMENTS_DIR, fn)
-                absf = os.path.join(lake.log.segments_path, fn)
-                if rel in keep_segments:
-                    continue
-                if (
-                    rel not in dropped_segments
-                    and os.path.getmtime(absf) >= cutoff
-                ):
-                    continue
-                segs_n += 1
-        return {
-            "dry_run": True,
-            "versions_droppable": len(dropped),
-            "files_reclaimable": files_n,
-            "bytes_reclaimable": bytes_n,
-            "segments_reclaimable": segs_n,
-            "pinned_versions": sorted(pinned | late_pins),
-        }
-
-    removed = 0
     data_root = lake.log.data_dir()
-    if os.path.isdir(data_root):
+
+    def reclaimable_data():
         for dirpath, _dirnames, filenames in os.walk(data_root):
             for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
                 absf = os.path.join(dirpath, fn)
-                rel = os.path.relpath(absf, lake.path)
-                if reclaimable(rel, absf):
-                    os.unlink(absf)
-                    removed += 1
-                    # Hadoop local-FS checksum sidecar of the deleted file
-                    crc = os.path.join(dirpath, f".{fn}.crc")
-                    if os.path.exists(crc):
-                        os.unlink(crc)
+                if fn.endswith(".parquet") and reclaimable(
+                    os.path.relpath(absf, lake.path), absf
+                ):
+                    yield absf
+
     # segment manifests referenced by any retained commit survive;
     # referenced-by-dropped-only go now; never-referenced wait out the
-    # grace window (same in-flight ambiguity as data files).
-    # ORDER MATTERS: dropped commit JSONs must go FIRST — a crash after
-    # deleting a segment but before its referencing commit would leave a
-    # commit that every timeline read (has_batch included) fails to
-    # resolve, bricking writes; a crash after dropping commits merely
-    # leaves orphan segments for the next vacuum to reclaim.
+    # grace window (same in-flight ambiguity as data files)
     keep_segments = set()
     for v in retained:
         keep_segments.update((lake.log.read(v).segments or {}).values())
@@ -433,10 +384,10 @@ def vacuum(
     for v in dropped:
         dropped_segments.update((lake.log.read(v).segments or {}).values())
     dropped_segments -= keep_segments
-    for v in dropped:
-        os.unlink(lake.log._commit_file(v))
-    segments_removed = 0
-    if os.path.isdir(lake.log.segments_path):
+
+    def reclaimable_segments():
+        if not os.path.isdir(lake.log.segments_path):
+            return
         for fn in os.listdir(lake.log.segments_path):
             rel = os.path.join(lake.log.SEGMENTS_DIR, fn)
             absf = os.path.join(lake.log.segments_path, fn)
@@ -444,8 +395,45 @@ def vacuum(
                 continue
             if rel not in dropped_segments and os.path.getmtime(absf) >= cutoff:
                 continue
-            os.unlink(absf)
-            segments_removed += 1
+            yield absf
+
+    if dry_run:
+        files = list(reclaimable_data())
+        bytes_n = 0
+        for absf in files:
+            try:
+                bytes_n += os.path.getsize(absf)
+            except OSError:
+                pass
+        return {
+            "dry_run": True,
+            "versions_droppable": len(dropped),
+            "files_reclaimable": len(files),
+            "bytes_reclaimable": bytes_n,
+            "segments_reclaimable": sum(1 for _ in reclaimable_segments()),
+            "pinned_versions": sorted(pinned | late_pins),
+        }
+
+    removed = 0
+    for absf in reclaimable_data():
+        os.unlink(absf)
+        removed += 1
+        # Hadoop local-FS checksum sidecar of the deleted file
+        dirpath, fn = os.path.split(absf)
+        crc = os.path.join(dirpath, f".{fn}.crc")
+        if os.path.exists(crc):
+            os.unlink(crc)
+    # ORDER MATTERS: dropped commit JSONs must go before their segments —
+    # a crash after deleting a segment but before its referencing commit
+    # would leave a commit that every timeline read (has_batch included)
+    # fails to resolve, bricking writes; a crash after dropping commits
+    # merely leaves orphan segments for the next vacuum to reclaim.
+    for v in dropped:
+        os.unlink(lake.log._commit_file(v))
+    segments_removed = 0
+    for absf in reclaimable_segments():
+        os.unlink(absf)
+        segments_removed += 1
     lake.log.invalidate()  # out-of-band timeline edit
     # prune dirs that no longer hold any data file: drop leftover markers
     # (_SUCCESS + .crc sidecars) first, then the dir itself
@@ -495,6 +483,10 @@ def fsck(lake: LakeTable, grace_seconds: float = 600.0) -> dict:
       time: truncated or replaced behind the table's back. ``ok`` is
       False when there is one; entries without ``bytes`` (pre-size
       manifests) are skipped.
+    * **row_mismatch** — a LATEST-version file whose Parquet footer
+      row count (footer only, no data read) differs from the manifest
+      entry's ``rows``, or whose footer cannot be read. ``ok`` is False
+      when there is one; entries without ``rows`` are skipped.
 
     Segment manifests get the same referenced-set check (missing
     segment = bricked timeline read). Bootstrap/clone entries that
@@ -518,11 +510,12 @@ def fsck(lake: LakeTable, grace_seconds: float = 600.0) -> dict:
         for rel in (c.segments or {}).values():
             seg_versions.setdefault(rel, []).append(v)
     referenced = set(ref_versions)
-    latest_bytes = {f.path: f.bytes for f in lake.log.live_files()}
+    latest = {f.path: f for f in lake.log.live_files()}
     missing_latest: list[str] = []
     missing_history: list[str] = []
     missing_segments: list[str] = []
     size_mismatch: list[str] = []
+    row_mismatch: list[str] = []
     for path, vs in ref_versions.items():
         try:
             size = os.path.getsize(lake.log.abs_path(path))
@@ -533,9 +526,18 @@ def fsck(lake: LakeTable, grace_seconds: float = 600.0) -> dict:
                 f"{path}@v{v}" for v in vs if v != latest_v
             )
             continue
-        want = latest_bytes.get(path)
-        if want is not None and size != want:
-            size_mismatch.append(f"{path}: {size} bytes, manifest {want}")
+        f = latest.get(path)
+        if f is None:
+            continue
+        if f.bytes is not None and size != f.bytes:
+            size_mismatch.append(f"{path}: {size} bytes, manifest {f.bytes}")
+        if f.rows is not None:
+            try:
+                rows = pq.read_metadata(lake.log.abs_path(path)).num_rows
+            except (OSError, ValueError) as ex:
+                rows = f"unreadable footer ({ex})"
+            if rows != f.rows:
+                row_mismatch.append(f"{path}: {rows} rows, manifest {f.rows}")
     for rel, vs in seg_versions.items():
         if not os.path.exists(os.path.join(lake.path, rel)):
             missing_segments.extend(f"{rel}@v{v}" for v in vs)
@@ -566,9 +568,10 @@ def fsck(lake: LakeTable, grace_seconds: float = 600.0) -> dict:
     missing_history = sorted(set(missing_history))
     return {
         "ok": not missing_latest and not missing_segments
-        and not size_mismatch,
+        and not size_mismatch and not row_mismatch,
         "missing_latest": sorted(missing_latest),
         "size_mismatch": sorted(size_mismatch),
+        "row_mismatch": sorted(row_mismatch),
         "missing_history": missing_history,
         "missing_segments": sorted(set(missing_segments)),
         "orphan_files": sorted(orphans),

@@ -1486,13 +1486,19 @@ class JoinView:
         """Advance the dim watermark with NO data change: one
         metadata-only commit declaring the mvj- id (what watermark()
         parses) and one declaring its mvjgc- id (so _pending_gc owes
-        nothing). Both re-cite the live set byte-for-byte."""
+        nothing). Both re-cite the live set byte-for-byte, published
+        against the version it was read at (a concurrent commit is
+        re-read, never dropped)."""
+        t = self.table
         for prefix in (_J_BATCH_PREFIX, _J_GC_PREFIX):
-            self.table.log.commit(
-                "mv_watermark",
-                self.table.log.live_files(),
-                batch_id=f"{prefix}{fv0}-{fv0}-{dv0}-{dv1}",
-            )
+            bid = f"{prefix}{fv0}-{fv0}-{dv0}-{dv1}"
+
+            def attempt(bid=bid):
+                prev = t.log.latest()
+                t._publish("mv_watermark", prev.files if prev else [],
+                           prev, batch_id=bid)
+
+            t._with_commit_retries(attempt)
 
     # -- reads ---------------------------------------------------------------
 

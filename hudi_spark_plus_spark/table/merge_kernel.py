@@ -7,7 +7,7 @@ and its bucket across ALL partitions on a global-index table. So a
 merge never has to move stored rows between machines: it resolves each
 unit the batch touches against that unit's live files alone, in one
 pass, wherever the unit's batch rows are (the driver for a small batch,
-a ``mapInArrow`` task otherwise — ``LakeTable._merge_once`` picks).
+a ``mapInArrow`` task otherwise — ``LakeTable._rewrite_units`` picks).
 
 ``merge_unit`` is the kernel. For one unit it
 
@@ -22,9 +22,10 @@ a ``mapInArrow`` task otherwise — ``LakeTable._merge_once`` picks).
 Merge-on-read appends the conformed batch rows as delta rows and reads
 nothing, except on a global-index table, where ``relocate`` drops batch
 losers and tombstones each moved record's old-partition copy. The
-``lake-table`` format writer runs the same ``relocate``. Compaction of
-small units runs ``compact_unit``: the same read and resolve with no
-batch.
+``lake-table`` format writer runs the same ``relocate``. Compaction is
+the merge of a unit with no batch rows: every file of the unit is read,
+resolved and consumed, tombstones kept, each row under its own commit
+version.
 
 The module also owns the two Arrow helpers every worker-side reader
 shares: ``project_logical`` (physical file -> logical columns, with the
@@ -252,9 +253,17 @@ def merge_unit(table_path, files, batch, fields, next_ver, mor, global_index):
     ``rows`` carries ``PARTITION_COL`` on a partitioned table, each row
     in its own partition. Batch rows carry the newest commit version, so
     a batch row beats its stored copy iff its ``_ts`` is not older (a
-    null ``_ts`` is older than any other)."""
+    null ``_ts`` is older than any other).
+
+    ``batch`` None compacts the unit: every file is read and consumed
+    (no Bloom skip), tombstones are kept and each row keeps its own
+    commit version."""
     import pyarrow as pa
 
+    if batch is None:
+        partitioned = files[0].partition is not None
+        stored = read_unit_files(table_path, files, fields, partitioned)
+        return resolve_latest_arrow(stored), [f.path for f in files]
     partitioned = PARTITION_COL in batch.column_names
     if mor:
         # delta rows in key order, as a resolved unit's are: the file a
@@ -284,11 +293,3 @@ def merge_unit(table_path, files, batch, fields, next_ver, mor, global_index):
     rows = pa.concat_tables([stored, batch])
     return resolve_latest_arrow(rows), [f.path for f in read]
 
-
-def compact_unit(table_path, files, fields, partitioned):
-    """Rewrite one unit's live rows (``files`` non-empty): each key's
-    latest row by the one LWW rule, tombstones kept (they must survive
-    until vacuumed with their semantics intact)."""
-    return resolve_latest_arrow(
-        read_unit_files(table_path, files, fields, partitioned)
-    )

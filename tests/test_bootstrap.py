@@ -22,8 +22,6 @@ from hudi_spark_plus_spark.table.bootstrap import BOOTSTRAP_KIND
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 from hudi_spark_plus_spark.table.maintenance import compact, vacuum
 
-pytestmark = pytest.mark.slow  # full-tier suite (see pytest.ini)
-
 
 def _source(spark, tmp_path, n=300, files=3):
     """Three fixed-content files (ids 0-99 / 100-199 / 200-299): the

@@ -61,6 +61,22 @@ class TestFsck:
         assert len(r["size_mismatch"]) == 1
         assert str(size // 2) in r["size_mismatch"][0]
 
+    def test_fewer_rows_latest_file_flags_not_ok(self, spark, table):
+        """A live file replaced by one holding fewer rows: its footer row
+        count no longer matches the manifest's ``rows``."""
+        import pyarrow.parquet as pq
+
+        path = _a_live_file(table)
+        rows = pq.read_table(path)
+        assert rows.num_rows > 1
+        pq.write_table(rows.slice(1), path)
+        r = fsck(table)
+        assert r["ok"] is False
+        assert len(r["row_mismatch"]) == 1
+        assert r["row_mismatch"][0].startswith(
+            os.path.relpath(path, table.path)
+        )
+
     def test_history_only_miss_keeps_ok(self, spark, table):
         """A file only OLD versions reference (rewritten by b2) going
         missing breaks time travel, not the live table."""

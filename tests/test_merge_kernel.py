@@ -1,9 +1,10 @@
 """The per-unit merge kernel (``table/merge_kernel.py``) and its two
 placements: one LWW rule for both merge modes, null ``_ts`` included;
-the driver and task placements write the same files, and so do the
-driver and Spark rewrites of a compaction; a small warm merge stays
-within its Spark-job budget; the format reader back-fills every column
-type a merge can add.
+the driver and task placements write the same files, for merges and
+for compactions (a merge with no batch rows); a compaction leaves the
+Spark reads unchanged; a small warm merge and a compaction stay within
+their Spark-job budgets; the format reader back-fills every column type
+a merge can add.
 """
 
 import datetime as dt
@@ -206,9 +207,9 @@ def test_compaction_on_driver_matches_spark_rewrite(
 ):
     """``maybe_compact`` rewrites small due units on the driver through
     the kernel; with the advisory size forced below every unit the same
-    units are rewritten in Spark. Both leave equal snapshots
-    (tombstones included) and equal manifests (paths and bytes
-    masked)."""
+    units are rewritten in one ``mapInArrow`` job. Both leave equal
+    snapshots (tombstones included) and equal manifests (paths and
+    bytes masked)."""
     from hudi_spark_plus_spark.table.maintenance import maybe_compact
 
     batches = _batches(spark)
@@ -232,3 +233,93 @@ def test_compaction_on_driver_matches_spark_rewrite(
     assert on_driver[0]["buckets_compacted"] > 0
     monkeypatch.setattr(LakeTable, "_advisory_bytes", lambda self: -1)
     assert run("spark") == on_driver
+
+
+def _reads(t):
+    """``snapshot(include_deleted=True)`` and ``incremental(0)`` as
+    sorted row tuples, columns by name — the Spark read path."""
+    def rows(df):
+        cols = ["_key"] + sorted(c for c in df.columns if c != "_key")
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    return rows(t.snapshot(include_deleted=True)), rows(t.incremental(0))
+
+
+COMPACT_SHAPES = {
+    "unpartitioned": {},
+    "partitioned": dict(partition_fields=["d"]),
+    "global": dict(partition_fields=["d"], global_index=True),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(COMPACT_SHAPES))
+def test_compact_leaves_spark_reads_unchanged(
+    spark, tmp_path, monkeypatch, shape
+):
+    """``compact()`` of a merge-on-read table (deletes, partition
+    moves, a schema-evolving delta) rewrites every unit through the
+    kernel, on the driver and — with the advisory size forced below
+    every unit — in tasks. Each leaves the snapshot (tombstones
+    included) and ``incremental(0)`` row-for-row equal to the Spark
+    reads of the deltas before it, with no delta file live; the two
+    placements write equal manifests (paths and bytes masked)."""
+    from hudi_spark_plus_spark.table.maintenance import compact
+
+    batches = _batches(spark)
+
+    def run(name):
+        t = LakeTable(spark, str(tmp_path / name), buckets=4,
+                      **COMPACT_SHAPES[shape])
+        for i, b in enumerate(batches):
+            t.merge(b, f"b{i}", mode="cow" if i == 0 else "mor")
+        before = _reads(t)
+        stats = compact(t)
+        live = t.log.live_files()
+        assert stats["files_after"] == len(live) < stats["files_before"]
+        assert not any(f.kind == "delta" for f in live)
+        assert _reads(t) == before
+        return sorted(
+            (f.partition, f.bucket, f.kind, f.rows, f.live_rows, f.min_key,
+             f.max_key, f.bloom, sorted((f.col_stats or {}).items()))
+            for f in live
+        )
+
+    on_driver = run("driver")
+    monkeypatch.setattr(LakeTable, "_advisory_bytes", lambda self: -1)
+    assert run("tasks") == on_driver
+
+
+def test_compact_job_counts(spark, tmp_path, monkeypatch):
+    """``compact()`` of a small 16-bucket table runs no Spark job; with
+    the advisory size below its units it runs exactly one (the
+    ``mapInArrow`` rewrite)."""
+    from hudi_spark_plus_spark.table.maintenance import compact
+
+    t = LakeTable(spark, str(tmp_path / "t"), buckets=16)
+
+    def batch(n, ts):
+        return spark.range(n).select(
+            F.concat(F.lit("k"), F.col("id").cast("string")).alias("_key"),
+            F.lit(ts).cast("long").alias("_ts"),
+            F.lit("upsert").alias("_op"),
+            F.col("id").cast("string").alias("val"),
+        )
+
+    sc = spark.sparkContext
+
+    def jobs_of_compact(group):
+        sc.setJobGroup(group, "compact()")
+        try:
+            compact(t)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    t.merge(batch(2000, 1), "b0")
+    t.merge(batch(500, 2), "b1", mode="mor")
+    assert len(jobs_of_compact("compact-driver")) == 0
+    t.merge(batch(500, 3), "b2", mode="mor")
+    monkeypatch.setattr(LakeTable, "_advisory_bytes", lambda self: -1)
+    assert len(jobs_of_compact("compact-tasks")) == 1
+    assert len(t.log.live_files()) == 16
+    assert t.snapshot().where(F.col("_ts") == 3).count() == 500
