@@ -66,17 +66,22 @@ plan with Spark-side filter evaluation (correct, just unpruned).
 
 Execution model: offset/version resolution and file planning run on the
 DRIVER as plain commit-log reads (no Spark jobs); ``read()`` runs in
-Python workers over pyarrow. COW / read-optimized reads plan one
-``InputPartition`` per data file. When merge-on-read deltas are live,
-the unit of planning becomes the FILE GROUP — (partition, bucket), or
-bucket alone on global-index tables — and the worker resolves
-latest-per-key inside the group (sort + group-take-first, the same
-(_ts desc, _commit_ver desc, live-beats-tombstone) rule as
-``LakeTable._resolve_latest``): buckets are hash(key)-assigned, so a
-record's every copy lives in one group by construction and resolution
-never needs a shuffle. Column mapping is honored — files store PHYSICAL
-names, the scan yields the logical schema, renames/widenings applied
-and pre-evolution files back-filled with nulls.
+Python workers over pyarrow. The file plan is the one every reader
+shares (table/merge_kernel.py: ``incremental_plan``, ``cdc_plan``,
+``unit_of``), with this reader's pushed-filter pruning on top, and the
+worker read is ``read_slice`` (``load_logical`` -> resolve ->
+``in_version_range``), which the stream reader uses too. COW /
+read-optimized reads plan one ``InputPartition`` per data file. When
+merge-on-read deltas are live, the unit of planning becomes the
+resolution unit's FILE GROUP — (partition, bucket), or bucket alone on
+global-index tables — and the worker resolves latest-per-key inside the
+group (``resolve_latest_arrow``, the same (_ts desc, _commit_ver desc,
+live-beats-tombstone) rule as ``LakeTable._resolve_latest``): buckets
+are hash(key)-assigned, so a record's every copy lives in one group by
+construction and resolution never needs a shuffle. Column mapping is
+honored — files store PHYSICAL names, the scan yields the logical
+schema, renames/widenings applied and pre-evolution files back-filled
+with nulls.
 """
 
 from __future__ import annotations
@@ -99,9 +104,17 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from hudi_spark_plus_spark.table.merge_kernel import (
+    NON_SECONDARY_KINDS,
     active_fields,
-    project_logical,
+    bloom_hits,
+    cdc_plan,
+    in_version_range,
+    incremental_plan,
+    load_logical,
+    open_latest_manifest,
     resolve_latest_arrow,
+    unit_groups,
+    unit_of,
 )
 
 PATH_OPT = "path"
@@ -209,34 +222,76 @@ _STATS_SAFE = (int, float, str)
 
 
 class _Slice(InputPartition):
-    """One planned scan unit: a single file (no resolution) or a whole
-    file group (worker-side latest-per-key resolution). ``boot`` names
-    the subset of ``paths`` that are metadata-only bootstrap files —
-    the worker synthesizes their engine meta columns from the table's
-    persisted bootstrap spec (table/bootstrap.py)."""
+    """One planned scan unit of the batch and stream readers: a single
+    file (no resolution) or a whole file group (worker-side latest-per-
+    key resolution). ``boot`` names the subset of ``paths`` that are
+    metadata-only bootstrap files — the worker synthesizes their engine
+    meta columns from the table's persisted bootstrap spec
+    (table/bootstrap.py). An incremental slice keeps only the rows whose
+    commit version is in (``begin``, ``end``]."""
 
-    def __init__(self, paths: list[str], resolve: bool, boot=()):
+    def __init__(self, paths: list[str], resolve: bool, boot=(),
+                 begin: int | None = None, end: int | None = None):
         self.paths = paths
         self.resolve = resolve
         self.boot = frozenset(boot)
+        self.begin = begin
+        self.end = end
+
+
+def plan_slices(files, groups, begin=None, end=None) -> list[_Slice]:
+    """The slices of a plan: one per group of ``groups`` (``{unit:
+    files}``, resolved in the worker) or, when it is None, one per file
+    of ``files``."""
+    if groups is not None:
+        return [
+            _Slice([f.path for f in grp], True,
+                   [f.path for f in grp if f.kind == "bootstrap"],
+                   begin, end)
+            for grp in groups.values()
+        ]
+    return [
+        _Slice([f.path], False,
+               [f.path] if f.kind == "bootstrap" else (), begin, end)
+        for f in files
+    ]
+
+
+def read_slice(s: _Slice, table_path: str, fields, bootstrap_spec):
+    """The one worker-side read of a slice: each file on the logical
+    ``fields``, a group resolved latest-per-key, then the slice's
+    version range."""
+    import pyarrow as pa
+
+    parts = [
+        load_logical(table_path, rel, fields,
+                     bootstrap_spec if rel in s.boot else None)
+        for rel in s.paths
+    ]
+    t = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
+    if s.resolve:
+        t = resolve_latest_arrow(t)
+    if s.begin is not None:
+        t = t.filter(in_version_range(t, s.begin, s.end))
+    return t
 
 
 class _CdcSlice(InputPartition):
     """One CDC scan unit: a changed file group's live files at the END
     version (after-image side) and at the BEGIN version (before-image
     side — empty when begin <= 0: everything classifies as insert).
-    ``boot_candidates`` are begin-version bootstrap files the range
-    CONSUMED (converted) — a changed record's before image may sit in
-    one (they are not bucket-attributable), so the worker probes each
-    candidate's key Bloom with its own changed keys and reads only the
-    hits: per-slice relevance is exact up to Bloom false positives."""
+    ``boot_candidates`` are the manifest entries of the begin-version
+    bootstrap files the range CONSUMED (converted) — a changed record's
+    before image may sit in one (they are not bucket-attributable), so
+    the worker probes each candidate's key range and Bloom with its own
+    changed keys and reads only the hits: per-slice relevance is exact
+    up to Bloom false positives."""
 
     def __init__(self, after_paths: list[str], before_paths: list[str],
                  boot=(), boot_candidates=()):
         self.after_paths = after_paths
         self.before_paths = before_paths
         self.boot = frozenset(boot)
-        # [(path, bloom_b64, min_key, max_key)]
         self.boot_candidates = list(boot_candidates)
 
 
@@ -521,21 +576,7 @@ class LakeBatchReader(DataSourceReader):
             keys = {k for k in keys if f.min_key <= k <= f.max_key}
             if not keys:
                 return True
-        if f.bloom:
-            from hudi_spark_plus_spark.table.bloom import (
-                KeyBloom,
-                hash_key,
-                pairs_array,
-            )
-
-            # hash each pushed key once across every probed file
-            cache = self.__dict__.setdefault("_key_pair_cache", {})
-            pairs = pairs_array(
-                [cache.setdefault(k, hash_key(k)) for k in keys]
-            )
-            if not KeyBloom.from_b64(f.bloom).might_contain_any(pairs):
-                return True
-        return False
+        return not bloom_hits([f], keys)
 
     def _stats_prunes(self, f) -> bool:
         """True when the file's manifest col_stats prove NO row can
@@ -582,32 +623,18 @@ class LakeBatchReader(DataSourceReader):
         PATH-keyed and a file's content never changes, so an index
         entry is valid for any version that references the file —
         time-travel and incremental plans prune safely with it."""
-        import json as _json
-
         if self._sec_idx is not None:
             return self._sec_idx
         self._sec_idx = {}
         for col, preds in self._val_preds.items():
             if not any(op == "in" for op, _ in preds):
                 continue
-            d = os.path.join(self.table_path, "_index", col)
-            if not os.path.isdir(d):
-                continue
-            ns = [
-                fn
-                for fn in os.listdir(d)
-                if fn.startswith("index-") and fn.endswith(".json")
-            ]
-            if not ns:
-                continue
             try:
-                with open(os.path.join(d, sorted(ns)[-1])) as fh:
-                    manifest = _json.load(fh)
+                manifest = open_latest_manifest(self.table_path, col)
             except (OSError, ValueError):
                 continue  # unreadable sidecar: prune nothing
-            if manifest.get("kind") == "functional":
-                continue
-            self._sec_idx[col] = manifest.get("entries", {})
+            if manifest and manifest.get("kind") not in NON_SECONDARY_KINDS:
+                self._sec_idx[col] = manifest.get("entries", {})
         return self._sec_idx
 
     def _index_prunes(self, f) -> bool:
@@ -656,43 +683,36 @@ class LakeBatchReader(DataSourceReader):
     def _value_prunes(self, f) -> bool:
         return self._stats_prunes(f) or self._index_prunes(f)
 
-    def _stats_keep_units(self, grouped: dict) -> list:
+    def _stats_keep_units(self, groups: dict) -> dict:
         """Unit-granular data skipping for merge-on-read plans: a
         resolution unit is droppable only when EVERY file in it proves
         disjoint — per-file pruning inside a unit could delete the
         delta that supersedes an in-range base row and resurrect it."""
-        return [
-            grp
-            for grp in grouped.values()
+        return {
+            u: grp
+            for u, grp in groups.items()
             if not all(self._value_prunes(f) for f in grp)
-        ]
+        }
 
     def _plan_files(self):
-        """(files to scan, resolution units or None). Mirrors
-        ``LakeTable.snapshot`` / ``.incremental`` planning exactly,
-        with pushed-filter pruning applied where each of those applies
-        ``partitions=`` pruning, plus col_stats value skipping (file-
-        granular on copy-on-write plans, unit-granular on merge-on-read
-        — the same conservatism as ``LakeTable.scan_range``)."""
+        """(files to scan, ``{unit: files}`` or None): the shared plan —
+        ``merge_kernel.incremental_plan``, or the live set at the version
+        grouped by ``unit_of`` when deltas are live — with pushed-filter
+        pruning on top: partition pruning of the changed or live files,
+        key pruning of single files, and col_stats / secondary-index
+        value skipping (file-granular on copy-on-write plans, unit-
+        granular on merge-on-read — the same conservatism as
+        ``LakeTable.scan_range``)."""
         if self.mode == "incremental":
-            live = self.log.live_files(self.end)
-            changed = {
-                f.path for f in self.log.changed_files(self.begin, self.end)
-            }
-            files = [f for f in live if f.path in changed]
+            files, groups = incremental_plan(
+                self.log, self.begin, self.end, self.global_index
+            )
             files = [f for f in files if not self._partition_prunes(f)]
-            if any(f.kind == "delta" for f in live):
-                # stale in-range delta rows may have LOST last-write-wins
-                # to rows outside the range: resolve whole file groups
-                # first, range-filter after (LakeTable.incremental's MOR
-                # rule). Key pruning would not be wrong here, but groups
-                # are the unit — partition pruning already bounds them.
-                units = {self._unit_of(f) for f in files}
-                grouped: dict = {}
-                for f in live:
-                    if self._unit_of(f) in units:
-                        grouped.setdefault(self._unit_of(f), []).append(f)
-                return None, self._stats_keep_units(grouped)
+            if groups is not None:
+                units = {unit_of(f, self.global_index) for f in files}
+                return None, self._stats_keep_units(
+                    {u: g for u, g in groups.items() if u in units}
+                )
             return [
                 f
                 for f in files
@@ -707,64 +727,35 @@ class LakeBatchReader(DataSourceReader):
             if not self._partition_prunes(f) and not self._key_prunes(f)
         ]
         if self.mode == "snapshot" and any(f.kind == "delta" for f in files):
-            grouped = {}
-            for f in files:
-                grouped.setdefault(self._unit_of(f), []).append(f)
-            return None, self._stats_keep_units(grouped)
+            return None, self._stats_keep_units(
+                unit_groups(files, self.global_index)
+            )
         return [f for f in files if not self._value_prunes(f)], None
 
-    def _unit_of(self, f) -> tuple:
-        # global-index identity is _key alone; bucket is hash(key)-
-        # derived, so one bucket holds every copy of its keys across
-        # partitions. Non-global identity is (partition, key).
-        return (f.bucket,) if self.global_index else (f.partition, f.bucket)
-
     def _plan_cdc(self):
-        """CDC plan: the changed file GROUPS at the end version, each
-        paired with the same group's live files at the begin version.
-        Partition pruning applies to the changed set (before-files
-        follow their group). Bounded by the range's touched units,
-        never table size — the same structural bound as
-        ``LakeTable.incremental_cdc``."""
-        live_end = self.log.live_files(self.end)
-        changed = {
-            f.path for f in self.log.changed_files(self.begin, self.end)
+        """CDC plan: ``merge_kernel.cdc_plan``'s changed units, less the
+        units whose changed files all fall to partition pruning (their
+        before files follow them). Bounded by the range's touched units,
+        never table size."""
+        files, units, consumed = cdc_plan(
+            self.log, self.begin, self.end, self.global_index
+        )
+        keep = {
+            unit_of(f, self.global_index)
+            for f in files
+            if not self._partition_prunes(f)
         }
-        cfiles = [
-            f
-            for f in live_end
-            if f.path in changed and not self._partition_prunes(f)
-        ]
-        units = {self._unit_of(f) for f in cfiles}
-        after: dict = {u: [] for u in units}
-        for f in live_end:
-            if self._unit_of(f) in units:
-                after[self._unit_of(f)].append(f)
-        before: dict = {u: [] for u in units}
-        boot_candidates: list = []
-        if self.begin > 0:
-            end_paths = {f.path for f in live_end}
-            for f in self.log.live_files(self.begin):
-                if self._unit_of(f) in before:
-                    before[self._unit_of(f)].append(f)
-                elif f.kind == "bootstrap" and f.path not in end_paths:
-                    # consumed (converted) in-range: may hold a changed
-                    # record's before image; the worker Bloom-probes it
-                    boot_candidates.append(
-                        (f.path, f.bloom, f.min_key, f.max_key)
-                    )
         return [
             _CdcSlice(
-                [f.path for f in after[u]],
-                [f.path for f in before[u]],
+                [f.path for f in after],
+                [f.path for f in before],
                 boot=[
-                    f.path
-                    for f in after[u] + before[u]
-                    if f.kind == "bootstrap"
+                    f.path for f in after + before if f.kind == "bootstrap"
                 ],
-                boot_candidates=boot_candidates,
+                boot_candidates=consumed,
             )
-            for u in sorted(units, key=str)
+            for u, (after, before) in units.items()
+            if u in keep
         ]
 
     def partitions(self):
@@ -776,47 +767,16 @@ class LakeBatchReader(DataSourceReader):
         try:
             if self.mode == "cdc":
                 return self._plan_cdc()
-            files, units = self._plan_files()
-            if units is not None:
-                return [
-                    _Slice(
-                        [f.path for f in grp],
-                        resolve=True,
-                        boot=[
-                            f.path for f in grp if f.kind == "bootstrap"
-                        ],
-                    )
-                    for grp in units
-                ]
-            return [
-                _Slice(
-                    [f.path],
-                    resolve=False,
-                    boot=[f.path] if f.kind == "bootstrap" else (),
-                )
-                for f in files
-            ]
+            files, groups = self._plan_files()
+            return plan_slices(files, groups, self.begin, self.end)
         finally:
             self._reset_prune_state()
 
     # -- scan (worker-side) ---------------------------------------------------
 
-    def _load_logical(self, rel: str, boot):
-        import pyarrow.parquet as pq
-
-        raw = pq.read_table(os.path.join(self.table_path, rel))
-        if rel in boot:
-            from hudi_spark_plus_spark.table.bootstrap import synthesize_arrow
-
-            raw = synthesize_arrow(raw, self.bootstrap_spec)
-        return project_logical(raw, self.fields)
-
-    def _read_unit(self, paths: list[str], resolve: bool, boot=frozenset()):
-        import pyarrow as pa
-
-        parts = [self._load_logical(rel, boot) for rel in paths]
-        t = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-        return resolve_latest_arrow(t) if resolve else t
+    def _read(self, s: _Slice):
+        return read_slice(s, self.table_path, self.fields,
+                          self.bootstrap_spec)
 
     def _read_cdc(self, partition: _CdcSlice):
         """Worker-side CDC of one file group: resolve the group's
@@ -828,18 +788,8 @@ class LakeBatchReader(DataSourceReader):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        t = self._read_unit(
-            partition.after_paths, resolve=True, boot=partition.boot
-        )
-        ver = (
-            pc.fill_null(t[_COMMIT_VER], 0)
-            if _COMMIT_VER in t.column_names
-            else pa.array([0] * t.num_rows, pa.int64())
-        )
-        mask = pc.greater(ver, self.begin)
-        if self.end is not None:
-            mask = pc.and_(mask, pc.less_equal(ver, self.end))
-        t = t.filter(mask)
+        t = self._read(_Slice(partition.after_paths, True, partition.boot,
+                              self.begin, self.end))
         payload = [
             name for name, _, _ in self.fields
             if name not in (_DELETED, _COMMIT_VER)
@@ -850,27 +800,20 @@ class LakeBatchReader(DataSourceReader):
             # probe consumed bootstrap files with THIS slice's changed
             # keys: min/max prefilter, then the manifest key Bloom —
             # only hits are read (false positives cost a file read)
-            from hudi_spark_plus_spark.table.bloom import KeyBloom, hash_pairs
-
             keys = [k for k in t[_KEY].to_pylist() if k is not None]
             lo, hi = (min(keys), max(keys)) if keys else (None, None)
-            hashes = hash_pairs(keys)
-            for path, bloom, mn, mx in partition.boot_candidates:
-                if mn is not None and hi is not None and mn > hi:
-                    continue
-                if mx is not None and lo is not None and mx < lo:
-                    continue
-                if bloom and not KeyBloom.from_b64(bloom).might_contain_any(
-                    hashes
-                ):
-                    continue
-                boot_hits.append(path)
+            cands = [
+                f
+                for f in partition.boot_candidates
+                if (f.min_key is None or hi is None or f.min_key <= hi)
+                and (f.max_key is None or lo is None or f.max_key >= lo)
+            ]
+            boot_hits = [f.path for f in bloom_hits(cands, keys)]
         if partition.before_paths or boot_hits:
-            b = self._read_unit(
-                partition.before_paths + boot_hits,
-                resolve=True,
-                boot=partition.boot | frozenset(boot_hits),
-            )
+            b = self._read(_Slice(
+                partition.before_paths + boot_hits, True,
+                partition.boot | frozenset(boot_hits),
+            ))
             if _DELETED in b.column_names:
                 b = b.filter(
                     pc.invert(pc.fill_null(b[_DELETED], False))
@@ -925,30 +868,12 @@ class LakeBatchReader(DataSourceReader):
         yield from out.to_batches()
 
     def read(self, partition):
-        import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         if isinstance(partition, _CdcSlice):
             yield from self._read_cdc(partition)
             return
-        parts = [
-            self._load_logical(rel, partition.boot)
-            for rel in partition.paths
-        ]
-        t = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-        if partition.resolve:
-            t = resolve_latest_arrow(t)
-        if self.mode == "incremental":
-            ver = (
-                pc.fill_null(t[_COMMIT_VER], 0)
-                if _COMMIT_VER in t.column_names
-                else pa.array([0] * t.num_rows, pa.int64())
-            )
-            mask = pc.greater(ver, self.begin)
-            if self.end is not None:
-                mask = pc.and_(mask, pc.less_equal(ver, self.end))
-            t = t.filter(mask)
+        t = self._read(partition)
         if not self.include_deleted and _DELETED in t.column_names:
             t = t.filter(
                 pc.invert(pc.fill_null(t[_DELETED], False))

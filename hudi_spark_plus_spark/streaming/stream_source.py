@@ -28,14 +28,16 @@ into another ``LakeTable.merge``, which applies exactly that rule.
 Execution model: offset discovery and partition planning run on the
 DRIVER (plain filesystem reads of the commit log — no Spark jobs);
 ``read()`` runs in Python workers — one ``InputPartition`` per
-changed-and-live data file (COW), or per file GROUP when merge-on-read
-deltas are live — scanning with pyarrow and filtering to the version
-range; rows never funnel through the driver. Executors must reach the
-table path (POSIX/NFS here; an object-store deployment swaps in a
-pyarrow filesystem). Column mapping is honored: files store PHYSICAL
-names, the stream yields the table's logical schema (shared helpers in
-sources/lake_reader.py, which also hosts the batch-read side of this
-format).
+changed-and-live data file (COW), or per resolution-unit file GROUP
+when merge-on-read deltas are live — scanning with pyarrow and
+filtering to the version range; rows never funnel through the driver.
+The plan of (start, end] is ``merge_kernel.incremental_plan``, the one
+``LakeTable.incremental`` and the batch reader use, and the slices and
+their worker read (``plan_slices`` / ``read_slice``) are the batch
+reader's (sources/lake_reader.py). Executors must reach the table path
+(POSIX/NFS here; an object-store deployment swaps in a pyarrow
+filesystem). Column mapping is honored: files store PHYSICAL names,
+the stream yields the table's logical schema.
 
 Operational constraint (the same one Hudi documents for its cleaner
 vs incremental readers): vacuum must not reclaim versions the stream
@@ -47,12 +49,17 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSourceStreamReader
 
+from hudi_spark_plus_spark.sources.lake_reader import (
+    _Slice,
+    plan_slices,
+    read_slice,
+    version_at_or_before,
+)
 from hudi_spark_plus_spark.table.merge_kernel import (
     active_fields,
-    project_logical,
-    resolve_latest_arrow,
+    incremental_plan,
 )
 
 START_VERSION_OPT = "engine.stream.start.version"
@@ -74,20 +81,6 @@ MAX_VERSIONS_OPT = "engine.stream.max.versions.per.batch"
 # the JVM's environment frozen at JVM start, so env set by a test
 # after session creation never reaches it; options always flow.
 DEBUG_DIR_OPT = "engine.stream.debug.dir"
-
-_COMMIT_VER = "_commit_ver"
-
-
-class _FileSlice(InputPartition):
-    def __init__(self, paths: list[str], begin: int, end: int, resolve: bool,
-                 boot=()):
-        self.paths = paths
-        self.begin = begin
-        self.end = end
-        self.resolve = resolve
-        # metadata-only bootstrap files in ``paths``: the worker
-        # synthesizes their engine meta columns (table/bootstrap.py)
-        self.boot = frozenset(boot)
 
 
 class LakeStreamReader(DataSourceStreamReader):
@@ -122,10 +115,6 @@ class LakeStreamReader(DataSourceStreamReader):
                     f"no savepoint {sp!r} on table at {path}"
                 ) from None
         elif START_TS_OPT in options:
-            from hudi_spark_plus_spark.sources.lake_reader import (
-                version_at_or_before,
-            )
-
             self.start_version = version_at_or_before(
                 self.log, int(options.get(START_TS_OPT))
             )
@@ -290,41 +279,8 @@ class LakeStreamReader(DataSourceStreamReader):
         lo = max(b, self._regress_floor)
         if e <= lo:
             return []
-        live = self.log.live_files(e)
-        changed = {f.path for f in self.log.changed_files(lo, e)}
-        files = [f for f in live if f.path in changed]
-        if any(f.kind == "delta" for f in live):
-            # merge-on-read: a stale in-range delta row may have lost
-            # last-write-wins to a row in ANOTHER file (inside or outside
-            # the range). Plan whole file groups and resolve in the
-            # worker before range-filtering — LakeTable.incremental's
-            # MOR rule. Group = resolution unit by construction (bucket
-            # is hash(key)-derived; partition-scoped unless the table
-            # uses a global index).
-            def unit(f):
-                return (f.bucket,) if self.global_index else (
-                    f.partition, f.bucket,
-                )
-
-            units = {unit(f) for f in files}
-            grouped: dict = {}
-            for f in live:
-                if unit(f) in units:
-                    grouped.setdefault(unit(f), []).append(f)
-            return [
-                _FileSlice(
-                    [f.path for f in grp], lo, e, resolve=True,
-                    boot=[f.path for f in grp if f.kind == "bootstrap"],
-                )
-                for grp in grouped.values()
-            ]
-        return [
-            _FileSlice(
-                [f.path], lo, e, resolve=False,
-                boot=[f.path] if f.kind == "bootstrap" else (),
-            )
-            for f in files
-        ]
+        files, groups = incremental_plan(self.log, lo, e, self.global_index)
+        return plan_slices(files, groups, lo, e)
 
     def commit(self, end: dict) -> None:
         # Spark's checkpoint holds the offset; engine-side we only
@@ -336,35 +292,10 @@ class LakeStreamReader(DataSourceStreamReader):
 
     # -- data (worker-side) -------------------------------------------------
 
-    def read(self, partition: _FileSlice):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        def load(rel):
-            raw = pq.read_table(os.path.join(self.table_path, rel))
-            if rel in partition.boot:
-                from hudi_spark_plus_spark.table.bootstrap import (
-                    synthesize_arrow,
-                )
-
-                raw = synthesize_arrow(raw, self.bootstrap_spec)
-            return project_logical(raw, self.fields)
-
-        parts = [load(rel) for rel in partition.paths]
-        t = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-        if partition.resolve:
-            t = resolve_latest_arrow(t)
-        ver = (
-            pc.fill_null(t[_COMMIT_VER], 0)
-            if _COMMIT_VER in t.column_names
-            else pa.array([0] * t.num_rows, pa.int64())
-        )
-        mask = pc.and_(
-            pc.greater(ver, partition.begin),
-            pc.less_equal(ver, partition.end),
-        )
-        yield from t.filter(mask).to_batches()
+    def read(self, partition: _Slice):
+        yield from read_slice(
+            partition, self.table_path, self.fields, self.bootstrap_spec
+        ).to_batches()
 
 
 def register(spark) -> None:

@@ -96,10 +96,18 @@ from hudi_spark_plus_spark.table.keygen import (
 from hudi_spark_plus_spark.table.merge_kernel import (
     COMMIT_VER_COL,
     DELETED_COL,
+    INDEX_DIR,
+    NON_SECONDARY_KINDS,
     UnitFile,
     active_fields,
+    cdc_plan,
+    incremental_plan,
+    index_dir,
+    latest_index_n,
     merge_unit,
+    open_latest_manifest,
     project_logical,
+    unit_of,
 )
 
 DELETE_OP = "delete"
@@ -731,9 +739,8 @@ class LakeTable:
         behavior: with no deltas live, snapshot() never window-resolves,
         so per-file counts compose exactly. With deltas live, a bucket
         touched by any delta needs resolution (base files there can
-        hold superseded versions — the `_widen_hits_for_mor` rule, at
-        bucket-number granularity because global-index relocation
-        crosses partitions within a bucket), and live bootstrap files
+        hold superseded versions — ``_pruned``'s MOR rule, at
+        bucket-number granularity, which covers every ``unit_of``), and live bootstrap files
         force a full scan (their rows' buckets are unknown until
         conversion, so a clean/dirty split cannot be proven)."""
         if not any(f.kind == "delta" for f in files):
@@ -1192,37 +1199,30 @@ class LakeTable:
         tombstone records (``_deleted = true``) for downstream CDC.
 
         Each in-range record is returned exactly once, at its FINAL state
-        within the range: only changed files still live at ``end`` are
-        read (a record's latest copy is carried forward through every
-        bucket rewrite, so it appears in exactly one live file), then
-        rows are filtered to ``_commit_ver`` in range. Null
+        within the range: the file plan is ``merge_kernel.
+        incremental_plan``'s, shared with the ``lake-table`` readers
+        (changed files still live at ``end``; on MOR every live file of
+        their units, resolved), then rows are filtered to
+        ``_commit_ver`` in range. Null
         ``_commit_ver`` (files written before record versioning) counts
         as version 0. ``partitions``/``partition_range`` prune the
         changed-file set structurally — record identity is scoped to its
         partition, so pruning cannot change resolution outcomes."""
-        live = self.log.live_files(end)
-        changed = {f.path for f in self.log.changed_files(begin, end)}
-        files = [f for f in live if f.path in changed]
+        files, groups = incremental_plan(
+            self.log, begin, end, self.global_index
+        )
         files = self._prune_partitions(files, partitions, partition_range)
-        if any(f.kind == "delta" for f in live):
-            # MOR: a stale in-range delta row may have LOST
-            # last-write-wins to a row OUTSIDE the range (COW settles
-            # this at write time; MOR must settle it here). Winners are
-            # decided by resolving over every live row of the affected
-            # (partition, bucket) units first; only then are winners
-            # filtered to the range. Units without an in-range file
-            # can't contribute a winner in range, so they are pruned
-            # from the read.
-            units = {(f.partition, f.bucket) for f in files}
+        if groups is not None:
+            # MOR: winners are decided over every live row of the units
+            # the kept changed files are in, then filtered to the range
+            units = {unit_of(f, self.global_index) for f in files}
             df = self._resolve_latest(
                 self._read_files(
-                    [f for f in live if (f.partition, f.bucket) in units],
+                    [f for u, g in groups.items() if u in units for f in g],
                     schema=self._schema_at(end),
                 )
             )
         else:
-            # COW: one live copy per key, already LWW-settled at write;
-            # reading only the changed-and-still-live files suffices
             df = self._read_files(files, schema=self._schema_at(end))
         if COMMIT_VER_COL in df.columns:
             ver = F.coalesce(F.col(COMMIT_VER_COL), F.lit(0))
@@ -1275,50 +1275,46 @@ class LakeTable:
                     f"_before_{c}", F.lit(None).cast(a_types[c])
                 )
         else:
-            live_end = self.log.live_files(end)
-            changed = {f.path for f in self.log.changed_files(begin, end)}
-            cfiles = self._prune_partitions(
-                [f for f in live_end if f.path in changed],
-                partitions, partition_range,
+            # the begin-version files of the kept changed units, plus
+            # the bootstrap files the range consumed (their rows are not
+            # bucket-routed): bounded by the range's own work
+            files, units, consumed = cdc_plan(
+                self.log, begin, end, self.global_index
             )
-            if non_global_part:
-                units = {(f.partition, f.bucket) for f in cfiles}
-                bfiles = [
-                    f for f in self.log.live_files(begin)
-                    if (f.partition, f.bucket) in units
-                ]
-            else:
-                bkts = {f.bucket for f in cfiles}
-                bfiles = [
-                    f for f in self.log.live_files(begin)
-                    if f.bucket in bkts
-                ]
-            # A changed record's begin-version copy may live in a
-            # metadata-only bootstrap file (bucket=-1 — bucket matching
-            # can't find it). Only bootstrap files the range CONSUMED
-            # (live at begin, rewritten away by end) can hold a changed
-            # record's before image — a bootstrap file still live at
-            # end holds only unchanged records — so the extra read is
-            # bounded by the range's own conversion work, never the
-            # table.
-            end_paths = {f.path for f in live_end}
-            have = {f.path for f in bfiles}
-            bfiles += [
-                f
-                for f in self.log.live_files(begin)
-                if f.kind == BOOTSTRAP_KIND
-                and f.path not in end_paths
-                and f.path not in have
-            ]
+            keep = {
+                unit_of(f, self.global_index)
+                for f in self._prune_partitions(
+                    files, partitions, partition_range
+                )
+            }
+            bfiles = [
+                f for u, (_, b) in units.items() if u in keep for f in b
+            ] + consumed
+            # the before image under the end version's names and types:
+            # a column renamed or retyped in the range keeps its
+            # physical name
+            at_begin = {
+                self._physical_of(f): f.name
+                for f in self._schema_at(begin).fields
+            }
+            phys_at_end = {
+                f.name: self._physical_of(f)
+                for f in self._schema_at(end).fields
+            }
+            a_types = {f.name: f.dataType for f in after.schema.fields}
+
+            def before(c):
+                src = at_begin.get(phys_at_end[c])
+                col = F.col(src) if src else F.lit(None)
+                return col.cast(a_types[c]).alias(f"_before_{c}")
+
             bsel = self._read_resolved(bfiles, begin).select(
                 F.col(KEY_COL).alias("_b_key"),
                 *(
                     [self._partition_expr().alias("_b_part")]
                     if non_global_part else []
                 ),
-                *[
-                    F.col(c).alias(f"_before_{c}") for c in before_src
-                ],
+                *[before(c) for c in before_src],
             )
             cond = F.col(KEY_COL) == F.col("_b_key")
             if non_global_part:
@@ -1451,7 +1447,7 @@ class LakeTable:
         snapshot with ``col`` in [lo, hi], reading ONLY files whose
         recorded range intersects — after z-order clustering on the
         column this skips most of the table for selective ranges. Under
-        MOR the kept set is bucket-widened, so a kept base row is
+        MOR the kept set is unit-widened, so a kept base row is
         resolved against the delta that supersedes it."""
         kept, _ = self.files_in_range(col, lo, hi)
         return self._read_resolved(kept).where(F.col(col).between(lo, hi))
@@ -1473,7 +1469,7 @@ class LakeTable:
     # catch-up: it blooms only the unindexed live files and carries
     # still-live entries forward, dropping dead ones.
 
-    SECONDARY_INDEX_DIR = "_index"
+    SECONDARY_INDEX_DIR = INDEX_DIR
     # "indexed, column all-null in this file": probe always misses
     _EMPTY_BLOOM = ""
     _INDEXABLE_TYPES = (
@@ -1501,12 +1497,7 @@ class LakeTable:
         return fld
 
     def _index_dir(self, col: str) -> str:
-        if not col.replace("_", "").isalnum():
-            raise ValueError(
-                f"column name {col!r} is not filesystem-safe for an index "
-                "directory"
-            )
-        return os.path.join(self.path, self.SECONDARY_INDEX_DIR, col)
+        return index_dir(self.path, col)
 
     @staticmethod
     def _index_probe_str(value) -> str:
@@ -1647,40 +1638,11 @@ class LakeTable:
             except (ValueError, OSError):
                 continue
 
-    def _latest_index_n(self, col: str) -> int:
-        d = self._index_dir(col)
-        if not os.path.isdir(d):
-            return 0
-        ns = [
-            int(fn[6:-5])
-            for fn in os.listdir(d)
-            if fn.startswith("index-") and fn.endswith(".json")
-        ]
-        return max(ns, default=0)
+    def _latest_index_n(self, dirname: str) -> int:
+        return latest_index_n(self.path, dirname)
 
     def _open_latest_manifest(self, dirname: str) -> dict | None:
-        """Resolve-then-open of the newest index manifest, tolerant of
-        the retention race: list-then-open is non-atomic against
-        ``_retire_index_manifests``, so two publishes landing between a
-        reader's ``_latest_index_n`` and its ``open`` can unlink the
-        resolved file. On FileNotFoundError re-resolve once — whatever
-        replaced it is at least as fresh (stale-is-correct); a second
-        consecutive miss is a real error and raises."""
-        import json as _json
-
-        for attempt in range(2):
-            n = self._latest_index_n(dirname)
-            if n == 0:
-                return None
-            try:
-                with open(
-                    os.path.join(self._index_dir(dirname), f"index-{n:06d}.json")
-                ) as fh:
-                    return _json.load(fh)
-            except FileNotFoundError:
-                if attempt:
-                    raise
-        return None
+        return open_latest_manifest(self.path, dirname)
 
     def secondary_index(self, col: str) -> dict | None:
         """Latest published index manifest for ``col`` (None if never
@@ -1688,9 +1650,7 @@ class LakeTable:
         m = self._open_latest_manifest(col)
         if m is None:
             return None
-        # a functional index or NDV sketch sharing the directory
-        # namespace is NOT a secondary index (different entry formats)
-        return None if m.get("kind") in ("functional", "ndv") else m
+        return None if m.get("kind") in NON_SECONDARY_KINDS else m
 
     def secondary_indexes(self) -> list[str]:
         """Columns with a live secondary index."""
@@ -1779,7 +1739,7 @@ class LakeTable:
         ``scan_for_values``, exposed for plan inspection. Unindexed
         files are conservatively kept (stale index = less pruning,
         never wrong rows). When MOR deltas are live, pruning widens to
-        bucket granularity: a kept base file pulls in its bucket's
+        the resolution unit: a kept base file pulls in its unit's
         delta files (they may supersede its rows), and a kept
         bootstrap file pulls in ALL deltas (bootstrap rows' buckets
         are unknown until conversion) — equality results must reflect
@@ -1817,40 +1777,33 @@ class LakeTable:
         index, functional index, col_stats range and value-set reads.
         ``live`` is the live set at ``version`` after structural
         partition elimination; ``kept`` is the files ``might_hit`` keeps
-        (the caller's own predicate), MOR-widened by
-        ``_widen_hits_for_mor`` so ``_read_resolved(kept, version)``
-        resolves every kept row correctly."""
+        (the caller's own predicate) so that ``_read_resolved(kept,
+        version)`` resolves every kept row correctly: when MOR deltas
+        are live, a non-hit file can hold the NEWER version of a hit
+        file's key, so a hit pulls in every live file of its unit
+        (``unit_of``), and a hit bootstrap file pulls in ALL deltas (its
+        rows' buckets are unknown until conversion)."""
         live = self._prune_partitions(
             self.log.live_files(version), partitions, partition_range
         )
         hits = [f for f in live if might_hit(f)]
-        return self._widen_hits_for_mor(hits, live), live
-
-    @staticmethod
-    def _widen_hits_for_mor(
-        hits: list, live: list
-    ) -> list:
-        """When MOR deltas are live, per-key resolution needs every
-        live file of a hit row's bucket — a non-hit file can hold the
-        NEWER version of a hit file's key (base-over-delta after a COW
-        merge, delta-over-anything after a MOR merge) and dropping it
-        would surface the superseded row. Bucket granularity, not file
-        granularity; a hit bootstrap file pulls in ALL deltas (its
-        rows' buckets are unknown until conversion)."""
         if not any(f.kind == "delta" for f in live):
-            return hits
-        hit_paths = {f.path for f in hits}  # set: O(live), never O(n^2)
-        hit_buckets = {
-            f.bucket for f in hits if f.kind != BOOTSTRAP_KIND
+            return hits, live
+        hit_paths = {f.path for f in hits}
+        units = {
+            unit_of(f, self.global_index)
+            for f in hits
+            if f.kind != BOOTSTRAP_KIND
         }
         boot_hit = any(f.kind == BOOTSTRAP_KIND for f in hits)
-        return [
+        kept = [
             f
             for f in live
             if f.path in hit_paths
-            or f.bucket in hit_buckets
+            or unit_of(f, self.global_index) in units
             or (boot_hit and f.kind == "delta")
         ]
+        return kept, live
 
     def scan_for_values(
         self, col: str, values, partitions=None
@@ -2021,7 +1974,7 @@ class LakeTable:
         if snap is None:
             snap = self.snapshot(version=version)
         # the semi-join stays even when files pruned: Bloom false
-        # positives / widened buckets / coarse stats admit extra rows
+        # positives / widened units / coarse stats admit extra rows
         local = local_frame(self.spark, rows, affected.schema)
         return snap.alias("s").join(
             F.broadcast(local.alias("a")),
@@ -2177,7 +2130,7 @@ class LakeTable:
         """(kept, live) for ``lo <= expr <= hi``: live files whose
         recorded expression range intersects; unindexed files kept
         conservatively; all-null entries pruned (NULL never satisfies
-        a range). MOR widens to bucket granularity (see
+        a range). MOR widens to the resolution unit (see
         files_for_values)."""
         idx = self.functional_index(name)
         if idx is None:

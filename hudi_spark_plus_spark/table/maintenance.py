@@ -33,12 +33,13 @@ def compact(lake: LakeTable) -> dict:
     (``LakeTable._rewrite_units``). A live set holding bootstrap files
     is rewritten in Spark instead: their rows are not hash-bucketed
     yet, and this rewrite converts them. Returns {files_before,
-    files_after}. Retries against a fresh timeline if a concurrent
-    writer wins the commit race."""
+    files_after}; a table with no live file publishes nothing. Retries
+    against a fresh timeline if a concurrent writer wins the commit
+    race."""
 
     def attempt() -> dict:
         prev = lake.log.latest()
-        if prev is None:
+        if prev is None or not prev.files:
             return {"files_before": 0, "files_after": 0}
         if holds_bootstrap(prev.files):
             files = lake._write_commit(
@@ -75,20 +76,22 @@ def compact_buckets(
     of every other day (at 1000 partitions that is 1000x the write
     amplification). ``buckets`` is then ignored for file selection and
     only used for the return count. Bootstrap files (bucket -1) cannot
-    be compacted by unit; ``compact()`` converts them."""
+    be compacted by unit; ``compact()`` converts them. Units that select
+    no live file publish nothing."""
 
     def attempt() -> dict:
         prev = lake.log.latest()
-        if prev is None or (not buckets and not units):
-            return {
-                "buckets_compacted": 0, "files_before": 0, "files_after": 0,
-            }
-        if units is not None:
+        hit = []
+        if prev is not None and units is not None:
             hit = [
                 f for f in prev.files if (f.partition, f.bucket) in units
             ]
-        else:
+        elif prev is not None:
             hit = [f for f in prev.files if f.bucket in buckets]
+        if not hit:
+            return {
+                "buckets_compacted": 0, "files_before": 0, "files_after": 0,
+            }
         if holds_bootstrap(hit):
             raise ValueError(
                 f"table at {lake.path}: bootstrap files cannot be "

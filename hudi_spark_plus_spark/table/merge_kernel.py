@@ -1,12 +1,12 @@
 """The per-unit merge kernel: Hudi's ``HoodieMergeHandle`` for this
 engine's (partition, bucket) units.
 
-Every copy of a record lives in one resolution unit by construction:
-its (partition, bucket) on a partitioned table, its bucket otherwise,
-and its bucket across ALL partitions on a global-index table. So a
-merge never has to move stored rows between machines: it resolves each
-unit the batch touches against that unit's live files alone, in one
-pass, wherever the unit's batch rows are (the driver for a small batch,
+Every copy of a record lives in one resolution unit (``unit_of``) by
+construction: its (partition, bucket) on a partitioned table, its bucket
+otherwise, and its bucket across ALL partitions on a global-index table.
+So a merge never has to move stored rows between machines: it resolves
+each unit the batch touches against that unit's live files alone, in
+one pass, wherever the unit's batch rows are (the driver for a small batch,
 a ``mapInArrow`` task otherwise — ``LakeTable._rewrite_units`` picks).
 
 ``merge_unit`` is the kernel. For one unit it
@@ -27,9 +27,19 @@ the merge of a unit with no batch rows: every file of the unit is read,
 resolved and consumed, tombstones kept, each row under its own commit
 version.
 
-The module also owns the two Arrow helpers every worker-side reader
-shares: ``project_logical`` (physical file -> logical columns, with the
-one Spark -> Arrow type map) and ``resolve_latest_arrow``.
+The module also owns the read plan every reader shares — ``LakeTable``
+(which executes it in Spark), the ``lake-table`` batch reader and the
+stream reader (which execute it with pyarrow in their workers):
+
+* ``unit_of``, the one resolution-unit rule;
+* ``incremental_plan`` and ``cdc_plan``, the file plans of an
+  incremental and a CDC read of a version range;
+* the worker-side file read: ``load_logical`` (parquet -> bootstrap
+  synthesis -> ``project_logical``, the physical file on the logical
+  columns with the one Spark -> Arrow type map), ``in_version_range``
+  and ``resolve_latest_arrow``;
+* ``open_latest_manifest``, the opener of the newest ``_index/``
+  sidecar manifest.
 """
 
 from __future__ import annotations
@@ -37,10 +47,15 @@ from __future__ import annotations
 import os
 from collections import namedtuple
 
+from hudi_spark_plus_spark.table.bootstrap import BOOTSTRAP_KIND
 from hudi_spark_plus_spark.table.keygen import KEY_COL, PARTITION_COL, TS_COL
 
 DELETED_COL = "_deleted"
 COMMIT_VER_COL = "_commit_ver"
+INDEX_DIR = "_index"
+# manifest kinds sharing the _index/ namespace that are not secondary
+# indexes (different entry formats)
+NON_SECONDARY_KINDS = ("functional", "ndv")
 
 # The manifest-entry fields the kernel reads: what a merge ships to its
 # write tasks per live file.
@@ -128,6 +143,164 @@ def resolve_latest_arrow(t):
     )
 
 
+def unit_of(entry, global_index):
+    """The one resolution-unit rule: the unit of a manifest entry holds
+    every copy of each record it holds. It is (partition, bucket), as
+    record identity is (partition, key) and the bucket is hash(key)-
+    derived; on a global-index table, whose identity is the key alone
+    across partitions, it is the bucket. A bootstrap file's rows are not
+    bucket-routed (bucket -1), so no unit is known to hold all of them."""
+    return (entry.bucket,) if global_index else (entry.partition, entry.bucket)
+
+
+def unit_groups(files, global_index, units=None):
+    """``{unit: its files}`` over ``files`` (in their order), restricted
+    to ``units`` when given."""
+    out: dict = {}
+    for f in files:
+        u = unit_of(f, global_index)
+        if units is None or u in units:
+            out.setdefault(u, []).append(f)
+    return out
+
+
+def _changed_live(log, begin, end):
+    live = log.live_files(end)
+    changed = {f.path for f in log.changed_files(begin, end)}
+    return live, [f for f in live if f.path in changed]
+
+
+def incremental_plan(log, begin, end, global_index):
+    """The file plan of an incremental read of versions (begin, end]:
+    ``(files, groups)``. ``files`` are the files changed in the range
+    and live at ``end``; a record's latest copy is carried through every
+    rewrite, so it is in exactly one of them. On copy-on-write they are
+    the plan and ``groups`` is None. With a delta live at ``end`` an
+    in-range row may have lost last-write-wins to a row of another file,
+    in or out of the range, so ``groups`` maps each unit holding one of
+    ``files`` to all its live files: resolve each, then range-filter. A
+    caller that prunes ``files`` reads the groups of the units left."""
+    live, files = _changed_live(log, begin, end)
+    if not any(f.kind == "delta" for f in live):
+        return files, None
+    units = {unit_of(f, global_index) for f in files}
+    return files, unit_groups(live, global_index, units)
+
+
+def cdc_plan(log, begin, end, global_index):
+    """The file plan of a CDC read of versions (begin, end]:
+    ``(files, units, consumed)``. ``files`` are ``incremental_plan``'s;
+    ``units`` maps each unit holding one of them to ``(after, before)``,
+    its files live at ``end`` and at ``begin`` (none when ``begin`` <= 0:
+    every change is an insert). ``consumed`` are the bootstrap files
+    live at ``begin`` that the range rewrote away: a changed record's
+    before image may be in one, while a bootstrap file still live at
+    ``end`` holds only unchanged records."""
+    live, files = _changed_live(log, begin, end)
+    units = {unit_of(f, global_index) for f in files}
+    before, consumed = {}, []
+    if begin > 0:
+        start = log.live_files(begin)
+        before = unit_groups(start, global_index, units)
+        end_paths = {f.path for f in live}
+        consumed = [
+            f
+            for f in start
+            if f.kind == BOOTSTRAP_KIND
+            and f.path not in end_paths
+            and unit_of(f, global_index) not in units
+        ]
+    after = unit_groups(live, global_index, units)
+    return (
+        files,
+        {u: (grp, before.get(u, [])) for u, grp in after.items()},
+        consumed,
+    )
+
+
+def load_logical(table_path, path, fields, bootstrap_spec):
+    """One stored file on the logical ``fields``: the parquet read, the
+    engine meta columns synthesized when ``bootstrap_spec`` is given (a
+    metadata-only bootstrap file, table/bootstrap.py), then
+    ``project_logical``. A bootstrap file's absolute ``path`` is kept
+    as is by the join."""
+    import pyarrow.parquet as pq
+
+    raw = pq.read_table(os.path.join(table_path, path))
+    if bootstrap_spec is not None:
+        from hudi_spark_plus_spark.table.bootstrap import synthesize_arrow
+
+        raw = synthesize_arrow(raw, bootstrap_spec)
+    return project_logical(raw, fields)
+
+
+def in_version_range(t, begin, end):
+    """Mask of the rows of ``t`` whose commit version is in (begin, end]
+    (``end`` None: no upper bound). A null or missing version reads as
+    0: the row was written before record versioning."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ver = (
+        pc.fill_null(t[COMMIT_VER_COL], 0)
+        if COMMIT_VER_COL in t.column_names
+        else pa.array([0] * t.num_rows, pa.int64())
+    )
+    mask = pc.greater(ver, begin)
+    return mask if end is None else pc.and_(mask, pc.less_equal(ver, end))
+
+
+def index_dir(table_path, dirname):
+    """The ``_index/<dirname>`` sidecar directory of a table."""
+    if not dirname.replace("_", "").isalnum():
+        raise ValueError(
+            f"column name {dirname!r} is not filesystem-safe for an index "
+            "directory"
+        )
+    return os.path.join(table_path, INDEX_DIR, dirname)
+
+
+def latest_index_n(table_path, dirname):
+    """The number of the newest ``index-<n>.json`` manifest of the
+    sidecar, 0 when it has none."""
+    d = index_dir(table_path, dirname)
+    if not os.path.isdir(d):
+        return 0
+    ns = [
+        int(fn[6:-5])
+        for fn in os.listdir(d)
+        if fn.startswith("index-") and fn.endswith(".json")
+    ]
+    return max(ns, default=0)
+
+
+def open_latest_manifest(table_path, dirname):
+    """Resolve-then-open of the newest sidecar manifest (None when there
+    is none), tolerant of the retention race: list-then-open is
+    non-atomic against ``LakeTable._retire_index_manifests``, so two
+    publishes landing between the listing and the ``open`` can unlink
+    the resolved file. On FileNotFoundError re-resolve once — whatever
+    replaced it is at least as fresh (stale-is-correct); a second
+    consecutive miss is a real error and raises."""
+    import json
+
+    for attempt in range(2):
+        n = latest_index_n(table_path, dirname)
+        if n == 0:
+            return None
+        try:
+            with open(
+                os.path.join(
+                    index_dir(table_path, dirname), f"index-{n:06d}.json"
+                )
+            ) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            if attempt:
+                raise
+    return None
+
+
 def bloom_hits(files, keys):
     """The files of ``files`` (manifest entries or ``UnitFile`` s) whose
     key Bloom may hold one of ``keys``; a file without a Bloom always
@@ -161,12 +334,10 @@ def read_unit_files(table_path, files, fields, partitioned):
     table. A commit version the file lacks (it predates versioning)
     reads as 0. None when ``files`` is empty."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     parts = []
     for f in files:
-        raw = pq.read_table(os.path.join(table_path, f.path))
-        t = project_logical(raw, fields)
+        t = load_logical(table_path, f.path, fields, None)
         if COMMIT_VER_COL in t.column_names:
             t = _filled(t, COMMIT_VER_COL, 0)
         if partitioned:

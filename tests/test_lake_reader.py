@@ -20,8 +20,6 @@ from hudi_spark_plus_spark.sources import lake_reader
 from hudi_spark_plus_spark.sources.lake_reader import LakeBatchReader
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 
-pytestmark = pytest.mark.slow  # full-tier suite (see pytest.ini)
-
 
 def _mk(spark, rows):
     return spark.createDataFrame(

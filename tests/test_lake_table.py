@@ -2416,14 +2416,16 @@ class TestRound9AdvisorFindings:
         import os
         import shutil
 
+        from hudi_spark_plus_spark.table import merge_kernel
+
         t, _ = self._seed(spark, tmp_path)
         t.create_secondary_index("cat")
         d = t._index_dir("cat")
-        real = type(t)._latest_index_n
+        real = merge_kernel.latest_index_n
         state = {"raced": False}
 
-        def racy(col):
-            n = real(t, col)
+        def racy(table_path, dirname):
+            n = real(table_path, dirname)
             if not state["raced"]:
                 state["raced"] = True
                 # two concurrent publishes land AFTER our listing;
@@ -2437,7 +2439,7 @@ class TestRound9AdvisorFindings:
                 return n  # the stale, now-unlinked answer
             return n
 
-        monkeypatch.setattr(t, "_latest_index_n", racy)
+        monkeypatch.setattr(merge_kernel, "latest_index_n", racy)
         idx = t.secondary_index("cat")
         assert idx is not None and idx["entries"]
         assert state["raced"]

@@ -323,3 +323,30 @@ def test_compact_job_counts(spark, tmp_path, monkeypatch):
     assert len(jobs_of_compact("compact-tasks")) == 1
     assert len(t.log.live_files()) == 16
     assert t.snapshot().where(F.col("_ts") == 3).count() == 500
+
+
+def test_noop_compaction_publishes_nothing(spark, tmp_path):
+    """A compaction that selects no live file publishes no version:
+    ``compact_buckets`` of units that hold no file, and ``compact()`` of
+    a table whose live set is empty."""
+    from hudi_spark_plus_spark.table.maintenance import (
+        compact,
+        compact_buckets,
+    )
+
+    zero = {"buckets_compacted": 0, "files_before": 0, "files_after": 0}
+    t = LakeTable(spark, str(tmp_path / "t"), buckets=4)
+    t.merge(frame(spark, [("k1", 1, "upsert", "a")]), "b0")
+    v = t.log.latest().version
+    assert compact_buckets(t, {1}, units={(None, 99)}) == zero
+    assert compact_buckets(t, {99}) == zero
+    assert t.log.latest().version == v
+
+    p = LakeTable(spark, str(tmp_path / "p"), buckets=4,
+                  partition_fields=["d"])
+    p.merge(frame(spark, [("k1", 1, "upsert", "a", "x")], PSCHEMA), "b0")
+    p.delete_partitions(["x"])
+    v = p.log.latest().version
+    assert p.log.live_files() == []
+    assert compact(p) == {"files_before": 0, "files_after": 0}
+    assert p.log.latest().version == v
