@@ -178,6 +178,9 @@ _PINNED = [
     # watermark and the ANN-index migrate commit publish optimistically;
     # fsck compares footer row counts. The same 58 hashes moved, every
     # one already pinned above.
+    # Bootstrap rows ride the per-unit kernel: the full-outer-join merge
+    # and the Spark compaction of bootstrap tables are gone. The same 58
+    # hashes moved, every one already pinned above.
 ]
 
 

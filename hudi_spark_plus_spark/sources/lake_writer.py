@@ -608,7 +608,11 @@ class LakeTableBatchWriter(DataSourceArrowWriter):
             e.bytes = os.path.getsize(absf)
 
     def _discard_entries(self, msgs) -> None:
+        """Unlink the files of the commit messages ``msgs`` (a failed
+        task leaves None)."""
         for m in msgs:
+            if m is None:
+                continue
             for e in m.entries:
                 try:
                     os.unlink(os.path.join(self.table_path, e.path))
@@ -762,18 +766,8 @@ if DataSourceStreamArrowWriter is not None:
             self._commit_core(
                 messages,
                 f"{self.stream_id}-{batchId}",
-                discard=lambda: self._discard(messages),
+                discard=lambda: self._discard_entries(messages),
             )
 
-        def _discard(self, messages):
-            for m in messages:
-                if m is None:
-                    continue
-                for e in m.entries:
-                    try:
-                        os.unlink(os.path.join(self.table_path, e.path))
-                    except FileNotFoundError:
-                        pass
-
         def abort(self, messages, batchId: int):
-            self._discard(messages)
+            self._discard_entries(messages)

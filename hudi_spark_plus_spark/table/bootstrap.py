@@ -13,10 +13,12 @@ per-file row counts, synthesized-key min/max, a key Bloom filter, and
 payload col_stats from the footers. Queries (snapshot, time travel,
 incremental, point lookup, the ``lake-table`` format, streaming read)
 work immediately; upserts CONVERT files progressively — a merge
-rewrites only the bootstrap files whose Bloom says they may hold a
-batch key, landing their rows in proper hash-bucketed base files, and
-``compact()`` is the finish-the-migration lever that converts
-everything left in one pass.
+reads only the bootstrap files whose Bloom says they may hold a batch
+key and routes their rows by key into their (bucket) units, where the
+per-unit merge kernel resolves them beside the batch rows and writes
+proper hash-bucketed base files — and ``compact()`` is the
+finish-the-migration lever that converts everything left in the same
+commit that compacts every unit.
 
 Mechanics:
 
@@ -25,7 +27,10 @@ Mechanics:
   dir). Their manifest entries carry ``kind="bootstrap"`` and
   ``bucket=-1``: the rows were not written by bucket-hash routing, so
   every key-addressed operation treats a bootstrap file as a candidate
-  for ANY key and lets the per-file Bloom/min-max prune instead.
+  for ANY key and lets the per-file Bloom/min-max prune instead. Once
+  read for a rewrite, a row is routed like a batch row: ``bootstrap()``
+  refuses partitioned tables, so its unit is the bucket of its
+  synthesized key.
 * The engine meta columns (``_key``/``_ts``/``_deleted``/
   ``_commit_ver``) don't exist in the files; every reader SYNTHESIZES
   them from the spec persisted in the commit log:
@@ -33,7 +38,8 @@ Mechanics:
   ``:``; nulls render as ``"null"`` — keygen's documented reference
   recipe, string interpolation of a Java null), ``_ts`` = the ts field
   cast to long (or 0), ``_deleted`` = false, ``_commit_ver`` = the
-  bootstrap commit's version. Key/ts fields are restricted to
+  bootstrap commit's version (a later batch row therefore wins a
+  ``_ts`` tie). Key/ts fields are restricted to
   string/integer types so the Spark, pyarrow, and ANSI-SQL renderings
   of the synthesized key are bit-identical.
 * Merge-on-read deltas are refused while bootstrap files are live: a
@@ -50,14 +56,6 @@ import os
 from pyspark.sql import functions as F
 
 BOOTSTRAP_KIND = "bootstrap"
-
-
-def holds_bootstrap(files) -> bool:
-    """Whether ``files`` include a live bootstrap file — the one input
-    the per-unit merge kernel cannot rewrite: its rows are not
-    hash-bucketed, so no (partition, bucket) unit holds every copy of a
-    key. Merges and ``compact()`` of such a live set run in Spark."""
-    return any(f.kind == BOOTSTRAP_KIND for f in files)
 
 # Types whose string rendering is identical in Spark SQL, pyarrow, and
 # ANSI SQL (DuckDB): the synthesized key must hash/compare the same

@@ -71,7 +71,6 @@ from hudi_spark_plus_spark.table.bloom import KeyBloom, hash_key, pairs_array
 from hudi_spark_plus_spark.table.bootstrap import (
     BOOTSTRAP_KIND,
     collect_bootstrap_entries,
-    holds_bootstrap,
     key_expr as _boot_key_expr,
     resolve_source_files,
     ts_expr as _boot_ts_expr,
@@ -100,6 +99,7 @@ from hudi_spark_plus_spark.table.merge_kernel import (
     NON_SECONDARY_KINDS,
     UnitFile,
     active_fields,
+    bloom_hits,
     cdc_plan,
     incremental_plan,
     index_dir,
@@ -131,15 +131,6 @@ _SPARK_TYPE_BY_NAME = {
     "float": FloatType(),
     "double": DoubleType(),
 }
-
-
-def _bq(name: str) -> str:
-    """Backtick-quote a column name for a SQL expression string (the
-    selectExpr fast path): embedded backticks double, everything else —
-    spaces, keywords, unicode — is safe inside the quotes. Dotted names
-    are as unsupported here as they are in the ``F.col(f"b.{c}")`` form
-    this replaced (a dot already meant struct access there)."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _widened_type(a: str, b: str) -> str | None:
@@ -435,22 +426,25 @@ def _write_task(table_path: str, subdir_rel: str, layout: list[str]):
     return run
 
 
-def _merge_pieces(runs, table_path, files_by_unit, fields, next_ver, mor,
+def _merge_pieces(runs, table_path, files_by_unit, fields, next_ver, mode,
                   global_index, consumed: list):
-    """Run the merge kernel over ``runs`` — ``(unit, batch rows)`` pairs
-    with ``unit[-1]`` the bucket; rows holding the unit columns alone
-    (no batch rows) compact the unit — and yield its output as emitter
-    pieces under physical column names, one per (partition, bucket) in
-    partition order. ``fields``: the commit's ``[(logical, physical,
-    DataType)]``. The paths each unit consumed are appended to
-    ``consumed``."""
+    """Run the merge kernel (``merge_unit`` in ``mode``) over ``runs`` —
+    ``(unit, routed rows)`` pairs with ``unit[-1]`` the bucket; a
+    compaction marks each of its units with a row holding the unit
+    columns alone — and yield its output as emitter pieces under
+    physical column names, one per (partition, bucket) in partition
+    order. ``fields``: the commit's ``[(logical, physical, DataType)]``.
+    The paths each unit consumed are appended to ``consumed``."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     logical = [(n, n, t) for n, _, t in fields]
     physical = [p for _, p, _ in fields]
     for unit, rows in runs:
         batch = None
-        if KEY_COL in rows.column_names:
+        if KEY_COL in rows.column_names and mode == "compact":
+            rows = rows.filter(pc.is_valid(rows[KEY_COL]))  # the marker
+        if KEY_COL in rows.column_names and rows.num_rows:
             batch = project_logical(rows, logical)
             if PARTITION_COL in rows.column_names:
                 batch = batch.append_column(
@@ -458,7 +452,7 @@ def _merge_pieces(runs, table_path, files_by_unit, fields, next_ver, mor,
                 )
         out, used = merge_unit(
             table_path, files_by_unit.get(unit, ()), batch, fields,
-            next_ver, mor, global_index,
+            next_ver, mode, global_index,
         )
         consumed += used
         if PARTITION_COL not in out.column_names:
@@ -471,7 +465,7 @@ def _merge_pieces(runs, table_path, files_by_unit, fields, next_ver, mor,
 
 
 def _merge_task(table_path, subdir_rel, unit_cols, files_by_unit, fields,
-                next_ver, mor, global_index):
+                next_ver, mode, global_index):
     """The ``mapInArrow`` body of a unit rewrite's task placement: gather
     each unit's batch rows across the task's unit-sorted Arrow batches,
     run the kernel per unit, emit its files, and return their entries
@@ -496,7 +490,7 @@ def _merge_task(table_path, subdir_rel, unit_cols, files_by_unit, fields,
                 yield key, pa.Table.from_batches(buf)
 
         pieces = _merge_pieces(runs(), table_path, files_by_unit, fields,
-                               next_ver, mor, global_index, consumed)
+                               next_ver, mode, global_index, consumed)
         for e in emit_unit_files(pieces, table_path, subdir_rel):
             yield pa.RecordBatch.from_pylist(
                 [{**_entry_row(e), "consumed": False}], schema=out
@@ -2406,10 +2400,10 @@ class LakeTable:
         parts: int | None = None,
         shaped: bool = False,
     ) -> list[FileEntry]:
-        """The write path of every data-writing commit but the merge
-        (whose kernel writes its own files). ``out`` is the LOGICAL
-        frame with its layout columns. It is hash-repartitioned on the
-        layout (into ``parts`` tasks when given, else as many as
+        """The write path of every data-writing commit but the merge and
+        the compaction (whose kernel writes their files). ``out`` is the
+        LOGICAL frame with its layout columns. It is hash-repartitioned
+        on the layout (into ``parts`` tasks when given, else as many as
         adaptive execution sizes) and sorted by it within each task;
         ``shaped=True`` takes the caller's frame as is, which must
         already hold each task's rows sorted by the layout. Each task
@@ -2919,8 +2913,8 @@ class LakeTable:
 
     # The one driver-collect row cap of a merge: a batch of at most this
     # many rows is collected (one JVM job) and merged on the driver when
-    # its units are small too; the bootstrap merge's key probe uses the
-    # same cap.
+    # its units are small too; the Bloom probe of live bootstrap files
+    # collects the batch keys under the same cap.
     MERGE_COLLECT_MAX_ROWS = 200_000
 
     def _merge_once(
@@ -2933,14 +2927,25 @@ class LakeTable:
         """One merge attempt: the batch is conformed to the commit's
         payload fields and stamped (``_deleted``, ``_commit_ver``) in
         Spark, then ``_rewrite_units`` resolves each unit it touches
-        against that unit's live files alone."""
+        against that unit's live files alone. A live metadata-only
+        bootstrap file whose key Bloom may hold a batch key is rewritten
+        with them, its rows routed to their units (progressive
+        conversion); the other bootstrap files are carried."""
         if batch_id is not None and self.log.has_batch(batch_id):
             return  # idempotent re-run (H5)
         prev = self.log.latest()
         live = prev.files if prev else []
-        if holds_bootstrap(live):
-            self._merge_bootstrap(batch, batch_id, parallelism, mode, prev)
-            return
+        boot = [f for f in live if f.kind == BOOTSTRAP_KIND]
+        if boot and mode == "mor":
+            # a delta lands in its key's hash bucket, but a stale
+            # bootstrap copy sits in a bucket=-1 file — per-unit
+            # read-time resolution could never pair them. COW merges
+            # consume the stale copy; compact() converts everything.
+            raise ValueError(
+                f"table at {self.path} still has live bootstrap "
+                "files; merge-on-read requires hash-bucketed state — "
+                "use mode='cow' or compact() first"
+            )
         stored = self.schema()
         next_ver = (prev.version + 1) if prev else 1
         batch = self._laid_out(batch)
@@ -2955,10 +2960,19 @@ class LakeTable:
             F.lit(next_ver).cast("long").alias(COMMIT_VER_COL),
             *self._layout_cols(),
         )
+        files = live
+        if boot:
+            # past the cap every bootstrap file may hold a batch key
+            keys = b.select(KEY_COL).limit(
+                self.MERGE_COLLECT_MAX_ROWS + 1
+            ).toArrow()[KEY_COL]
+            if len(keys) <= self.MERGE_COLLECT_MAX_ROWS:
+                files = [f for f in live if f.kind != BOOTSTRAP_KIND]
+                files += bloom_hits(boot, keys.to_pylist())
         # a first write has no stored state to resolve against, so it
         # always writes base files
         self._rewrite_units(
-            prev, live, self._commit_schema_json(b, next_ver), "merge",
+            prev, files, self._commit_schema_json(b, next_ver), "merge",
             batch=b, batch_id=batch_id, parallelism=parallelism,
             mor=mode == "mor" and prev is not None,
         )
@@ -2968,7 +2982,10 @@ class LakeTable:
         """The one unit rewrite of merge and compaction, through the
         per-unit kernel (``merge_kernel.merge_unit``). ``files`` (live
         in ``prev``) are grouped into units: (partition, bucket), or the
-        bucket across their partitions on a global-index table. With a
+        bucket across their partitions on a global-index table. A
+        metadata-only bootstrap file among them is in no unit: its rows
+        are read, routed by key to their units like batch rows (under
+        their own ``_ts`` and version) and the file is consumed. With a
         ``batch`` (conformed, stamped, laid out) each unit it touches is
         merged, as delta rows if ``mor``; without one every unit of
         ``files`` is compacted. Publishes ``live - consumed + new`` and
@@ -2976,33 +2993,57 @@ class LakeTable:
 
         Placement: a batch is collected with ONE ``toArrow`` of at most
         ``MERGE_COLLECT_MAX_ROWS + 1`` rows. The kernel runs on the
-        driver when the batch fits the cap (a compaction has none), the
-        live bytes it may read (its units' files; none for a plain MOR
-        append) are at most ``advisoryPartitionSizeInBytes`` — what
-        adaptive execution would coalesce into one task anyway — and the
-        caller gave no ``parallelism``. Otherwise it runs in ONE
-        ``mapInArrow`` job: over the batch hash-repartitioned on the
-        unit, or over a frame of the compaction's units in
-        ``ceil(bytes / advisory)`` slices (at most one per unit), not
-        shuffled, so nothing coalesces it into one task. Either way no
-        stored row is shuffled."""
+        driver when the batch fits the cap (a compaction has none unless
+        it routes bootstrap rows), the live bytes it may read (its
+        units' files; none for a plain MOR append) are at most
+        ``advisoryPartitionSizeInBytes`` — what adaptive execution would
+        coalesce into one task anyway — and the caller gave no
+        ``parallelism``. Otherwise it runs in ONE ``mapInArrow`` job:
+        over the batch hash-repartitioned on the unit, or over a frame
+        of the compaction's units in ``ceil(bytes / advisory)`` slices
+        (at most one per unit), not shuffled, so nothing coalesces it
+        into one task. Either way no row of a unit's files is
+        shuffled."""
         import pyarrow as pa
 
         live = prev.files if prev else []
         next_ver = (prev.version + 1) if prev else 1
-        compact = batch is None
+        mode = "compact" if batch is None else "mor" if mor else "cow"
         relocating = mor and self.global_index and bool(self.partition_fields)
         unit_cols = (
             self._layout_cols()
             if self.partition_fields and not self.global_index
             else [BUCKET_COL]
         )
+        unit_schema = ", ".join(
+            f"{c} {'int' if c == BUCKET_COL else 'string'}" for c in unit_cols
+        )
+        boot = [f for f in files if f.kind == BOOTSTRAP_KIND]
         files_by_unit: dict[tuple, list] = {}
         for f in files:
+            if f.kind == BOOTSTRAP_KIND:
+                continue
             u = (f.partition, f.bucket) if len(unit_cols) > 1 else (f.bucket,)
             files_by_unit.setdefault(u, []).append(f)
+        fields_c = active_fields(schema_json)
+        consumed = [f.path for f in boot]
+        if boot:
+            routed = self._laid_out(
+                _conform(
+                    self._read_files(boot),
+                    [StructField(n, t, True) for n, _, t in fields_c],
+                ).select(*[n for n, _, _ in fields_c])
+            )
+            if batch is None:  # a marker row for each unit of files
+                routed = routed.unionByName(
+                    self.spark.createDataFrame(
+                        sorted(files_by_unit), unit_schema
+                    ),
+                    allowMissingColumns=True,
+                )
+            batch = routed if batch is None else batch.unionByName(routed)
 
-        if compact:  # one row per unit, no batch rows
+        if batch is None:  # one row per unit, no batch rows
             units = set(files_by_unit)
             rows = pa.table({c: [u[i] for u in sorted(units)]
                              for i, c in enumerate(unit_cols)})
@@ -3021,15 +3062,13 @@ class LakeTable:
             units is not None and parallelism is None and reads <= advisory
         )
         rel = os.path.join(self.log.DATA_DIR, uuid.uuid4().hex)
-        fields_c = active_fields(schema_json)
         kind = "delta" if mor else "base"
-        consumed: list[str] = []
         if on_driver:
             runs = _unit_runs(
                 rows.sort_by([(c, "ascending") for c in unit_cols]), unit_cols
             )
             pieces = _merge_pieces(
-                runs, self.path, files_by_unit, fields_c, next_ver, mor,
+                runs, self.path, files_by_unit, fields_c, next_ver, mode,
                 self.global_index, consumed,
             )
             new_files = [
@@ -3042,14 +3081,13 @@ class LakeTable:
                 for u, fs in files_by_unit.items()
                 if units is None or u in units
             }
-            if compact:
+            if batch is None:
                 slices = min(len(units), -(-reads // max(advisory, 1)))
                 df = self.spark.createDataFrame(
                     self.spark.sparkContext.parallelize(
                         sorted(units), max(1, slices)
                     ),
-                    ", ".join(f"{c} {'int' if c == BUCKET_COL else 'string'}"
-                              for c in unit_cols),
+                    unit_schema,
                 )
             else:
                 cols = [F.col(c) for c in unit_cols]
@@ -3060,11 +3098,11 @@ class LakeTable:
                 ).sortWithinPartitions(*cols)
             out = df.mapInArrow(
                 _merge_task(self.path, rel, unit_cols, ship, fields_c,
-                            next_ver, mor, self.global_index),
+                            next_ver, mode, self.global_index),
                 ", ".join(f"{n} {t}" for n, t in _ENTRY_COLS)
                 + ", consumed boolean",
             ).collect()
-            consumed = [r["path"] for r in out if r["consumed"]]
+            consumed += [r["path"] for r in out if r["consumed"]]
             new_files = _row_entries(
                 [r for r in out if not r["consumed"]], kind
             )
@@ -3081,117 +3119,6 @@ class LakeTable:
         )
         jvm = self.spark.sparkContext._jvm
         return jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(size)
-
-    def _merge_bootstrap(
-        self,
-        batch: DataFrame,
-        batch_id: str | None,
-        parallelism: int | None,
-        mode: str,
-        prev,
-    ) -> None:
-        """The merge of a table that still holds live metadata-only
-        bootstrap files (bucket -1): their rows are not hash-bucketed, so
-        no unit holds every copy of a key and the per-unit kernel cannot
-        run. A full-outer join of the hit slice with the batch on
-        ``_key`` instead: the hit set is the batch's buckets (one
-        ``collect_set``) plus every bootstrap file, Bloom-pruned, and the
-        batch row wins by the one LWW rule. The bootstrap rows it reads
-        are rewritten into their hash buckets (progressive conversion)."""
-        if mode == "mor":
-            # a delta lands in its key's hash bucket, but a stale
-            # bootstrap copy sits in a bucket=-1 file — per-unit
-            # read-time resolution could never pair them. COW merges
-            # consume the stale copy; compact() converts everything.
-            raise ValueError(
-                f"table at {self.path} still has live bootstrap "
-                "files; merge-on-read requires hash-bucketed state — "
-                "use mode='cow' or compact() first"
-            )
-        batch = self._laid_out(batch)
-        affected = set(
-            batch.agg(F.collect_set(BUCKET_COL).alias("b")).first()[0]
-        )
-        live = prev.files
-
-        def _is_hit(f: FileEntry) -> bool:
-            # bootstrap files hold unrouted rows — candidates for ANY
-            # key; the Bloom probe below prunes them per file
-            return f.bucket in affected or f.kind == BOOTSTRAP_KIND
-
-        hit = [f for f in live if _is_hit(f)]
-        carry = [f for f in live if not _is_hit(f)]
-        # a delta supersedes rows of its bucket's base files, so buckets
-        # holding one are consumed whole; elsewhere a file whose bloom
-        # matches no batch key is carried untouched
-        delta_buckets = {f.bucket for f in hit if f.kind == "delta"}
-        forced = [f for f in hit if f.bucket in delta_buckets]
-        kept, skipped = self._bloom_prune_hit_files(
-            batch, [f for f in hit if f.bucket not in delta_buckets]
-        )
-        hit = forced + kept
-        carry += skipped
-
-        snap = self._read_files(hit)  # logical view (column mapping)
-        if any(f.kind == "delta" for f in hit) or self.global_index:
-            # collapse to latest-per-key before the join: deltas hold
-            # several versions per key, and a relocated key of a
-            # global-index table may have copies in several partitions
-            snap = self._resolve_latest(snap)
-        next_ver = prev.version + 1
-        # schema evolution: additive union of payload columns, both
-        # sides cast to the read-compatible supertype (or rejected)
-        fields = self._merge_payload_fields(batch, snap.schema)
-        payload_cols = [f.name for f in fields]
-        b, s = _conform(batch, fields), _conform(snap, fields)
-        if COMMIT_VER_COL not in s.columns:  # pre-versioning files
-            s = s.withColumn(COMMIT_VER_COL, F.lit(0).cast("long"))
-        s = self._with_part(s)
-        b = b.alias("b")
-        s = s.alias("s")
-        join_cond = F.col(f"s.{KEY_COL}") == F.col(f"b.{KEY_COL}")
-        if self.partition_fields and not self.global_index:
-            # non-global: (partition, key) identity — the same key in
-            # two partitions is two records
-            join_cond = join_cond & (
-                F.col(f"s.{PARTITION_COL}") == F.col(f"b.{PARTITION_COL}")
-            )
-        j = s.join(b, join_cond, "full_outer")
-        # the one LWW rule (``resolve_latest_arrow``'s order): the batch
-        # row carries the newest commit version, so it wins unless the
-        # stored _ts is newer or the batch _ts is null and the stored not
-        wins = (
-            f"(b.{_bq(KEY_COL)} IS NOT NULL AND (s.{_bq(KEY_COL)} IS NULL "
-            f"OR s.{_bq(TS_COL)} IS NULL OR b.{_bq(TS_COL)} >= s.{_bq(TS_COL)}))"
-        )
-        merged_key = (
-            f"CASE WHEN {wins} THEN b.{_bq(KEY_COL)} "
-            f"ELSE s.{_bq(KEY_COL)} END"
-        )
-        merged = j.selectExpr(
-            *[
-                f"CASE WHEN {wins} THEN b.{_bq(c)} "
-                f"ELSE s.{_bq(c)} END AS {_bq(c)}"
-                for c in payload_cols
-            ],
-            # tombstone: winning delete, or carried-over prior tombstone
-            f"CASE WHEN {wins} THEN (b.{_bq(OP_COL)} = '{DELETE_OP}') "
-            f"ELSE coalesce(s.{_bq(DELETED_COL)}, false) "
-            f"END AS {_bq(DELETED_COL)}",
-            # batch winners stamp the new version; rows carried through
-            # the rewrite keep theirs (incremental() returns exactly the
-            # changed records)
-            f"CASE WHEN {wins} THEN CAST({next_ver} AS BIGINT) "
-            f"ELSE s.{_bq(COMMIT_VER_COL)} END AS {_bq(COMMIT_VER_COL)}",
-            f"CAST(pmod(xxhash64({merged_key}), {self.buckets}) AS INT) "
-            f"AS {_bq(BUCKET_COL)}",
-        )
-        merged = self._with_part(merged)
-        self._write_commit(
-            merged, "merge", prev, carry,
-            self._commit_schema_json(merged, next_ver), batch_id,
-            parts=parallelism,
-        )
 
     def _widened_fields(self, incoming, stored) -> list[StructField]:
         """In-band schema evolution, in one place: ``incoming``'s fields
@@ -3375,54 +3302,6 @@ class LakeTable:
     # scan_for_keys driver-collect cap; past it the lookup degrades to a
     # distributed semi-join (see scan_for_keys)
     SCAN_KEYS_MAX = 200_000
-
-    def _bloom_prune_hit_files(
-        self, batch: DataFrame, hit: list[FileEntry]
-    ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """(files to merge-read, files to carry untouched) for the
-        bootstrap merge. The probe collects the batch's distinct (key,
-        bucket) pairs — bounded by micro-batch size, NOT table size, and
-        capped at ``MERGE_COLLECT_MAX_ROWS`` (past it nothing is pruned)
-        — hashes them once, and tests each hit file's manifest bloom: a
-        bucket file against its bucket's keys, a bootstrap file against
-        every key. False positives only cost an extra file read; false
-        negatives cannot occur."""
-        if not any(f.bloom for f in hit):
-            return hit, []
-        rows = (
-            batch.select(KEY_COL, BUCKET_COL)
-            .distinct()
-            .limit(self.MERGE_COLLECT_MAX_ROWS + 1)
-            .collect()
-        )
-        if len(rows) > self.MERGE_COLLECT_MAX_ROWS:
-            return hit, []
-        by_bucket: dict[int, list] = {}
-        for k, b in rows:
-            by_bucket.setdefault(b, []).append(hash_key(k))
-        # hash once per key, probe many files vectorized (ndarray path)
-        hashes_by_bucket = {b: pairs_array(v) for b, v in by_bucket.items()}
-        all_hashes = pairs_array([h for v in by_bucket.values() for h in v])
-        _EMPTY = pairs_array([])
-        keep: list[FileEntry] = []
-        skipped: list[FileEntry] = []
-        for f in hit:
-            # bootstrap files hold unrouted rows: probe against EVERY
-            # batch key, not one bucket's slice
-            pairs = (
-                all_hashes
-                if f.kind == BOOTSTRAP_KIND
-                else hashes_by_bucket.get(f.bucket, _EMPTY)
-            )
-            if f.bloom is None:
-                keep.append(f)
-            elif len(pairs) > 0 and KeyBloom.from_b64(
-                f.bloom
-            ).might_contain_any(pairs):
-                keep.append(f)
-            else:
-                skipped.append(f)
-        return keep, skipped
 
     @staticmethod
     def _payload_schema_json(df: DataFrame) -> str:

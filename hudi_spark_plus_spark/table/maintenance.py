@@ -5,7 +5,9 @@ merge rewrite per batch per touched bucket). Compaction rewrites each
 unit's live rows into one right-sized file and commits a new version —
 same logical data. It is a merge with no batch rows: the per-unit merge
 kernel under the merge's placement (the driver, or one ``mapInArrow``
-job); only a live set holding bootstrap files is rewritten in Spark.
+job). ``compact()`` also converts the live metadata-only bootstrap
+files: their rows are routed by key into their units, which are
+compacted with them.
 Vacuum physically deletes data files no longer referenced by any
 retained commit (old versions beyond ``keep_last`` are dropped from the
 timeline first), reclaiming space after compaction and COW rewrites.
@@ -22,7 +24,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from hudi_spark_plus_spark.table.bootstrap import holds_bootstrap
+from hudi_spark_plus_spark.table.bootstrap import BOOTSTRAP_KIND
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 
 
@@ -30,9 +32,10 @@ def compact(lake: LakeTable) -> dict:
     """Rewrite all live data (tombstones included — they must survive
     until vacuumed with their semantics intact) into one file per
     (partition, bucket) unit, through the per-unit merge kernel
-    (``LakeTable._rewrite_units``). A live set holding bootstrap files
-    is rewritten in Spark instead: their rows are not hash-bucketed
-    yet, and this rewrite converts them. Returns {files_before,
+    (``LakeTable._rewrite_units``), each row keeping its own commit
+    version. Live metadata-only bootstrap files are converted in the
+    same commit: their rows are routed by key into their units (the
+    files are consumed, never touched). Returns {files_before,
     files_after}; a table with no live file publishes nothing. Retries
     against a fresh timeline if a concurrent writer wins the commit
     race."""
@@ -41,15 +44,9 @@ def compact(lake: LakeTable) -> dict:
         prev = lake.log.latest()
         if prev is None or not prev.files:
             return {"files_before": 0, "files_after": 0}
-        if holds_bootstrap(prev.files):
-            files = lake._write_commit(
-                lake._laid_out(lake.snapshot(include_deleted=True)),
-                "compact", prev, [], prev.schema_json,
-            )
-        else:
-            files = lake._rewrite_units(
-                prev, prev.files, prev.schema_json, "compact"
-            )
+        files = lake._rewrite_units(
+            prev, prev.files, prev.schema_json, "compact"
+        )
         return {"files_before": len(prev.files), "files_after": len(files)}
 
     return lake._with_commit_retries(attempt)
@@ -92,7 +89,7 @@ def compact_buckets(
             return {
                 "buckets_compacted": 0, "files_before": 0, "files_after": 0,
             }
-        if holds_bootstrap(hit):
+        if any(f.kind == BOOTSTRAP_KIND for f in hit):
             raise ValueError(
                 f"table at {lake.path}: bootstrap files cannot be "
                 "compacted by bucket; use compact()"

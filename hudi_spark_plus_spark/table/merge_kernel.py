@@ -8,6 +8,9 @@ So a merge never has to move stored rows between machines: it resolves
 each unit the batch touches against that unit's live files alone, in
 one pass, wherever the unit's batch rows are (the driver for a small batch,
 a ``mapInArrow`` task otherwise — ``LakeTable._rewrite_units`` picks).
+The one exception is a metadata-only bootstrap file (bucket -1), whose
+rows no unit owns: a rewrite that reads one routes its rows by key to
+their units like batch rows, each keeping its own ``_ts`` and version.
 
 ``merge_unit`` is the kernel. For one unit it
 
@@ -23,9 +26,9 @@ Merge-on-read appends the conformed batch rows as delta rows and reads
 nothing, except on a global-index table, where ``relocate`` drops batch
 losers and tombstones each moved record's old-partition copy. The
 ``lake-table`` format writer runs the same ``relocate``. Compaction is
-the merge of a unit with no batch rows: every file of the unit is read,
-resolved and consumed, tombstones kept, each row under its own commit
-version.
+the merge of a unit with no batch rows (only routed bootstrap rows, if
+any): every file of the unit is read, resolved and consumed, tombstones
+kept, each row under its own commit version.
 
 The module also owns the read plan every reader shares — ``LakeTable``
 (which executes it in Spark), the ``lake-table`` batch reader and the
@@ -415,28 +418,32 @@ def relocate(stored, batch, next_ver):
     return keep, tombs
 
 
-def merge_unit(table_path, files, batch, fields, next_ver, mor, global_index):
+def merge_unit(table_path, files, batch, fields, next_ver, mode, global_index):
     """Resolve one unit: ``files`` are its live entries (anything with
-    ``path``, ``kind``, ``bloom`` and ``partition``), ``batch`` its batch
-    rows on the commit's logical ``fields`` (plus ``PARTITION_COL`` on a
-    partitioned table), already stamped with ``_deleted`` and
-    ``_commit_ver = next_ver``. Returns ``(rows, consumed paths)``;
-    ``rows`` carries ``PARTITION_COL`` on a partitioned table, each row
-    in its own partition. Batch rows carry the newest commit version, so
-    a batch row beats its stored copy iff its ``_ts`` is not older (a
+    ``path``, ``kind``, ``bloom`` and ``partition``), ``batch`` its
+    routed rows on the commit's logical ``fields`` (plus
+    ``PARTITION_COL`` on a partitioned table), each with its own
+    ``_ts``, ``_deleted`` and ``_commit_ver``: a merge's batch rows are
+    stamped ``_commit_ver = next_ver``, a bootstrap file's rows keep the
+    bootstrap version. Returns ``(rows, consumed paths)``; ``rows``
+    carries ``PARTITION_COL`` on a partitioned table, each row in its
+    own partition. The one LWW rule decides every key, so a batch row
+    beats a stored or bootstrap copy iff its ``_ts`` is not older (a
     null ``_ts`` is older than any other).
 
-    ``batch`` None compacts the unit: every file is read and consumed
-    (no Bloom skip), tombstones are kept and each row keeps its own
-    commit version."""
+    ``mode``: ``"cow"`` reads the unit's files (Bloom-skipping files of
+    a multi-file delta-free unit) and rewrites them; ``"mor"`` returns
+    the batch as delta rows; ``"compact"`` reads and consumes every
+    file (no Bloom skip) with the routed rows, if any (``batch`` may be
+    None), keeping tombstones and each row's own commit version."""
     import pyarrow as pa
 
-    if batch is None:
-        partitioned = files[0].partition is not None
-        stored = read_unit_files(table_path, files, fields, partitioned)
-        return resolve_latest_arrow(stored), [f.path for f in files]
-    partitioned = PARTITION_COL in batch.column_names
-    if mor:
+    partitioned = (
+        files[0].partition is not None
+        if batch is None
+        else PARTITION_COL in batch.column_names
+    )
+    if mode == "mor":
         # delta rows in key order, as a resolved unit's are: the file a
         # unit's rows make does not depend on their arrival order
         stored = None
@@ -448,19 +455,22 @@ def merge_unit(table_path, files, batch, fields, next_ver, mor, global_index):
             batch = pa.concat_tables([batch.filter(keep), tombs])
         return batch.sort_by(KEY_COL), []
     read = files
-    if len(files) > 1 and not any(f.kind == "delta" for f in files):
+    if (
+        mode == "cow"
+        and len(files) > 1
+        and not any(f.kind == "delta" for f in files)
+    ):
         # a delta-free unit's files hold disjoint keys, so a file no
         # batch key can be in is carried live untouched; a delta
         # supersedes rows of its unit's base files, so a unit holding
         # one is consumed whole
         read = bloom_hits(files, batch[KEY_COL].to_pylist())
     stored = read_unit_files(table_path, read, fields, partitioned)
-    if stored is None:
-        return resolve_latest_arrow(batch), []
-    # a carried row without a tombstone flag stays live, as the
-    # copy-on-write rewrite has always carried it
-    if DELETED_COL in stored.column_names:
+    cow = mode == "cow" and stored is not None
+    if cow and DELETED_COL in stored.column_names:
+        # a carried row without a tombstone flag stays live, as the
+        # copy-on-write rewrite has always carried it
         stored = _filled(stored, DELETED_COL, False)
-    rows = pa.concat_tables([stored, batch])
+    rows = [t for t in (stored, batch) if t is not None]
+    rows = rows[0] if len(rows) == 1 else pa.concat_tables(rows)
     return resolve_latest_arrow(rows), [f.path for f in read]
-

@@ -19,12 +19,9 @@ except ImportError:  # pragma: no cover
 
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 
-pytestmark = [
-    pytest.mark.slow,  # full-tier suite (see pytest.ini)
-    pytest.mark.skipif(
-        not HAS_HYPOTHESIS, reason="hypothesis not installed"
-    ),
-]
+pytestmark = pytest.mark.skipif(
+    not HAS_HYPOTHESIS, reason="hypothesis not installed"
+)
 
 event = st.tuples(
     st.integers(min_value=0, max_value=5),   # key
