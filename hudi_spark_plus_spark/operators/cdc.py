@@ -4,13 +4,14 @@ The reference implements these as hand-written RDD code invisible to
 Catalyst (BinlogSyncHoodieCommand.scala:241-277); here each step is a
 declarative DataFrame transform so Catalyst plans the whole pipeline:
 
-    envelope from_json -> posexplode(rows) -> md5 key -> window LWW dedup
-    -> upsert/delete filters -> per-table second from_json decode
+    envelope from_json -> posexplode(rows)            (all tables at once)
+    -> md5 key -> window LWW dedup -> from_json decode (one table at a time)
 
-Exactly ONE shuffle in the core pipeline (the dedup window's hash
-partitioning by key) vs the reference's two (groupBy + the per-key list
-materialization it implies). No driver-side row data except the distinct
-table list (N10 — table count << row count by construction).
+The dedup window partitions by key within one table's rows. Under the
+batch collect cap (``operators/sync.py``) those rows are a driver-local,
+single-partition frame and the window needs no exchange; over it, the
+window is the table's one hash exchange. The reference pays two shuffles
+(groupBy + the per-key list materialization it implies).
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from hudi_spark_plus_spark.table.keygen import KEY_COL, OP_COL, TS_COL, record_key_expr
+from hudi_spark_plus_spark.table.keygen import KEY_COL, OP_COL, TS_COL
 
 # Envelope keys (BinlogSyncHoodieCommand.scala:44-52). ``rows`` elements
 # are JSON objects surfaced as raw strings (StringType target keeps the
@@ -78,10 +79,10 @@ def parse_envelopes(df: DataFrame, value_col: str = VALUE_COL) -> DataFrame:
 
 
 def with_record_key(
-    df: DataFrame, key_fields_by_table: dict[tuple[str, str], list[str]],
-    keygen_by_table: dict[tuple[str, str], str] | None = None,
+    df: DataFrame, db: str, table: str, fields: list[str],
+    keygen: str = "composite",
 ) -> DataFrame:
-    """N8: record key from configured per-table key columns.
+    """N8: record key of one table's rows from its configured key columns.
 
     Key column values are extracted from the still-encoded row JSON with
     ``get_json_object`` — cheap, avoids decoding full payloads before
@@ -94,65 +95,33 @@ def with_record_key(
     decoded columns and apply on the LakeTable-direct path
     (table/keygen.py:record_key_expr).
     """
-    keygen_by_table = keygen_by_table or {}
-    key_col: Column | None = None
-    for (db, table), fields in key_fields_by_table.items():
-        vals = [
-            F.coalesce(
-                F.get_json_object(F.col(VALUE_COL), f"$.{f}"), F.lit("null")
-            )
-            for f in fields
-        ]
-        keygen = keygen_by_table.get((db, table), "composite")
-        if keygen == "simple" and len(vals) == 1:
-            this_key = vals[0]
-        else:
-            this_key = F.md5(
-                F.concat_ws("_", F.lit(db), F.lit(table), *vals)
-            )
-        cond = (F.col(DB_COL) == db) & (F.col(TABLE_COL) == table)
-        key_col = (
-            F.when(cond, this_key)
-            if key_col is None
-            else key_col.when(cond, this_key)
-        )
-    if key_col is None:
-        raise ValueError("no table key configuration supplied")
-    return df.withColumn(KEY_COL, key_col)
+    vals = [
+        F.coalesce(F.get_json_object(F.col(VALUE_COL), f"$.{f}"), F.lit("null"))
+        for f in fields
+    ]
+    if keygen == "simple" and len(vals) == 1:
+        key = vals[0]
+    else:
+        key = F.md5(F.concat_ws("_", F.lit(db), F.lit(table), *vals))
+    return df.withColumn(KEY_COL, key)
 
 
-def lww_dedup(
-    df: DataFrame,
-    order_fields: list[str] | None = None,
-    order_exprs: list[Column] | None = None,
-) -> DataFrame:
+def lww_dedup(df: DataFrame, order_fields: list[str] | None = None) -> DataFrame:
     """N9: last-write-wins dedup — keep the latest operation per key.
 
-    Single window shuffle (vs the reference's groupBy + per-key list sort,
+    Single window (vs the reference's groupBy + per-key list sort,
     scala:260-266). Order: envelope timestamp desc, then configured
     payload tie-break fields (extracted from row JSON; ``decimal(38,9)``
     preserves full int64 precision — a double cast would collide values
     above 2^53) desc, then within-envelope position desc.
 
-    ``order_exprs``: prebuilt tie-break Columns (e.g. per-table CASE
-    expressions when one batch carries tables with different tie-break
-    fields) — takes precedence over ``order_fields``.
-
-    The window partitions by (_db, _table, _key) when the routing columns
-    are present: composite keys already embed db/table in the md5, but
-    the "simple" keygen emits the raw column value, so two tables with
-    overlapping simple-key values must not collide in one global window
-    (one table's row would silently be dropped from the batch).
+    ``df`` holds ONE table's rows: the window partitions by ``_key``
+    alone, so two tables whose "simple" keys overlap never meet in it.
     """
     order = [F.col(TS_COL).desc()]
-    if order_exprs:
-        order.extend(c.desc() for c in order_exprs)
-    else:
-        for f in order_fields or []:
-            order.append(tie_break_expr(f).desc())
+    order.extend(tie_break_expr(f).desc() for f in order_fields or [])
     order.append(F.col(POS_COL).desc())
-    parts = [c for c in (DB_COL, TABLE_COL) if c in df.columns] + [KEY_COL]
-    w = Window.partitionBy(*parts).orderBy(*order)
+    w = Window.partitionBy(KEY_COL).orderBy(*order)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
@@ -166,22 +135,6 @@ def tie_break_expr(field: str) -> Column:
     return F.get_json_object(F.col(VALUE_COL), f"$.{field}").cast(
         "decimal(38,9)"
     )
-
-
-def split_ops(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """N11: upsert/delete split — two lazy filters over the same plan."""
-    return df.where(F.col(OP_COL) != DELETE_OP), df.where(F.col(OP_COL) == DELETE_OP)
-
-
-def distinct_tables(df: DataFrame) -> list[tuple[str, str, str]]:
-    """N10: batch table-metadata discovery. The only driver-side collect
-    in the pipeline; bounded by table count, not row count."""
-    rows = (
-        df.select(DB_COL, TABLE_COL, SCHEMA_COL)
-        .distinct()
-        .collect()
-    )
-    return [(r[0], r[1], r[2]) for r in rows]
 
 
 def decode_schema(schema_json: str) -> StructType:

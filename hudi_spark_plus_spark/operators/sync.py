@@ -1,13 +1,20 @@
 """Per-micro-batch CDC sync command (SURVEY §3 "PySpark-native redesign").
 
 The Spark-first rebuild of BinlogSyncHoodieCommand.run
-(BinlogSyncHoodieCommand.scala:220-283): one all-DataFrame pipeline per
-micro-batch —
+(BinlogSyncHoodieCommand.scala:220-283). A micro-batch reads its input
+once:
 
-    repartition (N4) -> persist (N5) -> [retention (N6/Q4-fixed)]
-    -> parse+explode (N7) -> key (N8) -> LWW dedup (N9)
-    -> distinct tables (N10) -> per-table decode (N16-N18)
-    -> optional SQL transformer (N19) -> one-pass LWW merge (H1+H2)
+    [persist (N5) -> retention (N6/Q4-fixed)]
+    -> parse+explode (N7) -> ONE Arrow collect of every table's rows
+    -> per-table names, schemas, max _ts on the driver (N10)
+    -> per table, one local plan: key (N8) -> LWW dedup (N9)
+       -> decode (N16-N18) -> optional SQL transformer (N19)
+       -> one-pass LWW merge (H1+H2), whose batch collect runs the plan
+
+A batch of more than ``LakeTable.MERGE_COLLECT_MAX_ROWS`` rows falls
+back to a distributed source for the same per-table plan: the input
+repartitioned (N4) and persisted (N5), with the metadata from one
+grouped collect.
 
 Deliberate fixes of reference quirks (SURVEY §2.1):
   Q1/Q2 — a misconfigured or empty table logs-and-continues; other tables
@@ -26,6 +33,7 @@ import os
 import threading
 import uuid
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -117,14 +125,8 @@ def sync_batch(
     per table (Q1/Q2 fix). Idempotent per (table, batch_id) via the
     commit log (H5).
     """
-    # N4: unconditional round-robin repartition — probing the current
-    # partition count via df.rdd would force an RDD conversion of the
-    # batch plan on every micro-batch just to sometimes skip one shuffle
-    n_src = cfg.source_parallelism(options)
-    df = df.repartition(n_src)
-
     # Candidate tables are enumerable from the option namespace BEFORE
-    # touching data, so keying/bucketing fold into the one metadata job.
+    # touching data.
     candidates: dict[tuple[str, str], TableConfig] = {}
     config_errors: dict[tuple[str, str], str] = {}
     for db, table in _candidate_tables(options):
@@ -133,42 +135,65 @@ def sync_batch(
         except TableConfigError as ex:
             config_errors[(db, table)] = str(ex)
 
-    df = df.persist()  # N5: plan fans out into retention + N tables
+    cached: list[DataFrame] = []
     try:
         if cfg.keep_binlog(options):
             path = options.get(cfg.BINLOG_PATH)
             if path:
+                df = df.persist()  # N5: retention and the collect read it
+                cached.append(df)
                 write_retention(df, path, batch_id)
             else:
                 log.error("keepbinlog enabled but %s unset", cfg.BINLOG_PATH)
-        # (no separate count(): the metadata collect below is the first
-        # consumer and fills the cache)
 
         records = cdc.parse_envelopes(df)
-        if candidates:
-            keyed = cdc.with_record_key(
-                records,
-                {k: c.record_key_fields for k, c in candidates.items()},
-                {k: c.keygenerator for k, c in candidates.items()},
-            )  # unconfigured tables -> null _key (when-chain falls through)
-        else:
-            keyed = records.withColumn(KEY_COL, F.lit(None).cast("string"))
+        row_cols = [OP_COL, TS_COL, cdc.POS_COL, cdc.VALUE_COL]
+        cap = LakeTable.MERGE_COLLECT_MAX_ROWS
+        # ONE driver collect of every table's rows (N7); the metadata
+        # and each table's slice come from it with no further job
+        rows = records.limit(cap + 1).toArrow()
+        if rows.num_rows <= cap:
+            meta = rows.group_by(
+                [cdc.DB_COL, cdc.TABLE_COL, cdc.SCHEMA_COL]
+            ).aggregate([(TS_COL, "max")])
+            meta_rows = list(zip(*(
+                meta[c].to_pylist()
+                for c in (cdc.DB_COL, cdc.TABLE_COL, cdc.SCHEMA_COL,
+                          f"{TS_COL}_max")
+            )))
+            # the parsed frame's types and nullability, so both sources
+            # commit the same schema
+            row_schema = records.select(*row_cols).schema
 
-        # ONE driver collect (N10 + latest schema per table): grouped
-        # (db, table, schema) with max event ts. Each merge finds the
-        # units it touches in its own batch collect.
-        meta_rows = (
-            keyed.groupBy(
-                F.col(cdc.DB_COL), F.col(cdc.TABLE_COL), F.col(cdc.SCHEMA_COL)
-            )
-            .agg(F.max(TS_COL).alias("mx"))
-            .collect()
-        )
+            def table_rows(tc: TableConfig) -> DataFrame:
+                mine = pc.and_(
+                    pc.equal(rows[cdc.DB_COL], tc.db),
+                    pc.equal(rows[cdc.TABLE_COL], tc.table),
+                )
+                local = rows.filter(mine).select(row_cols)
+                # one partition: the dedup window needs no exchange
+                return spark.createDataFrame(local, row_schema).coalesce(1)
+        else:
+            # N4/N5: past the cap the same per-table plan reads a
+            # repartitioned, persisted input
+            src = df.repartition(cfg.source_parallelism(options)).persist()
+            cached.append(src)
+            records = cdc.parse_envelopes(src)
+            meta_rows = records.groupBy(
+                cdc.DB_COL, cdc.TABLE_COL, cdc.SCHEMA_COL
+            ).agg(F.max(TS_COL)).collect()
+
+            def table_rows(tc: TableConfig) -> DataFrame:
+                return records.where(
+                    (F.col(cdc.DB_COL) == tc.db)
+                    & (F.col(cdc.TABLE_COL) == tc.table)
+                ).select(*row_cols)
         if not meta_rows:
             return {}
 
-        # latest declared in-band schema wins per table (mid-batch schema
-        # change); deterministic tie-break on the schema string
+        # N10: latest declared in-band schema wins per table (mid-batch
+        # schema change), ranked over every row of the table; a
+        # deterministic tie-break on the schema string
         best_schema: dict[tuple[str, str], tuple] = {}
         for r in meta_rows:
             key = (r[0], r[1])
@@ -192,58 +217,31 @@ def sync_batch(
         if not work:
             return status
 
-        # per-table tie-break fields: when every table agrees (the common
-        # case) one plain expression per position suffices; otherwise a
-        # CASE over (db, table) applies each table's own fields within
-        # the single dedup pass
-        field_lists = [tuple(tc.dedup_order_fields) for tc in work.values()]
-        order_exprs = []
-        if len(set(field_lists)) == 1:
-            order_exprs = [cdc.tie_break_expr(f) for f in field_lists[0]]
-        else:
-            max_order = max(len(fl) for fl in field_lists)
-            for i in range(max_order):
-                e = F.lit(None).cast("decimal(38,9)")
-                for (db, table), tc in work.items():
-                    if i < len(tc.dedup_order_fields):
-                        cond = (F.col(cdc.DB_COL) == db) & (
-                            F.col(cdc.TABLE_COL) == table
-                        )
-                        e = F.when(
-                            cond, cdc.tie_break_expr(tc.dedup_order_fields[i])
-                        ).otherwise(e)
-                order_exprs.append(e)
-        survivors = cdc.lww_dedup(
-            keyed.where(F.col(KEY_COL).isNotNull()), order_exprs=order_exprs
-        ).persist()
+        # per-table fan-out: independent Catalyst plans, submitted from
+        # driver threads so table jobs overlap (Spark schedules them
+        # concurrently); error isolation preserved per future (Q1 fix)
+        from concurrent.futures import ThreadPoolExecutor
 
-        try:
-            # per-table fan-out: independent Catalyst plans, submitted from
-            # driver threads so table jobs overlap (Spark schedules them
-            # concurrently); error isolation preserved per future (Q1 fix)
-            from concurrent.futures import ThreadPoolExecutor
+        def run_one(item):
+            (db, table), tc = item
+            name = f"{db}.{table}"
+            try:
+                _sync_one_table(
+                    spark, table_rows(tc), tc, schema_by_table[(db, table)],
+                    batch_id,
+                )
+                return name, "ok"
+            except Exception as ex:  # Q1 fix: isolate per table
+                log.exception("table %s failed in batch %s", name, batch_id)
+                return name, f"skipped: {ex}"
 
-            def run_one(item):
-                (db, table), tc = item
-                name = f"{db}.{table}"
-                try:
-                    _sync_one_table(
-                        spark, survivors, tc, schema_by_table[(db, table)],
-                        batch_id
-                    )
-                    return name, "ok"
-                except Exception as ex:  # Q1 fix: isolate per table
-                    log.exception("table %s failed in batch %s", name, batch_id)
-                    return name, f"skipped: {ex}"
-
-            with ThreadPoolExecutor(max_workers=min(4, len(work))) as ex:
-                for name, st in ex.map(run_one, work.items()):
-                    status[name] = st
-        finally:
-            survivors.unpersist()
+        with ThreadPoolExecutor(max_workers=min(4, len(work))) as ex:
+            for name, st in ex.map(run_one, work.items()):
+                status[name] = st
         return status
     finally:
-        df.unpersist()
+        for d in cached:
+            d.unpersist()
 
 
 def _candidate_tables(options: dict[str, str]) -> set[tuple[str, str]]:
@@ -260,17 +258,19 @@ def _candidate_tables(options: dict[str, str]) -> set[tuple[str, str]]:
 
 def _sync_one_table(
     spark: SparkSession,
-    survivors: DataFrame,
+    rows: DataFrame,
     tc: TableConfig,
     schema_json: str,
     batch_id: int | str,
 ) -> None:
-    """N16-N21 for one (db, table): route, decode, transform, merge."""
-    part = survivors.where(
-        (F.col(cdc.DB_COL) == tc.db) & (F.col(cdc.TABLE_COL) == tc.table)
+    """N8-N21 for one (db, table) over its envelope rows (``_op``,
+    ``_ts``, ``_pos``, ``value``): key, dedup, decode, transform, merge."""
+    keyed = cdc.with_record_key(
+        rows, tc.db, tc.table, tc.record_key_fields, tc.keygenerator
     )
+    survivors = cdc.lww_dedup(keyed, tc.dedup_order_fields)  # N9
     schema = cdc.decode_schema(schema_json)  # N17
-    decoded = cdc.decode_rows(part, schema, tc.json_options)  # N18
+    decoded = cdc.decode_rows(survivors, schema, tc.json_options)  # N18
 
     if tc.transformer_sql:  # N19 — meta cols hidden from user SQL
         user_cols = [c for c in decoded.columns if not c.startswith("_")]
@@ -283,9 +283,7 @@ def _sync_one_table(
         meta = decoded.select(KEY_COL, TS_COL, OP_COL, *tc.record_key_fields)
         decoded = transformed.join(meta, on=tc.record_key_fields, how="inner")
 
-    batch = decoded.select(
-        *[c for c in decoded.columns if c not in (cdc.DB_COL, cdc.TABLE_COL, cdc.SCHEMA_COL, "_pos")]
-    )
+    batch = decoded.drop(cdc.POS_COL)
     lake = _cached_lake(
         spark, tc.path, tc.buckets, tc.partition_fields or None,
         global_index=tc.global_index or None,

@@ -27,8 +27,9 @@ from dataclasses import dataclass, field
 # Global option keys (BinlogSyncHoodieCommand.scala:29-42)
 SOURCE_SHUFFLE_PARALLELISM = "option.source.shuffle.parallelism"
 SOURCE_SHUFFLE_PARALLELISM_DEFAULT = 8
+# accepted for the reference's option surface; each merge sizes its own
+# write (LakeTable._rewrite_units), so no engine path reads it
 SINK_SHUFFLE_PARALLELISM = "option.sink.shuffle.parallelism"
-SINK_SHUFFLE_PARALLELISM_DEFAULT = 2
 KEEP_BINLOG_ENABLE = "option.keepbinlog.enable"
 BINLOG_PATH = "option.binlog.path"
 HOODIE_PATH = "option.hoodie.path"
@@ -204,10 +205,6 @@ def _validated_write_mode(
 
 def source_parallelism(options: dict[str, str]) -> int:
     return int(options.get(SOURCE_SHUFFLE_PARALLELISM, SOURCE_SHUFFLE_PARALLELISM_DEFAULT))
-
-
-def sink_parallelism(options: dict[str, str]) -> int:
-    return int(options.get(SINK_SHUFFLE_PARALLELISM, SINK_SHUFFLE_PARALLELISM_DEFAULT))
 
 
 def keep_binlog(options: dict[str, str]) -> bool:

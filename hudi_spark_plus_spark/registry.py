@@ -181,6 +181,11 @@ _PINNED = [
     # Bootstrap rows ride the per-unit kernel: the full-outer-join merge
     # and the Spark compaction of bootstrap tables are gone. The same 58
     # hashes moved, every one already pinned above.
+    # A sync batch collects its envelope rows once as Arrow and runs one
+    # local plan per table (operators/sync.py, operators/cdc.py): the
+    # metadata groupBy and the cross-table dedup shuffle are gone.
+    # Moved: q-cdc-3, q-cdc-4, q-cdc-partitioned, q-cdc-retention and
+    # q-cdc-transformer, every one already pinned above.
 ]
 
 

@@ -407,3 +407,176 @@ def test_sync_mor_mode_matches_cow(spark, tmp_path):
     # MOR table really has delta files
     lake = LakeTable(spark, f"{tmp_path}/m/db1/ods_db1_t_customer")
     assert "delta" in {f.kind for f in lake.log.live_files()}
+
+
+def _envelope(db, table, op, ts, rows, schema=ROW_SCHEMA):
+    """One raw envelope line; ``rows`` are payload dicts."""
+    import json as _json
+
+    return _json.dumps({
+        "databaseName": db, "tableName": table,
+        "schema": _json.dumps(_json.loads(schema.json())),
+        "type": op, "timestamp": ts,
+        "rows": [_json.dumps(r) for r in rows],
+    })
+
+
+def _row(seq, key_id, col_a, col_b, **extra):
+    return {"seq": seq, "key_id": key_id, "col_a": col_a, "col_b": col_b,
+            **extra}
+
+
+def test_collect_and_fallback_paths_commit_the_same_tables(
+    spark, tmp_path, monkeypatch
+):
+    """The same three batches go through ``sync_batch`` once under the
+    collect cap (one Arrow collect, a local plan per table) and once with
+    the cap at 3 (the repartitioned, persisted fallback; the merges then
+    run in tasks). Status dicts, snapshots, schemas and manifests (paths
+    masked) are equal after every batch."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    wide = StructType(list(ROW_SCHEMA.fields) + [StructField("col_c", StringType())])
+    batches = [
+        [
+            _envelope("db1", "t_customer", "update", 10,
+                      [_row(1, 1, "a", 1.0), _row(2, 2, "b", 2.0)]),
+            # Q5: same key, insert then delete at a larger ts
+            _envelope("db1", "t_customer", "update", 11, [_row(3, 3, "c", 3.0)]),
+            _envelope("db1", "t_customer", "delete", 12, [_row(4, 3, None, None)]),
+            # t_order ties break on col_b, t_customer on seq
+            _envelope("db1", "t_order", "update", 10,
+                      [_row(5, 9, "big", 99.0), _row(6, 9, "small", 1.0)]),
+            _envelope("db2", "t_customer", "update", 10,
+                      [_row(7, 4, "xy", 4.0), _row(8, 5, "zw", 5.0)]),
+            _envelope("db2", "t_order", "update", 10,
+                      [_row(9, 6, "m1", 6.0), _row(10, 7, "m2", 7.0)]),
+            _envelope("db1", "t_mystery", "update", 10, [_row(11, 1, "u", 0.0)]),
+            _envelope("db3", "t_bad", "update", 10, [_row(12, 1, "u", 0.0)]),
+            "{not valid json",
+        ],
+        [
+            # mid-batch schema change: the wider schema at the later ts
+            _envelope("db1", "t_customer", "update", 20, [_row(13, 1, "a2", 1.5)]),
+            _envelope("db1", "t_customer", "update", 21,
+                      [_row(14, 5, "e", 5.0, col_c="NEW")], schema=wide),
+            _envelope("db1", "t_order", "update", 20,
+                      [_row(15, 9, "lo", 1.0), _row(16, 9, "hi", 50.0)]),
+            _envelope("db2", "t_customer", "delete", 20, [_row(17, 4, None, None)]),
+            _envelope("db2", "t_order", "update", 20,
+                      [_row(18, 6, "m1b", 6.5), _row(19, 8, "m3", 8.0)]),
+            "",
+        ],
+        [
+            _envelope("db1", "t_customer", "update", 30, [_row(20, 2, "b3", 2.5)]),
+            _envelope("db2", "t_order", "delete", 30, [_row(21, 7, None, None)]),
+            _envelope("db2", "t_customer", "update", 30, [_row(22, 5, "zz", 5.5)]),
+        ],
+    ]
+
+    def run(root):
+        opts = sync_options(str(root))
+        opts["db1.t_order." + cfg.DEDUP_ORDER_FIELDS] = "col_b"
+        opts["db2.t_customer." + cfg.TRANSFORMER_SQL] = (
+            "SELECT seq, key_id, UPPER(col_a) AS col_a, col_b FROM <SRC>"
+        )
+        opts["db2.t_order." + cfg.WRITE_MODE] = "mor"
+        opts["db3.t_bad." + cfg.RECORDKEY_FIELD] = "key_id"  # no table name
+        seen = []
+        for i, lines in enumerate(batches):
+            df = spark.createDataFrame([(v,) for v in lines], "value string")
+            state = {"status": sync_batch(spark, df, opts, batch_id=i)}
+            for db in ("db1", "db2"):
+                for t in ("t_customer", "t_order"):
+                    lake = LakeTable(spark, f"{root}/{db}/ods_{db}_{t}")
+                    snap = lake.snapshot()
+                    cols = sorted(snap.columns)
+                    state[f"{db}.{t}"] = (
+                        sorted(map(tuple, snap.select(*cols).collect()), key=repr),
+                        lake.log.latest().schema_json,
+                        sorted(
+                            (f.partition or "", f.bucket, f.kind, f.rows,
+                             f.live_rows, f.min_key, f.max_key, f.bloom,
+                             f.bytes, sorted((f.col_stats or {}).items()))
+                            for f in lake.log.live_files()
+                        ),
+                    )
+            seen.append(state)
+        return seen
+
+    collected = run(tmp_path / "collect")
+    monkeypatch.setattr(LakeTable, "MERGE_COLLECT_MAX_ROWS", 3)
+    fallback = run(tmp_path / "fallback")
+    assert fallback == collected
+    first = collected[0]["status"]
+    assert first["db1.t_mystery"].startswith("skipped: no options")
+    assert first["db3.t_bad"].startswith("skipped:") and "missing" in first["db3.t_bad"]
+    assert all(first[f"{db}.{t}"] == "ok" for db in ("db1", "db2")
+               for t in ("t_customer", "t_order"))
+    final = collected[-1]
+    cust = LakeTable(spark, f"{tmp_path}/collect/db1/ods_db1_t_customer")
+    # key 3 deleted in batch 0 (Q5); key 5 arrived with the wide schema
+    assert {r["key_id"]: r["col_c"] for r in cust.snapshot().collect()} == {
+        1: None, 2: None, 5: "NEW"}
+    assert "delta" in {e[2] for e in final["db2.t_order"][2]}
+
+
+def test_batch_schema_is_the_max_ts_schema_over_every_row(spark, tmp_path):
+    """The batch's schema for a table is the max ``(ts, schema string)``
+    over ALL its rows, not over the dedup survivors: here the row that
+    carries the lexicographically larger schema loses its key's dedup,
+    and that schema is still the one committed."""
+    import json as _json
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    wide = StructType(list(ROW_SCHEMA.fields) + [StructField("col_c", StringType())])
+    enc = lambda s: _json.dumps(_json.loads(s.json()))  # noqa: E731
+    assert enc(ROW_SCHEMA) > enc(wide)  # the narrow schema ranks first
+    lines = [
+        _envelope("db1", "t_customer", "update", 20, [_row(1, 1, "narrow", 1.0)]),
+        # same key and ts, larger seq: this row wins the dedup
+        _envelope("db1", "t_customer", "update", 20,
+                  [_row(2, 1, "wide", 2.0, col_c="lost")], schema=wide),
+        _envelope("db1", "t_customer", "update", 5, [_row(3, 2, "old", 3.0)]),
+    ]
+    rank = max((20, enc(ROW_SCHEMA)), (20, enc(wide)), (5, enc(ROW_SCHEMA)))
+    opts = sync_options(str(tmp_path))
+    df = spark.createDataFrame([(v,) for v in lines], "value string")
+    assert sync_batch(spark, df, opts, batch_id=0) == {"db1.t_customer": "ok"}
+    lake = LakeTable(spark, f"{tmp_path}/db1/ods_db1_t_customer", buckets=4)
+    payload = [f for f in lake.schema().fieldNames() if not f.startswith("_")]
+    assert payload == [f.name for f in ROW_SCHEMA.fields] == [
+        f["name"] for f in _json.loads(rank[1])["fields"]
+    ]
+    rows = {r["key_id"]: r["col_a"] for r in lake.snapshot().collect()}
+    assert rows == {1: "wide", 2: "old"}
+
+
+def test_warm_two_table_sync_batch_runs_at_most_three_jobs(spark, tmp_path):
+    """A warm COW ``sync_batch`` of two tables read from one text file:
+    one collect of the envelopes and one batch collect per table's
+    merge, nothing else (no metadata job, no dedup shuffle)."""
+    opts = sync_options(str(tmp_path / "tables"))
+    sc = spark.sparkContext._jsc.sc()
+
+    def batch(i):
+        path = tmp_path / "in" / f"b{i}.txt"
+        path.parent.mkdir(exist_ok=True)
+        path.write_text("\n".join(
+            _envelope("db1", t, "update", 10 * i + 1,
+                      [_row(100 * i + k, k, f"v{i}", float(k)) for k in range(40)])
+            for t in ("t_customer", "t_order")
+        ) + "\n")
+        return spark.read.text(str(path))
+
+    for i in range(2):  # create both tables, then warm up
+        sync_batch(spark, batch(i), opts, batch_id=i)
+    df = batch(2)
+    before = sc.dagScheduler().nextJobId()
+    status = sync_batch(spark, df, opts, batch_id=2)
+    jobs = sc.dagScheduler().nextJobId() - before
+    assert status == {"db1.t_customer": "ok", "db1.t_order": "ok"}
+    assert jobs <= 3, jobs
+    lake = LakeTable(spark, f"{tmp_path}/tables/db1/ods_db1_t_order", buckets=4)
+    assert {r["col_a"] for r in lake.snapshot().collect()} == {"v2"}
