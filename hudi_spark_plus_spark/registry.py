@@ -186,6 +186,12 @@ _PINNED = [
     # metadata groupBy and the cross-table dedup shuffle are gone.
     # Moved: q-cdc-3, q-cdc-4, q-cdc-partitioned, q-cdc-retention and
     # q-cdc-transformer, every one already pinned above.
+    # Appends, overwrites and rewrite_column_type write through the
+    # per-unit kernel's "append" mode (LakeTable._rewrite_units);
+    # LakeTable._write_commit serves z-order clustering alone. The same
+    # 58 hashes moved (among them q-lake-overwrite, q-lake-retype,
+    # q-lake-functional-index, q-lake-partitioned and q-lake-zorder),
+    # every one already pinned above.
 ]
 
 

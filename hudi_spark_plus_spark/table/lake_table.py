@@ -111,7 +111,7 @@ from hudi_spark_plus_spark.table.merge_kernel import (
 )
 
 DELETE_OP = "delete"
-# columns a merge derives itself: never payload
+# columns a write derives itself: never payload
 _MERGE_META = (OP_COL, BUCKET_COL, PARTITION_COL, DELETED_COL, COMMIT_VER_COL)
 
 # Widening lattices for in-band schema evolution (beyond-additive). Only
@@ -404,7 +404,8 @@ def _unit_runs(batch, cols: list[str]):
 
 
 def _write_task(table_path: str, subdir_rel: str, layout: list[str]):
-    """The ``mapInArrow`` body of ``LakeTable._write_commit``: cut the
+    """The ``mapInArrow`` body of z-order clustering's write
+    (``LakeTable._write_commit``): cut the
     task's layout-sorted batches into unit runs (layout columns
     dropped, as a partitioned write stores them in the path) and emit
     one file per run, returning the entries as rows."""
@@ -2389,43 +2390,25 @@ class LakeTable:
         )
 
     def _write_commit(
-        self,
-        out: DataFrame,
-        operation: str,
-        prev,
-        carry,
-        schema_json: str,
-        batch_id: str | None = None,
-        kind: str = "base",
-        parts: int | None = None,
-        shaped: bool = False,
+        self, out: DataFrame, operation: str, prev, carry, schema_json: str
     ) -> list[FileEntry]:
-        """The write path of every data-writing commit but the merge and
-        the compaction (whose kernel writes their files). ``out`` is the
-        LOGICAL frame with its layout columns. It is hash-repartitioned
-        on the layout (into ``parts`` tasks when given, else as many as
-        adaptive execution sizes) and sorted by it within each task;
-        ``shaped=True`` takes the caller's frame as is, which must
-        already hold each task's rows sorted by the layout. Each task
-        writes one file per (partition, bucket) run with
-        ``emit_unit_files`` and returns the files' manifest entries,
-        which ``_publish_written`` checks and publishes with ``carry``.
-        Returns the new entries."""
+        """The write of z-order clustering, the one data-writing commit
+        that does not go through the per-unit kernel: its files are the
+        tasks of ``out``, the LOGICAL frame with its layout columns,
+        range-partitioned on (layout, z-value) and sorted by them within
+        each task. Each task writes one file per (partition, bucket) run
+        with ``emit_unit_files`` and returns the files' manifest
+        entries, which ``_publish_written`` checks and publishes with
+        ``carry``. Returns the new entries."""
         layout = self._layout_cols()
-        df = self._apply_physical(out, schema_json)
-        if not shaped:
-            cols = [F.col(c) for c in layout]
-            df = (
-                df.repartition(parts, *cols) if parts else df.repartition(*cols)
-            ).sortWithinPartitions(*cols)
         _, rel = self.log.new_data_subdir()
-        rows = df.mapInArrow(
+        rows = self._apply_physical(out, schema_json).mapInArrow(
             _write_task(self.path, rel, layout),
             ", ".join(f"{n} {t}" for n, t in _ENTRY_COLS),
         ).collect()
         return self._publish_written(
-            rel, _row_entries(rows, kind), operation, prev, carry,
-            schema_json, batch_id,
+            rel, _row_entries(rows, "base"), operation, prev, carry,
+            schema_json, None,
         )
 
     def _publish_written(
@@ -2447,15 +2430,19 @@ class LakeTable:
         self,
         df: DataFrame,
         batch_id: str | None = None,
-        parallelism: int = 2,
+        parallelism: int | None = None,
         operation: str = "insert",
     ) -> None:
         """Plain partitioned append, no merge (H3). ``df`` must already
         carry _key and _ts columns (use prepare helpers in operators.cdc).
-        Type changes follow the same widening rules as merge — without
-        the check, a batch declaring a different physical type would be
-        written as-is while the committed read schema kept the stored
-        type, breaking every subsequent read of the new file."""
+        Its rows are written as base rows of their units by the per-unit
+        kernel, unresolved (see ``_overwrite_once``). Type changes
+        follow the same widening rules as merge — without the check, a
+        batch declaring a different physical type would be written
+        as-is while the committed read schema kept the stored type,
+        breaking every subsequent read of the new file.
+        ``parallelism``: the number of write tasks; given, the append
+        always runs in tasks, as on ``merge``."""
         self._with_commit_retries(
             lambda: self._overwrite_once(
                 df, batch_id, parallelism, operation, replace=None
@@ -2463,17 +2450,21 @@ class LakeTable:
         )
 
     def bulk_insert(
-        self, df: DataFrame, batch_id: str | None = None, parallelism: int = 8
+        self,
+        df: DataFrame,
+        batch_id: str | None = None,
+        parallelism: int | None = None,
     ) -> None:
-        """H3 bulk_insert: same append path at higher write parallelism
-        (the reference's separate bulkinsert parallelism knob, N15)."""
+        """H3 bulk_insert: ``insert`` under its own operation name;
+        ``parallelism`` is the reference's separate bulkinsert
+        parallelism knob (N15)."""
         self.insert(df, batch_id, parallelism, operation="bulk_insert")
 
     def insert_overwrite(
         self,
         df: DataFrame,
         batch_id: str | None = None,
-        parallelism: int = 2,
+        parallelism: int | None = None,
     ) -> None:
         """Hudi ``insert_overwrite`` (the replacecommit half of the write
         surface the reference's Hudi tables expose beyond the sync's
@@ -2506,7 +2497,7 @@ class LakeTable:
         self,
         df: DataFrame,
         batch_id: str | None = None,
-        parallelism: int = 2,
+        parallelism: int | None = None,
     ) -> None:
         """Hudi ``insert_overwrite_table``: replace the ENTIRE table
         with the batch in one atomic commit (partitioned or not). Prior
@@ -2522,25 +2513,27 @@ class LakeTable:
         self,
         df: DataFrame,
         batch_id: str | None,
-        parallelism: int,
+        parallelism: int | None,
         operation: str,
         replace: str | None,
     ) -> None:
-        """Append ``df`` as new files. ``replace``: None keeps every
-        previous file (insert), "partitions" drops the previous files of
-        the partitions the new files land in, "table" drops them all."""
+        """Append ``df`` as new base files through the per-unit kernel
+        (``_rewrite_units`` in ``"append"`` mode), conformed and stamped
+        as a merge's batch is; a row keeps the frame's own ``_deleted``
+        (else false) and ``_commit_ver`` (else this commit's).
+        ``replace``: None keeps every previous file (insert),
+        "partitions" drops the previous files of the partitions the new
+        files land in, "table" drops them all."""
         if batch_id is not None and self.log.has_batch(batch_id):
             return  # idempotent re-run (H5)
         prev = self.log.latest()
         next_ver = (prev.version + 1) if prev else 1
-        stored = self.schema()
-        if stored is not None:
-            df = self._reconcile_batch_types(df, stored)
-        if DELETED_COL not in df.columns:
-            df = df.withColumn(DELETED_COL, F.lit(False))
-        if COMMIT_VER_COL not in df.columns:
-            df = df.withColumn(COMMIT_VER_COL, F.lit(next_ver).cast("long"))
-        out = self._laid_out(df)
+        b = self._stamped_batch(
+            df,
+            F.col(DELETED_COL) if DELETED_COL in df.columns else F.lit(False),
+            F.col(COMMIT_VER_COL) if COMMIT_VER_COL in df.columns
+            else F.lit(next_ver),
+        )
         live = prev.files if prev else []
         if replace == "table":
             carry = []
@@ -2552,10 +2545,10 @@ class LakeTable:
                 return [f for f in live if f.partition not in replaced]
         else:
             carry = live
-        self._write_commit(
-            out, operation, prev, carry,
-            self._commit_schema_json(out, next_ver), batch_id,
-            parts=parallelism,
+        self._rewrite_units(
+            prev, [], self._commit_schema_json(b, next_ver), operation,
+            batch=b, batch_id=batch_id, parallelism=parallelism,
+            mode="append", carry=carry,
         )
 
     def delete_partitions(
@@ -2946,19 +2939,9 @@ class LakeTable:
                 "files; merge-on-read requires hash-bucketed state — "
                 "use mode='cow' or compact() first"
             )
-        stored = self.schema()
         next_ver = (prev.version + 1) if prev else 1
-        batch = self._laid_out(batch)
-        fields = (
-            self._merge_payload_fields(batch, stored)
-            if stored is not None
-            else [f for f in batch.schema.fields if f.name not in _MERGE_META]
-        )
-        b = _conform(batch, fields).select(
-            *[f.name for f in fields],
-            (F.col(OP_COL) == DELETE_OP).alias(DELETED_COL),
-            F.lit(next_ver).cast("long").alias(COMMIT_VER_COL),
-            *self._layout_cols(),
+        b = self._stamped_batch(
+            batch, F.col(OP_COL) == DELETE_OP, F.lit(next_ver)
         )
         files = live
         if boot:
@@ -2974,30 +2957,52 @@ class LakeTable:
         self._rewrite_units(
             prev, files, self._commit_schema_json(b, next_ver), "merge",
             batch=b, batch_id=batch_id, parallelism=parallelism,
-            mor=mode == "mor" and prev is not None,
+            mode=mode if prev is not None else "cow",
+        )
+
+    def _stamped_batch(self, batch: DataFrame, deleted, ver) -> DataFrame:
+        """A write's batch as the kernel takes it: laid out, its payload
+        conformed to the commit's fields (``_widened_fields`` of the
+        batch's and the stored ones), and stamped with the ``deleted``
+        and ``ver`` columns as ``_deleted`` and ``_commit_ver``."""
+        stored = self.schema()
+        batch = self._laid_out(batch)
+        fields = self._widened_fields(
+            [f for f in batch.schema.fields if f.name not in _MERGE_META],
+            [f for f in stored or () if f.name not in _MERGE_META],
+        )
+        return _conform(batch, fields).select(
+            *[f.name for f in fields],
+            deleted.cast("boolean").alias(DELETED_COL),
+            ver.cast("long").alias(COMMIT_VER_COL),
+            *self._layout_cols(),
         )
 
     def _rewrite_units(self, prev, files, schema_json, operation, batch=None,
-                       batch_id=None, parallelism=None, mor=False):
-        """The one unit rewrite of merge and compaction, through the
-        per-unit kernel (``merge_kernel.merge_unit``). ``files`` (live
-        in ``prev``) are grouped into units: (partition, bucket), or the
-        bucket across their partitions on a global-index table. A
+                       batch_id=None, parallelism=None, mode="cow",
+                       carry=None):
+        """The one unit rewrite of merge, append and compaction, through
+        the per-unit kernel (``merge_kernel.merge_unit``). ``files``
+        (live in ``prev``) are grouped into units: (partition, bucket),
+        or the bucket across their partitions on a global-index table. A
         metadata-only bootstrap file among them is in no unit: its rows
         are read, routed by key to their units like batch rows (under
         their own ``_ts`` and version) and the file is consumed. With a
         ``batch`` (conformed, stamped, laid out) each unit it touches is
-        merged, as delta rows if ``mor``; without one every unit of
-        ``files`` is compacted. Publishes ``live - consumed + new`` and
-        returns the new entries.
+        written in the kernel ``mode``: ``"cow"`` merges it, ``"mor"``
+        appends it as delta rows, ``"append"`` as base rows, reading
+        nothing; without one every unit of ``files`` is compacted.
+        Publishes ``carry`` (a list, or a function of the new entries,
+        as ``_publish_written`` takes it; default ``live - consumed``)
+        plus the new entries, and returns the new entries.
 
         Placement: a batch is collected with ONE ``toArrow`` of at most
         ``MERGE_COLLECT_MAX_ROWS + 1`` rows. The kernel runs on the
         driver when the batch fits the cap (a compaction has none unless
         it routes bootstrap rows), the live bytes it may read (its
-        units' files; none for a plain MOR append) are at most
-        ``advisoryPartitionSizeInBytes`` — what adaptive execution would
-        coalesce into one task anyway — and the caller gave no
+        units' files; none for a plain MOR append or an append) are at
+        most ``advisoryPartitionSizeInBytes`` — what adaptive execution
+        would coalesce into one task anyway — and the caller gave no
         ``parallelism``. Otherwise it runs in ONE ``mapInArrow`` job:
         over the batch hash-repartitioned on the unit, or over a frame
         of the compaction's units in ``ceil(bytes / advisory)`` slices
@@ -3008,8 +3013,11 @@ class LakeTable:
 
         live = prev.files if prev else []
         next_ver = (prev.version + 1) if prev else 1
-        mode = "compact" if batch is None else "mor" if mor else "cow"
-        relocating = mor and self.global_index and bool(self.partition_fields)
+        if batch is None:
+            mode = "compact"
+        relocating = (
+            mode == "mor" and self.global_index and bool(self.partition_fields)
+        )
         unit_cols = (
             self._layout_cols()
             if self.partition_fields and not self.global_index
@@ -3053,7 +3061,7 @@ class LakeTable:
             if rows.num_rows <= self.MERGE_COLLECT_MAX_ROWS:
                 units = set(zip(*(rows[c].to_pylist() for c in unit_cols)))
         reads = 0
-        if units is not None and (relocating or not mor):
+        if units is not None and (relocating or mode in ("cow", "compact")):
             reads = sum(
                 f.bytes or 0 for u in units for f in files_by_unit.get(u, ())
             )
@@ -3062,7 +3070,7 @@ class LakeTable:
             units is not None and parallelism is None and reads <= advisory
         )
         rel = os.path.join(self.log.DATA_DIR, uuid.uuid4().hex)
-        kind = "delta" if mor else "base"
+        kind = "delta" if mode == "mor" else "base"
         if on_driver:
             runs = _unit_runs(
                 rows.sort_by([(c, "ascending") for c in unit_cols]), unit_cols
@@ -3106,10 +3114,11 @@ class LakeTable:
             new_files = _row_entries(
                 [r for r in out if not r["consumed"]], kind
             )
-        gone = set(consumed)
+        if carry is None:
+            gone = set(consumed)
+            carry = [f for f in live if f.path not in gone]
         return self._publish_written(
-            rel, new_files, operation, prev,
-            [f for f in live if f.path not in gone], schema_json, batch_id,
+            rel, new_files, operation, prev, carry, schema_json, batch_id,
         )
 
     def _advisory_bytes(self) -> int:
@@ -3143,30 +3152,6 @@ class LakeTable:
             out.append(StructField(f.name, t, True))
         return out + [StructField(c, t, True) for c, t in s_types.items()]
 
-    def _merge_payload_fields(
-        self, batch: DataFrame, stored: StructType
-    ) -> list[StructField]:
-        """A merge's payload columns at their committed types: the COW
-        merge plan casts both sides to them, and the empty-batch fast
-        path commits them without building the plan."""
-        return self._widened_fields(
-            [f for f in batch.schema.fields if f.name not in _MERGE_META],
-            [f for f in stored.fields if f.name not in _MERGE_META],
-        )
-
-    def _reconcile_batch_types(
-        self, b: DataFrame, stored: StructType
-    ) -> DataFrame:
-        """Cast an append batch's columns to the widened types (the
-        insert and MOR write paths; raises on changes with no
-        widening)."""
-        mine = [
-            f for f in b.schema.fields
-            if f.name not in (OP_COL, BUCKET_COL, PARTITION_COL)
-        ]
-        widened = self._widened_fields(mine, stored.fields)
-        return _conform(b, widened[: len(mine)])
-
     def _commit_schema_json(self, df: DataFrame, next_ver: int) -> str:
         """Committed schema after a write: active stored fields with
         types widened to ``df``'s (the write paths have already cast both
@@ -3179,15 +3164,7 @@ class LakeTable:
         full = self._stored_schema()
         if full is None:
             return self._payload_schema_json(df)
-        return self._commit_schema_json_fields(df.schema.fields, full, next_ver)
-
-    def _commit_schema_json_fields(
-        self, out_fields: list[StructField], full: StructType, next_ver: int
-    ) -> str:
-        """Core of ``_commit_schema_json`` over the would-be-written
-        frame's schema FIELDS — shared with the empty-batch fast path,
-        which derives the same fields (``_merge_payload_fields``)
-        without building the merge plan."""
+        out_fields = df.schema.fields
         d_types = {f.name: f.dataType.simpleString() for f in out_fields}
         by_name = {f.name: f for f in out_fields}
         used_phys = {self._physical_of(f) for f in full.fields}

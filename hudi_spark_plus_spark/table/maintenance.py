@@ -187,9 +187,10 @@ def rewrite_column_type(
     form is a rewrite of every live file, which is a scheduled
     maintenance decision, never an ingest side effect. Mirrors
     ``compact``: one pass over the snapshot (tombstones included, MOR
-    deltas folded), same bucket/partition layout, one commit replacing
-    the full file set; physical column names are unchanged, so column
-    mapping is untouched.
+    deltas folded), cast in Spark and appended through the per-unit
+    kernel (``LakeTable._rewrite_units``) in the same bucket/partition
+    layout, one commit replacing the full file set; physical column
+    names are unchanged, so column mapping is untouched.
 
     LOSSLESS BY PROOF per row: before writing, every non-null value
     must survive the round trip ``cast(cast(v AS new) AS old) == v``
@@ -269,9 +270,12 @@ def rewrite_column_type(
                 for f in stored.fields
             ]
         )
-        files = lake._write_commit(
-            lake._laid_out(snap.withColumn(col, casted)),
-            "retype", prev, [], new_schema.json(),
+        # the cast column already has the target type, so the kernel's
+        # projection keeps Spark's try_cast results as they are
+        files = lake._rewrite_units(
+            prev, [], new_schema.json(), "retype",
+            batch=lake._laid_out(snap.withColumn(col, casted)),
+            mode="append", carry=[],
         )
         return {
             "files_before": len(prev.files),

@@ -25,7 +25,10 @@ their units like batch rows, each keeping its own ``_ts`` and version.
 Merge-on-read appends the conformed batch rows as delta rows and reads
 nothing, except on a global-index table, where ``relocate`` drops batch
 losers and tombstones each moved record's old-partition copy. The
-``lake-table`` format writer runs the same ``relocate``. Compaction is
+``lake-table`` format writer runs the same ``relocate``. An append
+(``insert``, ``bulk_insert``, the two overwrites, ``rewrite_column_type``)
+is merge-on-read without relocation that writes base files: its batch
+rows are the unit's new rows, unresolved, and no file is read. Compaction is
 the merge of a unit with no batch rows (only routed bootstrap rows, if
 any): every file of the unit is read, resolved and consumed, tombstones
 kept, each row under its own commit version.
@@ -433,9 +436,11 @@ def merge_unit(table_path, files, batch, fields, next_ver, mode, global_index):
 
     ``mode``: ``"cow"`` reads the unit's files (Bloom-skipping files of
     a multi-file delta-free unit) and rewrites them; ``"mor"`` returns
-    the batch as delta rows; ``"compact"`` reads and consumes every
-    file (no Bloom skip) with the routed rows, if any (``batch`` may be
-    None), keeping tombstones and each row's own commit version."""
+    the batch as delta rows; ``"append"`` returns the batch as it is,
+    unresolved, as the unit's new base rows (insert, overwrite, retype);
+    ``"compact"`` reads and consumes every file (no Bloom skip) with the
+    routed rows, if any (``batch`` may be None), keeping tombstones and
+    each row's own commit version."""
     import pyarrow as pa
 
     partitioned = (
@@ -443,11 +448,11 @@ def merge_unit(table_path, files, batch, fields, next_ver, mode, global_index):
         if batch is None
         else PARTITION_COL in batch.column_names
     )
-    if mode == "mor":
-        # delta rows in key order, as a resolved unit's are: the file a
-        # unit's rows make does not depend on their arrival order
+    if mode in ("mor", "append"):
+        # rows in key order, as a resolved unit's are: the file a unit's
+        # rows make does not depend on their arrival order
         stored = None
-        if global_index and partitioned:
+        if mode == "mor" and global_index and partitioned:
             hit = bloom_hits(files, batch[KEY_COL].to_pylist())
             stored = read_unit_files(table_path, hit, fields, partitioned)
         if stored is not None:

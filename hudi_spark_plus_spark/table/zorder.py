@@ -324,7 +324,7 @@ def zorder_cluster_table(
             )
             .sortWithinPartitions(*layout, "_z")
             .drop("_z"),
-            "cluster", prev, carry, prev.schema_json, shaped=True,
+            "cluster", prev, carry, prev.schema_json,
         )
 
     # a lost publish race recomputes against the winner's timeline, and

@@ -1,10 +1,13 @@
-"""The one write-and-publish path every data-writing commit takes
-(``LakeTable._write_commit``) and the guarantees it owns: a stray
-part-file in a commit's data subdir is refused rather than published,
-a rewrite that loses the publish race to a concurrent merge is
-recomputed rather than publishing a stale live set, a replayed batch
-costs no Spark job, every manifest entry the write tasks build agrees
-with its file, and Spark reads back exactly the rows it wrote.
+"""The write-and-publish guarantees every data-writing commit keeps —
+the per-unit kernel's (``LakeTable._rewrite_units``: merges,
+compactions, appends, overwrites and retypes) and z-order clustering's
+(``LakeTable._write_commit``): a stray part-file in a commit's data
+subdir is refused rather than published, a rewrite that loses the
+publish race to a concurrent merge is recomputed rather than publishing
+a stale live set, a replayed batch costs no Spark job, a tiny append
+costs one, an append writes the same files on the driver as in tasks,
+every manifest entry the write builds agrees with its file, and Spark
+reads back exactly the rows it wrote.
 """
 
 import datetime as dt
@@ -20,7 +23,10 @@ import hudi_spark_plus_spark.table.lake_table as lt
 from hudi_spark_plus_spark.functions.signature_store import SignatureStore
 from hudi_spark_plus_spark.table.bloom import KeyBloom
 from hudi_spark_plus_spark.table.lake_table import LakeTable, WriteCountMismatch
-from hudi_spark_plus_spark.table.maintenance import compact
+from hudi_spark_plus_spark.table.maintenance import (
+    compact,
+    rewrite_column_type,
+)
 from hudi_spark_plus_spark.table.zorder import zorder_cluster_table
 
 SCHEMA = "_key string, _ts long, _op string, val string, a int, b int"
@@ -62,8 +68,11 @@ def plant_copy(table_path, subdir_rel):
     return dst
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_stray_part_file_is_refused(spark, tmp_path, monkeypatch, mode):
+@pytest.mark.parametrize(
+    "write",
+    ["cow", "mor", "insert", "insert_overwrite_table", "rewrite_column_type"],
+)
+def test_stray_part_file_is_refused(spark, tmp_path, monkeypatch, write):
     t = LakeTable(spark, str(tmp_path / "t"), buckets=2)
     t.merge(rows(spark, range(20)), "b0")
     before = t.log.latest()
@@ -71,8 +80,14 @@ def test_stray_part_file_is_refused(spark, tmp_path, monkeypatch, mode):
     between_write_and_glob(
         monkeypatch, lambda p, rel: planted.append(plant_copy(p, rel))
     )
+    batch = rows(spark, range(5), ts=2, tag="w")
     with pytest.raises(WriteCountMismatch):
-        t.merge(rows(spark, range(5), ts=2, tag="w"), "b1", mode=mode)
+        if write in ("cow", "mor"):
+            t.merge(batch, "b1", mode=write)
+        elif write == "rewrite_column_type":
+            rewrite_column_type(t, "a", "bigint")
+        else:
+            getattr(t, write)(batch, "b1")
     t.log.invalidate()
     assert t.log.latest().version == before.version
     assert not t.log.has_batch("b1")
@@ -131,6 +146,91 @@ def test_signature_ingest_replay_runs_no_spark_job(spark, tmp_path):
     store.ingest(docs, "doc_id", "text", "b1")
     assert sched.nextJobId() == before
     assert store.table.log.latest().version == version
+
+
+def masked_manifest(t):
+    """The live set with paths masked."""
+    return sorted(
+        (f.partition or "", f.bucket, f.kind, f.rows, f.live_rows,
+         f.min_key, f.max_key, f.bloom, f.bytes,
+         sorted((f.col_stats or {}).items()))
+        for f in t.log.live_files()
+    )
+
+
+@pytest.mark.parametrize(
+    "op", ["insert", "insert_overwrite", "insert_overwrite_table"]
+)
+def test_append_placements_write_the_same_files(spark, tmp_path, op):
+    """An append-shaped write runs on the driver by default and in
+    tasks with ``parallelism=2``. On a partitioned table whose
+    partition value needs escaping, with a batch that widens a stored
+    ``int`` to ``bigint``, the two write equal manifests (paths
+    masked), snapshots and committed schemas."""
+
+    def run(name, parallelism):
+        t = LakeTable(spark, str(tmp_path / name), buckets=2,
+                      partition_fields=["d"])
+        t.merge(spark.createDataFrame(
+            [(f"k{i}", 1, "upsert", i, "a/b c" if i % 2 else "x")
+             for i in range(12)],
+            "_key string, _ts long, _op string, n int, d string",
+        ), "b0")
+        getattr(t, op)(spark.createDataFrame(
+            [(f"k{i}", 2, "upsert", 2**40 + i, "a/b c" if i % 2 else "y")
+             for i in range(8, 20)],
+            "_key string, _ts long, _op string, n bigint, d string",
+        ), "b1", parallelism=parallelism)
+        snap = sorted(map(tuple, t.snapshot().collect()))
+        return masked_manifest(t), snap, t.log.latest().schema_json
+
+    on_driver = run("driver", None)
+    assert run("tasks", 2) == on_driver
+    assert '"name":"n","nullable":true,"type":"long"' in on_driver[2]
+    assert {r[0] for r in on_driver[1]} >= {f"k{i}" for i in range(8, 20)}
+
+
+def test_append_keeps_supplied_stamps_and_inserted_deletes_stay_live(
+    spark, tmp_path
+):
+    """An append is not a merge: a row whose ``_op`` is ``delete`` is
+    inserted live, and a frame's own ``_deleted`` and ``_commit_ver``
+    are stored as given."""
+    t = LakeTable(spark, str(tmp_path / "t"), buckets=2)
+    t.insert(spark.createDataFrame(
+        [("k0", 1, "delete", "a"), ("k1", 1, "upsert", "b")],
+        "_key string, _ts long, _op string, val string",
+    ), "b0")
+    assert sorted(r["_key"] for r in t.snapshot().collect()) == ["k0", "k1"]
+    t.insert(spark.createDataFrame(
+        [("k2", 1, "c", True, 7), ("k3", 1, "d", False, 7)],
+        "_key string, _ts long, val string, _deleted boolean, "
+        "_commit_ver long",
+    ), "b1")
+    got = {
+        r["_key"]: (r["_deleted"], r["_commit_ver"])
+        for r in t.snapshot(include_deleted=True).collect()
+    }
+    assert got == {"k0": (False, 1), "k1": (False, 1), "k2": (True, 7),
+                   "k3": (False, 7)}
+    assert sorted(r["_key"] for r in t.snapshot().collect()) == [
+        "k0", "k1", "k3"
+    ]
+
+
+@pytest.mark.parametrize("op", ["insert", "insert_overwrite_table"])
+def test_warm_tiny_append_runs_one_job(spark, tmp_path, op):
+    """A warm 10-row append into a 2-bucket, 2 000-row table launches
+    one Spark job: its batch collect. The files are written on the
+    driver."""
+    t = LakeTable(spark, str(tmp_path / "t"), buckets=2)
+    t.merge(rows(spark, range(2000)), "b0")
+    getattr(t, op)(rows(spark, range(10), ts=2), "b1")  # warm-up
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    getattr(t, op)(rows(spark, range(10, 20), ts=3), "b2")
+    assert sched.nextJobId() - before == 1
+    assert t.log.latest().operation == op
 
 
 def test_entries_match_their_files(spark, tmp_path):
