@@ -17,6 +17,10 @@ input Arrow cannot represent (rare nested shapes) falls back to the
 classic path, and a frame whose resulting schema differs from the
 requested one is rebuilt classically too — callers are guaranteed
 bit-identical schema + values either way.
+
+``collect_arrow`` is the way back: ``df.limit(n).toArrow()`` with no
+Spark job when the frame is such local data, which is how a small sync
+batch reaches its merge.
 """
 
 from __future__ import annotations
@@ -59,3 +63,44 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     except Exception:
         pass
     return spark.createDataFrame(rows, struct)
+
+
+def max_local_rows(spark: SparkSession) -> int:
+    """The most rows a frame may hold to be collected with no Spark job:
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``, the size of one
+    Arrow batch."""
+    return int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+
+def collect_arrow(df: DataFrame, limit: int):
+    """``df.limit(limit).toArrow()``, with no Spark job for local data.
+
+    While planning, Spark's ``ConvertToLocalRelation`` evaluates
+    projections, filters and limits over local data (a frame built with
+    ``createDataFrame``). When the optimized plan is one
+    ``LocalRelation`` of at most ``max_local_rows`` rows, ``collect()``
+    returns its rows without a job and they are converted to Arrow here,
+    under the schema ``toArrow`` gives; only a map's entries may come in
+    another order, as ``collect()`` returns a map as a hash map (Spark
+    maps are unordered). Any other plan is collected with
+    ``toArrow()``."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    df = df.limit(limit)
+    spark = df.sparkSession
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if (
+        plan.getClass().getSimpleName() != "LocalRelation"
+        or plan.data().size() > max_local_rows(spark)
+    ):
+        return df.toArrow()
+    large = spark._jconf.arrowUseLargeVarTypes()
+    schema = to_arrow_schema(
+        df.schema, error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=large,
+    )
+    rows = df.collect()
+    if not rows:
+        return schema.empty_table()
+    return LocalDataToArrowConversion.convert(rows, df.schema, large).cast(schema)

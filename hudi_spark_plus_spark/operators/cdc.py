@@ -5,13 +5,17 @@ Catalyst (BinlogSyncHoodieCommand.scala:241-277); here each step is a
 declarative DataFrame transform so Catalyst plans the whole pipeline:
 
     envelope from_json -> posexplode(rows)            (all tables at once)
-    -> md5 key -> window LWW dedup -> from_json decode (one table at a time)
+    -> md5 key -> LWW dedup -> from_json decode        (one table at a time)
 
-The dedup window partitions by key within one table's rows. Under the
-batch collect cap (``operators/sync.py``) those rows are a driver-local,
-single-partition frame and the window needs no exchange; over it, the
-window is the table's one hash exchange. The reference pays two shuffles
-(groupBy + the per-key list materialization it implies).
+The LWW order is defined once (``lww_order``) and applied two ways. A
+table's slice of at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows (``operators/sync.py``) is deduplicated on the driver
+(``lww_dedup_arrow``) over the key and tie-break values of a projection
+that Spark evaluates while planning, so it runs no job. A larger slice
+goes through the Spark window (``lww_dedup``): single-partition, with no
+exchange, under the batch collect cap; over the cap the window is the
+table's one hash exchange. The reference pays two shuffles (groupBy +
+the per-key list materialization it implies).
 """
 
 from __future__ import annotations
@@ -78,10 +82,9 @@ def parse_envelopes(df: DataFrame, value_col: str = VALUE_COL) -> DataFrame:
     return x
 
 
-def with_record_key(
-    df: DataFrame, db: str, table: str, fields: list[str],
-    keygen: str = "composite",
-) -> DataFrame:
+def record_key(
+    db: str, table: str, fields: list[str], keygen: str = "composite"
+) -> Column:
     """N8: record key of one table's rows from its configured key columns.
 
     Key column values are extracted from the still-encoded row JSON with
@@ -100,27 +103,34 @@ def with_record_key(
         for f in fields
     ]
     if keygen == "simple" and len(vals) == 1:
-        key = vals[0]
-    else:
-        key = F.md5(F.concat_ws("_", F.lit(db), F.lit(table), *vals))
-    return df.withColumn(KEY_COL, key)
+        return vals[0]
+    return F.md5(F.concat_ws("_", F.lit(db), F.lit(table), *vals))
+
+
+def lww_order(order_fields: list[str] | None = None) -> list[tuple[str, Column]]:
+    """The batch last-write-wins order, most significant key first, as
+    ``(name, value)`` pairs: envelope timestamp, then the configured
+    payload tie-break fields (``tie_break_expr``, named ``_tb<i>``),
+    then within-envelope position. Every key sorts descending with nulls
+    last, and the first row of a key wins."""
+    return (
+        [(TS_COL, F.col(TS_COL))]
+        + [(f"_tb{i}", tie_break_expr(f)) for i, f in enumerate(order_fields or [])]
+        + [(POS_COL, F.col(POS_COL))]
+    )
 
 
 def lww_dedup(df: DataFrame, order_fields: list[str] | None = None) -> DataFrame:
-    """N9: last-write-wins dedup — keep the latest operation per key.
+    """N9: last-write-wins dedup — keep the latest operation per key, in
+    ``lww_order``.
 
     Single window (vs the reference's groupBy + per-key list sort,
-    scala:260-266). Order: envelope timestamp desc, then configured
-    payload tie-break fields (extracted from row JSON; ``decimal(38,9)``
-    preserves full int64 precision — a double cast would collide values
-    above 2^53) desc, then within-envelope position desc.
+    scala:260-266).
 
     ``df`` holds ONE table's rows: the window partitions by ``_key``
     alone, so two tables whose "simple" keys overlap never meet in it.
     """
-    order = [F.col(TS_COL).desc()]
-    order.extend(tie_break_expr(f).desc() for f in order_fields or [])
-    order.append(F.col(POS_COL).desc())
+    order = [v.desc_nulls_last() for _, v in lww_order(order_fields)]
     w = Window.partitionBy(KEY_COL).orderBy(*order)
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -129,10 +139,36 @@ def lww_dedup(df: DataFrame, order_fields: list[str] | None = None) -> DataFrame
     )
 
 
+def lww_dedup_arrow(rows, order: list[str]):
+    """``lww_dedup`` on the driver: ``rows`` is an Arrow table with
+    ``_key`` and each ``lww_order`` value under its name; ``order`` is
+    those names, in ``lww_order``'s order. Returns the winning row of
+    each key, in key order. The sort is stable: of rows that tie on
+    every key, the first in input order wins."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    idx = pc.sort_indices(
+        rows,
+        sort_keys=[(KEY_COL, "ascending")] + [(n, "descending") for n in order],
+        null_placement="at_end",
+    )
+    keys = rows[KEY_COL].take(idx)
+    if len(keys) == 0:
+        return rows
+    first = pa.concat_arrays([
+        pa.array([True]),
+        pc.not_equal(keys[1:], keys[:-1]).combine_chunks(),
+    ])
+    return rows.take(idx.filter(first))
+
+
 def tie_break_expr(field: str) -> Column:
     """Numeric tie-break value from the encoded row JSON (null for
-    non-numeric — falls through to the position tie-break)."""
-    return F.get_json_object(F.col(VALUE_COL), f"$.{field}").cast(
+    absent or non-numeric values — they fall through to the position
+    tie-break). ``decimal(38,9)`` keeps full int64 precision: a double
+    would collide values above 2^53."""
+    return F.get_json_object(F.col(VALUE_COL), f"$.{field}").try_cast(
         "decimal(38,9)"
     )
 

@@ -2,19 +2,27 @@
 
 The Spark-first rebuild of BinlogSyncHoodieCommand.run
 (BinlogSyncHoodieCommand.scala:220-283). A micro-batch reads its input
-once:
+once, in one Spark job:
 
     [persist (N5) -> retention (N6/Q4-fixed)]
-    -> parse+explode (N7) -> ONE Arrow collect of every table's rows
+    -> coalesce(1) -> parse+explode (N7) -> ONE Arrow collect of every
+       table's rows
     -> per-table names, schemas, max _ts on the driver (N10)
-    -> per table, one local plan: key (N8) -> LWW dedup (N9)
-       -> decode (N16-N18) -> optional SQL transformer (N19)
-       -> one-pass LWW merge (H1+H2), whose batch collect runs the plan
+    -> per table: key (N8) -> LWW dedup (N9) -> decode (N16-N18)
+       -> optional SQL transformer (N19) -> one-pass LWW merge (H1+H2)
+
+A table's slice of at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows runs no further job: its key and tie-break values come from a
+projection that Spark evaluates while planning, the LWW dedup runs in
+pyarrow on the driver (``cdc.lww_dedup_arrow``), and the merge collects
+its batch from Spark's local plan (``localdf.collect_arrow``). A larger
+slice keeps a local Spark plan (key, window dedup, decode) whose batch
+collect is the table's one job; a transformer whose SQL does not fold
+into local data runs one job too.
 
 A batch of more than ``LakeTable.MERGE_COLLECT_MAX_ROWS`` rows falls
-back to a distributed source for the same per-table plan: the input
-repartitioned (N4) and persisted (N5), with the metadata from one
-grouped collect.
+back to a distributed source for the Spark plan: the input repartitioned
+(N4) and persisted (N5), with the metadata from one grouped collect.
 
 Deliberate fixes of reference quirks (SURVEY §2.1):
   Q1/Q2 — a misconfigured or empty table logs-and-continues; other tables
@@ -36,7 +44,9 @@ import uuid
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
+from hudi_spark_plus_spark import localdf
 from hudi_spark_plus_spark.operators import cdc
 from hudi_spark_plus_spark.plans import config as cfg
 from hudi_spark_plus_spark.plans.config import TableConfig, TableConfigError
@@ -146,7 +156,8 @@ def sync_batch(
             else:
                 log.error("keepbinlog enabled but %s unset", cfg.BINLOG_PATH)
 
-        records = cdc.parse_envelopes(df)
+        # one partition: the cap's limit then needs no exchange
+        records = cdc.parse_envelopes(df.coalesce(1))
         row_cols = [OP_COL, TS_COL, cdc.POS_COL, cdc.VALUE_COL]
         cap = LakeTable.MERGE_COLLECT_MAX_ROWS
         # ONE driver collect of every table's rows (N7); the metadata
@@ -164,18 +175,22 @@ def sync_batch(
             # the parsed frame's types and nullability, so both sources
             # commit the same schema
             row_schema = records.select(*row_cols).schema
+            local_max = localdf.max_local_rows(spark)
 
-            def table_rows(tc: TableConfig) -> DataFrame:
+            def survivors(tc: TableConfig) -> DataFrame:
                 mine = pc.and_(
                     pc.equal(rows[cdc.DB_COL], tc.db),
                     pc.equal(rows[cdc.TABLE_COL], tc.table),
                 )
                 local = rows.filter(mine).select(row_cols)
+                frame = spark.createDataFrame(local, row_schema)
+                if local.num_rows <= local_max:
+                    return _dedup_on_driver(spark, local, frame, tc)
                 # one partition: the dedup window needs no exchange
-                return spark.createDataFrame(local, row_schema).coalesce(1)
+                return _dedup_in_spark(frame.coalesce(1), tc)
         else:
-            # N4/N5: past the cap the same per-table plan reads a
-            # repartitioned, persisted input
+            # N4/N5: past the cap the Spark plan reads a repartitioned,
+            # persisted input
             src = df.repartition(cfg.source_parallelism(options)).persist()
             cached.append(src)
             records = cdc.parse_envelopes(src)
@@ -183,11 +198,11 @@ def sync_batch(
                 cdc.DB_COL, cdc.TABLE_COL, cdc.SCHEMA_COL
             ).agg(F.max(TS_COL)).collect()
 
-            def table_rows(tc: TableConfig) -> DataFrame:
-                return records.where(
+            def survivors(tc: TableConfig) -> DataFrame:
+                return _dedup_in_spark(records.where(
                     (F.col(cdc.DB_COL) == tc.db)
                     & (F.col(cdc.TABLE_COL) == tc.table)
-                ).select(*row_cols)
+                ).select(*row_cols), tc)
         if not meta_rows:
             return {}
 
@@ -227,7 +242,7 @@ def sync_batch(
             name = f"{db}.{table}"
             try:
                 _sync_one_table(
-                    spark, table_rows(tc), tc, schema_by_table[(db, table)],
+                    spark, survivors(tc), tc, schema_by_table[(db, table)],
                     batch_id,
                 )
                 return name, "ok"
@@ -256,19 +271,54 @@ def _candidate_tables(options: dict[str, str]) -> set[tuple[str, str]]:
     return out
 
 
+def _record_key(tc: TableConfig):
+    """N8: the record key of one table's envelope rows."""
+    return cdc.record_key(
+        tc.db, tc.table, tc.record_key_fields, tc.keygenerator
+    )
+
+
+def _dedup_in_spark(rows: DataFrame, tc: TableConfig) -> DataFrame:
+    """N8-N9 in Spark: key, then the window LWW dedup."""
+    keyed = rows.withColumn(KEY_COL, _record_key(tc))
+    return cdc.lww_dedup(keyed, tc.dedup_order_fields).drop(cdc.POS_COL)
+
+
+def _dedup_on_driver(
+    spark: SparkSession, local, frame: DataFrame, tc: TableConfig
+) -> DataFrame:
+    """N8-N9 on the driver, with no Spark job: the key and tie-break
+    values of ``frame`` (``local``, the table's Arrow slice, as a Spark
+    frame) come from a projection Spark folds into local data while
+    planning; the LWW dedup runs in pyarrow over ``local``; the
+    survivors, still undecoded, return as a local frame."""
+    order = cdc.lww_order(tc.dedup_order_fields)
+    extra = [(KEY_COL, _record_key(tc))] + [
+        (n, v) for n, v in order if n not in local.column_names
+    ]
+    vals = localdf.collect_arrow(
+        frame.select(*[v.alias(n) for n, v in extra]), local.num_rows
+    )
+    for n, _ in extra:
+        local = local.append_column(vals.schema.field(n), vals[n])
+    won = cdc.lww_dedup_arrow(local, [n for n, _ in order])
+    key = vals.schema.field(KEY_COL)
+    schema = StructType(
+        [f for f in frame.schema.fields if f.name != cdc.POS_COL]
+        + [StructField(KEY_COL, StringType(), key.nullable)]
+    )
+    return spark.createDataFrame(won.select(schema.names), schema)
+
+
 def _sync_one_table(
     spark: SparkSession,
-    rows: DataFrame,
+    survivors: DataFrame,
     tc: TableConfig,
     schema_json: str,
     batch_id: int | str,
 ) -> None:
-    """N8-N21 for one (db, table) over its envelope rows (``_op``,
-    ``_ts``, ``_pos``, ``value``): key, dedup, decode, transform, merge."""
-    keyed = cdc.with_record_key(
-        rows, tc.db, tc.table, tc.record_key_fields, tc.keygenerator
-    )
-    survivors = cdc.lww_dedup(keyed, tc.dedup_order_fields)  # N9
+    """N16-N21 for one (db, table) over its deduplicated envelope rows
+    (``_op``, ``_ts``, ``value``, ``_key``): decode, transform, merge."""
     schema = cdc.decode_schema(schema_json)  # N17
     decoded = cdc.decode_rows(survivors, schema, tc.json_options)  # N18
 
@@ -283,13 +333,12 @@ def _sync_one_table(
         meta = decoded.select(KEY_COL, TS_COL, OP_COL, *tc.record_key_fields)
         decoded = transformed.join(meta, on=tc.record_key_fields, how="inner")
 
-    batch = decoded.drop(cdc.POS_COL)
     lake = _cached_lake(
         spark, tc.path, tc.buckets, tc.partition_fields or None,
         global_index=tc.global_index or None,
         finalizer_spec=tc.commit_finalizer,
     )
-    lake.merge(batch, batch_id=f"{batch_id}", mode=tc.write_mode)
+    lake.merge(decoded, batch_id=f"{batch_id}", mode=tc.write_mode)
     if tc.write_mode == "mor" and tc.compact_max_deltas > 0:
         # inline compaction: bounds read amplification to at most
         # compact_max_deltas delta files per bucket, cost scoped to the

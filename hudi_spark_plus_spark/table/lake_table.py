@@ -66,7 +66,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hudi_spark_plus_spark.localdf import local_frame
+from hudi_spark_plus_spark.localdf import collect_arrow, local_frame
 from hudi_spark_plus_spark.table.bloom import KeyBloom, hash_key, pairs_array
 from hudi_spark_plus_spark.table.bootstrap import (
     BOOTSTRAP_KIND,
@@ -145,16 +145,20 @@ def _widened_type(a: str, b: str) -> str | None:
     return None
 
 
-def _conform(df: DataFrame, fields: list[StructField]) -> DataFrame:
-    """Cast ``df``'s columns to ``fields``' types and add the ones it
-    lacks as typed nulls (one side of a schema-evolving merge)."""
-    have = dict(df.dtypes)
+def _conformed(have: dict, fields: list[StructField]) -> list:
+    """``fields`` as columns of a frame whose types are ``have`` (by
+    name): cast where the type differs, a typed null where it lacks
+    the field (one side of a schema-evolving merge)."""
+    out = []
     for f in fields:
-        if f.name not in have:
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        elif have[f.name] != f.dataType.simpleString():
-            df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
-    return df
+        t = have.get(f.name)
+        if t is None:
+            out.append(F.lit(None).cast(f.dataType).alias(f.name))
+        elif t.simpleString() != f.dataType.simpleString():
+            out.append(F.col(f.name).cast(f.dataType).alias(f.name))
+        else:
+            out.append(f.name)
+    return out
 
 
 class IncompatibleSchemaChange(ValueError):
@@ -172,17 +176,24 @@ class WriteCountMismatch(RuntimeError):
 def _footer_stats(
     f: str,
 ) -> tuple[int, str | None, str | None, dict, bool, int]:
-    """(rows, min_key, max_key, col_stats, has_key, live_rows) from ONE
-    parquet file — footer-only in the common case; the write task runs
-    it on each file it has just closed.
+    """``_metadata_stats`` of ONE parquet file, read back from its
+    footer (and, for a mixed file, its ``_deleted`` column): the
+    driver-side reference of what a file's writer reports."""
+    pf = pq.ParquetFile(f)
+    return _metadata_stats(
+        pf.metadata, lambda: pf.read(columns=[DELETED_COL]).column(0)
+    )
+
+
+def _metadata_stats(
+    md, deleted_col,
+) -> tuple[int, str | None, str | None, dict, bool, int]:
+    """(rows, min_key, max_key, col_stats, has_key, live_rows) from a
+    parquet file's ``FileMetaData``.
     ``live_rows`` counts rows with ``_deleted == false`` (exactly the
     rows snapshot() surfaces): boolean row-group statistics decide the
-    all-live / all-tombstone cases for free; only a mixed file pays one
-    columnar read of the single boolean column."""
-    import pyarrow.parquet as _pq
-
-    pf = _pq.ParquetFile(f)
-    md = pf.metadata
+    all-live / all-tombstone cases for free; only a mixed file calls
+    ``deleted_col()`` for the file's ``_deleted`` values."""
     min_key = max_key = None
     has_key = False
     names = {md.schema.column(i).name: i for i in range(len(md.schema))}
@@ -239,13 +250,12 @@ def _footer_stats(
             exact_read = True
             break
         if exact_read:
-            # mixed / statless file: one columnar read of the boolean
-            # column — strict `== false`, matching snapshot()'s filter
+            # mixed / statless file: count the boolean column — strict
+            # `== false`, matching snapshot()'s filter
             import pyarrow.compute as _pc
 
-            col = pf.read(columns=[DELETED_COL]).column(0)
             known = _pc.sum(
-                _pc.equal(col, False).cast("int64"), min_count=0
+                _pc.equal(deleted_col(), False).cast("int64"), min_count=0
             ).as_py()
         live_rows = known
     return md.num_rows, min_key, max_key, col_stats, has_key, live_rows
@@ -284,19 +294,28 @@ class _UnitFile:
         )
         self.rows = 0
         self.keys = []
+        self.deleted = []
 
     def add(self, batch) -> None:
         self.writer.write(batch)
         self.rows += batch.num_rows
         if KEY_COL in batch.schema.names:
             self.keys.append(batch.column(KEY_COL))
+        if DELETED_COL in batch.schema.names:
+            self.deleted.append(batch.column(DELETED_COL))
 
     def close(self) -> dict:
         """Close the file; return its manifest-entry fields (all but
-        ``kind``), stats read back from its own footer."""
+        ``kind``), stats taken from the writer's own ``FileMetaData``
+        and, for a mixed file, the ``_deleted`` values written."""
+        import pyarrow as pa
+
         self.writer.close()
         rows, min_key, max_key, col_stats, has_key, live_rows = (
-            _footer_stats(self.path)
+            _metadata_stats(
+                self.writer.writer.metadata,
+                lambda: pa.chunked_array(self.deleted, pa.bool_()),
+            )
         )
         if rows != self.rows:
             raise WriteCountMismatch(
@@ -623,15 +642,14 @@ class LakeTable:
     def _partition_expr(self):
         return partition_path_expr(self.partition_fields)
 
-    def _with_part(self, df: DataFrame) -> DataFrame:
-        """Attach the rendered partition-path column (derived from the
-        payload partition fields — never stored in data files)."""
-        if not self.partition_fields:
-            return df
+    def _part_expr(self, columns):
+        """The rendered partition-path column over a frame with
+        ``columns`` (derived from the payload partition fields — never
+        stored in data files)."""
         missing = [
             c
             for c in partition_source_cols(self.partition_fields)
-            if c not in df.columns
+            if c not in columns
         ]
         if missing:
             raise ValueError(
@@ -639,12 +657,26 @@ class LakeTable:
                 f"{self.partition_fields}; batch is missing partition "
                 f"column(s) {missing}"
             )
-        return df.withColumn(PARTITION_COL, self._partition_expr())
+        return self._partition_expr().alias(PARTITION_COL)
+
+    def _with_part(self, df: DataFrame) -> DataFrame:
+        """Attach the rendered partition-path column."""
+        if not self.partition_fields:
+            return df
+        return df.withColumn(PARTITION_COL, self._part_expr(df.columns))
+
+    def _layout_exprs(self, columns) -> list:
+        """The ``_layout_cols`` as expressions over a frame with
+        ``columns``."""
+        bucket = bucket_expr(F.col(KEY_COL), self.buckets).alias(BUCKET_COL)
+        if not self.partition_fields:
+            return [bucket]
+        return [self._part_expr(columns), bucket]
 
     def _laid_out(self, df: DataFrame) -> DataFrame:
         """Attach the layout columns a write partitions its files by."""
-        return self._with_part(
-            df.withColumn(BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets))
+        return df.withColumns(
+            dict(zip(self._layout_cols(), self._layout_exprs(df.columns)))
         )
 
     def _layout_cols(self) -> list[str]:
@@ -2905,7 +2937,8 @@ class LakeTable:
         )
 
     # The one driver-collect row cap of a merge: a batch of at most this
-    # many rows is collected (one JVM job) and merged on the driver when
+    # many rows is collected (one JVM job, or none for small local data,
+    # ``localdf.collect_arrow``) and merged on the driver when
     # its units are small too; the Bloom probe of live bootstrap files
     # collects the batch keys under the same cap.
     MERGE_COLLECT_MAX_ROWS = 200_000
@@ -2946,9 +2979,9 @@ class LakeTable:
         files = live
         if boot:
             # past the cap every bootstrap file may hold a batch key
-            keys = b.select(KEY_COL).limit(
-                self.MERGE_COLLECT_MAX_ROWS + 1
-            ).toArrow()[KEY_COL]
+            keys = collect_arrow(
+                b.select(KEY_COL), self.MERGE_COLLECT_MAX_ROWS + 1
+            )[KEY_COL]
             if len(keys) <= self.MERGE_COLLECT_MAX_ROWS:
                 files = [f for f in live if f.kind != BOOTSTRAP_KIND]
                 files += bloom_hits(boot, keys.to_pylist())
@@ -2966,16 +2999,16 @@ class LakeTable:
         batch's and the stored ones), and stamped with the ``deleted``
         and ``ver`` columns as ``_deleted`` and ``_commit_ver``."""
         stored = self.schema()
-        batch = self._laid_out(batch)
+        have = {f.name: f.dataType for f in batch.schema.fields}
         fields = self._widened_fields(
             [f for f in batch.schema.fields if f.name not in _MERGE_META],
             [f for f in stored or () if f.name not in _MERGE_META],
         )
-        return _conform(batch, fields).select(
-            *[f.name for f in fields],
+        return batch.select(
+            *_conformed(have, fields),
             deleted.cast("boolean").alias(DELETED_COL),
             ver.cast("long").alias(COMMIT_VER_COL),
-            *self._layout_cols(),
+            *self._layout_exprs(have),
         )
 
     def _rewrite_units(self, prev, files, schema_json, operation, batch=None,
@@ -2996,8 +3029,10 @@ class LakeTable:
         as ``_publish_written`` takes it; default ``live - consumed``)
         plus the new entries, and returns the new entries.
 
-        Placement: a batch is collected with ONE ``toArrow`` of at most
-        ``MERGE_COLLECT_MAX_ROWS + 1`` rows. The kernel runs on the
+        Placement: a batch is collected once, at most
+        ``MERGE_COLLECT_MAX_ROWS + 1`` rows (``localdf.collect_arrow``:
+        one ``toArrow`` job, or none when the batch is small local data,
+        such as a sync batch's deduplicated rows). The kernel runs on the
         driver when the batch fits the cap (a compaction has none unless
         it routes bootstrap rows), the live bytes it may read (its
         units' files; none for a plain MOR append or an append) are at
@@ -3036,12 +3071,11 @@ class LakeTable:
         fields_c = active_fields(schema_json)
         consumed = [f.path for f in boot]
         if boot:
-            routed = self._laid_out(
-                _conform(
-                    self._read_files(boot),
-                    [StructField(n, t, True) for n, _, t in fields_c],
-                ).select(*[n for n, _, _ in fields_c])
-            )
+            stored = self._read_files(boot)
+            routed = self._laid_out(stored.select(*_conformed(
+                {f.name: f.dataType for f in stored.schema.fields},
+                [StructField(n, t, True) for n, _, t in fields_c],
+            )))
             if batch is None:  # a marker row for each unit of files
                 routed = routed.unionByName(
                     self.spark.createDataFrame(
@@ -3056,7 +3090,7 @@ class LakeTable:
             rows = pa.table({c: [u[i] for u in sorted(units)]
                              for i, c in enumerate(unit_cols)})
         else:
-            rows = batch.limit(self.MERGE_COLLECT_MAX_ROWS + 1).toArrow()
+            rows = collect_arrow(batch, self.MERGE_COLLECT_MAX_ROWS + 1)
             units = None
             if rows.num_rows <= self.MERGE_COLLECT_MAX_ROWS:
                 units = set(zip(*(rows[c].to_pylist() for c in unit_cols)))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from hudi_spark_plus_spark.table.bootstrap import BOOTSTRAP_KIND
 from hudi_spark_plus_spark.table.lake_table import LakeTable
+from hudi_spark_plus_spark.table.merge_kernel import unit_groups
 
 
 def compact(lake: LakeTable) -> dict:
@@ -33,21 +34,31 @@ def compact(lake: LakeTable) -> dict:
     until vacuumed with their semantics intact) into one file per
     (partition, bucket) unit, through the per-unit merge kernel
     (``LakeTable._rewrite_units``), each row keeping its own commit
-    version. Live metadata-only bootstrap files are converted in the
-    same commit: their rows are routed by key into their units (the
-    files are consumed, never touched). Returns {files_before,
-    files_after}; a table with no live file publishes nothing. Retries
-    against a fresh timeline if a concurrent writer wins the commit
-    race."""
+    version. A unit that already holds exactly one base file and no
+    delta is carried, its path unchanged. Live metadata-only bootstrap
+    files are converted in the same commit: their rows are routed by
+    key into their units (the files are consumed, never touched), so
+    then every unit is rewritten. Returns {files_before, files_after};
+    a table with nothing to rewrite publishes nothing. Retries against
+    a fresh timeline if a concurrent writer wins the commit race."""
 
     def attempt() -> dict:
         prev = lake.log.latest()
         if prev is None or not prev.files:
             return {"files_before": 0, "files_after": 0}
-        files = lake._rewrite_units(
-            prev, prev.files, prev.schema_json, "compact"
-        )
-        return {"files_before": len(prev.files), "files_after": len(files)}
+        files = prev.files
+        if all(f.kind != BOOTSTRAP_KIND for f in files):
+            files = [
+                f
+                for fs in unit_groups(files, lake.global_index).values()
+                if len(fs) > 1 or fs[0].kind != "base"
+                for f in fs
+            ]
+        n = len(prev.files)
+        if not files:
+            return {"files_before": n, "files_after": n}
+        new = lake._rewrite_units(prev, files, prev.schema_json, "compact")
+        return {"files_before": n, "files_after": n - len(files) + len(new)}
 
     return lake._with_commit_retries(attempt)
 

@@ -429,11 +429,13 @@ def _row(seq, key_id, col_a, col_b, **extra):
 def test_collect_and_fallback_paths_commit_the_same_tables(
     spark, tmp_path, monkeypatch
 ):
-    """The same three batches go through ``sync_batch`` once under the
-    collect cap (one Arrow collect, a local plan per table) and once with
-    the cap at 3 (the repartitioned, persisted fallback; the merges then
-    run in tasks). Status dicts, snapshots, schemas and manifests (paths
-    masked) are equal after every batch."""
+    """The same three batches go through ``sync_batch`` three times:
+    under the collect cap with every table's slice deduplicated on the
+    driver, under the cap with the local size bound patched so every
+    slice takes the Spark window, and with the cap at 3 (the
+    repartitioned, persisted fallback; the merges then run in tasks).
+    Status dicts, snapshots, schemas and manifests (paths masked) are
+    equal after every batch."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     wide = StructType(list(ROW_SCHEMA.fields) + [StructField("col_c", StringType())])
@@ -504,7 +506,22 @@ def test_collect_and_fallback_paths_commit_the_same_tables(
             seen.append(state)
         return seen
 
+    from hudi_spark_plus_spark import localdf
+    from hudi_spark_plus_spark.operators import sync
+
+    on_driver = []
+    dedup = sync._dedup_on_driver
+    monkeypatch.setattr(sync, "_dedup_on_driver",
+                        lambda *a: on_driver.append(1) or dedup(*a))
     collected = run(tmp_path / "collect")
+    assert on_driver  # every slice is small: deduplicated on the driver
+    on_driver.clear()
+    # the size bound at -1: every slice takes the Spark window, and
+    # every merge collects its batch with a job
+    monkeypatch.setattr(localdf, "max_local_rows", lambda spark: -1)
+    windowed = run(tmp_path / "window")
+    assert not on_driver
+    assert windowed == collected
     monkeypatch.setattr(LakeTable, "MERGE_COLLECT_MAX_ROWS", 3)
     fallback = run(tmp_path / "fallback")
     assert fallback == collected
@@ -553,30 +570,51 @@ def test_batch_schema_is_the_max_ts_schema_over_every_row(spark, tmp_path):
     assert rows == {1: "wide", 2: "old"}
 
 
-def test_warm_two_table_sync_batch_runs_at_most_three_jobs(spark, tmp_path):
-    """A warm COW ``sync_batch`` of two tables read from one text file:
-    one collect of the envelopes and one batch collect per table's
-    merge, nothing else (no metadata job, no dedup shuffle)."""
+def _warm_two_table_batch_jobs(spark, tmp_path, files):
+    """Spark jobs (and their stage counts) of a warm COW ``sync_batch``
+    of two tables, 40 rows each, read from ``files`` text files."""
     opts = sync_options(str(tmp_path / "tables"))
-    sc = spark.sparkContext._jsc.sc()
+    sc = spark.sparkContext
 
     def batch(i):
-        path = tmp_path / "in" / f"b{i}.txt"
-        path.parent.mkdir(exist_ok=True)
-        path.write_text("\n".join(
+        d = tmp_path / "in" / f"b{i}"
+        d.mkdir(parents=True)
+        lines = [
             _envelope("db1", t, "update", 10 * i + 1,
-                      [_row(100 * i + k, k, f"v{i}", float(k)) for k in range(40)])
-            for t in ("t_customer", "t_order")
-        ) + "\n")
-        return spark.read.text(str(path))
+                      [_row(100 * i + k, k, f"v{i}", float(k))
+                       for k in range(10 * j, 10 * j + 10)])
+            for t in ("t_customer", "t_order") for j in range(4)
+        ]
+        for f in range(files):
+            (d / f"p{f}.txt").write_text("\n".join(lines[f::files]) + "\n")
+        return spark.read.text(str(d))
 
     for i in range(2):  # create both tables, then warm up
         sync_batch(spark, batch(i), opts, batch_id=i)
     df = batch(2)
-    before = sc.dagScheduler().nextJobId()
+    before = sc._jsc.sc().dagScheduler().nextJobId()
     status = sync_batch(spark, df, opts, batch_id=2)
-    jobs = sc.dagScheduler().nextJobId() - before
+    after = sc._jsc.sc().dagScheduler().nextJobId()
     assert status == {"db1.t_customer": "ok", "db1.t_order": "ok"}
-    assert jobs <= 3, jobs
     lake = LakeTable(spark, f"{tmp_path}/tables/db1/ods_db1_t_order", buckets=4)
     assert {r["col_a"] for r in lake.snapshot().collect()} == {"v2"}
+    assert len(lake.snapshot().collect()) == 40
+    return [len(sc.statusTracker().getJobInfo(j).stageIds)
+            for j in range(before, after)]
+
+
+def test_warm_two_table_sync_batch_runs_at_most_three_jobs(spark, tmp_path):
+    """A warm COW ``sync_batch`` of two tables read from one text file:
+    one collect of the envelopes and at most one batch collect per
+    table's merge, nothing else (no metadata job, no dedup shuffle)."""
+    jobs = _warm_two_table_batch_jobs(spark, tmp_path, files=1)
+    assert len(jobs) <= 3, jobs
+
+
+def test_warm_two_table_sync_batch_runs_one_job(spark, tmp_path):
+    """The same batch read from four text files: the envelope collect
+    is the batch's one job, in one stage (the input is coalesced before
+    the cap's limit, so nothing is exchanged), and each table's dedup
+    and merge collect run on the driver from local data."""
+    jobs = _warm_two_table_batch_jobs(spark, tmp_path, files=4)
+    assert jobs == [1], jobs

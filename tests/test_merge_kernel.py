@@ -350,3 +350,31 @@ def test_noop_compaction_publishes_nothing(spark, tmp_path):
     assert p.log.live_files() == []
     assert compact(p) == {"files_before": 0, "files_after": 0}
     assert p.log.latest().version == v
+
+
+def test_compact_carries_units_that_are_already_compact(spark, tmp_path):
+    """Straight after one COW merge every unit of a 4-bucket table holds
+    one base file: ``compact()`` publishes nothing. After a MOR merge
+    into one unit, only that unit is rewritten; the others keep their
+    paths."""
+    from hudi_spark_plus_spark.table.maintenance import compact
+
+    t = LakeTable(spark, str(tmp_path / "t"), buckets=4)
+    t.merge(frame(spark, [(f"k{i}", 1, "upsert", f"v{i}") for i in range(40)]),
+            "b0")
+    before = t.log.latest()
+    assert len({f.bucket for f in before.files}) == len(before.files) == 4
+    assert compact(t) == {"files_before": 4, "files_after": 4}
+    assert t.log.latest().version == before.version
+
+    t.merge(frame(spark, [("k1", 2, "upsert", "w")]), "b1", mode="mor")
+    delta = [f for f in t.log.live_files() if f.kind == "delta"]
+    assert len(delta) == 1
+    hot = delta[0].bucket
+    assert compact(t) == {"files_before": 5, "files_after": 4}
+    after = t.log.live_files()
+    assert {f.path for f in after if f.bucket != hot} == {
+        f.path for f in before.files if f.bucket != hot}
+    assert [f.kind for f in after if f.bucket == hot] == ["base"]
+    assert t.log.latest().version == before.version + 2
+    assert {r["_key"]: r["val"] for r in t.snapshot().collect()}["k1"] == "w"

@@ -19,9 +19,6 @@ from hudi_spark_plus_spark.streaming.windows import session_agg, to_event_time
 from hudi_spark_plus_spark.table.lake_table import LakeTable
 from tests.harness import compare, duck_connection
 
-pytestmark = pytest.mark.slow  # full-tier suite (see pytest.ini)
-
-
 @pytest.fixture(scope="module")
 def con(sf_dir):
     c = duck_connection(sf_dir)
