@@ -65,11 +65,13 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(rows, struct)
 
 
-def max_local_rows(spark: SparkSession) -> int:
-    """The most rows a frame may hold to be collected with no Spark job:
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``, the size of one
-    Arrow batch."""
-    return int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+# The most rows of local data collected with no Spark job, and the most
+# rows of a sync slice deduplicated on the driver. Past it the driver's
+# per-row Python work costs more than a job: a warm COW ``sync_batch``
+# of 4 concurrent tables (4-core host, 7-9 interleaved reps per size)
+# ran faster with the driver path at 250-1 000 rows per table (at 1 000,
+# 944 against 980 ms) and slower from 1 500 rows (+11%; +35% at 10 000).
+LOCAL_COLLECT_MAX_ROWS = 1_000
 
 
 def collect_arrow(df: DataFrame, limit: int):
@@ -78,12 +80,12 @@ def collect_arrow(df: DataFrame, limit: int):
     While planning, Spark's ``ConvertToLocalRelation`` evaluates
     projections, filters and limits over local data (a frame built with
     ``createDataFrame``). When the optimized plan is one
-    ``LocalRelation`` of at most ``max_local_rows`` rows, ``collect()``
-    returns its rows without a job and they are converted to Arrow here,
-    under the schema ``toArrow`` gives; only a map's entries may come in
-    another order, as ``collect()`` returns a map as a hash map (Spark
-    maps are unordered). Any other plan is collected with
-    ``toArrow()``."""
+    ``LocalRelation`` of at most ``LOCAL_COLLECT_MAX_ROWS`` rows,
+    ``collect()`` returns its rows without a job and they are converted
+    to Arrow here, under the schema ``toArrow`` gives; only a map's
+    entries may come in another order, as ``collect()`` returns a map as
+    a hash map (Spark maps are unordered). Any other plan is collected
+    with ``toArrow()``."""
     from pyspark.sql.conversion import LocalDataToArrowConversion
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -92,7 +94,7 @@ def collect_arrow(df: DataFrame, limit: int):
     plan = df._jdf.queryExecution().optimizedPlan()
     if (
         plan.getClass().getSimpleName() != "LocalRelation"
-        or plan.data().size() > max_local_rows(spark)
+        or plan.data().size() > LOCAL_COLLECT_MAX_ROWS
     ):
         return df.toArrow()
     large = spark._jconf.arrowUseLargeVarTypes()

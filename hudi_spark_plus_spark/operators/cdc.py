@@ -8,8 +8,8 @@ declarative DataFrame transform so Catalyst plans the whole pipeline:
     -> md5 key -> LWW dedup -> from_json decode        (one table at a time)
 
 The LWW order is defined once (``lww_order``) and applied two ways. A
-table's slice of at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
-rows (``operators/sync.py``) is deduplicated on the driver
+table's slice of at most ``localdf.LOCAL_COLLECT_MAX_ROWS`` rows
+(``operators/sync.py``) is deduplicated on the driver
 (``lww_dedup_arrow``) over the key and tie-break values of a projection
 that Spark evaluates while planning, so it runs no job. A larger slice
 goes through the Spark window (``lww_dedup``): single-partition, with no

@@ -36,10 +36,10 @@ Every data-writing commit ends in ONE write-and-publish tail
 (``LakeTable._publish_written``) and writes its files with the one file
 emitter (``emit_unit_files``), which writes each (partition, bucket)
 unit as a Parquet file with pyarrow and returns the file's manifest
-entry — key Bloom from the keys in hand, stats from the file's own
-footer. The driver checks the commit's data subdir holds exactly the
-reported files and publishes optimistically against the version it was
-computed from.
+entry — key Bloom from the keys in hand, stats from the footer
+metadata its writer serialized. The driver checks the commit's data
+subdir holds exactly the reported files and publishes optimistically
+against the version it was computed from.
 """
 
 from __future__ import annotations
@@ -169,8 +169,7 @@ class IncompatibleSchemaChange(ValueError):
 class WriteCountMismatch(RuntimeError):
     """A commit's data subdir holds different files than its write
     tasks reported — a stray file (e.g. a partial task attempt) or a
-    lost one — or a written file's footer disagrees with the rows
-    written into it. Nothing was published."""
+    lost one. Nothing was published."""
 
 
 def _footer_stats(
@@ -292,13 +291,11 @@ class _UnitFile:
             self.path, batch.schema, use_dictionary=dict_cols,
             store_schema=False,
         )
-        self.rows = 0
         self.keys = []
         self.deleted = []
 
     def add(self, batch) -> None:
         self.writer.write(batch)
-        self.rows += batch.num_rows
         if KEY_COL in batch.schema.names:
             self.keys.append(batch.column(KEY_COL))
         if DELETED_COL in batch.schema.names:
@@ -317,10 +314,6 @@ class _UnitFile:
                 lambda: pa.chunked_array(self.deleted, pa.bool_()),
             )
         )
-        if rows != self.rows:
-            raise WriteCountMismatch(
-                f"{self.path}: {self.rows} rows written, footer holds {rows}"
-            )
         bloom = None
         if has_key:
             bf = KeyBloom.sized(rows)

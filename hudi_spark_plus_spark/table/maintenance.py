@@ -35,7 +35,10 @@ def compact(lake: LakeTable) -> dict:
     (partition, bucket) unit, through the per-unit merge kernel
     (``LakeTable._rewrite_units``), each row keeping its own commit
     version. A unit that already holds exactly one base file and no
-    delta is carried, its path unchanged. Live metadata-only bootstrap
+    delta is carried, its path unchanged: compaction resolves the keys
+    of the units it rewrites, so a key that an append (``insert``,
+    ``bulk_insert``) wrote twice into a carried file stays twice, as
+    ``snapshot()`` showed it before. Live metadata-only bootstrap
     files are converted in the same commit: their rows are routed by
     key into their units (the files are consumed, never touched), so
     then every unit is rewritten. Returns {files_before, files_after};

@@ -518,7 +518,7 @@ def test_collect_and_fallback_paths_commit_the_same_tables(
     on_driver.clear()
     # the size bound at -1: every slice takes the Spark window, and
     # every merge collects its batch with a job
-    monkeypatch.setattr(localdf, "max_local_rows", lambda spark: -1)
+    monkeypatch.setattr(localdf, "LOCAL_COLLECT_MAX_ROWS", -1)
     windowed = run(tmp_path / "window")
     assert not on_driver
     assert windowed == collected
@@ -613,8 +613,22 @@ def test_warm_two_table_sync_batch_runs_at_most_three_jobs(spark, tmp_path):
 
 def test_warm_two_table_sync_batch_runs_one_job(spark, tmp_path):
     """The same batch read from four text files: the envelope collect
-    is the batch's one job, in one stage (the input is coalesced before
-    the cap's limit, so nothing is exchanged), and each table's dedup
-    and merge collect run on the driver from local data."""
+    is the batch's one job, in one stage (the small input is coalesced
+    before the cap's limit, so nothing is exchanged), and each table's
+    dedup and merge collect run on the driver from local data."""
     jobs = _warm_two_table_batch_jobs(spark, tmp_path, files=4)
     assert jobs == [1], jobs
+
+
+def test_input_over_the_byte_bound_is_parsed_in_parallel(
+    spark, tmp_path, monkeypatch
+):
+    """The same four-file batch with the one-task byte bound at 0: the
+    envelopes are parsed in the input's own partitions, so the
+    collect's limit exchanges (more than one stage), and the batch
+    commits the same rows."""
+    from hudi_spark_plus_spark.operators import sync
+
+    monkeypatch.setattr(sync, "ONE_TASK_INPUT_BYTES", 0)
+    jobs = _warm_two_table_batch_jobs(spark, tmp_path, files=4)
+    assert sum(jobs) > 1, jobs

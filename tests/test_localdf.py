@@ -185,7 +185,7 @@ def test_collect_arrow_falls_back_to_to_arrow(spark, monkeypatch):
     got, jobs = _jobs_run(spark, lambda: collect_arrow(plan, 10))
     assert jobs >= 1 and got.equals(plan.toArrow())
     df = _matrix_frame(spark)
-    monkeypatch.setattr(localdf, "max_local_rows", lambda spark: 2)
+    monkeypatch.setattr(localdf, "LOCAL_COLLECT_MAX_ROWS", 2)
     got, jobs = _jobs_run(spark, lambda: collect_arrow(df, 10))
     assert jobs >= 1 and got.equals(df.limit(10).toArrow())
 

@@ -378,3 +378,31 @@ def test_compact_carries_units_that_are_already_compact(spark, tmp_path):
     assert [f.kind for f in after if f.bucket == hot] == ["base"]
     assert t.log.latest().version == before.version + 2
     assert {r["_key"]: r["val"] for r in t.snapshot().collect()}["k1"] == "w"
+
+
+def test_compact_carries_an_appended_file_with_a_repeated_key(spark, tmp_path):
+    """``compact()`` resolves the units it rewrites and carries the
+    rest as written: a unit whose one base file an ``insert`` wrote
+    with a key twice keeps both rows, as ``snapshot()`` showed them
+    before. Once the unit holds two files it is rewritten, and the
+    key's latest row wins."""
+    from hudi_spark_plus_spark.table.maintenance import compact
+
+    schema = "_key string, _ts long, val string"
+    t = LakeTable(spark, str(tmp_path / "t"), buckets=1)
+    dup = [("k1", 1, "a"), ("k1", 2, "b"), ("k2", 1, "c")]
+    t.insert(frame(spark, dup, schema), "b0")
+    v = t.log.latest().version
+
+    def rows():
+        return sorted(tuple(r) for r in t.snapshot().select(
+            "_key", "_ts", "val").collect())
+
+    assert rows() == dup
+    assert compact(t) == {"files_before": 1, "files_after": 1}
+    assert t.log.latest().version == v
+    assert rows() == dup
+
+    t.insert(frame(spark, [("k3", 1, "d")], schema), "b1")
+    assert compact(t) == {"files_before": 2, "files_after": 1}
+    assert rows() == [("k1", 2, "b"), ("k2", 1, "c"), ("k3", 1, "d")]
